@@ -262,6 +262,28 @@ object Bench {
         p > 0 && now(k) > 2 * drift * p && now(k) - drift * p > 0.5)
     }
 
+  /** Min-of-`reps` wall time of `run` in seconds, or the error of the
+    * first rep that throws: a query that throws is FAILED, never a
+    * measurement. `beforeRep` runs before each rep, outside the timed region. */
+  def timeReps(reps: Int, run: () => Unit,
+      beforeRep: () => Unit = () => ()): Either[String, Double] = {
+    val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+    while (times.size < reps) {
+      beforeRep()
+      val t0 = System.nanoTime()
+      try run()
+      catch { case e: Throwable => return Left(e.toString) }
+      times += (System.nanoTime() - t0) / 1e9
+    }
+    Right(times.min)
+  }
+
+  /** The run's gate verdict: it fails on any regression row AND on any
+    * failed query or canary — a failure has no time to compare, so it
+    * must not pass by dropping out of the comparison. */
+  def gatePasses(regressions: Seq[String], failed: Map[String, String]): Boolean =
+    regressions.isEmpty && failed.isEmpty
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -337,29 +359,32 @@ object Bench {
     // prune every unreferenced projection (a langid or embed query would
     // benchmark nothing but the scan).
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
-    def timeThunk(label: String, run: () => Unit, reps: Int = 0): Double = {
+    // failed queries and canaries (label -> error): recorded in the JSON,
+    // left out of every total and ratio, and they fail the gate
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeThunk(label: String, run: () => Unit, reps: Int = 0): Option[Double] = {
       val n = if (reps > 0) reps else runs
       // localCheckpoint blocks from prior queries (dedup/clustering staging)
       // are freed by the ContextCleaner only after the owning RDD is GC'd;
       // without a nudge they pile up in the block manager and tax the
       // storage-memory pool of later queries. Outside the timed region.
       System.gc()
-      (1 to n).map { _ =>
-        // Dataset persists (the graph family's edge pins) are plan-keyed,
-        // so rep N+1 of the same query would read rep N's cache and time
-        // a cache hit instead of the query (round-8 review finding);
-        // clearing restores the pre-pin min-of-N semantics. Outside the
-        // timed region.
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        try run()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      // Dataset persists (the graph family's edge pins) are plan-keyed,
+      // so rep N+1 of the same query would read rep N's cache and time
+      // a cache hit instead of the query (round-8 review finding);
+      // clearing before each rep restores the pre-pin min-of-N
+      // semantics. Outside the timed region.
+      timeReps(n, run, () => spark.sharedState.cacheManager.clearCache()) match {
+        case Right(t) => Some(t)
+        case Left(err) =>
+          System.err.println(s"[bench] $label failed: $err")
+          failed(label) = err
+          None
+      }
     }
-    def time(name: String): Double = timeThunk(name, () =>
+    def ratio(now: Option[Double], prev: Option[Double]): Option[Double] =
+      for (n <- now; p <- prev) yield n / p
+    def time(name: String): Option[Double] = timeThunk(name, () =>
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save())
     // dev iteration: SPARK_GRAFT_BENCH_ONLY=q1,sp2 restricts to queries
@@ -390,8 +415,8 @@ object Bench {
     // across every observation
     val ioReps = math.max(runs, 7)
     val canaryIo = timeThunk("canary_io", () => ioCanary(), reps = ioReps)
-    val firstPass: Map[String, Double] = names.map { n =>
-      n -> (if (n == canaryName) canary else time(n))
+    val firstPass: Map[String, Double] = names.flatMap { n =>
+      (if (n == canaryName) canary else time(n)).map(n -> _)
     }.toMap
     // Round-over-round regression guard (see object doc): drift estimate
     // = max(scan-canary ratio, shuffle-canary ratio, median common-set
@@ -433,15 +458,16 @@ object Bench {
       medianRatio(m.view.filterKeys(streamingLane).toMap, prevQueries,
         minN = 4)
     val drift = driftEstimate(Seq(
-      prevCanary.map(canary / _),
-      prevCanaryShuffle.map(canaryShuffle / _),
-      gatedIoRatio(prevCanaryIo.map(canaryIo / _), laneMedian(firstPass))),
+      ratio(canary, prevCanary),
+      ratio(canaryShuffle, prevCanaryShuffle),
+      gatedIoRatio(ratio(canaryIo, prevCanaryIo), laneMedian(firstPass))),
       med)
     val retried = gateFlags(firstPass, prevQueries, drift)
-      .map(n => n -> time(n)).toMap
-    val results0 = firstPass ++ retried.map { case (k, v) =>
+      .flatMap(n => time(n).map(n -> _)).toMap
+    // a query whose retry threw is failed, whatever its first pass read
+    val results0 = (firstPass ++ retried.map { case (k, v) =>
       k -> math.min(v, firstPass(k))
-    }
+    }).filterNot(kv => failed.contains(kv._1))
     // END-OF-RUN canary re-measure (round-12 verdict ask #1): the
     // canaries used to run ONCE, at bench start, so a co-tenant
     // arriving MID-run was invisible to the estimate — the promoted
@@ -460,11 +486,11 @@ object Bench {
       reps = ioReps)
     val writeLaneMed = laneMedian(results0)
     val canaryRatios = Seq(
-      prevCanary.map(canary / _), prevCanary.map(canaryEnd / _),
-      prevCanaryShuffle.map(canaryShuffle / _),
-      prevCanaryShuffle.map(canaryShuffleEnd / _),
-      gatedIoRatio(prevCanaryIo.map(canaryIo / _), writeLaneMed),
-      gatedIoRatio(prevCanaryIo.map(canaryIoEnd / _), writeLaneMed))
+      ratio(canary, prevCanary), ratio(canaryEnd, prevCanary),
+      ratio(canaryShuffle, prevCanaryShuffle),
+      ratio(canaryShuffleEnd, prevCanaryShuffle),
+      gatedIoRatio(ratio(canaryIo, prevCanaryIo), writeLaneMed),
+      gatedIoRatio(ratio(canaryIoEnd, prevCanaryIo), writeLaneMed))
     val medFinal = medianRatio(results0, prevQueries)
     val driftFinal = driftEstimate(canaryRatios, medFinal)
     // driftFinal can sit BELOW the preliminary estimate (first-wave
@@ -479,9 +505,9 @@ object Bench {
     // each wave could cascade retries unboundedly.
     val flagged2 = gateFlags(results0, prevQueries, driftFinal)
       .filterNot(retried.keySet)
-    val results = results0 ++ flagged2.map { n =>
-      n -> math.min(time(n), results0(n))
-    }
+    val results = results0 ++ flagged2.flatMap { n =>
+      time(n).map(t => n -> math.min(t, results0(n)))
+    } -- failed.keys
     // canary_*_sec_end ALWAYS records the gate's actual inputs (the
     // re-measure right after the last first-wave query): overwriting
     // them with a post-second-wave re-time made the recorded fields
@@ -495,7 +521,7 @@ object Bench {
     // way: driftFinal and the gate decisions stay fixed on the first
     // end measure — retries only lower times, and re-deriving the
     // estimate after each wave could cascade retries unboundedly.
-    val end2: Option[(Double, Double, Double)] =
+    val end2: Option[(Option[Double], Option[Double], Option[Double])] =
       if (flagged2.isEmpty) None
       else Some((time(canaryName),
         timeThunk("canary_shuffle_end2", () =>
@@ -534,21 +560,25 @@ object Bench {
       "/root/repo/bench_full.json")
     val full = results.toSeq.sortBy(-_._2)
       .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    val fullNorm = if (canary > 0)
+    val fullNorm = canary.filter(_ > 0).fold("{}")(c =>
       results.toSeq.sortBy(-_._2)
-        .map { case (k, v) => f""""$k":${v / canary}%.4f""" }.mkString("{", ",", "}")
-    else "{}"
+        .map { case (k, v) => f""""$k":${v / c}%.4f""" }.mkString("{", ",", "}"))
     val medJson = medFinal.map(m => f"$m%.4f").getOrElse("null")
     val warnJson = driftWarning(canaryRatios, medFinal)
       .map(w => s""""${jsonEscape(w)}"""").getOrElse("null")
     val laneMedJson = writeLaneMed.map(m => f"$m%.4f").getOrElse("null")
+    def num(v: Option[Double]): String = v.fold("null")(x => f"$x%.4f")
     val end2Json = end2 match {
       case Some((c, s, io)) =>
-        f""""canary_sec_end2":$c%.4f,"canary_shuffle_sec_end2":$s%.4f,"canary_io_sec_end2":$io%.4f"""
+        s""""canary_sec_end2":${num(c)},"canary_shuffle_sec_end2":${num(s)},"canary_io_sec_end2":${num(io)}"""
       case None =>
         """"canary_sec_end2":null,"canary_shuffle_sec_end2":null,"canary_io_sec_end2":null"""
     }
-    val lanes = f""""total_batch":$totalBatch%.3f,"total_streaming":$totalStreaming%.3f,"canary_sec":$canary%.4f,"canary_shuffle_sec":$canaryShuffle%.4f,"canary_io_sec":$canaryIo%.4f,"canary_sec_end":$canaryEnd%.4f,"canary_shuffle_sec_end":$canaryShuffleEnd%.4f,"canary_io_sec_end":$canaryIoEnd%.4f,$end2Json,"write_lane_median":$laneMedJson,"median_ratio":$medJson,"drift_estimate":$driftFinal%.4f,"drift_warning":$warnJson"""
+    val failedJson = failed.map { case (n, e) =>
+      s"""{"name":"${jsonEscape(n)}","error":"${jsonEscape(e)}"}"""
+    }.mkString("[", ",", "]")
+    val gate = if (gatePasses(regressions, failed.toMap)) "pass" else "fail"
+    val lanes = f""""total_batch":$totalBatch%.3f,"total_streaming":$totalStreaming%.3f,"canary_sec":${num(canary)},"canary_shuffle_sec":${num(canaryShuffle)},"canary_io_sec":${num(canaryIo)},"canary_sec_end":${num(canaryEnd)},"canary_shuffle_sec_end":${num(canaryShuffleEnd)},"canary_io_sec_end":${num(canaryIoEnd)},$end2Json,"write_lane_median":$laneMedJson,"median_ratio":$medJson,"drift_estimate":$driftFinal%.4f,"drift_warning":$warnJson,"gate":"$gate","n_failed":${failed.size},"failed":$failedJson"""
     // a missing parent dir must not cost the whole 20-minute run at the
     // final write (a gitignored tmp/ target can vanish between rounds)
     Option(java.nio.file.Paths.get(fullPath).getParent)

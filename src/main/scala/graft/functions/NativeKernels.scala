@@ -425,8 +425,11 @@ object Kernels {
 
 /** Fused single-pass cosine similarity with the reference null semantics
   * (dim mismatch -> null, zero magnitude -> null; reference
-  * src/memory.rs:150-161). One traversal instead of the three the HOF
-  * composition makes, and no per-element lambda interpretation.
+  * src/memory.rs:150-161) plus the HOF form's NULL-element rule: a NULL
+  * element on either side -> null, checked only on an input whose
+  * `ArrayType.containsNull` allows one. One traversal instead of the
+  * three the HOF composition makes, and no per-element lambda
+  * interpretation.
   * Arithmetic is ordered exactly like [[Similarity.cosine]]:
   * dot/(sqrt(sa)*sqrt(sb)) over left-to-right double folds.
   *
@@ -450,6 +453,8 @@ case class CosineSim(left: Expression, right: Expression)
 
   private def elemType(e: Expression) =
     e.dataType.asInstanceOf[ArrayType].elementType
+  private def nullElems(e: Expression) =
+    e.dataType.asInstanceOf[ArrayType].containsNull
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -458,9 +463,12 @@ case class CosineSim(left: Expression, right: Expression)
     if (n != y.numElements()) return null
     val xf = elemType(left) == FloatType
     val yf = elemType(right) == FloatType
+    val xn = nullElems(left)
+    val yn = nullElems(right)
     var dot = 0.0; var sa = 0.0; var sb = 0.0
     var i = 0
     while (i < n) {
+      if ((xn && x.isNullAt(i)) || (yn && y.isNullAt(i))) return null
       val xi = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
       val yi = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
       dot += xi * yi; sa += xi * xi; sb += yi * yi
@@ -490,6 +498,12 @@ case class CosineSim(left: Expression, right: Expression)
     val yi = ctx.freshName("yi")
     val ma = ctx.freshName("ma")
     val mb = ctx.freshName("mb")
+    val nul = ctx.freshName("nullElem")
+    val nullChecks = Seq(left -> lg.value.toString, right -> rg.value.toString)
+      .collect { case (e, arr) if nullElems(e) => s"$arr.isNullAt($i)" }
+    val nullGuard =
+      if (nullChecks.isEmpty) ""
+      else s"if (${nullChecks.mkString(" || ")}) { $nul = true; break; }"
     ev.copy(code = code"""
       ${lg.code}
       ${rg.code}
@@ -499,14 +513,16 @@ case class CosineSim(left: Expression, right: Expression)
         int $n = ${lg.value}.numElements();
         if ($n == ${rg.value}.numElements()) {
           double $dot = 0.0; double $sa = 0.0; double $sb = 0.0;
+          boolean $nul = false;
           for (int $i = 0; $i < $n; $i++) {
+            $nullGuard
             double $xi = ${getter(left, lg.value.toString, i)};
             double $yi = ${getter(right, rg.value.toString, i)};
             $dot += $xi * $yi; $sa += $xi * $xi; $sb += $yi * $yi;
           }
           double $ma = java.lang.Math.sqrt($sa);
           double $mb = java.lang.Math.sqrt($sb);
-          if ($ma != 0.0 && $mb != 0.0) {
+          if (!$nul && $ma != 0.0 && $mb != 0.0) {
             ${ev.isNull} = false;
             ${ev.value} = $dot / ($ma * $mb);
           }

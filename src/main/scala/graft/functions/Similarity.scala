@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
   * (reference: src/memory.rs:150-161):
   *   - dimension mismatch         -> NULL (row silently excluded downstream)
   *   - zero magnitude either side -> NULL
+  *   - a NULL element either side -> NULL (the folds propagate it)
   *   - otherwise                  -> dot(a,b) / (|a| * |b|)
   *
   * The Qdrant-backed store additionally supports Dot and Euclid metrics

@@ -117,6 +117,9 @@ object Ranks {
     *   shuffle join for nothing). The caller must guarantee
     *   `rankSource[valueCol]` equals `df[valueCol]` as a MULTISET (ranks
     *   are count-derived); a 1:1 join-back chain preserves exactly that.
+    *   A NULL `valueCol` breaks it (the equi-join join-back drops
+    *   NULL-key rows from `df`), so a `rankSource` holding one fails
+    *   loudly instead of yielding wrong ranks.
     */
   def withAvgRank2(df: DataFrame, outCol: String, valueCol: String,
       rankSource: Option[DataFrame] = None): DataFrame = {
@@ -125,7 +128,12 @@ object Ranks {
     val cnts = rankSource.getOrElse(df)
       .groupBy(col(valueCol)).agg(count(lit(1)).as("__c"))
       .localCheckpoint(true)
-    val k = cnts.count() // scalar planning statistic
+    // scalar planning statistic, and the NULL-key guard in the same job
+    val stats = cnts.agg(count(lit(1)), count(when(col(valueCol).isNull, 1))).head()
+    val k = stats.getLong(0)
+    require(rankSource.isEmpty || stats.getLong(1) == 0L,
+      s"withAvgRank2: rankSource has NULL $valueCol values; the join-back " +
+        "would drop those rows from df and break the multiset contract")
     val ranks =
       if (k <= SmallDomain) {
         // bounded domain (l_quantity has 50 values at any corpus size):

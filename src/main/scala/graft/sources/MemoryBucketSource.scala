@@ -6,14 +6,14 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.io.api.Binary
+import org.apache.parquet.io.InputFile
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
@@ -106,15 +106,17 @@ object MemoryBucketSource {
         Option(get("scoreOutput")).getOrElse("score"))
     }
 
-  /** The store-side scorer. MIRRORS [[graft.functions.Similarity.score]]
-    * bit-for-bit: the same deterministic left-to-right double folds over
-    * f32-promoted elements, the same NULL rules (dimension mismatch →
-    * null; zero magnitude on either cosine side → null) — so a scored
-    * row coming off the store is indistinguishable from one scored by
-    * the Catalyst kernel. */
-  private[sources] def computeScore(emb: Array[Double], q: Array[Double],
+  /** The store-side scorer over the first `n` values of `emb`. MIRRORS
+    * [[graft.functions.Similarity.score]] bit-for-bit: the same
+    * deterministic left-to-right double folds over f32-promoted
+    * elements, the same NULL rules (dimension mismatch → null; zero
+    * magnitude on either cosine side → null; the reader nulls a vector
+    * with a NULL element before it gets here) — so a scored row coming
+    * off the store is indistinguishable from one scored by the Catalyst
+    * kernel. */
+  private[sources] def computeScore(emb: Array[Double], n: Int, q: Array[Double],
                                     metric: String): java.lang.Double = {
-    if (emb == null || emb.length != q.length) return null
+    if (n != q.length) return null
     metric match {
       case "cosine" =>
         var dot = 0.0; var sa = 0.0; var sb = 0.0; var i = 0
@@ -224,9 +226,21 @@ object MemoryBucketSource {
       throw new graft.UnavailableException(
         s"memory store at '$root' is not bootstrapped (no parquet files)"))
 
+  /** One Hadoop `Configuration` per JVM: each `new Configuration()`
+    * parses the default resources again (milliseconds apiece), which a
+    * scan used to pay per task and per footer. Footer reads share it as
+    * is; a record reader copies it (see [[StoreRowReader]]). */
+  private[sources] lazy val sharedConf: Configuration = {
+    val c = new Configuration()
+    c.size() // load the default resources now, once
+    c
+  }
+
+  private[sources] def openFooter(file: String): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), sharedConf))
+
   def inferSchema(file: String): StructType = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
+    val reader = openFooter(file)
     try toSpark(reader.getFooter.getFileMetaData.getSchema)
     finally reader.close()
   }
@@ -263,13 +277,9 @@ object MemoryBucketSource {
     * drop every row (Spark prunes fully-claimed filter columns from the
     * required output, so they must be re-added here). Output rows still
     * carry only the required fields. */
-  private[sources] def project(file: String, required: StructType,
+  private[sources] def project(full: MessageType, required: Seq[String],
                                filterCols: Seq[String]): MessageType = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), new Configuration()))
-    val full = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
-    val names0 = (required.fields.toSeq.map(_.name) ++
-      filterCols.filter(full.containsField)).distinct
+    val names0 = (required ++ filterCols.filter(full.containsField)).distinct
     val names =
       if (names0.isEmpty) Seq(full.getFieldName(0)) // bare count(*): 1 col
       else names0
@@ -684,8 +694,7 @@ private[sources] class MemoryScan(
         var sRows = 0L
         var sBytes = 0L
         sampleIdx.foreach { i =>
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(files(i)), new Configuration()))
+          val r = MemoryBucketSource.openFooter(files(i))
           try sRows += r.getRecordCount finally r.close()
           sBytes += sizes(i)
         }
@@ -754,10 +763,10 @@ private[sources] class MemoryReaderFactory(
           StructField(c, a.dataType)))
         val dedup = inputs.groupBy(_.name).map(_._2.head).toArray
         new AggPartialReader(specs,
-          new GroupRowReader(file, StructType(dedup), predicate, None, None,
+          new StoreRowReader(file, StructType(dedup), predicate, None, None,
             filterCols, score, scorePreds))
       case None =>
-        new GroupRowReader(file, required, predicate, limit, topN,
+        new StoreRowReader(file, required, predicate, limit, topN,
           filterCols, score, scorePreds)
     }
   }
@@ -770,7 +779,7 @@ private[sources] class MemoryReaderFactory(
   * row so COUNT(*) sums correctly. */
 private[sources] class AggPartialReader(
     specs: Seq[MemoryBucketSource.AggSpec],
-    inner: GroupRowReader) extends PartitionReader[InternalRow] {
+    inner: StoreRowReader) extends PartitionReader[InternalRow] {
   private val innerSchema = inner.requiredSchema
   private var done = false
   private var row: InternalRow = _
@@ -820,14 +829,150 @@ private[sources] class AggPartialReader(
   override def close(): Unit = inner.close()
 }
 
-/** Row-by-row parquet reader over the example Group API — the pushed
-  * predicate runs INSIDE parquet (row-group pruning + record skipping),
-  * the projection narrows the read schema, the limit stops the partition
+/** One projected top-level column of the record being decoded — reused
+  * for every record of the file. Scalars land in `long` (INT32, INT64,
+  * BOOLEAN as 0/1), `double` (FLOAT promoted, DOUBLE) or `binary`; a
+  * LIST column fills the value buffer matching its element type, with a
+  * per-element null flag. `present` is false for a NULL column value. */
+private[sources] final class ColumnSlot(val name: String,
+    kind: PrimitiveType.PrimitiveTypeName, val isList: Boolean) {
+  import PrimitiveType.PrimitiveTypeName._
+  var present = false
+  var long = 0L
+  var double = 0.0
+  var binary: Binary = _
+  var size = 0
+  var nullElems = 0
+  var elemNull = new Array[Boolean](if (isList) 16 else 0)
+  var doubles: Array[Double] =
+    if (isList && (kind == FLOAT || kind == DOUBLE)) new Array[Double](16) else null
+  var longs: Array[Long] =
+    if (isList && (kind == INT32 || kind == INT64 || kind == BOOLEAN)) new Array[Long](16)
+    else null
+  var binaries: Array[Binary] =
+    if (isList && kind == BINARY) new Array[Binary](16) else null
+
+  def startList(): Unit = { present = true; size = 0; nullElems = 0 }
+
+  /** A new list element, NULL until its value arrives. */
+  def addElement(): Unit = {
+    if (size == elemNull.length) {
+      val cap = size * 2
+      elemNull = java.util.Arrays.copyOf(elemNull, cap)
+      if (doubles != null) doubles = java.util.Arrays.copyOf(doubles, cap)
+      if (longs != null) longs = java.util.Arrays.copyOf(longs, cap)
+      if (binaries != null) binaries = java.util.Arrays.copyOf(binaries, cap)
+    }
+    elemNull(size) = true
+    nullElems += 1
+    size += 1
+  }
+
+  private def setElement(): Int = {
+    val i = size - 1
+    elemNull(i) = false
+    nullElems -= 1
+    i
+  }
+  def putLong(v: Long): Unit =
+    if (isList) longs(setElement()) = v else { long = v; present = true }
+  def putDouble(v: Double): Unit =
+    if (isList) doubles(setElement()) = v else { double = v; present = true }
+  def putBinary(v: Binary): Unit =
+    if (isList) binaries(setElement()) = v else { binary = v; present = true }
+}
+
+private[sources] final class SlotConverter(slot: ColumnSlot) extends PrimitiveConverter {
+  override def addInt(v: Int): Unit = slot.putLong(v)
+  override def addLong(v: Long): Unit = slot.putLong(v)
+  override def addBoolean(v: Boolean): Unit = slot.putLong(if (v) 1L else 0L)
+  override def addFloat(v: Float): Unit = slot.putDouble(v.toDouble)
+  override def addDouble(v: Double): Unit = slot.putDouble(v)
+  override def addBinary(v: Binary): Unit = slot.putBinary(v)
+}
+
+/** Spark's 3-level list: group (LIST) { repeated group list { element } }. */
+private[sources] final class ListConverter(slot: ColumnSlot) extends GroupConverter {
+  private val element = new GroupConverter {
+    private val value = new SlotConverter(slot)
+    override def getConverter(i: Int): Converter = value
+    override def start(): Unit = slot.addElement()
+    override def end(): Unit = ()
+  }
+  override def getConverter(i: Int): Converter = element
+  override def start(): Unit = slot.startList()
+  override def end(): Unit = ()
+}
+
+/** Decodes each record into the same reused slots, one [[ColumnSlot]]
+  * per projected column in the projection's field order — no
+  * per-record object graph. */
+private[sources] final class SlotMaterializer(schema: MessageType)
+    extends RecordMaterializer[Array[ColumnSlot]] {
+  import scala.jdk.CollectionConverters._
+  private val slots: Array[ColumnSlot] = schema.getFields.asScala.map {
+    case p: PrimitiveType =>
+      new ColumnSlot(p.getName, p.getPrimitiveTypeName, isList = false)
+    case g: GroupType =>
+      val elem = g.getType(0).asGroupType().getType(0)
+      if (!elem.isPrimitive)
+        throw new UnsupportedOperationException(s"parquet group $g")
+      new ColumnSlot(g.getName, elem.asPrimitiveType().getPrimitiveTypeName, isList = true)
+  }.toArray
+  private val root = new GroupConverter {
+    private val children: Array[Converter] = slots.map(s =>
+      if (s.isList) new ListConverter(s) else new SlotConverter(s))
+    override def getConverter(i: Int): Converter = children(i)
+    override def start(): Unit = {
+      var i = 0
+      while (i < slots.length) { slots(i).present = false; i += 1 }
+    }
+    override def end(): Unit = ()
+  }
+  override def getCurrentRecord: Array[ColumnSlot] = slots
+  override def getRootConverter: GroupConverter = root
+}
+
+/** Projects the footer's schema at read init ([[MemoryBucketSource.project]])
+  * — the footer the reader opens anyway, so the projection costs no
+  * second open. */
+private[sources] final class SlotReadSupport(required: Seq[String], extra: Seq[String])
+    extends ReadSupport[Array[ColumnSlot]] {
+  override def init(ctx: InitContext): ReadSupport.ReadContext =
+    new ReadSupport.ReadContext(
+      MemoryBucketSource.project(ctx.getFileSchema, required, extra))
+  override def prepareForRead(conf: ParquetConfiguration,
+      meta: java.util.Map[String, String], fileSchema: MessageType,
+      ctx: ReadSupport.ReadContext): RecordMaterializer[Array[ColumnSlot]] =
+    new SlotMaterializer(ctx.getRequestedSchema)
+  override def prepareForRead(conf: Configuration,
+      meta: java.util.Map[String, String], fileSchema: MessageType,
+      ctx: ReadSupport.ReadContext): RecordMaterializer[Array[ColumnSlot]] =
+    new SlotMaterializer(ctx.getRequestedSchema)
+}
+
+/** The `(InputFile, ParquetConfiguration)` builder: the path-based
+  * builder constructs a fresh Hadoop `Configuration` of its own. */
+private[sources] final class SlotReaderBuilder(file: InputFile,
+    conf: ParquetConfiguration, support: ReadSupport[Array[ColumnSlot]])
+    extends ParquetReader.Builder[Array[ColumnSlot]](file, conf) {
+  override protected def getReadSupport(): ReadSupport[Array[ColumnSlot]] = support
+}
+
+/** Row-by-row parquet reader of one bucket file. The pushed predicate
+  * runs INSIDE parquet (row-group pruning + record skipping), the
+  * projection narrows the read schema, the limit stops the partition
   * early, and a pushed top-N is answered from a BOUNDED heap (worst row
   * on top, O(log n) eviction) so the partition returns its local top-N
-  * rows in order without ever buffering more than n. Fixture-scale read
-  * path; the pushdown CONTRACT is what the plan tests pin. */
-private[sources] class GroupRowReader(
+  * rows in order without ever buffering more than n.
+  *
+  * Records decode into reused slots ([[SlotMaterializer]]); the scorer
+  * reads the embedding's value buffer in place, and an output row is
+  * built only for a row that is emitted or that the top-N heap admits.
+  * NULL rule of the scorer: a NULL embedding, a dimension mismatch or a
+  * NULL element scores NULL (as [[graft.functions.Similarity.score]]
+  * does), and cosine is also NULL at zero magnitude. */
+private[sources] class StoreRowReader(
     file: String, required: StructType,
     predicate: Option[FilterPredicate], limit: Option[Int],
     topN: Option[(Seq[MemoryBucketSource.SortSpec], Int)],
@@ -841,88 +986,79 @@ private[sources] class GroupRowReader(
 
   private def isScoreCol(name: String): Boolean = score.exists(_.output == name)
 
-  private val reader: ParquetReader[Group] = {
-    val conf = new Configuration()
+  private val reader: ParquetReader[Array[ColumnSlot]] = {
     // the computed score column never reaches parquet; the embedding
     // column it is computed FROM must, even when pruned from the output
-    val fileRequired = StructType(required.fields.filterNot(f => isScoreCol(f.name)))
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA,
-      MemoryBucketSource.project(file, fileRequired,
-        filterCols.filterNot(isScoreCol) ++
-          topN.toSeq.flatMap(_._1.map(_.name)).filterNot(isScoreCol) ++
-          score.map(_.column).toSeq).toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf)
+    val support = new SlotReadSupport(
+      required.fields.toSeq.map(_.name).filterNot(isScoreCol),
+      filterCols.filterNot(isScoreCol) ++
+        topN.toSeq.flatMap(_._1.map(_.name)).filterNot(isScoreCol) ++
+        score.map(_.column).toSeq)
+    // parquet writes its read options back into the conf it is handed,
+    // so each reader gets its own copy of the shared one
+    val conf = new Configuration(MemoryBucketSource.sharedConf)
+    val b: ParquetReader.Builder[Array[ColumnSlot]] = new SlotReaderBuilder(
+      HadoopInputFile.fromPath(new Path(file), conf),
+      new HadoopParquetConfiguration(conf), support)
     predicate.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
   }
-  private var current: Group = _
+  // slot index per output field / sort key (-1 = the computed score),
+  // resolved against the first record's projection
+  private var outSlots: Array[Int] = _
+  private var keySlots: Array[Int] = _
+  private var scoreSlot = -1
+  private var current: Array[ColumnSlot] = _ // the decoded record
   private var currentScore: java.lang.Double = _
   private var served = 0
   private var topRows: Iterator[InternalRow] = _
 
-  /** Embedding column as promoted doubles (null when absent), matching
-    * the kernel's f32→f64 element promotion. */
-  private def embOf(g: Group, name: String): Array[Double] = {
-    val gi = g.getType.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(gi) == 0) return null
-    val lst = g.getGroup(gi, 0)
-    val n = lst.getFieldRepetitionCount(0)
-    val isFloat = g.getType.getType(gi).asGroupType().getType(0)
-      .asGroupType().getType(0).asPrimitiveType()
-      .getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.FLOAT
-    val out = new Array[Double](n)
-    var j = 0
-    while (j < n) {
-      val el = lst.getGroup(0, j)
-      out(j) = if (isFloat) el.getFloat(0, 0).toDouble else el.getDouble(0, 0)
-      j += 1
-    }
-    out
+  private def resolve(r: Array[ColumnSlot]): Unit = {
+    def slotOf(name: String): Int = if (isScoreCol(name)) -1 else r.indexWhere(_.name == name)
+    outSlots = required.fields.map(f => slotOf(f.name))
+    keySlots = topN.fold(Array.empty[Int])(_._1.map(s => slotOf(s.name)).toArray)
+    scoreSlot = score.fold(-1)(sp => r.indexWhere(_.name == sp.column))
   }
+
+  private def scoreOf(s: ColumnSlot, sp: MemoryBucketSource.ScoreSpec): java.lang.Double =
+    if (!s.present || s.nullElems > 0) null
+    else if (s.doubles == null)
+      throw new UnsupportedOperationException(
+        s"score column ${s.name} must be ARRAY<FLOAT|DOUBLE>")
+    else MemoryBucketSource.computeScore(s.doubles, s.size, sp.vec, sp.metric)
 
   /** Advance to the next row that passes every accepted score predicate,
     * computing the score once per surviving row. */
   private def readFiltered(): Boolean = {
-    var g = reader.read()
-    while (g != null) {
+    var r = reader.read()
+    while (r != null) {
+      if (outSlots == null) resolve(r)
       val sc: java.lang.Double = score match {
-        case Some(sp) =>
-          MemoryBucketSource.computeScore(embOf(g, sp.column), sp.vec, sp.metric)
+        case Some(sp) => scoreOf(r(scoreSlot), sp)
         case None => null
       }
       if (scorePreds.forall(_.accepts(sc))) {
-        current = g; currentScore = sc; return true
+        current = r; currentScore = sc; return true
       }
-      g = reader.read()
+      r = reader.read()
     }
     current = null; false
   }
 
-  private def keyOf(g: Group, sc: java.lang.Double,
-                    s: MemoryBucketSource.SortSpec): Any = {
-    if (isScoreCol(s.name))
-      return if (sc == null) null else sc.doubleValue()
-    val gi = g.getType.getFieldIndex(s.name)
-    if (g.getFieldRepetitionCount(gi) == 0) null
-    else s.dataType match {
-      case LongType => g.getLong(gi, 0)
-      case IntegerType => g.getInteger(gi, 0)
-      case DoubleType => g.getDouble(gi, 0)
-      case FloatType => g.getFloat(gi, 0)
-      case BooleanType => g.getBoolean(gi, 0)
-      case StringType => UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
-      case other => throw new UnsupportedOperationException(s"sort on $other")
-    }
+  private def keyOf(i: Int, s: MemoryBucketSource.SortSpec): Any = {
+    val si = keySlots(i)
+    if (si < 0) currentScore
+    else if (current(si).present) valueOf(current(si), s.dataType)
+    else null
   }
 
   private def drainTopN(specs: Seq[MemoryBucketSource.SortSpec],
                         n: Int): Iterator[InternalRow] = {
-    val outputOrder = new java.util.Comparator[(Array[Any], InternalRow)] {
-      override def compare(a: (Array[Any], InternalRow),
-                           b: (Array[Any], InternalRow)): Int = {
+    val spec = specs.toArray
+    val keyOrder = new java.util.Comparator[Array[Any]] {
+      override def compare(a: Array[Any], b: Array[Any]): Int = {
         var i = 0
-        while (i < specs.length) {
-          val c = MemoryBucketSource.compareKey(a._1(i), b._1(i), specs(i))
+        while (i < spec.length) {
+          val c = MemoryBucketSource.compareKey(a(i), b(i), spec(i))
           if (c != 0) return c
           i += 1
         }
@@ -930,11 +1066,17 @@ private[sources] class GroupRowReader(
       }
     }
     val heap = new java.util.PriorityQueue[(Array[Any], InternalRow)](
-      math.max(1, n), outputOrder.reversed())
+      math.max(1, n), (a, b) => keyOrder.compare(b._1, a._1))
+    val keys = new Array[Any](spec.length)
     while (readFiltered()) {
-      heap.add((specs.map(keyOf(current, currentScore, _)).toArray,
-        toRow(current, currentScore)))
-      if (heap.size() > n) heap.poll() // evict the current worst
+      var i = 0
+      while (i < spec.length) { keys(i) = keyOf(i, spec(i)); i += 1 }
+      // a row worse than the current worst would be evicted at once, so
+      // it gets no output row; a tie evicts the old worst, as add-then-poll did
+      if (heap.size() < n || keyOrder.compare(keys, heap.peek()._1) <= 0) {
+        heap.add((keys.clone(), toRow()))
+        if (heap.size() > n) heap.poll() // evict the current worst
+      }
     }
     val kept = new Array[(Array[Any], InternalRow)](heap.size())
     var i = kept.length - 1
@@ -955,55 +1097,49 @@ private[sources] class GroupRowReader(
     case Some(_) => topRows.next()
     case None =>
       served += 1
-      toRow(current, currentScore)
+      toRow()
   }
 
-  private def toRow(cur: Group, sc: java.lang.Double): InternalRow = {
+  private def toRow(): InternalRow = {
     val row = new GenericInternalRow(required.length)
     var i = 0
     while (i < required.length) {
-      val f = required.fields(i)
-      if (isScoreCol(f.name)) {
-        row.update(i, if (sc == null) null else sc.doubleValue())
-        i += 1
-      } else {
-      val gi = cur.getType.getFieldIndex(f.name)
-      if (cur.getFieldRepetitionCount(gi) == 0) row.update(i, null)
-      else f.dataType match {
-        case LongType => row.update(i, cur.getLong(gi, 0))
-        case IntegerType => row.update(i, cur.getInteger(gi, 0))
-        case DoubleType => row.update(i, cur.getDouble(gi, 0))
-        case FloatType => row.update(i, cur.getFloat(gi, 0))
-        case BooleanType => row.update(i, cur.getBoolean(gi, 0))
-        case StringType =>
-          row.update(i, UTF8String.fromBytes(cur.getBinary(gi, 0).getBytes))
-        case BinaryType => row.update(i, cur.getBinary(gi, 0).getBytes)
-        case ArrayType(et, _) =>
-          val lst = cur.getGroup(gi, 0)
-          val n = lst.getFieldRepetitionCount(0)
-          val out = new Array[Any](n)
-          var j = 0
-          while (j < n) {
-            val el = lst.getGroup(0, j)
-            out(j) =
-              if (el.getFieldRepetitionCount(0) == 0) null
-              else et match {
-                case FloatType => el.getFloat(0, 0)
-                case DoubleType => el.getDouble(0, 0)
-                case LongType => el.getLong(0, 0)
-                case IntegerType => el.getInteger(0, 0)
-                case StringType => UTF8String.fromBytes(el.getBinary(0, 0).getBytes)
-                case other => throw new UnsupportedOperationException(s"list of $other")
-              }
-            j += 1
-          }
-          row.update(i, new GenericArrayData(out))
-        case other => throw new UnsupportedOperationException(s"type $other")
-      }
+      val si = outSlots(i)
+      row.update(i,
+        if (si < 0) currentScore
+        else if (current(si).present) valueOf(current(si), required.fields(i).dataType)
+        else null)
       i += 1
-      }
     }
     row
+  }
+
+  private def valueOf(s: ColumnSlot, dt: DataType): Any = dt match {
+    case LongType => s.long
+    case IntegerType => s.long.toInt
+    case DoubleType => s.double
+    case FloatType => s.double.toFloat
+    case BooleanType => s.long != 0L
+    case StringType => UTF8String.fromBytes(s.binary.getBytes)
+    case BinaryType => s.binary.getBytes
+    case ArrayType(et, _) =>
+      val out = new Array[Any](s.size)
+      var j = 0
+      while (j < s.size) {
+        out(j) =
+          if (s.elemNull(j)) null
+          else et match {
+            case FloatType => s.doubles(j).toFloat
+            case DoubleType => s.doubles(j)
+            case LongType => s.longs(j)
+            case IntegerType => s.longs(j).toInt
+            case StringType => UTF8String.fromBytes(s.binaries(j).getBytes)
+            case other => throw new UnsupportedOperationException(s"list of $other")
+          }
+        j += 1
+      }
+      new GenericArrayData(out)
+    case other => throw new UnsupportedOperationException(s"type $other")
   }
 
   override def close(): Unit = reader.close()

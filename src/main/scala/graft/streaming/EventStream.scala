@@ -834,10 +834,13 @@ object EventStream {
     * drift contract (e22: a feed GAINS columns; nothing ever changes a
     * column's type). A type change fails loudly instead of silently
     * widening — no caller drifts types, so reaching that require is a
-    * corruption signal, not a feature gap. */
+    * corruption signal, not a feature gap. Version dirs (`.../b<k>/v<n>`)
+    * are merged in committed-version order, then bucket order, so the
+    * field order never depends on how the caller listed them; other
+    * paths keep the caller's order. */
   private[graft] def mergedVersionSchema(spark: SparkSession,
       paths: Seq[String]): org.apache.spark.sql.types.StructType =
-    paths.map(versionSchema(spark, _)).reduceLeft { (a, b) =>
+    paths.sortBy(versionOrder).map(versionSchema(spark, _)).reduceLeft { (a, b) =>
       b.fields.foreach { f =>
         a.fields.find(_.name == f.name).foreach { x =>
           require(x.dataType == f.dataType,
@@ -848,6 +851,15 @@ object EventStream {
       org.apache.spark.sql.types.StructType(
         a.fields ++ b.fields.filterNot(f => a.fields.exists(_.name == f.name)))
     }
+
+  private val VersionDir = """.*/b(\d+)/v(\d+)/?""".r
+
+  /** (version, bucket) of a bucket-version dir; anything else sorts
+    * first, keeping its relative order (the sort is stable). */
+  private def versionOrder(path: String): (Long, Long) = path match {
+    case VersionDir(b, v) => (v.toLong, b.toLong)
+    case _ => (-1L, -1L)
+  }
 
   /** Highest version id whose table state is UNANSWERABLE (destroyed
     * by vacuum or rebucket); −1 = full history intact. */

@@ -249,4 +249,22 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.medianRatio(tiny, tiny).isEmpty)
     assert(Bench.medianRatio(prev, Map.empty).isEmpty)
   }
+
+  test("a query that throws is recorded as failed, never timed, and fails the gate") {
+    var reps = 0
+    val failing = Bench.timeReps(3, () => {
+      reps += 1
+      if (reps == 2) throw new IllegalStateException("boom")
+    })
+    assert(failing.left.exists(_.contains("boom")))
+    assert(reps == 2, "reps after the failure must not run")
+    // a successful query is still min-of-n, each rep after beforeRep
+    var before = 0
+    val ok = Bench.timeReps(3, () => Thread.sleep(2), () => before += 1)
+    assert(ok.exists(t => t >= 0.002 && t < 1.0) && before == 3)
+    // the gate fails on a failure even when nothing regressed
+    assert(!Bench.gatePasses(Seq.empty, Map("q1_scan" -> "boom")))
+    assert(!Bench.gatePasses(Seq("""{"name":"q1_scan"}"""), Map.empty))
+    assert(Bench.gatePasses(Seq.empty, Map.empty))
+  }
 }

@@ -33,6 +33,73 @@ class MemoryBucketSourceSpec extends SparkSpec {
       assert(a._1 == b._1 && a._2 == b._2 && a._5 == b._5)
       assert(a._6.toSeq == b._6.toSeq)
     }
+    // every column shape the decoder handles, NULLs included, from one
+    // flat file of several row groups
+    val shapes = shapesDir
+    def norm(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.orderBy($"id").collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case x => x
+      })
+    val viaParquetShapes = spark.read.parquet(shapes)
+    val viaSourceShapes = spark.read.format("graft.sources.MemoryBucketSource")
+      .option("path", shapes).load()
+    assert(viaSourceShapes.schema.map(f => f.name -> f.dataType) ==
+      viaParquetShapes.schema.map(f => f.name -> f.dataType))
+    val want = norm(viaParquetShapes)
+    assert(want.size == 1000 && want.exists(_.contains(null)))
+    assert(norm(viaSourceShapes) == want)
+    // a pushed range: row groups outside it are skipped by their stats,
+    // the record filter cuts the two groups it straddles
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(
+          graft.sources.MemoryBucketSource.listFiles(shapes, None).head),
+        new org.apache.hadoop.conf.Configuration()))
+    val rowGroups = try footer.getRowGroups.size() finally footer.close()
+    assert(rowGroups > 2, s"fixture has only $rowGroups row groups")
+    val range = $"id" >= 137L && $"id" < 611L
+    val ranged = viaSourceShapes.where(range)
+    assert(ranged.queryExecution.executedPlan.toString
+      .contains("GreaterThanOrEqual(id,137)"))
+    assert(norm(ranged) == norm(viaParquetShapes.where(range)))
+    assert(norm(ranged).size == 611 - 137)
+  }
+
+  /** One parquet file (flat, unbucketed layout) of 1,000 rows in several
+    * row groups: array<double|long|string> with NULL and empty lists and
+    * NULL elements, and nullable int, float, boolean, string and binary
+    * columns holding NULLs. */
+  private lazy val shapesDir: String = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("d", ArrayType(DoubleType, containsNull = true)),
+      StructField("l", ArrayType(LongType, containsNull = true)),
+      StructField("s", ArrayType(StringType, containsNull = true)),
+      StructField("n", IntegerType),
+      StructField("f", FloatType),
+      StructField("flag", BooleanType),
+      StructField("str", StringType),
+      StructField("bin", BinaryType)))
+    def orNull(cond: Boolean, v: Any): Any = if (cond) null else v
+    val rows = (0 until 1000).map { i =>
+      Row(i.toLong,
+        orNull(i % 7 == 0, Seq(i * 0.5, orNull(i % 5 == 0, -i.toDouble), 1e-3)),
+        orNull(i % 11 == 0,
+          if (i % 13 == 0) Seq.empty else Seq(i.toLong, orNull(i % 3 == 0, i * 2L))),
+        orNull(i % 17 == 0, Seq(s"a$i", orNull(i % 4 == 0, "x"), "")),
+        orNull(i % 3 == 0, i),
+        orNull(i % 8 == 0, i / 3.0f),
+        orNull(i % 9 == 0, i % 2 == 0),
+        orNull(i % 6 == 0, s"t$i"),
+        orNull(i % 5 == 1, Array[Byte](i.toByte, 1, 2)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_shapes_").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .write.mode("overwrite").option("parquet.block.size", "2048").parquet(dir)
+    dir
   }
 
   test("v2/v5-shaped query through the source: filters reach the scan description") {
@@ -208,6 +275,22 @@ class MemoryBucketSourceSpec extends SparkSpec {
         spark, dir, 4, Seq(1f, 1f, 0f), k = 10)
       .select($"id").as[Long].collect().toSet
     assert(got == Set(2L, 4L))
+  }
+
+  test("scored search: a NULL embedding element scores NULL store-side, as in the table path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_nullel_").toString
+    val rows = Seq(
+      (1L, Seq(Some(1f), None, Some(2f))),    // NULL element -> null score -> dropped
+      (2L, Seq(Some(1f), Some(0f), Some(2f))),
+      (3L, Seq(Some(0f), Some(1f), Some(1f)))).toDF("id", "embedding")
+    MemoryOps.writeBucketed(rows, dir, "id", 4)
+    val q = Seq(1f, 1f, 1f)
+    val got = graft.sources.MemoryBucketSource.search(spark, dir, 4, q, k = 10)
+      .select($"id", $"score").as[(Long, Double)].collect().toSeq
+    val want = VectorSearch.topK(MemoryOps.readBucketed(spark, dir), q, k = 10,
+        idCol = "id")
+      .select($"id", $"score").as[(Long, Double)].collect().toSeq
+    assert(got == want && got.map(_._1) == Seq(3L, 2L))
   }
 
   test("bucket pruning hashes by the id column's actual type (int and string ids)") {

@@ -29,6 +29,16 @@ class NativeKernelsSpec extends SparkSpec {
       .toDF("a", "b")
       .select(Similarity.cosine(col("a"), col("b")).as("nat"))
     assert(edge.where(col("nat").isNotNull).count() == 0)
+    // a NULL element -> null, as in the HOF form; interpreted (local
+    // relation) and code-generated (RDD scan) alike
+    val withNull = Seq((Seq(Some(1f), None, Some(2f)), Seq(Some(1f), Some(1f), Some(1f))))
+    for (in <- Seq(withNull.toDF("a", "b"),
+        spark.createDataset(spark.sparkContext.parallelize(withNull)).toDF("a", "b"))) {
+      val both = in.select(
+        Similarity.cosine(col("a"), col("b")).as("nat"),
+        Similarity.cosineHof(col("a"), col("b")).as("hof"))
+      assert(both.where(col("nat").isNotNull || col("hof").isNotNull).count() == 0)
+    }
   }
 
   test("native shingle hashes == array_distinct(HOF shingle hashes)") {

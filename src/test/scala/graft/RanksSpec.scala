@@ -20,6 +20,16 @@ class RanksSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("withAvgRank2: a rankSource holding a NULL value fails loudly") {
+    val base = Seq(Some(1L), None, Some(3L)).toDF("x")
+    val e = intercept[IllegalArgumentException] {
+      Ranks.withAvgRank2(base, "r", "x", rankSource = Some(base))
+    }
+    assert(e.getMessage.contains("NULL x"))
+    // without a rankSource the value table is df's own: no contract to break
+    assert(Ranks.withAvgRank2(base, "r", "x").count() == 2)
+  }
+
   test("withNtile == window NTILE, including uneven splits (N % k != 0)") {
     val rnd = new scala.util.Random(9)
     for (n <- Seq(10, 97, 1000); k <- Seq(3, 10)) {

@@ -53,6 +53,25 @@ class SchemaManifestSpec extends SparkSpec {
     assert(merged2.fieldNames.toSet == merged.fieldNames.toSet)
   }
 
+  test("version dirs merge in committed-version order, whatever the listing order") {
+    val root = tmpDir()
+    def versionDir(bucket: Int, version: Int, schema: StructType): String = {
+      val d = new java.io.File(root, s"b$bucket/v$version")
+      EventStream.writeSchemaManifest(d, schema)
+      d.getPath
+    }
+    // a non-prefix drift: v3 adds etype, v5 adds score
+    val era3 = StructType(Seq(StructField("user_id", LongType),
+      StructField("etype", StringType)))
+    val era5 = StructType(Seq(StructField("user_id", LongType),
+      StructField("score", DoubleType)))
+    val paths = Seq(versionDir(2, 5, era5), versionDir(10, 3, era3),
+      versionDir(1, 1, era1))
+    val want = Seq("user_id", "value", "etype", "score")
+    for (order <- paths.permutations)
+      assert(EventStream.mergedVersionSchema(spark, order).fieldNames.toSeq == want)
+  }
+
   test("a type change across versions fails loudly (drift is add-only)") {
     val (d1, d2) = (tmpDir(), tmpDir())
     EventStream.writeSchemaManifest(d1, era1)
