@@ -238,12 +238,14 @@ object Bench {
     }
   }
 
-  /** Minimal JSON string escape for free-text fields (declared reasons,
-    * warning text) interpolated into the bench JSON — a quote or
-    * backslash in a future declared mechanism must not corrupt the line
-    * the harness tail-parses (r3's BENCH tail parsed null once already;
-    * round-9 review finding). Query names are identifier-safe and skip
-    * this. */
+  /** The repo's one JSON string escape: backslash, quote and ALL control
+    * chars (< 0x20). Used for free-text fields (declared reasons,
+    * warning text) in the bench JSON — a quote or backslash in a future
+    * declared mechanism must not corrupt the line the harness
+    * tail-parses (r3's BENCH tail parsed null once already; round-9
+    * review finding) — and by [[Verify]] for `oracle_sql.json`, where a
+    * tab or CR in builder-authored SQL would otherwise make the driver's
+    * `json.load` fail and silently zero the round's correctness. */
   def jsonEscape(s: String): String = s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -286,46 +288,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local fixture files are single small parquets: split scans at 4 MB
-      // so local[N] gets real scan parallelism (cluster deployments keep
-      // the 128 MB default). Round 14 A/B'd a finer floor (openCost
-      // 256 KB + minPartitionNum = cpus, splitting orders/events ~10
-      // ways): the batch subset came out neutral-to-SLOWER (lnk1 +25%)
-      // — the per-task overhead beats the extra parallelism at fixture
-      // scale — so the defaults stay; the env overrides remain for
-      // re-probing on other boxes (OPTIMIZATION_r14.md).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
-          String.valueOf(4 * 1024 * 1024)))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES",
-          String.valueOf(4 * 1024 * 1024)))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
-      // Round 14 (guide §2 "make partitioning scale-adaptive — AQE
-      // coalescing"): cached plans keep their shuffle's RAW partition
-      // count by default (AQE may not change a cached plan's output
-      // partitioning), so every pinned frame — the graph family's edge
-      // pins, DBSCAN's pair pin — materializes at
-      // spark.sql.shuffle.partitions and each ITERATION then schedules
-      // that many near-empty tasks. This flag lets AQE size cached-plan
-      // partitions from the data like any other stage, at fixture scale
-      // AND at warehouse scale (it is a size-derived rule, not a local
-      // constant). A/B at sf0.1/32cpus, min-of-3, quiet box:
-      // kc1 4.55→2.08 s, gc1 4.28→2.31 s, lnk1 5.13→4.36 s.
-      // env-overridable for A/B probes (round 15, verdict item 1);
-      // default unchanged
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // JVM/session warmup outside the timed region. The first measured plan
     // otherwise absorbs ~2 s of one-time infrastructure cost (codegen
     // compiler, window/broadcast/agg exec classes, native kernel classes,

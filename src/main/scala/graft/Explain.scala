@@ -1,11 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: dump the formatted physical plan of registered queries
-  * under the BENCH session conf (same master/shuffle-partition/scan-split
-  * knobs/cached-plan flag as `graft.Bench`, so the dumped plan is the
-  * plan the driver actually times — the old local[4] session showed a
-  * different Exchange/partitioning shape).
+  * under [[GraftSession]], the posture `graft.Bench` times, so the
+  * dumped plan is the plan the driver actually times.
   *
   * Usage: runMain graft.Explain <name1,name2,...> [sfDir] [outDir [suffix]]
   *  - with outDir: writes <outDir>/<name><suffix>.txt per query (the
@@ -19,24 +16,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) Some(args(2)) else None
     val suffix = if (args.length > 3) args(3) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
-          String.valueOf(4 * 1024 * 1024)))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES",
-          String.valueOf(4 * 1024 * 1024)))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -47,7 +27,7 @@ object Explain {
           new java.io.File(d).mkdirs()
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(d, s"$name$suffix.txt"),
-            s"=== $name (sf=$sfDir cpus=$cpus) ===\n$plan"): Unit
+            s"=== $name (sf=$sfDir cpus=${GraftSession.cpus}) ===\n$plan"): Unit
         case None =>
           println(s"=== $name ===")
           println(plan)

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Dev main: 100× soak of the heaviest PRODUCTION-PATH queries (d2
   * minhash-LSH pairs, d10 SRP pairs, a7 trained IVF, sp2 prefix-filtered
-  * sparse cosine) — one more decade past ScaleProbe's 10×.
+  * sparse cosine) — one more decade past the 10× scaling probe
+  * (BASELINE.md "Scaling probe (round 3, 10x replicated sf0.1)").
   *
-  * Replica construction differs from ScaleProbe on purpose: pair miners
+  * Replica construction differs from that probe's on purpose: pair miners
   * measure WORK, so replicas must be mutually independent, not mutual
   * near-dups (which would grow the true answer — and any exact
   * algorithm's cost — quadratically in the factor, by construction):
@@ -25,7 +26,8 @@ import org.apache.spark.sql.functions._
   * linearly with N and the join quadratically; sizing bits to N is what
   * a production deployment does, and is itself part of the scale story.
   *
-  * Usage: runMain graft.Soak [factors...] (default: 10 100)
+  * Usage: runMain graft.Soak [factors...] (default: 10 100). Every soak
+  * recorded in BASELINE.md ran with SPARK_GRAFT_CPUS=32.
   */
 object Soak {
 
@@ -85,8 +87,9 @@ object Soak {
 
     // the purchase graph, replicated with SHIFTED customer/supplier keys:
     // replica i is a disjoint component, so the graph itself (nodes AND
-    // edges) grows by the factor — unlike ScaleProbe's 1x-dimension
-    // replication, this actually scales pr1's iteration subject
+    // edges) grows by the factor — unlike the round-3 scaling probe's
+    // 1x-dimension replication (BASELINE.md "Scaling probe (round 3)"),
+    // this actually scales pr1's iteration subject
     if (missing("orders") || missing("lineitem")) {
       val ord = Tables.orders(spark, baseDir)
       val ordMax = ord.agg(max("o_orderkey")).head().getLong(0) + 1
@@ -376,7 +379,8 @@ object Soak {
     // every batch touches every bucket and pruning CANNOT help; what
     // the lane prices is the bucketed path's staging + per-bucket
     // promote overhead at a growing table (the regime where pruning
-    // wins, batch << table, is ProbeUpsert's four-decade lane).
+    // wins, batch << table, is BASELINE.md "Round-11 upsert-layout
+    // decades").
     "e19b_stream_upsert_bucketed" ->
       SparkEntry.queries("e19b_stream_upsert_bucketed"),
     // the MID-INGEST REBUCKET cadence at factor x keys: the one-time
@@ -634,26 +638,18 @@ object Soak {
     * sorter pages + pointer arrays (x32 concurrent tasks, x2 join sides)
     * exhaust the unified memory pool — the second half of the kc1 100x
     * OOM mechanism (round 8; the first half was the row-object edge pin,
-    * fixed in KCore). 32 at 1x/10x preserves comparability with every
-    * soak recorded before round 8; 320 at 100x puts ~200k rows in a
-    * shuffle partition — the same "partitions sized so tasks fit in
-    * memory" rule a production deployment applies as data grows. */
-  def shufflePartitionsFor(factor: Int): Int = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    cpus * math.max(1, factor / 10)
-  }
+    * fixed in KCore). `cpus` at 1x/10x preserves comparability with every
+    * soak recorded before round 8 (all ran SPARK_GRAFT_CPUS=32); 10x
+    * that at 100x puts ~200k rows in a shuffle partition — the same
+    * "partitions sized so tasks fit in memory" rule a production
+    * deployment applies as data grows. */
+  def shufflePartitionsFor(factor: Int): Int =
+    GraftSession.cpus * math.max(1, factor / 10)
 
   private[graft] def soakSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", String.valueOf(16 * 1024 * 1024))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // every soak recorded in BASELINE.md ran 16 MB splits over its 10-100x replicas
+    spark.conf.set("spark.sql.files.maxPartitionBytes", 16L * 1024 * 1024)
     spark
   }
 
@@ -706,6 +702,7 @@ object Soak {
     }
     val results = selected.map { name =>
       val perScale = dirs.filter(_._1 <= maxFactor(name)).map { case (f, dir) =>
+        // tasks sized to the decade, not the box (see shufflePartitionsFor)
         spark.conf.set("spark.sql.shuffle.partitions", shufflePartitionsFor(f))
         val fn = soakQueries(f).find(_._1 == name).get._2
         val runs = if (f >= 100) 1 else 2

@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev utility: time one registered query N times in a fresh session.
+/** Dev utility: time one registered query N times in a fresh
+  * [[GraftSession]] (the bench posture).
   * Usage: runMain graft.TimeOne <queryName> [sfDir] [n]
   */
 object TimeOne {
@@ -9,34 +9,7 @@ object TimeOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
-          String.valueOf(4 * 1024 * 1024)))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES",
-          String.valueOf(4 * 1024 * 1024)))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_NUM", "1"))
-      // match Bench: AQE may size cached-plan output partitions
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ad-hoc A/B overrides, applied AFTER the fixed conf so they win:
-    // SPARK_GRAFT_EXTRA_CONFS="k=v;k=v" (runtime-settable SQL confs only)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";")
-      .map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        spark.conf.set(kv.take(i), kv.drop(i + 1))
-      })
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     spark.read.parquet(s"$sfDir/region.parquet")
       .write.format("noop").mode("overwrite").save()
     (1 to n).foreach { i =>

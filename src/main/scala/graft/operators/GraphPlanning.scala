@@ -45,7 +45,8 @@ private[graft] object GraphPlanning {
     * per-query warning would train readers to ignore the one
     * concurrent-thrash case that matters. The fix for real thrash:
     * size the pool to the pipeline width (`-Dgraft.pins.max=<width>`,
-    * measured in ProbeConcurrent — see BASELINE.md round 10), or unpin
+    * measured in BASELINE.md "Round-10 restart-recovery lane",
+    * "Concurrent-driver measurement"), or unpin
     * eagerly. */
   private val livePins = new java.util.ArrayDeque[DataFrame]()
   /** Pool depth: 2 covers every sequential harness; a concurrent driver

@@ -100,7 +100,8 @@ object EventStream {
     * rewrite here is O(table) — the SIMPLE form for small keyed tables;
     * once the table outgrows the batch, use [[streamingUpsertBucketed]],
     * whose merge is partition-pruned to the id-buckets the batch touched
-    * (ProbeUpsert prices the crossover). A table format with native
+    * (BASELINE.md "Round-11 upsert-layout decades" prices the
+    * crossover). A table format with native
     * MERGE slots in here unchanged.
     *
     * `reduceBatch` collapses each micro-batch BEFORE the merge — the
@@ -175,7 +176,8 @@ object EventStream {
   }
 
   /** One micro-batch of [[streamingUpsert]]'s merge, as a plain batch
-    * job (the foreachBatch body, shared with ProbeUpsert's lane timer):
+    * job (the foreachBatch body, priced in BASELINE.md "Round-11
+    * upsert-layout decades"):
     * LWW-merge `incoming` against the newest `_SUCCESS`-committed
     * version with id < batchId and overwrite `v<batchId>`. O(table) per
     * batch — the simple form; [[upsertBatchBucketed]] is the pruned one. */
@@ -291,7 +293,8 @@ object EventStream {
   }
 
   /** One micro-batch of the bucketed merge (the foreachBatch body,
-    * shared with ProbeUpsert): prune to touched buckets, merge, write
+    * priced in BASELINE.md "Round-11 upsert-layout decades"): prune to
+    * touched buckets, merge, write
     * the next version of each touched bucket via staging + per-bucket
     * promote. Untouched buckets' files are never read or written. All
     * paths resolve through the ACTIVE GENERATION (see
@@ -300,14 +303,6 @@ object EventStream {
   private[graft] def upsertBatchBucketed(tableRoot0: String, inc0: DataFrame,
       batchId: Long, idCol: String, nBuckets: Int,
       retainVersions: Int = 0, tolerateSchemaDrift: Boolean = false): Unit = {
-    val dbgT0 = System.nanoTime()
-    val dbg = sys.env.contains("GRAFT_REPLAY_DEBUG")
-    var dbgP0 = dbgT0
-    def dbgPhase(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"[replay]   b$batchId $label%-14s ${(now - dbgP0) / 1e9}%6.3f s")
-      dbgP0 = now
-    }
     val spark = inc0.sparkSession
     val dir = activeBucketedDir(new java.io.File(tableRoot0))
     val tableRoot = dir.getPath
@@ -326,7 +321,6 @@ object EventStream {
     // prune step shared with the batch form (MemoryOps.upsertBucketed)
     val (inc, touched) =
       graft.operators.MemoryOps.tagTouchedBuckets(inc1, idCol, n)
-    dbgPhase("touched")
     if (touched.isEmpty) return
     // the authoritative bucket count is stamped with the first real
     // write (an empty batch leaves no artifacts at all)
@@ -355,7 +349,6 @@ object EventStream {
           .schema(mergedVersionSchema(spark, currentPaths.toSeq))
           .parquet(currentPaths.toIndexedSeq: _*)),
         inc, idCol, tolerateSchemaDrift)
-    dbgPhase("merge-plan")
     // ONE job writes every touched bucket's next version into staging
     // (clustered on the bucket → one file per bucket dir); promotion is
     // a per-bucket rename + commit marker. Leading underscore keeps
@@ -364,7 +357,6 @@ object EventStream {
     org.apache.commons.io.FileUtils.deleteQuietly(staging)
     merged.repartition(col("__bucket"))
       .write.partitionBy("__bucket").mode("overwrite").parquet(staging.getPath)
-    dbgPhase("merge-write")
     val dataSchema = org.apache.spark.sql.types.StructType(
       merged.schema.fields.filterNot(_.name == "__bucket"))
     touched.foreach { k =>
@@ -378,7 +370,6 @@ object EventStream {
       new java.io.File(dst, "_SUCCESS").createNewFile(): Unit
     }
     org.apache.commons.io.FileUtils.deleteQuietly(staging)
-    dbgPhase("promote")
     if (retainVersions >= 1) {
       // per touched bucket: doom everything below the newest
       // max(retain−1, 1) older versions (the retry's merge source
@@ -403,11 +394,6 @@ object EventStream {
     }
     } finally {
       inc1.unpersist(): Unit
-      // in the finally so the empty-batch early return still traces
-      // (round-14 advisor: debug timelines showed gaps at empty batchIds)
-      if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-        println(f"[replay] upsertBatchBucketed b$batchId: " +
-          f"${(System.nanoTime() - dbgT0) / 1e9}%.2f s")
     }
   }
 
@@ -1752,7 +1738,6 @@ object EventStream {
       seen += dst.getName
       i += 1
     }
-    def startMillis: Long = t0
   }
 
   /** Far-future watermark-carrier row, filtered back out of every
@@ -1809,9 +1794,6 @@ object EventStream {
     try (0 until stager.total).foreach(stager.deliver(w, _))
     finally stager.close()
     src.unpersist()
-    if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-      println(s"[replay] chunk-write phase: " +
-        s"${(System.currentTimeMillis() - w.startMillis) / 1000.0} s")
     dir
   }
 
@@ -1855,13 +1837,15 @@ object EventStream {
     * parquet write determinism). Empty chunks fall back to a zero-row
     * one-job write so batchIds can never shift. `close()` reclaims the
     * staging dir. */
-  private final class ChunkStager(src: DataFrame, outCols: Seq[String],
+  private[graft] final class ChunkStager(src: DataFrame, outCols: Seq[String],
       chunks: Int, lo: Long, span: Long, extras: Seq[DataFrame] = Nil) {
     private val stagingRoot =
       java.nio.file.Files.createTempDirectory("graft_replay_stage")
+    // close() reclaims it early; a crash mid-delivery leaves it to exit
+    registerRestartRoot(stagingRoot.toFile)
     // the parquet writer requires a NOT-yet-existing target path
     private val staging = stagingRoot.resolve("c")
-    locally {
+    try {
       val base = src.select(
         outCols.map(col) :+ chunkIndexCol(lo, span, chunks): _*)
       extras.zipWithIndex.foldLeft(base) { case (acc, (f, j)) =>
@@ -1870,7 +1854,7 @@ object EventStream {
         }
         .repartition(col("__chunk"))
         .write.partitionBy("__chunk").parquet(staging.toString)
-    }
+    } catch { case e: Throwable => close(); throw e }
     /** Total deliverable batch count (real chunks + extras). */
     def total: Int = chunks + extras.size
     def deliver(w: ChunkWriter, i: Int, keep: Boolean = false): Unit = {
@@ -2008,22 +1992,6 @@ object EventStream {
         .option("checkpointLocation", ckpt)
         .outputMode(mode).start()
       try { q.processAllAvailable() } finally q.stop()
-      // per-batch phase evidence for the drain (round 15, guide §1):
-      // where each micro-batch's wall-clock went, from the engine's own
-      // progress metrics — the replay lanes' cost is drain-bound and
-      // invisible to job timers
-      if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-        q.recentProgress.foreach { p =>
-          def ms(k: String): Long =
-            Option(p.durationMs.get(k)).map(_.longValue).getOrElse(-1L)
-          val stateCommit = p.stateOperators.map(_.commitTimeMs).sum
-          println(s"[replay] $prefix batch ${p.batchId}: " +
-            s"trigger ${ms("triggerExecution")} ms (addBatch ${ms("addBatch")}, " +
-            s"getBatch ${ms("getBatch")}, latestOffset ${ms("latestOffset")}, " +
-            s"planning ${ms("queryPlanning")}, walCommit ${ms("walCommit")}, " +
-            s"commitOffsets ${ms("commitOffsets")}, stateCommit $stateCommit ms, " +
-            s"rows ${p.numInputRows})")
-        }
     } finally {
       // the replay is done with its checkpoint the moment the drain ends —
       // reclaim the tmpfs space instead of accumulating a dir per replay
@@ -2525,30 +2493,20 @@ object EventStream {
       q.awaitTermination()
     }
 
-    val dbg = sys.env.contains("GRAFT_REPLAY_DEBUG")
-    def phase[T](label: String)(body: => T): T = {
-      val p0 = System.nanoTime()
-      val r = body
-      if (dbg) println(f"[restart] $label%-14s ${(System.nanoTime() - p0) / 1e9}%6.2f s")
-      r
-    }
     try {
       val half = chunks / 2
-      phase("write-phase1") {
-        (0 until half).foreach(i => stager.deliver(w, i, keep = i == 0)) }
-      phase("drain-1")(drain()) // query 1: first tranche, then stops
+      (0 until half).foreach(i => stager.deliver(w, i, keep = i == 0))
+      drain() // query 1: first tranche, then stops
       betweenDrains(ckpt, outDir)
-      phase("write-phase2") {
-        // byte-identical redelivery across the restart (keep: the staged
-        // file must survive for the (half until chunks) loop when
-        // chunks < 2 makes this the FIRST delivery of chunk 0; close()
-        // reclaims it either way)
-        stager.deliver(w, 0, keep = true)
-        (half until chunks).foreach(stager.deliver(w, _))
-        stager.deliver(w, chunks)     // flush sentinel #1
-        stager.deliver(w, chunks + 1) // flush sentinel #2
-      }
-      phase("drain-2")(drain()) // query 2: fresh plan, recovered checkpoint
+      // byte-identical redelivery across the restart (keep: the staged
+      // file must survive for the (half until chunks) loop when
+      // chunks < 2 makes this the FIRST delivery of chunk 0; close()
+      // reclaims it either way)
+      stager.deliver(w, 0, keep = true)
+      (half until chunks).foreach(stager.deliver(w, _))
+      stager.deliver(w, chunks)     // flush sentinel #1
+      stager.deliver(w, chunks + 1) // flush sentinel #2
+      drain() // query 2: fresh plan, recovered checkpoint
     } finally {
       stager.close()
       src.unpersist()
@@ -2648,12 +2606,9 @@ object EventStream {
     val stream = runner.readStream
       .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val t0 = System.nanoTime()
     val q = streamingUpsertBucketed(stream, root, "user_id", nBuckets,
       reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt))
     drainAndAwait(runner, q)
-    if (sys.env.contains("GRAFT_REPLAY_DEBUG"))
-      println(f"[replay] bucketed-ingest drain: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // the ckpt dir is NOT reclaimed here: the e21/e24 vacuum lanes'
     // drained-checkpoint guard must still resolve the `_OWNER` path to
     // prove no batch is in flight. It is a few KB of tmpfs, reclaimed

@@ -159,6 +159,16 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.jsonEscape("""back\slash""") == """back\\slash""")
     assert(Bench.jsonEscape("tab\there") == "tab\\u0009here")
     assert(Bench.jsonEscape("plain text 1.3x") == "plain text 1.3x")
+    // Verify writes oracle_sql.json through it too: newlines, CRs, tabs
+    // and every other char below 0x20 must parse back to the original
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val controls = (0 until 0x20).map(_.toChar).mkString
+    Seq("line\nbreak", "cr\rlf", "tab\there", controls,
+        "SELECT \"a\\b\"\n\tFROM t\r\n" + controls + "end").foreach { raw =>
+      val esc = Bench.jsonEscape(raw)
+      assert(esc.forall(_ >= ' '), s"raw control char left in $esc")
+      assert(mapper.readValue("\"" + esc + "\"", classOf[String]) == raw)
+    }
   }
 
   test("r11 replay: the disk-side drift shape is adjudicated by the IO" +

@@ -1767,4 +1767,19 @@ class EventStreamSpec extends SparkSpec {
       "cohort no longer exercises the null-fill branch")
     assert(got.exists(_._4.nonEmpty), "no era-2 rows")
   }
+
+  test("ChunkStager: a staging write that fails leaves no staging dir" +
+      " behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stageDirs(): Set[String] = Option(tmp.listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("graft_replay_stage")).map(_.getName).toSet
+    val before = stageDirs()
+    val src = Tables.events(spark, sf0001)
+      .withColumn("__sec", $"ts".cast("long"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      new EventStream.ChunkStager(src, Seq("event_id", "no_such_col"),
+        chunks = 4, lo = 0L, span = 1L)
+    }
+    assert(stageDirs() -- before == Set.empty)
+  }
 }
