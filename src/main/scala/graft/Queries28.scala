@@ -17,7 +17,7 @@ import graft.sources.MemoryBucketSource
   *
   *  - src1: point lookup (id IN → bucket pruning) + stored-column top-N
   *    through the source (reference read path src/routes.rs:319-343, the
-  *    by-id fetch; pruning arithmetic = the writer's pmod(xxhash64)).
+  *    by-id fetch; pruning arithmetic = the writer's bucket rule).
   *  - src2: the full Qdrant-style scored delegation — cosine + threshold
   *    + per-bucket top-k evaluated store-side
   *    (src/vector_store.rs:265-310), Spark merging nBuckets·k rows.
@@ -156,7 +156,7 @@ object Queries28 {
   // broadcast join against a SELECTIVELY FILTERED id set. Spark injects
   // a dynamic-pruning runtime filter into the DSv2 scan
   // (SupportsRuntimeFiltering); at execution time the broadcast ids run
-  // the writer's pmod(xxhash64(id), n) and whole bucket directories drop
+  // the writer's bucket rule and whole bucket directories drop
   // out before any file opens — "fetch the memories this batch
   // references" touches the buckets those ids live in, not all of them.
   // DppSpec pins the injected filter; this row pins the RESULTS.

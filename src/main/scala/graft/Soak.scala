@@ -60,7 +60,7 @@ object Soak {
           if (i == 0) emb
           else emb.withColumn("embedding",
             transform(col("embedding"), (x, j) =>
-              when(pmod(xxhash64(lit(i.toLong * 8191L) + j.cast("long")), lit(2L)) === 0,
+              when(xxhash64(lit(i.toLong * 8191L) + j.cast("long")) % 2L === 0,
                 x).otherwise(-x)))
         flipped.withColumn("vec_id", col("vec_id") + lit(i * embMax))
       }.reduce(_ unionByName _)
@@ -561,7 +561,7 @@ object Soak {
       val fp = sourceFingerprint(dir)
       if (!isFresh(out, fp)) {
         Tables.memories(s, dir).select(col("id"))
-          .where(pmod(xxhash64(col("id")), lit(nb.toLong)) < 2)
+          .where(graft.operators.MemoryOps.bucketOf("id", nb) < 2)
           .coalesce(1).write.mode("overwrite").parquet(out)
         stampFingerprint(out, fp)
       }

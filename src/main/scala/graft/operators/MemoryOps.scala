@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Keyed-table mutation semantics over immutable columnar storage — the
   * reference's store/upsert/delete surface re-expressed as version-producing
@@ -128,8 +131,34 @@ object MemoryOps {
 
   // --- bucketed layout: partition-pruned merge ---------------------------
 
+  /** THE bucketing rule of every bucketed layout: pmod(xxhash64(id), n).
+    * Stated once, as the Catalyst expression both forms below wrap, so
+    * the writer and the driver-side pruning can never disagree. */
+  private def bucketRule(id: Expression, nBuckets: Int): Expression =
+    Pmod(new XxHash64(Seq(id)), Literal(nBuckets.toLong))
+
+  /** The bucket column the writers partition by. */
   private[graft] def bucketOf(idCol: String, nBuckets: Int): Column =
-    pmod(xxhash64(col(idCol)), lit(nBuckets.toLong))
+    GraftBridge.column(bucketRule(GraftBridge.expression(col(idCol)), nBuckets))
+
+  /** The same rule as a driver-side function of one id value (no Spark
+    * job), built once and applied per value: a value of `valueType` is
+    * cast to the STORED id type first, under the session time zone,
+    * exactly as `lit(id).cast(idType)` — xxhash64 hashes an Int and a
+    * Long differently, so hashing the caller's literal type would pick
+    * a bucket the writer never used. */
+  private[graft] def idBucketer(valueType: DataType, idType: DataType,
+      nBuckets: Int, timeZone: String): Any => Long = {
+    val rule = bucketRule(Cast(BoundReference(0, valueType, nullable = true),
+      idType, Some(timeZone)), nBuckets)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(valueType)
+    id => rule.eval(InternalRow(toCatalyst(id))).asInstanceOf[Long]
+  }
+
+  /** [[idBucketer]] for a single id of its literal type. */
+  private[graft] def bucketOfId(id: Any, idType: DataType, nBuckets: Int,
+      timeZone: String): Long =
+    idBucketer(Literal(id).dataType, idType, nBuckets, timeZone)(id)
 
   /** The PRUNE STEP shared by the batch and streaming bucketed merges:
     * tag `incoming` with its id-buckets and collect the DISTINCT

@@ -16,12 +16,13 @@ import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -30,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 read path for the bucketed memory layout
   * ([[graft.operators.MemoryOps.writeBucketed]]: parquet files under
-  * `__bucket=k/` dirs, bucket = pmod(xxhash64(id), nBuckets)) that
+  * `__bucket=k/` dirs, bucket = [[graft.operators.MemoryOps.bucketOf]]) that
   * DELEGATES work to the store, the way the reference's Qdrant scan does
   * (score threshold + limit + session filter evaluated store-side,
   * src/vector_store.rs:277-293):
@@ -40,7 +41,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    stats pruning + record-level assembly skips) — accepted filters
   *    are handled EXACTLY store-side, so Spark drops its own copy.
   *  - id-equality filters additionally prune whole BUCKET DIRECTORIES
-  *    (the same arithmetic as the writer: pmod(xxhash64(id), n)) — the
+  *    (the writer's own bucket rule, evaluated driver-side) — the
   *    point-lookup never opens 15 of 16 buckets.
   *  - `SupportsPushDownLimit`: the per-partition reader stops after
   *    `limit` rows (partial pushdown; Spark keeps the global limit).
@@ -356,22 +357,21 @@ object MemoryBucketSource {
   }
 
   /** Bucket ids a filter restricts the id column to — the writer's
-    * pmod(xxhash64(id), n) arithmetic, applied driver-side. The hash
-    * MUST dispatch on the id column's actual DataType exactly as Spark's
-    * `XxHash64` expression does (hashInt for 32-bit, hashLong for
-    * 64-bit, UTF8 bytes for strings) — hashing an int id's long value
-    * would select a DIFFERENT bucket than the writer did and silently
-    * return no rows. Types outside the mirrored set prune nothing. */
+    * bucket rule evaluated driver-side by
+    * [[graft.operators.MemoryOps.idBucketer]] on the id column's actual
+    * DataType (hashing an int id's long value would select a DIFFERENT
+    * bucket than the writer did and silently return no rows). Ids of
+    * type long, int and string prune; other types prune nothing. */
   private[sources] def bucketsFor(f: Filter, idCol: String, idType: DataType,
                                   n: Int): Option[Set[Long]] = {
-    def hashOf(v: Any): Option[Long] = (idType, v) match {
-      case (LongType, x: Number) => Some(XXH64.hashLong(x.longValue(), 42L))
-      case (IntegerType, x: Number) => Some(XXH64.hashInt(x.intValue(), 42L))
-      case (StringType, s: String) =>
-        Some(XXH64.hashUTF8String(UTF8String.fromString(s), 42L))
+    lazy val bucketer = graft.operators.MemoryOps.idBucketer(idType, idType,
+      n, SQLConf.get.sessionLocalTimeZone)
+    def bucketOf(v: Any): Option[Long] = ((idType, v) match {
+      case (LongType, x: Number) => Some(x.longValue())
+      case (IntegerType, x: Number) => Some(x.intValue())
+      case (StringType, s: String) => Some(s)
       case _ => None
-    }
-    def bucketOf(v: Any): Option[Long] = hashOf(v).map(h => ((h % n) + n) % n)
+    }).map(bucketer)
     f match {
       case sources.EqualTo(c, v) if c == idCol && v != null =>
         bucketOf(v).map(Set(_))
@@ -614,16 +614,15 @@ private[sources] class MemoryScan(
   /** RUNTIME bucket pruning — the dynamic-partition-pruning analog for
     * the bucketed store layout. When the store sits on the probe side of
     * a broadcast join on its id column, Spark hands the BUILT side's id
-    * set back to the scan at execution time; the writer's
-    * pmod(xxhash64(id), n) arithmetic turns those ids into a bucket set,
-    * and whole bucket directories drop out of the scan BEFORE any file
-    * opens. At warehouse scale this is the difference between "fetch the
-    * 50 memories this batch references" touching 2 of 4096 buckets and
-    * touching all of them. Plan-time pruning ([[MemoryScanBuilder]]'s
+    * set back to the scan at execution time; the writer's bucket rule
+    * turns those ids into a bucket set, and whole bucket directories
+    * drop out of the scan BEFORE any file opens. At warehouse scale
+    * this is the difference between "fetch the 50 memories this batch
+    * references" touching 2 of 4096 buckets and touching all of them. Plan-time pruning ([[MemoryScanBuilder]]'s
     * bucketsFor over pushed filters) and runtime pruning compose by
     * intersection; an unbucketed layout or an id type outside the
-    * mirrored hash set reports no filterable attributes and is left
-    * alone. */
+    * pruned set (long, int, string) reports no filterable attributes
+    * and is left alone. */
   private var runtimeBuckets: Option[Set[Long]] = buckets
 
   override def filterAttributes()

@@ -186,8 +186,7 @@ object EventStream {
       tolerateSchemaDrift: Boolean = false): Unit = {
     val spark = incoming.sparkSession
     val root = new java.io.File(tableRoot)
-    val committedBefore = committedVersions(root).filter(_ < batchId)
-    val merged = committedBefore.lastOption match {
+    val merged = newestCommitted(root, Some(batchId - 1)) match {
       case Some(latest) =>
         graft.operators.MemoryOps.upsertById(
           spark.read.parquet(s"$tableRoot/v$latest"), incoming, idCol,
@@ -195,27 +194,32 @@ object EventStream {
       case None => incoming
     }
     merged.write.mode("overwrite").parquet(s"$tableRoot/v$batchId")
-    if (retainVersions >= 1)
-      retireOlderVersions(root, batchId, retainVersions)
+    if (retainVersions >= 1) // the predecessor survives (see [[retire]])
+      retire(root, Seq(root -> committedVersions(root).filter(_ < batchId)),
+        math.max(retainVersions - 1, 1))
   }
 
-  /** The in-writer retention step (see [[streamingUpsert]]): drop
-    * committed versions below `batchId` beyond the newest
-    * max(retain−1, 1) — the predecessor survives as the crash-window
-    * retry's merge source — and raise the horizon first, so a
-    * concurrent as-of reader racing the deletion gets the loud error,
-    * never a partially-deleted read. */
-  private def retireOlderVersions(root: java.io.File, batchId: Long,
-      retain: Int): Unit = {
-    val older = committedVersions(root).filter(_ < batchId)
-    val doomed = older.dropRight(math.max(retain - 1, 1))
-    if (doomed.nonEmpty) {
-      val floor = older.drop(doomed.size).head - 1 // lowest kept − 1
-      if (floor > readHorizon(root))
-        writeMetaFile(root, "_RETENTION_HORIZON", floor.toString)
-      doomed.foreach(v => org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(root, s"v$v")): Unit)
-    }
+  /** THE retirement rule of the versioned store — in-writer retention of
+    * both layouts and both vacuums call it. Per version axis (a bucket
+    * dir, or a plain table's root), the candidate versions beyond the
+    * newest `keep` are doomed, and the lowest kept one bounds the
+    * axis's floor (lowest kept − 1). `_RETENTION_HORIZON` in
+    * `horizonDir` rises ONCE to the maximum floor BEFORE any deletion:
+    * a concurrent as-of reader racing the deletion, or a crash mid-way,
+    * finds the horizon already covering whatever is destroyed — the
+    * loud error, never a partially-deleted read. In-writer retention
+    * passes only the versions below the batch just committed and keeps
+    * max(retain−1, 1) of them: the immediate predecessor survives as
+    * the crash-window retry's merge source. */
+  private def retire(horizonDir: java.io.File,
+      axes: Seq[(java.io.File, Seq[Long])], keep: Int): Unit = {
+    val floor = axes.collect { case (_, vs) if vs.size > keep =>
+      vs(vs.size - keep) - 1 }.maxOption
+    floor.filter(_ > readHorizon(horizonDir)).foreach(f =>
+      writeMetaFile(horizonDir, "_RETENTION_HORIZON", f.toString))
+    for ((dir, vs) <- axes; v <- vs.dropRight(keep))
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(dir, s"v$v")): Unit
   }
 
   // --- bucketed streaming upsert: the partition-pruned 100-TB form --------
@@ -328,10 +332,12 @@ object EventStream {
       dir.mkdirs(); writeMetaFile(dir, "_NBUCKETS", n.toString)
     }
     // newest committed predecessor PER BUCKET — buckets version
-    // independently, so each may sit at a different latest version
+    // independently, so each may sit at a different latest version.
+    // No horizon check: every retirement keeps each bucket's newest
+    // version, which is exactly this merge source (see [[retire]])
     val currentPaths = touched.flatMap(k =>
-      committedVersions(new java.io.File(tableRoot, s"b$k"))
-        .filter(_ < batchId).lastOption.map(v => s"$tableRoot/b$k/v$v"))
+      newestCommitted(new java.io.File(dir, s"b$k"), Some(batchId - 1))
+        .map(v => s"$tableRoot/b$k/v$v"))
     val merged =
       if (currentPaths.isEmpty) inc
       else graft.operators.MemoryOps.upsertById(
@@ -370,28 +376,11 @@ object EventStream {
       new java.io.File(dst, "_SUCCESS").createNewFile(): Unit
     }
     org.apache.commons.io.FileUtils.deleteQuietly(staging)
-    if (retainVersions >= 1) {
-      // per touched bucket: doom everything below the newest
-      // max(retain−1, 1) older versions (the retry's merge source
-      // survives until the next batch commits past it); horizon is
-      // table-wide and rises BEFORE any deletion, so an as-of reader
-      // racing this never sees a partially-deleted stitch
-      val plans = touched.map { k =>
-        val bdir = new java.io.File(tableRoot, s"b$k")
-        val older = committedVersions(bdir).filter(_ < batchId)
-        val doomed = older.dropRight(math.max(retainVersions - 1, 1))
-        val floorB = if (doomed.isEmpty) -1L
-          else older.drop(doomed.size).head - 1
-        (bdir, doomed, floorB)
-      }
-      val floor = plans.map(_._3).max
-      if (floor > readHorizon(dir))
-        writeMetaFile(dir, "_RETENTION_HORIZON", floor.toString)
-      plans.foreach { case (bdir, doomed, _) =>
-        doomed.foreach(v => org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(bdir, s"v$v")): Unit)
-      }
-    }
+    if (retainVersions >= 1) // per touched bucket, table-wide horizon
+      retire(dir, touched.map { k =>
+        val bdir = new java.io.File(dir, s"b$k")
+        bdir -> committedVersions(bdir).filter(_ < batchId)
+      }, math.max(retainVersions - 1, 1))
     } finally {
       inc1.unpersist(): Unit
     }
@@ -411,17 +400,8 @@ object EventStream {
     * changes when written), and sampling one footer would silently
     * drop the other eras' columns. Costs one tiny metadata read per
     * bucket, driver-side — no distributed footer job. */
-  def latestBucketedUpsert(spark: SparkSession, tableRoot: String): DataFrame = {
-    val root = activeBucketedDir(new java.io.File(tableRoot))
-    val paths = Option(root.list()).getOrElse(Array.empty)
-      .filter(_.matches("b\\d+")).sorted.flatMap(b =>
-        committedVersions(new java.io.File(root, b)).lastOption
-          .map(v => s"${root.getPath}/$b/v$v"))
-    require(paths.nonEmpty, s"no committed bucket version under $tableRoot")
-    // explicit manifest-union schema — see [[mergedVersionSchema]]
-    spark.read.schema(mergedVersionSchema(spark, paths.toSeq))
-      .parquet(paths.toIndexedSeq: _*)
-  }
+  def latestBucketedUpsert(spark: SparkSession, tableRoot: String): DataFrame =
+    readSnapshot(spark, tableRoot, None)
 
   /** TIME TRAVEL over a [[streamingUpsertBucketed]] table: its state
     * as of micro-batch `asOfBatch` — per bucket, the newest committed
@@ -434,87 +414,75 @@ object EventStream {
     * horizon ([[vacuumBucketed]] / [[rebucketUpsert]] destroy history;
     * answering from partial remains would be silently wrong). */
   def bucketedUpsertAsOf(spark: SparkSession, tableRoot: String,
-      asOfBatch: Long): DataFrame = {
-    val root = activeBucketedDir(new java.io.File(tableRoot))
-    val horizon = readHorizon(root)
-    require(asOfBatch > horizon,
-      s"as-of $asOfBatch predates the retention horizon $horizon of " +
-        s"$tableRoot — that history has been vacuumed or rebucketed away")
-    val paths = Option(root.list()).getOrElse(Array.empty)
-      .filter(_.matches("b\\d+")).sorted.flatMap(b =>
-        committedVersions(new java.io.File(root, b))
-          .filter(_ <= asOfBatch).lastOption
-          .map(v => s"${root.getPath}/$b/v$v"))
-    require(paths.nonEmpty,
-      s"no committed bucket version ≤ $asOfBatch under $tableRoot")
-    // RE-CHECK after resolution: in-writer retention raises the horizon
-    // before it deletes, so a reader that resolved its paths just ahead
-    // of a retirement must notice the horizon moved past it here — the
-    // loud error instead of a silently partial stitch
-    val horizon2 = readHorizon(root)
-    require(asOfBatch > horizon2,
-      s"as-of $asOfBatch was overtaken by the retention horizon " +
-        s"(now $horizon2) while resolving $tableRoot — retry with a " +
-        "newer as-of")
-    // explicit manifest-union schema — see [[mergedVersionSchema]]
-    spark.read.schema(mergedVersionSchema(spark, paths.toSeq))
-      .parquet(paths.toIndexedSeq: _*)
+      asOfBatch: Long): DataFrame =
+    readSnapshot(spark, tableRoot, Some(asOfBatch))
+
+  /** The stitched read of both snapshot readers above, under the
+    * explicit manifest-union schema (see [[mergedVersionSchema]]). */
+  private def readSnapshot(spark: SparkSession, tableRoot: String,
+      asOf: Option[Long]): DataFrame = {
+    val paths = resolveSnapshot(activeBucketedDir(new java.io.File(tableRoot)),
+      asOf, None).map(_.getPath)
+    require(paths.nonEmpty, "no committed bucket version" +
+      asOf.fold("")(a => s" ≤ $a") + s" under $tableRoot")
+    spark.read.schema(mergedVersionSchema(spark, paths))
+      .parquet(paths: _*)
   }
+
+  /** THE snapshot resolver of the versioned store: per bucket of
+    * `root` (the active generation), or only bucket `bucket`, the
+    * newest committed version with id ≤ `asOf` (the newest of all
+    * when None) — see [[resolveAxes]]. Every bucketed read resolves
+    * through here. */
+  private def resolveSnapshot(root: java.io.File, asOf: Option[Long],
+      bucket: Option[Long]): Seq[java.io.File] =
+    resolveAxes(root, asOf, bucket.fold(bucketIds(root))(Seq(_))
+      .map(k => new java.io.File(root, s"b$k")))
+
+  /** The committed version dir of each version axis (a bucket dir, or
+    * a plain table's root — a single axis) as of `asOf`, by the
+    * per-axis rule [[newestCommitted]]. An as-of read is checked
+    * against the retention horizon in `root` BEFORE resolving and
+    * again AFTER: retention raises the horizon before it deletes, so a
+    * reader that resolved just ahead of a retirement notices the
+    * horizon moved past it — the loud error instead of a silently
+    * partial or stale read. */
+  private def resolveAxes(root: java.io.File, asOf: Option[Long],
+      axes: Seq[java.io.File]): Seq[java.io.File] = {
+    def requireAnswerable(resolved: Boolean): Unit = asOf.foreach { a =>
+      val h = readHorizon(root)
+      require(a > h,
+        if (!resolved) s"as-of $a predates the retention horizon $h of " +
+          s"$root — that history has been retired (vacuum, retention or " +
+          "rebucket)"
+        else s"as-of $a was overtaken by the retention horizon (now " +
+          s"$h) while resolving $root — retry with a newer as-of")
+    }
+    requireAnswerable(resolved = false)
+    val dirs = axes.flatMap(ax =>
+      newestCommitted(ax, asOf).map(v => new java.io.File(ax, s"v$v")))
+    requireAnswerable(resolved = true)
+    dirs
+  }
+
+  /** Bucket ids of a bucketed layout's `b<k>` dirs, in name order. */
+  private def bucketIds(root: java.io.File): Seq[Long] =
+    Option(root.list()).getOrElse(Array.empty)
+      .filter(_.matches("b\\d+")).sorted.map(_.drop(1).toLong).toSeq
 
   /** POINT LOOKUP on a [[streamingUpsertBucketed]] table: hash the id
     * with the table's own bucket count, read ONLY that bucket's newest
     * committed version, filter — O(bucket size), not O(table), the
     * read-side half of the reference's get-by-id served straight from
-    * the ingested store (src/memory.rs point reads). The bucket number
-    * comes from the PRODUCTION hash evaluated on a one-row frame, with
-    * the literal CAST to the table's stored id type first — xxhash64
-    * hashes an Int and a Long differently, so a type-mismatched caller
-    * literal would otherwise hash into the wrong bucket and silently
-    * miss an existing row (the bucketing rule must never be re-derived
-    * driver-side, and neither must the id's type). Returns an empty
-    * frame when the id's bucket doesn't exist yet (schema from a
-    * reference bucket — one footer, still O(1)). Under drift-tolerant
+    * the ingested store (src/memory.rs point reads). Building the frame
+    * runs no Spark job (see [[pointLookup]]). Returns an empty frame
+    * when the id's bucket doesn't exist yet. Under drift-tolerant
     * ingest the hit carries the id's BUCKET's schema era — columns
     * added to the table after that bucket's last write are absent;
     * table-wide schema is [[latestBucketedUpsert]]'s job. */
   def bucketedPointLookup(spark: SparkSession, tableRoot: String,
-      idCol: String, id: Any): DataFrame = {
-    val root = activeBucketedDir(new java.io.File(tableRoot))
-    val (idLit, k, refSchema) = resolveBucket(spark, root, idCol, id)
-    committedVersions(new java.io.File(root, s"b$k")).lastOption match {
-      case Some(v) =>
-        spark.read.parquet(s"${root.getPath}/b$k/v$v")
-          .where(col(idCol) === idLit)
-      case None => // bucket never written: the id cannot exist
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], refSchema)
-    }
-  }
-
-  /** Shared id→bucket resolution of the point-lookup family: the
-    * caller's literal CAST to the table's STORED id type, then the
-    * PRODUCTION hash evaluated on a one-row frame (xxhash64 hashes an
-    * Int and a Long differently — a re-derived or type-mismatched
-    * bucket number silently misses existing rows). One reference
-    * footer read supplies the id type and the miss path's schema. */
-  private def resolveBucket(spark: SparkSession, root: java.io.File,
-      idCol: String, id: Any)
-      : (org.apache.spark.sql.Column, Long, org.apache.spark.sql.types.StructType) = {
-    val n = readNBuckets(root).getOrElse(sys.error(
-      s"$root has no _NBUCKETS metadata — not a bucketed upsert table"))
-    val refPath = Option(root.list()).getOrElse(Array.empty)
-      .filter(_.matches("b\\d+")).sorted.iterator
-      .flatMap(b => committedVersions(new java.io.File(root, b)).lastOption
-        .map(v => s"${root.getPath}/$b/v$v"))
-      .nextOption().getOrElse(sys.error(
-        s"no committed bucket version under $root — empty table"))
-    val refSchema = spark.read.parquet(refPath).schema
-    val idLit = lit(id).cast(refSchema(idCol).dataType)
-    val k = spark.range(1).select(idLit.as(idCol))
-      .select(graft.operators.MemoryOps.bucketOf(idCol, n))
-      .head().getLong(0)
-    (idLit, k, refSchema)
-  }
+      idCol: String, id: Any): DataFrame =
+    pointLookup(spark, tableRoot, idCol, id, None)
 
   /** POINT LOOKUP with TIME TRAVEL: [[bucketedPointLookup]]'s
     * O(bucket) read at [[bucketedUpsertAsOf]]'s snapshot semantics —
@@ -536,32 +504,40 @@ object EventStream {
     * whose FIRST version is newer than `asOfBatch` held no data yet:
     * empty frame, same skip semantics as the stitched as-of. */
   def bucketedPointLookupAsOf(spark: SparkSession, tableRoot: String,
-      idCol: String, id: Any, asOfBatch: Long): DataFrame = {
+      idCol: String, id: Any, asOfBatch: Long): DataFrame =
+    pointLookup(spark, tableRoot, idCol, id, Some(asOfBatch))
+
+  /** The point-lookup family's one body. The id type and the miss
+    * path's schema come from a reference bucket's `_SCHEMA` manifest
+    * (the first bucket holding a committed version); the caller's
+    * literal is CAST to that stored id type before hashing — xxhash64
+    * hashes an Int and a Long differently, so a type-mismatched
+    * literal would otherwise land in the wrong bucket and silently
+    * miss an existing row. The bucket comes from the writer's own rule
+    * evaluated driver-side ([[graft.operators.MemoryOps.bucketOfId]]),
+    * and the one bucket version is read under its manifest schema, so
+    * building the frame runs no Spark job at all. */
+  private def pointLookup(spark: SparkSession, tableRoot: String,
+      idCol: String, id: Any, asOf: Option[Long]): DataFrame = {
     val root = activeBucketedDir(new java.io.File(tableRoot))
-    val horizon = readHorizon(root)
-    require(asOfBatch > horizon,
-      s"as-of $asOfBatch predates the retention horizon $horizon of " +
-        s"$tableRoot — that history has been vacuumed or rebucketed away")
-    val (idLit, k, refSchema) = resolveBucket(spark, root, idCol, id)
-    val result = committedVersions(new java.io.File(root, s"b$k"))
-      .filter(_ <= asOfBatch).lastOption match {
+    val n = readNBuckets(root).getOrElse(sys.error(
+      s"$root has no _NBUCKETS metadata — not a bucketed upsert table"))
+    val refSchema = bucketIds(root).iterator
+      .flatMap(b => resolveSnapshot(root, None, Some(b)))
+      .nextOption().map(v => versionSchema(spark, v.getPath))
+      .getOrElse(sys.error(
+        s"no committed bucket version under $root — empty table"))
+    val idType = refSchema(idCol).dataType
+    val k = graft.operators.MemoryOps.bucketOfId(id, idType, n,
+      spark.conf.get("spark.sql.session.timeZone"))
+    resolveSnapshot(root, asOf, Some(k)).headOption match {
       case Some(v) =>
-        spark.read.parquet(s"${root.getPath}/b$k/v$v")
-          .where(col(idCol) === idLit)
-      case None => // the bucket held no data yet as of that batch
+        spark.read.schema(versionSchema(spark, v.getPath)).parquet(v.getPath)
+          .where(col(idCol) === lit(id).cast(idType))
+      case None => // the bucket held no data (yet, as of `asOf`)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], refSchema)
     }
-    // RE-CHECK after resolution (the stitched read's loud contract):
-    // in-writer retention raises the horizon BEFORE deleting, so a
-    // lookup that resolved its version just ahead of a retirement must
-    // notice the horizon moved past it — never a silently stale answer
-    val horizon2 = readHorizon(root)
-    require(asOfBatch > horizon2,
-      s"as-of $asOfBatch was overtaken by the retention horizon " +
-        s"(now $horizon2) while resolving $tableRoot — retry with a " +
-        "newer as-of")
-    result
   }
 
   /** Reclaim superseded bucket versions, keeping the newest `keep`
@@ -593,26 +569,10 @@ object EventStream {
     requireNoLiveWriter(top)
     requireDrainedCheckpoint(top)
     val root = activeBucketedDir(top)
-    // plan all deletions first and raise the horizon BEFORE any of them
-    // (the in-writer retention's ordering): a crash mid-vacuum must
-    // leave the horizon covering whatever was destroyed, or a later
-    // as-of would silently skip the half-vacuumed bucket
-    val plans = Option(root.list()).getOrElse(Array.empty)
-      .filter(_.matches("b\\d+")).toSeq.map { b =>
-        val dir = new java.io.File(root, b)
-        val versions = committedVersions(dir)
-        val doomed = versions.dropRight(keep)
-        val floorB = if (doomed.isEmpty) -1L
-          else versions.drop(doomed.size).head - 1
-        (dir, doomed, floorB)
-      }
-    val floor = (plans.map(_._3) :+ -1L).max
-    if (floor > readHorizon(root))
-      writeMetaFile(root, "_RETENTION_HORIZON", floor.toString)
-    plans.foreach { case (dir, doomed, _) =>
-      doomed.foreach(v => org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(dir, s"v$v")): Unit)
-    }
+    retire(root, bucketIds(root).map { k =>
+      val dir = new java.io.File(root, s"b$k")
+      dir -> committedVersions(dir)
+    }, keep)
     // stale generations: every gen dir except the active one is either
     // superseded (committed, older) or a crashed rebucket's leftover
     // staging (uncommitted) — both reclaimable inside the maintenance
@@ -683,12 +643,10 @@ object EventStream {
     requireNoLiveWriter(top)
     requireDrainedCheckpoint(top)
     val cur = activeBucketedDir(top)
-    val buckets = Option(cur.list()).getOrElse(Array.empty)
-      .filter(_.matches("b\\d+"))
-    require(buckets.nonEmpty,
+    require(bucketIds(cur).nonEmpty,
       s"$tableRoot is not a bucketed upsert table (no b<k> dirs)")
-    val maxV = buckets.map(b =>
-      committedVersions(new java.io.File(cur, b)).lastOption.getOrElse(-1L)).max
+    val maxV = (resolveSnapshot(cur, None, None)
+      .map(_.getName.drop(1).toLong) :+ -1L).max
     require(maxV >= 0, s"no committed bucket version under $tableRoot")
     val state = latestBucketedUpsert(spark, tableRoot)
       .withColumn("__bucket",
@@ -740,31 +698,25 @@ object EventStream {
     val root = new java.io.File(tableRoot)
     requireNoLiveWriter(root)
     requireDrainedCheckpoint(root)
-    val versions = committedVersions(root)
-    val doomed = versions.dropRight(keep)
-    if (doomed.nonEmpty) {
-      val floor = versions.drop(doomed.size).head - 1
-      if (floor > readHorizon(root))
-        writeMetaFile(root, "_RETENTION_HORIZON", floor.toString)
-      doomed.foreach(v => org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(root, s"v$v")): Unit)
-    }
+    retire(root, Seq(root -> committedVersions(root)), keep)
   }
 
   /** TIME TRAVEL over a [[streamingUpsert]] table: the newest
     * committed version dir with id ≤ asOfBatch — the table's state
-    * after that micro-batch. Fails loudly past the retention horizon
-    * (see [[bucketedUpsertAsOf]]) or before the first version. */
-  def upsertVersionAsOf(tableRoot: String, asOfBatch: Long): String = {
+    * after that micro-batch. Fails loudly past the retention horizon,
+    * re-checked after resolution like [[bucketedUpsertAsOf]], or
+    * before the first version. */
+  def upsertVersionAsOf(tableRoot: String, asOfBatch: Long): String =
+    plainVersion(tableRoot, Some(asOfBatch))
+
+  /** The plain layout's read: one version axis, resolved by the same
+    * rule as the bucketed reads ([[resolveAxes]]). */
+  private def plainVersion(tableRoot: String, asOf: Option[Long]): String = {
     val root = new java.io.File(tableRoot)
-    val horizon = readHorizon(root)
-    require(asOfBatch > horizon,
-      s"as-of $asOfBatch predates the retention horizon $horizon of " +
-        s"$tableRoot — that history has been vacuumed away")
-    val committed = committedVersions(root).filter(_ <= asOfBatch)
-    require(committed.nonEmpty,
-      s"no committed version ≤ $asOfBatch under $tableRoot")
-    s"$tableRoot/v${committed.max}"
+    val v = resolveAxes(root, asOf, Seq(root))
+    require(v.nonEmpty, "no committed version" +
+      asOf.fold("")(a => s" ≤ $a") + s" under $tableRoot")
+    s"$tableRoot/${v.head.getName}"
   }
 
   /** The generation-pointer read side (see [[rebucketUpsert]]): the
@@ -796,8 +748,9 @@ object EventStream {
     * footer-reading job that parquet `mergeSchema` spawned on EVERY
     * micro-batch merge (and every read-back stitch) was ~0.3 s of each
     * ~1 s replay batch. A version dir stamped before the manifest
-    * existed falls back to one driver-side single-footer inference
-    * (its files were written by one clustered task — one schema). */
+    * existed falls back to parquet schema inference over its footer
+    * (its files were written by one clustered task — one schema),
+    * which runs a Spark job. */
   private[graft] def writeSchemaManifest(dir: java.io.File,
       schema: org.apache.spark.sql.types.StructType): Unit =
     // nullable-normalized: parquet footers report optional fields, so
@@ -812,7 +765,7 @@ object EventStream {
       org.apache.spark.sql.types.DataType.fromJson(
         new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         .asInstanceOf[org.apache.spark.sql.types.StructType]
-    else spark.read.parquet(path).schema // one footer, driver-side
+    else spark.read.parquet(path).schema // pre-manifest dir: a footer job
   }
 
   /** Add-only union of version schemas, first-seen field order — the
@@ -1488,6 +1441,13 @@ object EventStream {
       .filter(v => new java.io.File(root, s"v$v/_SUCCESS").exists())
       .sorted.toSeq
 
+  /** The per-axis rule on top of it: the newest committed version of
+    * one version axis (a bucket dir, or a plain table's root) with id
+    * ≤ `asOf` — the newest of all when None. */
+  private def newestCommitted(axis: java.io.File,
+      asOf: Option[Long]): Option[Long] =
+    committedVersions(axis).filter(v => asOf.forall(v <= _)).lastOption
+
   /** Newest `_SUCCESS`-committed version directory under a
     * [[streamingUpsert]] table root. A crash can leave a newer,
     * UNCOMMITTED partial dir — never read it. CAVEAT: the newest
@@ -1498,11 +1458,8 @@ object EventStream {
     * read stability reads `committedVersions(root).dropRight(1)` — or,
     * at warehouse scale, this whole layout is the hand-rolled fraction
     * of what a snapshot-isolated table format provides natively. */
-  def latestUpsertVersion(tableRoot: String): String = {
-    val committed = committedVersions(new java.io.File(tableRoot))
-    require(committed.nonEmpty, s"no committed version under $tableRoot")
-    s"$tableRoot/v${committed.max}"
-  }
+  def latestUpsertVersion(tableRoot: String): String =
+    plainVersion(tableRoot, None)
 
   // --- sessionization ----------------------------------------------------
 
@@ -1770,12 +1727,7 @@ object EventStream {
     val root = java.nio.file.Files.createTempDirectory("graft_replay")
     registerRestartRoot(root.toFile) // reclaim all replay inputs at exit
     val dir = root.resolve("in").toString
-    // One scan feeds the bounds probe plus the staged chunk write —
-    // without the cache each pass re-reads the source parquet.
-    src.persist()
-    val bounds = src.agg(min(col("__sec")), max(col("__sec"))).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = math.max(1L, hi - lo + 1)
+    val (lo, _, span) = persistSecBounds(src)
     val w = new ChunkWriter(dir)
     // ONE job stages every chunk — and, since round 15, the sentinel and
     // tail frames too (each was one more coalesce(1) Spark job per lane):
@@ -1891,6 +1843,18 @@ object EventStream {
   private def withSec(events: DataFrame): DataFrame =
     events.withColumn("__sec", col("ts").cast("long"))
 
+  /** `src`'s `__sec` bounds `(lo, hi, span)` for the replay time-range
+    * split ([[chunkBounds]]), in ONE place for every chunked replay.
+    * Persists `src` first: one scan feeds this probe plus the staged
+    * chunk write — without the cache each pass re-reads the source
+    * parquet. The caller unpersists once its staging is done. */
+  private def persistSecBounds(src: DataFrame): (Long, Long, Long) = {
+    src.persist()
+    val b = src.agg(min(col("__sec")), max(col("__sec"))).head()
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    (lo, hi, math.max(1L, hi - lo + 1))
+  }
+
   /** Isolated CHILD SESSION for a replay's streaming queries: same
     * SparkContext and catalog, private SQLConf — nothing global is
     * mutated and nothing needs restoring, so replays built on a runner
@@ -1936,15 +1900,16 @@ object EventStream {
     runner
   }
 
-  /** tmpfs checkpoint dir for a replay's streaming query — the
-    * [[memorySink]] / [[replayRestart]] rationale extended to the
-    * upsert-ingest replays (round 14): a replay checkpoint is a dozen
-    * tiny offset/commit-log files whose cost is fsync latency, not
-    * bytes, and it is dead the moment the drain ends. The TABLE the
-    * ingest writes stays on real disk — the lane prices real data
-    * bytes; only the commit-log fsyncs move off the spindle. Falls
-    * back to the default temp dir when /dev/shm is absent; registered
-    * for JVM-exit reclamation (callers may also delete it earlier). */
+  /** tmpfs temp dir for a replay's streaming query, in ONE place for
+    * every replay (checkpoints of [[memorySink]], the upsert-ingest
+    * replays and the incremental dedup; [[replayRestart]]'s whole
+    * root): a replay checkpoint is a dozen tiny offset/commit-log files
+    * whose cost is fsync latency, not bytes, and it is dead the moment
+    * the drain ends. The TABLE an ingest writes stays on real disk —
+    * the lane prices real data bytes; only the commit-log fsyncs move
+    * off the spindle. Falls back to the default temp dir when /dev/shm
+    * is absent; registered for JVM-exit reclamation (callers may also
+    * delete it earlier). */
   private def shmCheckpointDir(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val p = if (java.nio.file.Files.isDirectory(shm))
@@ -1983,10 +1948,7 @@ object EventStream {
       runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
         "false")
     val sink = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = (if (java.nio.file.Files.isDirectory(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft_ckpt")
-      else java.nio.file.Files.createTempDirectory("graft_ckpt")).toString
+    val ckpt = shmCheckpointDir("graft_ckpt")
     try {
       val q = build(runner).writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", ckpt)
@@ -2329,10 +2291,7 @@ object EventStream {
       "false")
     val stream = runner.readStream.schema("doc_id LONG, text STRING")
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt = (if (java.nio.file.Files.isDirectory(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft_ckpt")
-      else java.nio.file.Files.createTempDirectory("graft_ckpt")).toString
+    val ckpt = shmCheckpointDir("graft_ckpt")
     try {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -2430,10 +2389,7 @@ object EventStream {
     val src = withSec(events.select(col("event_id"),
       date_trunc("second", col("ts")).as("ts"),
       col("user_id"), col("event_type"), col("value")))
-    src.persist()
-    val bounds = src.agg(min(col("__sec")), max(col("__sec"))).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = math.max(1L, hi - lo + 1)
+    val (lo, hi, span) = persistSecBounds(src)
     // input chunks, sink, and checkpoint all live on tmpfs when
     // available: the replay is ~11 micro-batches of tiny files whose
     // cost is fsync, not bytes (same rationale as memorySink's ckpt).
@@ -2442,11 +2398,7 @@ object EventStream {
     // per-call cleanup can only reclaim ckpt and inDir; without the
     // exit hook each verify/bench/soak rep would strand a RAM-resident
     // sink dir until reboot (round-10 review finding).
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val root = if (java.nio.file.Files.isDirectory(shm))
-        java.nio.file.Files.createTempDirectory(shm, "graft_restart")
-      else java.nio.file.Files.createTempDirectory("graft_restart")
-    registerRestartRoot(root.toFile)
+    val root = java.nio.file.Paths.get(shmCheckpointDir("graft_restart"))
     val inDir = root.resolve("in").toString
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -2782,10 +2734,7 @@ object EventStream {
     val src = withSec(events.select(col("event_id"), col("ts"),
       col("user_id"), col("value"),
       col("event_type").as("etype")))
-    src.persist()
-    val bounds = src.agg(min(col("__sec")), max(col("__sec"))).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = math.max(1L, hi - lo + 1)
+    val (lo, hi, span) = persistSecBounds(src)
     val root = java.nio.file.Files.createTempDirectory("graft_upsertd_tbl")
     registerRestartRoot(root.toFile)
     val inDir = root.resolve("in").toString
@@ -2874,10 +2823,7 @@ object EventStream {
     val cols = Seq("event_id", "ts", "user_id", "value")
     val src = withSec(events.select(col("event_id"), col("ts"),
       col("user_id"), col("value")))
-    src.persist()
-    val bounds = src.agg(min(col("__sec")), max(col("__sec"))).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = math.max(1L, hi - lo + 1)
+    val (lo, hi, span) = persistSecBounds(src)
     val root = java.nio.file.Files
       .createTempDirectory("graft_upsertr_tbl")
     registerRestartRoot(root.toFile)

@@ -1597,6 +1597,56 @@ class EventStreamSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq == Seq((3L, "p3-v2")))
   }
 
+  test("building a point-lookup frame (latest or as-of) starts no Spark" +
+      " job: the bucket and schema come from table metadata") {
+    val root = java.nio.file.Files.createTempDirectory("es_pointlookup")
+    val tbl = root.resolve("table").toString
+    EventStream.upsertBatchBucketed(tbl,
+      (1L to 16L).map(id => (id, s"p$id")).toDF("id", "payload"),
+      0L, "id", 4)
+    EventStream.upsertBatchBucketed(tbl,
+      Seq((3L, "p3-v2")).toDF("id", "payload"), 1L, "id", 4)
+    // only jobs started from this thread under this tag count, so a
+    // stray background job elsewhere in the JVM cannot fail the case
+    val tag = "graft.test.pointlookup.plan"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) == "1"))
+          jobs.incrementAndGet(): Unit
+    }
+    // the listener bus is asynchronous: poll until the count has held
+    // still for half a second before reading it
+    def quietCount(): Int = {
+      var last = jobs.get()
+      var still = 0
+      while (still < 5) {
+        Thread.sleep(100)
+        val now = jobs.get()
+        if (now == last) still += 1 else { last = now; still = 0 }
+      }
+      last
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    val frames = try {
+      Seq(EventStream.bucketedPointLookup(spark, tbl, "id", 3L),
+        EventStream.bucketedPointLookup(spark, tbl, "id", 999L),
+        EventStream.bucketedPointLookup(spark, tbl, "id", 3),
+        EventStream.bucketedPointLookupAsOf(spark, tbl, "id", 3L, 0L),
+        EventStream.bucketedPointLookupAsOf(spark, tbl, "id", 999L, 1L),
+        EventStream.bucketedPointLookupAsOf(spark, tbl, "id", 3, 1L))
+    } finally spark.sparkContext.setLocalProperty(tag, null)
+    try assert(quietCount() == 0,
+      "building the point-lookup frames ran Spark jobs")
+    finally spark.sparkContext.removeSparkListener(listener)
+    // the frames built without a job still answer correctly
+    assert(frames.map(_.as[(Long, String)].collect().toSeq) == Seq(
+      Seq((3L, "p3-v2")), Nil, Seq((3L, "p3-v2")),
+      Seq((3L, "p3")), Nil, Seq((3L, "p3-v2"))))
+  }
+
   test("schema drift: the default writer fails fast on a drifted batch;" +
       " tolerateSchemaDrift widens the table with row-wise LWW nulls") {
     val root = java.nio.file.Files.createTempDirectory("es_drift")

@@ -321,6 +321,27 @@ class MemoryBucketSourceSpec extends SparkSpec {
       assert(one.select($"n").as[Int].collect().toSeq == Seq(i),
         s"m-$i lookup missed its bucket")
     }
+    // THE bucket rule: its driver-side evaluation (pruning and the
+    // point lookups) == the writer's column evaluated on a frame, per
+    // stored id type and for cross-typed literals, which are cast to
+    // the stored type before hashing
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    def onFrame(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select(MemoryOps.bucketOf("id", 8)).as[Long].collect().toSeq
+    def driverSide(ids: Seq[Any], t: org.apache.spark.sql.types.DataType) =
+      ids.map(MemoryOps.bucketOfId(_, t, 8, tz))
+    val longs = Seq(0L, 7L, 42L, -5L, 1L << 40, Long.MinValue, Long.MaxValue)
+    val ints = Seq(0, 7, 23, 42, 63, -5, Int.MinValue, Int.MaxValue)
+    val strs = Seq("", "m-0", "m-9", "m-57", "ünï-cødé")
+    assert(driverSide(longs, LongType) == onFrame(longs.toDF("id")))
+    assert(driverSide(ints, IntegerType) == onFrame(ints.toDF("id")))
+    assert(driverSide(strs, StringType) == onFrame(strs.toDF("id")))
+    // an Int literal on a long column, a Long literal on an int column
+    assert(driverSide(ints, LongType) == onFrame(ints.map(_.toLong).toDF("id")))
+    assert(driverSide(ints.map(_.toLong), IntegerType) == onFrame(ints.toDF("id")))
+    // and the cast is load-bearing: xxhash64 hashes 32 and 64 bits apart
+    assert(driverSide(ints, IntegerType) != driverSide(ints, LongType))
   }
 
   test("global count/min/max push into the store; per-file partials merge correctly") {
