@@ -96,18 +96,6 @@ object VectorSearch {
         col("__rn").as("rank"), round(col("score"), 6).as("score"))
   }
 
-  /** Maximal-marginal-relevance rerank: from the top-`poolSize` candidates
-    * by relevance, greedily select `k` maximizing
-    * `lambda*rel - (1-lambda)*max_sim_to_already_selected` — the standard
-    * diversification pass on a retrieval result.
-    *
-    * Scale posture: candidate retrieval is the distributed [[topK]]; the
-    * greedy runs on the collected pool — poolSize*(dim+2) values, rerank
-    * METADATA like the IVF codebook, not a data-path collect (every real
-    * retrieval stack reranks a bounded pool on one node). All comparisons
-    * use 6-dp HALF_UP rounding with id tie-breaks so the selection is
-    * bit-reproducible (and oracle-mirrored by a recursive CTE).
-    */
   /** Distributed MMR for pools too big to collect: the candidate pool
     * stays a DataFrame; each of the k greedy rounds scores every
     * remaining row against the (≤ k, driver-held) SELECTED embeddings —
@@ -163,6 +151,18 @@ object VectorSearch {
     selected.toSeq.map(s => (s._1, s._2, s._3)).toDF("mmr_rank", "id", "mmr")
   }
 
+  /** Maximal-marginal-relevance rerank: from the top-`poolSize` candidates
+    * by relevance, greedily select `k` maximizing
+    * `lambda*rel - (1-lambda)*max_sim_to_already_selected` — the standard
+    * diversification pass on a retrieval result.
+    *
+    * Scale posture: candidate retrieval is the distributed [[topK]]; the
+    * greedy runs on the collected pool — poolSize*(dim+2) values, rerank
+    * METADATA like the IVF codebook, not a data-path collect (every real
+    * retrieval stack reranks a bounded pool on one node). All comparisons
+    * use 6-dp HALF_UP rounding with id tie-breaks so the selection is
+    * bit-reproducible (and oracle-mirrored by a recursive CTE).
+    */
   def mmrRerank(
       df: DataFrame,
       queryVec: Seq[Float],

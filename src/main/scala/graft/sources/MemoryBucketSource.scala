@@ -402,14 +402,14 @@ object MemoryBucketSource {
     * DRIVER-side planning cost at any store size. */
   private[sources] val StatsFooterSample = 64
 
-  /** One pushed sort key: column, type, and OUTPUT-order semantics
-    * (descending + where nulls land, as Spark's SortOrder states them). */
   /** One pushed aggregate call: `fn` in {count, min, max}; `column` is
     * empty for COUNT(*); `dataType` is the PARTIAL result type Spark
     * merges (LongType for count, the column type for min/max). */
   private[sources] case class AggSpec(
       fn: String, column: Option[String], dataType: DataType)
 
+  /** One pushed sort key: column, type, and OUTPUT-order semantics
+    * (descending + where nulls land, as Spark's SortOrder states them). */
   private[sources] case class SortSpec(
       name: String, dataType: DataType, desc: Boolean, nullsFirst: Boolean)
 

@@ -33,15 +33,9 @@ object EventStream {
     * plan serves both. Decimal accumulation keeps sums order-independent.
     */
   def windowedAgg(events: DataFrame, windowLen: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
+    // a slide equal to the length is the tumbling window: Spark resolves
+    // window(ts, len, len) to the same TimeWindow as window(ts, len)
+    hoppingAgg(events, windowLen, windowLen)
 
   /** Hopping (sliding) windows — 2× state overlap vs tumbling; same
     * batch/stream duality as [[windowedAgg]]. */
@@ -753,10 +747,14 @@ object EventStream {
     * which runs a Spark job. */
   private[graft] def writeSchemaManifest(dir: java.io.File,
       schema: org.apache.spark.sql.types.StructType): Unit =
-    // nullable-normalized: parquet footers report optional fields, so
-    // this is exactly what the mergeSchema read inferred
-    writeMetaFile(dir, "_SCHEMA", org.apache.spark.sql.types.StructType(
-      schema.fields.map(_.copy(nullable = true))).json)
+    writeMetaFile(dir, "_SCHEMA", nullableSchema(schema).json)
+
+  /** `schema` with every field nullable — parquet footers report
+    * optional fields, so this is exactly what a read that inferred the
+    * schema from the files would see: the `_SCHEMA` manifest's form and
+    * the form a replay feed's stream reads its staged files with. */
+  private def nullableSchema(schema: StructType): StructType =
+    StructType(schema.map(_.copy(nullable = true)))
 
   private[graft] def versionSchema(spark: SparkSession, path: String)
       : org.apache.spark.sql.types.StructType = {
@@ -841,27 +839,28 @@ object EventStream {
       catch { case _: java.io.IOException => None }
   }
 
-  /** ATOMIC create-if-absent stamp of the `_WRITER` marker: the full
-    * content goes to a temp file which is then link(2)'d into place —
-    * the same primitive as `_OWNER` creation, so two fresh queries
+  /** ATOMIC create-if-absent stamp of the marker `name` (`_OWNER` or
+    * `_WRITER`): the full content goes to a temp file which is then
+    * link(2)'d into place, so for `_WRITER` two fresh queries
     * racing a still-unowned root can never BOTH believe they stamped
     * (the round-12 advisor's check-then-write race: both observe no
     * marker, both write, and whichever content survives, the OTHER
     * query's termination reap could later disarm the survivor's guard).
-    * Exactly one caller returns true; the loser falls through to the
-    * owner-gated paths in [[startTrackedWriter]]. Falls back to a
+    * Exactly one caller returns true; a `_WRITER` loser falls through
+    * to the owner-gated paths in [[startTrackedWriter]], an `_OWNER`
+    * loser to [[requireOwner]]'s compare. Falls back to a
     * CREATE_NEW open where hardlinks are unsupported — also atomic
     * create-if-absent (O_CREAT|O_EXCL), so the no-hardlink path keeps
     * the exactly-one-winner contract; the only loss vs link(2) is that
     * a reader racing the fallback can observe a partially-written
     * marker (an unreadable/foreign value, which every consumer already
     * fails closed on), where link(2) publishes full content at once. */
-  private[graft] def stampWriterIfAbsent(root: java.io.File,
+  private[graft] def stampIfAbsent(root: java.io.File, name: String,
       value: String): Boolean = {
     root.mkdirs()
-    val marker = new java.io.File(root, "_WRITER").toPath
+    val marker = new java.io.File(root, name).toPath
     val tmp = java.nio.file.Files.createTempFile(root.toPath,
-      "._writer_", ".tmp")
+      "._stamp_", ".tmp")
     try {
       java.nio.file.Files.write(tmp, value.getBytes("UTF-8")): Unit
       try { java.nio.file.Files.createLink(marker, tmp); true }
@@ -878,7 +877,7 @@ object EventStream {
     * move was a TOCTOU existence check, under which two racers could
     * both believe they stamped: the exact race the link(2) path
     * closes). Returns false on FileAlreadyExists or any other IO
-    * failure — the loser semantics of [[stampWriterIfAbsent]]. A write
+    * failure — the loser semantics of [[stampIfAbsent]]. A write
     * or close failure AFTER the create succeeded deletes what was
     * created before returning false: in loser semantics "false" means
     * "someone else's valid marker is in place", and an empty/partial
@@ -1005,7 +1004,7 @@ object EventStream {
     * Timeline of the stamp — each step closes a round-12 advisor gap:
     *
     *  1. BEFORE start(): a provisional marker (`starting-<uuid>`) is
-    *     stamped — atomic create-if-absent ([[stampWriterIfAbsent]]),
+    *     stamped — atomic create-if-absent ([[stampIfAbsent]]),
     *     or an owner-gated replace when the root's `_OWNER` already
     *     matches this query's owner token AND the incumbent marker's
     *     heartbeat is stale or absent (the checkpointed-resume case:
@@ -1095,7 +1094,7 @@ object EventStream {
     // is kept so a failed start() can RESTORE it instead of leaving the
     // root unguarded (see the catch below)
     var replacedMarker: Option[String] = None
-    if (stampWriterIfAbsent(root, token)) stamped.set(token)
+    if (stampIfAbsent(root, "_WRITER", token)) stamped.set(token)
     else {
       val prior = readWriterMarker(root)
       // owner-gated replace, gated on the incumbent looking DEAD
@@ -1130,7 +1129,7 @@ object EventStream {
         // our failed start leaves the guard exactly as found — minus
         // the incumbent's heartbeat, which our provisional beat
         // overwrote; marker-without-heartbeat is the fail-closed shape
-        replacedMarker.foreach(p => stampWriterIfAbsent(root, p): Unit)
+        replacedMarker.foreach(p => stampIfAbsent(root, "_WRITER", p): Unit)
         throw t
       }
     val run = q.runId.toString
@@ -1174,7 +1173,7 @@ object EventStream {
           // a foreign interlude nulled it and the content came back
           stamped.set(run); true
         case None => // re-arm a deleted guard under a live writer
-          val won = stampWriterIfAbsent(root, run)
+          val won = stampIfAbsent(root, "_WRITER", run)
           stamped.set(if (won) run else null)
           won
         case Some(_) => // another run's marker: take iff root is OURS
@@ -1398,36 +1397,25 @@ object EventStream {
   }
 
   /** Enforce (or establish) the root's single-owner contract. Creation
-    * is ATOMIC: the owner string is written to a temp file and
-    * hard-linked into place — link(2) fails atomically when the marker
-    * already exists, so two fresh queries racing the same empty root
-    * cannot both think they stamped it, and no reader can observe a
-    * truncated owner string (the round-10 advisor's check-then-write
-    * finding). The loser falls through to the read-and-compare path
-    * and fails the require like any other mismatched writer. */
+    * is ATOMIC — [[stampIfAbsent]], the `_WRITER` marker's primitive,
+    * CREATE_NEW fallback included — so two fresh queries racing the
+    * same empty root cannot both think they stamped it (the round-10
+    * advisor's check-then-write finding). The loser falls through to
+    * the read-and-compare path and fails the require like any other
+    * mismatched writer; an unreadable marker fails it too. */
   private def requireOwner(root: java.io.File, owner: String): Unit = {
-    val marker = new java.io.File(root, "_OWNER").toPath
-    val existing: Option[String] =
-      if (java.nio.file.Files.exists(marker))
-        Some(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8"))
-      else {
-        val tmp = java.nio.file.Files.createTempFile(
-          root.toPath, "._owner_", ".tmp")
-        try {
-          java.nio.file.Files.write(tmp, owner.getBytes("UTF-8"))
-          try { java.nio.file.Files.createLink(marker, tmp); None }
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              Some(new String(
-                java.nio.file.Files.readAllBytes(marker), "UTF-8"))
-          }
-        } finally java.nio.file.Files.deleteIfExists(tmp): Unit
-      }
-    existing.foreach(e => require(e == owner,
-      s"tableRoot $root belongs to another query run " +
-        s"(owner $e); pass that run's checkpoint to " +
-        "continue it, or use a fresh root — a new run's batchIds " +
-        "restart at 0 and would overwrite its versions"))
+    val marker = new java.io.File(root, "_OWNER")
+    if (marker.exists() || !stampIfAbsent(root, "_OWNER", owner)) {
+      val existing =
+        try Some(new String(
+          java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8"))
+        catch { case _: java.io.IOException => None }
+      require(existing.contains(owner),
+        s"tableRoot $root belongs to another query run " +
+          s"(owner ${existing.getOrElse("unreadable")}); pass that run's " +
+          "checkpoint to continue it, or use a fresh root — a new run's " +
+          "batchIds restart at 0 and would overwrite its versions")
+    }
   }
 
   /** The commit-visibility rule, in ONE place for the writer's merge
@@ -1599,13 +1587,6 @@ object EventStream {
       }
   }
 
-  /** Streaming sessionization with explicit per-user state — the
-    * flatMapGroupsWithState form of [[sessionizeBatch]]. Emits one updated
-    * (user, sessions, events) row per trigger; state survives across
-    * micro-batches. Requires events within a user to arrive in ts order
-    * (guaranteed by the fixture's single file; production would pre-sort
-    * per micro-batch).
-    */
   /** The session gap rule — ONE implementation shared by the
     * flatMapGroupsWithState form below and the transformWithState form
     * ([[TwsSessionize]]), so their identical-semantics claim is true by
@@ -1624,6 +1605,13 @@ object EventStream {
     s
   }
 
+  /** Streaming sessionization with explicit per-user state — the
+    * flatMapGroupsWithState form of [[sessionizeBatch]]. Emits one updated
+    * (user, sessions, events) row per trigger; state survives across
+    * micro-batches. Requires events within a user to arrive in ts order
+    * (guaranteed by the fixture's single file; production would pre-sort
+    * per micro-batch).
+    */
   def sessionizeStreaming(
       events: Dataset[SessionEvent],
       gapMinutes: Int = 30): Dataset[UserSessions] = {
@@ -1711,23 +1699,34 @@ object EventStream {
     lit("__flush").as("event_type"),
     lit(0.0).as("value"))
 
+  /** A replay's delivery dir and the schema of the files staged into
+    * it ([[ChunkStager.schema]]). [[stream]] is the ONE file source of
+    * the replay harness: every lane reads its input through it, one
+    * staged file per micro-batch, typed by what was staged rather than
+    * by a hand-kept copy of the lane's columns. */
+  private final case class ReplayFeed(dir: String, schema: StructType) {
+    def stream(runner: SparkSession): DataFrame =
+      runner.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(dir)
+  }
+
+  /** The columns a replay stages: all of `src`'s but its `__sec` split
+    * key, which is never written. */
+  private def stagedCols(src: DataFrame): Seq[String] =
+    src.columns.toSeq.filterNot(_ == "__sec")
+
   /** Split `src` into `chunks` time-range parquet files (by its `__sec`
     * column, which is NOT written) through [[ChunkWriter]], so the file
-    * source delivers them as real micro-batches in event-time order. An
-    * optional `sentinel` frame is written last — a far-future row that
-    * advances the watermark past every real window so append-mode
-    * aggregations flush — followed by any `tail` frames, one micro-batch
-    * each. Returns the directory. */
-  private def chunkedReplayDir(
-      src: DataFrame,
-      outCols: Seq[String],
-      chunks: Int,
-      sentinel: Option[DataFrame] = None,
-      tail: Seq[DataFrame] = Nil): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_replay")
-    registerRestartRoot(root.toFile) // reclaim all replay inputs at exit
-    val dir = root.resolve("in").toString
-    val (lo, _, span) = persistSecBounds(src)
+    * source delivers them as real micro-batches in event-time order.
+    * `extras` receives `src`'s greatest `__sec` from the one bounds
+    * probe ([[persistSecBounds]]) and returns frames delivered after the
+    * real chunks, one micro-batch each — far-future sentinel rows that
+    * advance the watermark past every real window so append-mode
+    * aggregations flush, then any tail. Returns the feed. */
+  private def chunkedReplayDir(src: DataFrame, chunks: Int,
+      extras: Long => Seq[DataFrame] = _ => Nil): ReplayFeed = {
+    val dir = replayTempRoot("graft_replay").resolve("in").toString
+    val (lo, hi, span) = persistSecBounds(src)
     val w = new ChunkWriter(dir)
     // ONE job stages every chunk — and, since round 15, the sentinel and
     // tail frames too (each was one more coalesce(1) Spark job per lane):
@@ -1741,12 +1740,12 @@ object EventStream {
     // drops __chunk from the data columns; [[ChunkWriter.adopt]] then
     // delivers the staged files in chunk order under the same
     // strictly-increasing-mtime contract as the per-chunk writes.
-    val stager = new ChunkStager(src, outCols, chunks, lo, span,
-      extras = sentinel.toSeq ++ tail)
+    val stager = new ChunkStager(src, stagedCols(src), chunks, lo, span,
+      extras(hi))
     try (0 until stager.total).foreach(stager.deliver(w, _))
     finally stager.close()
     src.unpersist()
-    dir
+    ReplayFeed(dir, stager.schema)
   }
 
   /** The replay time-range split, in ONE place for [[chunkedReplayDir]]
@@ -1788,13 +1787,12 @@ object EventStream {
     * crash-redelivery is then the SAME bytes by construction, not by
     * parquet write determinism). Empty chunks fall back to a zero-row
     * one-job write so batchIds can never shift. `close()` reclaims the
-    * staging dir. */
+    * staging dir. `schema` is the staged files' schema, nullable as
+    * their footers report it: the type a [[ReplayFeed]] reads them as. */
   private[graft] final class ChunkStager(src: DataFrame, outCols: Seq[String],
       chunks: Int, lo: Long, span: Long, extras: Seq[DataFrame] = Nil) {
-    private val stagingRoot =
-      java.nio.file.Files.createTempDirectory("graft_replay_stage")
     // close() reclaims it early; a crash mid-delivery leaves it to exit
-    registerRestartRoot(stagingRoot.toFile)
+    private val stagingRoot = replayTempRoot("graft_replay_stage")
     // the parquet writer requires a NOT-yet-existing target path
     private val staging = stagingRoot.resolve("c")
     try {
@@ -1807,6 +1805,8 @@ object EventStream {
         .repartition(col("__chunk"))
         .write.partitionBy("__chunk").parquet(staging.toString)
     } catch { case e: Throwable => close(); throw e }
+    val schema: StructType =
+      nullableSchema(src.select(outCols.map(col): _*).schema)
     /** Total deliverable batch count (real chunks + extras). */
     def total: Int = chunks + extras.size
     def deliver(w: ChunkWriter, i: Int, keep: Boolean = false): Unit = {
@@ -1900,6 +1900,20 @@ object EventStream {
     runner
   }
 
+  /** A replay temp root, registered for JVM-exit reclamation (callers
+    * may also delete it earlier) — in ONE place for every replay's
+    * inputs, staging, tables, sinks and checkpoints. With `tmpfs` it
+    * lives on /dev/shm when that exists, else the default temp dir. */
+  private def replayTempRoot(prefix: String,
+      tmpfs: Boolean = false): java.nio.file.Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val p = if (tmpfs && java.nio.file.Files.isDirectory(shm))
+        java.nio.file.Files.createTempDirectory(shm, prefix)
+      else java.nio.file.Files.createTempDirectory(prefix)
+    registerRestartRoot(p.toFile)
+    p
+  }
+
   /** tmpfs temp dir for a replay's streaming query, in ONE place for
     * every replay (checkpoints of [[memorySink]], the upsert-ingest
     * replays and the incremental dedup; [[replayRestart]]'s whole
@@ -1907,17 +1921,9 @@ object EventStream {
     * whose cost is fsync latency, not bytes, and it is dead the moment
     * the drain ends. The TABLE an ingest writes stays on real disk —
     * the lane prices real data bytes; only the commit-log fsyncs move
-    * off the spindle. Falls back to the default temp dir when /dev/shm
-    * is absent; registered for JVM-exit reclamation (callers may also
-    * delete it earlier). */
-  private def shmCheckpointDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val p = if (java.nio.file.Files.isDirectory(shm))
-        java.nio.file.Files.createTempDirectory(shm, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    registerRestartRoot(p.toFile)
-    p.toString
-  }
+    * off the spindle. */
+  private def shmCheckpointDir(prefix: String): String =
+    replayTempRoot(prefix, tmpfs = true).toString
 
   /** Drain a streaming plan into an in-memory sink and return the sink
     * table. The plan is BUILT on an [[isolatedRunner]] child session
@@ -1928,8 +1934,9 @@ object EventStream {
     * ConcurrencySpec runs them beside batch queries. A tmpfs
     * checkpoint keeps offset-log and state-delta fsyncs off disk, and
     * is reclaimed the moment the drain ends; the returned table's rows
-    * live in the sink, not the checkpoint. */
-  /** @param noDataBatches keep Spark's trailing no-data micro-batch
+    * live in the sink, not the checkpoint.
+    *
+    * @param noDataBatches keep Spark's trailing no-data micro-batch
     *   (default). A lane whose LAST OUTPUT is watermark-driven — the
     *   sentinel-flushed append aggregations e11/e14/e16, whose final
     *   windows emit in the batch AFTER the sentinel advanced the
@@ -1939,7 +1946,7 @@ object EventStream {
     *   their dual-sentinel eviction design) pays its full commit
     *   cycle (~0.3–0.7 s) for zero output rows — those pass false
     *   (round 15, guide §1.2; each lane's oracle re-verified). */
-  private def memorySink(parent: SparkSession,
+  private[graft] def memorySink(parent: SparkSession,
       build: SparkSession => DataFrame,
       prefix: String, mode: OutputMode,
       noDataBatches: Boolean = true): DataFrame = {
@@ -1987,14 +1994,11 @@ object EventStream {
       gapMinutes: Int = 30): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val dir = chunkedReplayDir(
+    val feed = chunkedReplayDir(
       withSec(events.select(col("user_id"),
-        date_trunc("second", col("ts")).as("ts"))),
-      Seq("user_id", "ts"), chunks)
+        date_trunc("second", col("ts")).as("ts"))), chunks)
     memorySink(spark, r => sessionizeStreaming(
-          r.readStream.schema("user_id LONG, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", 1).parquet(dir)
-            .as[SessionEvent], gapMinutes).toDF(),
+          feed.stream(r).as[SessionEvent], gapMinutes).toDF(),
         "graft_e8_", OutputMode.Append(), noDataBatches = false)
       .groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("n_sessions"),
@@ -2019,26 +2023,21 @@ object EventStream {
       gapMinutes: Int = 30): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val dir = chunkedReplayDir(
+    val feed = chunkedReplayDir(
       withSec(events.select(col("user_id"),
-        date_trunc("second", col("ts")).as("ts"))),
-      Seq("user_id", "ts"), chunks)
+        date_trunc("second", col("ts")).as("ts"))), chunks)
     memorySink(spark, { r =>
         r.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state." +
             "RocksDBStateStoreProvider")
         TwsSessionize.sessionize(
-          r.readStream.schema("user_id LONG, ts TIMESTAMP")
-            .option("maxFilesPerTrigger", 1).parquet(dir)
-            .as[SessionEvent], gapMinutes).toDF()
+          feed.stream(r).as[SessionEvent], gapMinutes).toDF()
       }, "graft_e20_", OutputMode.Append(), noDataBatches = false)
       .groupBy(col("user_id"))
       .agg(max(col("n_sessions")).as("n_sessions"),
         max(col("n_events")).as("n_events"))
   }
 
-  private val replaySchema =
-    "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
   private val replayCols = Seq("event_id", "ts", "user_id", "event_type")
 
   /** File-stream replay of the stream-stream interval join
@@ -2053,15 +2052,14 @@ object EventStream {
       chunks: Int = 6,
       windowSec: Long = 300): DataFrame = {
     val spark = events.sparkSession
-    val dir = chunkedReplayDir(withSec(events.select(replayCols.map(col): _*)),
-      replayCols, chunks)
+    val feed = chunkedReplayDir(
+      withSec(events.select(replayCols.map(col): _*)), chunks)
     memorySink(spark, { r =>
         // ONE file source shared by both legs (round 15): two readStream
         // instances over the same dir each paid their own per-batch
         // offset resolution, seen-files log, and WAL entry; the self-join
         // legs differ only in their type filter, which sits downstream
-        val stream = r.readStream.schema(replaySchema)
-          .option("maxFilesPerTrigger", 1).parquet(dir)
+        val stream = feed.stream(r)
         def side(tpe: String) = stream.where(col("event_type") === tpe)
         followsWithin(side("purchase"), side("click"), windowSec)
       },
@@ -2098,24 +2096,21 @@ object EventStream {
       chunks: Int = 6,
       windowSec: Long = 300): DataFrame = {
     val spark = events.sparkSession
-    val hi = events.agg(max(col("ts").cast("long"))).head().getLong(0)
-    def sentinels(offsetSec: Long) = {
+    def sentinels(sec: Long) = {
       def row(id: Long, uid: Long, tpe: String) = spark.range(1).select(
         lit(id).as("event_id"),
-        timestamp_seconds(lit(hi + offsetSec)).as("ts"),
+        timestamp_seconds(lit(sec)).as("ts"),
         lit(uid).as("user_id"),
         lit(tpe).as("event_type"))
       row(-1L, -1L, "click").unionByName(row(-2L, -2L, "purchase"))
     }
     val horizon = windowSec + 3600 + 60
-    val dir = chunkedReplayDir(withSec(events.select(replayCols.map(col): _*)),
-      replayCols, chunks,
-      sentinel = Some(sentinels(horizon)),
-      tail = Seq(sentinels(horizon + 60)))
+    val feed = chunkedReplayDir(
+      withSec(events.select(replayCols.map(col): _*)), chunks,
+      hi => Seq(sentinels(hi + horizon), sentinels(hi + horizon + 60)))
     memorySink(spark, { r =>
         // ONE file source shared by both legs — see replayFollows
-        val stream = r.readStream.schema(replaySchema)
-          .option("maxFilesPerTrigger", 1).parquet(dir)
+        val stream = feed.stream(r)
         def side(tpe: String) = stream.where(col("event_type") === tpe)
         followsWithin(side("purchase"), side("click"), windowSec,
           "left_outer")
@@ -2145,12 +2140,10 @@ object EventStream {
   def replayFunnel(events: DataFrame, chunks: Int = 8): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val dir = chunkedReplayDir(withSec(events.select(replayCols.map(col): _*)),
-      replayCols, chunks)
+    val feed = chunkedReplayDir(
+      withSec(events.select(replayCols.map(col): _*)), chunks)
     memorySink(spark, r => funnelStreaming(
-          r.readStream.schema(replaySchema)
-            .option("maxFilesPerTrigger", 1).parquet(dir)
-            .as[FunnelEvent]).toDF(),
+          feed.stream(r).as[FunnelEvent]).toDF(),
         "graft_e9_", OutputMode.Update(), noDataBatches = false)
       .groupBy(col("user_id"))
       .agg(max(col("funnel_stage")).as("funnel_stage"))
@@ -2176,12 +2169,8 @@ object EventStream {
       col("event_type"), col("value"))
     val retries = src.where(col("event_id") % 3 === 0)
       .withColumn("ts", timestamp_seconds(col("ts").cast("long") + 1800L))
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val dir = chunkedReplayDir(withSec(src.unionByName(retries)), cols, chunks)
-    memorySink(spark, r => r.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-          "event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", 1).parquet(dir)
+    val feed = chunkedReplayDir(withSec(src.unionByName(retries)), chunks)
+    memorySink(spark, r => feed.stream(r)
         .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -2232,17 +2221,13 @@ object EventStream {
       col("event_type"), col("value"))
     val onTime = src.where(col("event_id") % 7 =!= 0)
     val late = src.where(col("event_id") % 7 === 0)
-    val bounds = src.agg(max(col("ts").cast("long"))).head()
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val dir = chunkedReplayDir(withSec(onTime), cols, chunks,
-      sentinel = Some(flushSentinel(spark, bounds.getLong(0) + 10800L,
-        id = -1L)),
-      tail = Seq(flushSentinel(spark, bounds.getLong(0) + 10860L, id = -2L),
-        late))
-    memorySink(spark, r => windowedAgg(r.readStream
-          .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-            "event_type STRING, value DOUBLE")
-          .option("maxFilesPerTrigger", 1).parquet(dir)),
+    // its own probe: the sentinel margin is measured from the max over
+    // on-time AND late rows, not the on-time slice the feed bounds
+    val hi = src.agg(max(col("ts").cast("long"))).head().getLong(0)
+    val feed = chunkedReplayDir(withSec(onTime), chunks, _ => Seq(
+      flushSentinel(spark, hi + 10800L, id = -1L),
+      flushSentinel(spark, hi + 10860L, id = -2L), late))
+    memorySink(spark, r => windowedAgg(feed.stream(r)),
         "graft_e16_", OutputMode.Append())
       .where(col("event_type") =!= "__flush")
   }
@@ -2264,11 +2249,9 @@ object EventStream {
       .select(col("doc_id"), col("text"))
     val corpus = docs.where(col("doc_id") % 7 =!= 3)
       .select(col("doc_id"), col("text")).localCheckpoint(true)
-    val dir = chunkedReplayDir(
-      batchSide.withColumn("__sec", col("doc_id")),
-      Seq("doc_id", "text"), chunks)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_e15_out").toString
-    registerRestartRoot(new java.io.File(outDir))
+    val feed = chunkedReplayDir(
+      batchSide.withColumn("__sec", col("doc_id")), chunks)
+    val outDir = replayTempRoot("graft_e15_out").toString
     // seed the sink with the empty schema so an all-clean replay still reads
     val pairSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("batch_id",
@@ -2289,8 +2272,7 @@ object EventStream {
     // (round 15; see memorySink's noDataBatches note)
     runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
       "false")
-    val stream = runner.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val stream = feed.stream(runner)
     val ckpt = shmCheckpointDir("graft_ckpt")
     try {
       val q = stream.writeStream
@@ -2385,7 +2367,6 @@ object EventStream {
   def replayRestart(events: DataFrame, chunks: Int = 6,
       betweenDrains: (String, String) => Unit = (_, _) => ()): DataFrame = {
     val spark = events.sparkSession
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
     val src = withSec(events.select(col("event_id"),
       date_trunc("second", col("ts")).as("ts"),
       col("user_id"), col("event_type"), col("value")))
@@ -2398,7 +2379,7 @@ object EventStream {
     // per-call cleanup can only reclaim ckpt and inDir; without the
     // exit hook each verify/bench/soak rep would strand a RAM-resident
     // sink dir until reboot (round-10 review finding).
-    val root = java.nio.file.Paths.get(shmCheckpointDir("graft_restart"))
+    val root = replayTempRoot("graft_restart", tmpfs = true)
     val inDir = root.resolve("in").toString
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -2411,13 +2392,14 @@ object EventStream {
     // so its phase-2 redelivery is the SAME staged file — byte-identical
     // by construction rather than by parquet write determinism.
     val w = new ChunkWriter(inDir)
-    val stager = new ChunkStager(src, cols, chunks, lo, span,
+    val stager = new ChunkStager(src, stagedCols(src), chunks, lo, span,
       // DISTINCT sentinel ids: the pipeline dedups on event_id, so a
       // shared id would drop sentinel #2 in-flight and the
       // two-watermark handoff would ride on the dedup's leniency
       // instead of the documented mechanism (round-10 review finding)
       extras = Seq(flushSentinel(spark, hi + 10800L, id = -1L),
         flushSentinel(spark, hi + 10860L, id = -2L)))
+    val feed = ReplayFeed(inDir, stager.schema)
 
     // Both queries build from one [[isolatedRunner]] child session, so
     // the checkpoint sees one consistent conf across the two
@@ -2432,11 +2414,7 @@ object EventStream {
     // a fresh query per call — nothing driver-side survives between the
     // two drains except the checkpoint and the sink
     def drain(): Unit = {
-      val stream = runner.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-          "event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = windowedAgg(stream.dropDuplicates("event_id"))
+      val q = windowedAgg(feed.stream(runner).dropDuplicates("event_id"))
         .writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append())
@@ -2488,31 +2466,11 @@ object EventStream {
     * partition-pruned to the id-buckets the batch touched (see
     * [[streamingUpsert]]); the replay proves the merge semantics. */
   def replayUpsert(events: DataFrame, chunks: Int = 6): DataFrame = {
-    val spark = events.sparkSession
-    val cols = Seq("event_id", "ts", "user_id", "value")
-    val src = withSec(events.select(col("event_id"), col("ts"),
-      col("user_id"), col("value")))
-    val dir = chunkedReplayDir(src, cols, chunks)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_upsert_tbl").toString
-    // version snapshots are O(users) each and the soak runs this lane
-    // at 10x keys twice per factor — reclaimed at JVM exit like every
-    // replay root (round-10 review finding)
-    registerRestartRoot(new java.io.File(root))
-    // ingest on an [[isolatedRunner]] with a tmpfs checkpoint (round 14,
-    // guide §2/§6): replay state is tiny, so the 4-partition child
-    // session cuts every merge stage's task count 8x, and the dead-the-
-    // moment-it-drains checkpoint stops paying disk fsync per batch.
-    // The TABLE root stays on real disk — the lane prices real bytes.
-    val runner = isolatedRunner(spark)
-    val ckpt = shmCheckpointDir("graft_upsert_ckpt")
-    val stream = runner.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = streamingUpsert(stream, root, "user_id",
-      reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt))
-    try q.processAllAvailable() finally q.stop()
-    spark.read.parquet(latestUpsertVersion(root))
+    val root = ingestReplay(events, chunks, "graft_upsert_tbl") {
+      (stream, tbl, ckpt) => streamingUpsert(stream, tbl, "user_id",
+        reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt))
+    }
+    events.sparkSession.read.parquet(latestUpsertVersion(root))
       .select(col("user_id"), col("event_id"),
         round(col("value"), 6).as("value"))
   }
@@ -2534,39 +2492,44 @@ object EventStream {
         round(col("value"), 6).as("value"))
   }
 
-  /** The ONE copy of the e19b/e21/e23 bucketed-ingest block (chunked
-    * time-range replay → [[streamingUpsertBucketed]] with the shared
-    * [[lwwReduceByUser]] reduction, drained clean): the three lanes
-    * differ only in HOW they read the table back, so the ingest they
-    * read from must be incapable of drifting between them. Returns the
-    * table root (temp, reclaimed at JVM exit). */
-  private def ingestBucketedReplay(events: DataFrame, chunks: Int,
-      nBuckets: Int, prefix: String): String = {
-    val spark = events.sparkSession
-    val cols = Seq("event_id", "ts", "user_id", "value")
-    val src = withSec(events.select(col("event_id"), col("ts"),
-      col("user_id"), col("value")))
-    val dir = chunkedReplayDir(src, cols, chunks)
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString
-    registerRestartRoot(new java.io.File(root))
+  /** The ONE copy of the single-drain ingest block (chunked time-range
+    * replay of the (event_id, ts, user_id, value) feed → the writer
+    * `start(stream, tableRoot, checkpoint)` starts, drained clean): e19
+    * starts [[streamingUpsert]], the bucketed lanes (e19b/e21/e23/e24,
+    * through [[ingestBucketedReplay]]) [[streamingUpsertBucketed]], and
+    * beyond that they differ only in HOW they read the table back, so
+    * the ingest they read from must be incapable of drifting between
+    * them. Returns the table root (temp, reclaimed at JVM exit: version
+    * snapshots are O(users) each and the soak runs these lanes at 10x
+    * keys twice per factor — round-10 review finding). */
+  private def ingestReplay(events: DataFrame, chunks: Int, prefix: String)(
+      start: (DataFrame, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery): String = {
+    val feed = chunkedReplayDir(withSec(events.select(col("event_id"),
+      col("ts"), col("user_id"), col("value"))), chunks)
+    val root = replayTempRoot(prefix).toString
     // ingest on an [[isolatedRunner]] with a tmpfs checkpoint (round 14,
-    // guide §2/§6): same posture as [[replayUpsert]] — 4-partition merge
-    // stages, commit-log fsyncs off disk, the bucketed TABLE itself
-    // still written to real disk.
-    val runner = isolatedRunner(spark)
-    val ckpt = shmCheckpointDir("graft_upsertb_ckpt")
-    val stream = runner.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = streamingUpsertBucketed(stream, root, "user_id", nBuckets,
-      reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt))
-    drainAndAwait(runner, q)
+    // guide §2/§6): replay state is tiny, so the 4-partition child
+    // session cuts every merge stage's task count 8x, and the dead-the-
+    // moment-it-drains checkpoint stops paying disk fsync per batch.
+    // The TABLE root stays on real disk — the lane prices real bytes.
+    val runner = isolatedRunner(events.sparkSession)
+    drainAndAwait(runner, start(feed.stream(runner), root,
+      shmCheckpointDir("graft_ingest_ckpt")))
     // the ckpt dir is NOT reclaimed here: the e21/e24 vacuum lanes'
     // drained-checkpoint guard must still resolve the `_OWNER` path to
     // prove no batch is in flight. It is a few KB of tmpfs, reclaimed
     // at JVM exit with the table root.
     root
   }
+
+  /** [[ingestReplay]] into a [[streamingUpsertBucketed]] table. */
+  private def ingestBucketedReplay(events: DataFrame, chunks: Int,
+      nBuckets: Int, prefix: String): String =
+    ingestReplay(events, chunks, prefix) { (stream, tbl, ckpt) =>
+      streamingUpsertBucketed(stream, tbl, "user_id", nBuckets,
+        reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt))
+    }
 
   /** E23 — POINT LOOKUP on the ingested store under the oracle: the
     * bucketed ingest of [[replayUpsertBucketed]], then ONE planted
@@ -2734,9 +2697,8 @@ object EventStream {
     val src = withSec(events.select(col("event_id"), col("ts"),
       col("user_id"), col("value"),
       col("event_type").as("etype")))
-    val (lo, hi, span) = persistSecBounds(src)
-    val root = java.nio.file.Files.createTempDirectory("graft_upsertd_tbl")
-    registerRestartRoot(root.toFile)
+    val (lo, _, span) = persistSecBounds(src)
+    val root = replayTempRoot("graft_upsertd_tbl")
     val inDir = root.resolve("in").toString
     val tbl = root.resolve("table").toString
     // both incarnations ingest on ONE [[isolatedRunner]] (consistent
@@ -2746,10 +2708,10 @@ object EventStream {
     val runner = isolatedRunner(spark)
     val ckpt = shmCheckpointDir("graft_upsertd_ckpt")
     val w = new ChunkWriter(inDir)
-    def drain(schema: String): Unit = {
-      val stream = runner.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-      val q = streamingUpsertBucketed(stream, tbl, "user_id", nBuckets,
+    def drain(stager: ChunkStager): Unit = {
+      val q = streamingUpsertBucketed(
+        ReplayFeed(inDir, stager.schema).stream(runner), tbl, "user_id",
+        nBuckets,
         reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt),
         tolerateSchemaDrift = true)
       drainAndAwait(runner, q)
@@ -2762,22 +2724,21 @@ object EventStream {
     // never delivered.
     val half = chunks / 2
     val eraBound = chunkBounds(lo, span, chunks, half)._1
-    val stager1 = new ChunkStager(src.where(col("__sec") < eraBound),
-      Seq("event_id", "ts", "user_id", "value"), chunks, lo, span)
-    val stager2 = new ChunkStager(
-      src.where(col("__sec") >= eraBound).where(col("user_id") % 5 =!= 0),
-      Seq("event_id", "ts", "user_id", "value", "etype"), chunks, lo, span)
+    val era1 = src.where(col("__sec") < eraBound).drop("etype")
+    val era2 =
+      src.where(col("__sec") >= eraBound).where(col("user_id") % 5 =!= 0)
+    val stager1 = new ChunkStager(era1, stagedCols(era1), chunks, lo, span)
+    val stager2 = new ChunkStager(era2, stagedCols(era2), chunks, lo, span)
     try {
       // era 1: the feed before the field existed
       (0 until half).foreach(stager1.deliver(w, _))
-      drain("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
+      drain(stager1)
       // era 2: the feed gained `etype`; the restarted reader is wider
       // (the checkpoint's seen-files log keeps era-1 files out of it).
       // The %5 cohort churned in era 1 — their final rows must read
       // back with the era-1 NULL
       (half until chunks).foreach(stager2.deliver(w, _))
-      drain("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE, " +
-        "etype STRING")
+      drain(stager2)
     } finally {
       stager1.close()
       stager2.close()
@@ -2820,13 +2781,10 @@ object EventStream {
   def replayUpsertRebucket(events: DataFrame, chunks: Int = 6,
       nBuckets: Int = 8, newBuckets: Int = 32): DataFrame = {
     val spark = events.sparkSession
-    val cols = Seq("event_id", "ts", "user_id", "value")
     val src = withSec(events.select(col("event_id"), col("ts"),
       col("user_id"), col("value")))
-    val (lo, hi, span) = persistSecBounds(src)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_upsertr_tbl")
-    registerRestartRoot(root.toFile)
+    val (lo, _, span) = persistSecBounds(src)
+    val root = replayTempRoot("graft_upsertr_tbl")
     val inDir = root.resolve("in").toString
     val tbl = root.resolve("table").toString
     // one [[isolatedRunner]] for both incarnations, checkpoint on tmpfs
@@ -2838,14 +2796,13 @@ object EventStream {
     // ONE Spark job stages every chunk up front (round 15, guide §1.2 —
     // was one filter+coalesce(1) job per chunk); the two incarnations
     // then just move staged files into the delivery dir
-    val stager = new ChunkStager(src, cols, chunks, lo, span)
+    val stager = new ChunkStager(src, stagedCols(src), chunks, lo, span)
+    val feed = ReplayFeed(inDir, stager.schema)
     def drain(): Unit = {
-      val stream = runner.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
       // the seed bucket count is passed UNCHANGED across the rebucket —
       // proving the metadata, not the call site, owns the layout
-      val q = streamingUpsertBucketed(stream, tbl, "user_id", nBuckets,
+      val q = streamingUpsertBucketed(feed.stream(runner), tbl, "user_id",
+        nBuckets,
         reduceBatch = lwwReduceByUser, checkpoint = Some(ckpt))
       drainAndAwait(runner, q)
     }
@@ -2868,17 +2825,11 @@ object EventStream {
   private def replayAggregated(events: DataFrame, chunks: Int,
       agg: DataFrame => DataFrame, sinkPrefix: String): DataFrame = {
     val spark = events.sparkSession
-    val src = events.select(col("event_id"), col("ts"), col("user_id"),
-      col("event_type"), col("value"))
-    val bounds = src.agg(max(col("ts").cast("long"))).head()
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    val dir = chunkedReplayDir(withSec(src), cols, chunks,
-      sentinel = Some(flushSentinel(spark, bounds.getLong(0) + 10800L)))
-    memorySink(spark, r => agg(r.readStream
-          .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
-            "event_type STRING, value DOUBLE")
-          .option("maxFilesPerTrigger", 1).parquet(dir)),
-        sinkPrefix, OutputMode.Append())
+    val feed = chunkedReplayDir(withSec(events.select(col("event_id"),
+      col("ts"), col("user_id"), col("event_type"), col("value"))), chunks,
+      hi => Seq(flushSentinel(spark, hi + 10800L)))
+    memorySink(spark, r => agg(feed.stream(r)), sinkPrefix,
+        OutputMode.Append())
       .where(col("event_type") =!= "__flush")
   }
 }

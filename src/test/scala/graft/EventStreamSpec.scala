@@ -1004,29 +1004,33 @@ class EventStreamSpec extends SparkSpec {
     // check-then-write, so two fresh queries racing a still-unowned
     // root could BOTH believe they stamped — and the loser's
     // termination reap would then disarm the survivor's guard. The fix
-    // is a link(2) create-if-absent; this pins the primitive itself.
+    // is a link(2) create-if-absent; this pins the primitive itself,
+    // for both markers that stamp through it (`_OWNER` and `_WRITER`).
     val root = java.nio.file.Files.createTempDirectory("es_stamp_atomic")
     val n = 8
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val wins = new java.util.concurrent.atomic.AtomicInteger(0)
-    val winners = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val threads = (0 until n).map { i =>
-      new Thread(() => {
-        gate.await()
-        if (EventStream.stampWriterIfAbsent(root.toFile, s"racer-$i")) {
-          wins.incrementAndGet(): Unit
-          winners.add(s"racer-$i"): Unit
-        }
-      })
+    for (name <- Seq("_WRITER", "_OWNER")) {
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
+      val winners = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val threads = (0 until n).map { i =>
+        new Thread(() => {
+          gate.await()
+          if (EventStream.stampIfAbsent(root.toFile, name, s"racer-$i")) {
+            wins.incrementAndGet(): Unit
+            winners.add(s"racer-$i"): Unit
+          }
+        })
+      }
+      threads.foreach(_.start())
+      gate.countDown()
+      threads.foreach(_.join())
+      assert(wins.get() == 1,
+        s"expected exactly one $name stamp winner, got ${wins.get()}")
+      val content = new String(java.nio.file.Files.readAllBytes(
+        root.resolve(name)), "UTF-8").trim
+      assert(winners.contains(content),
+        s"the $name content ($content) must be the winner's value")
     }
-    threads.foreach(_.start())
-    gate.countDown()
-    threads.foreach(_.join())
-    assert(wins.get() == 1, s"expected exactly one stamp winner, got ${wins.get()}")
-    val content = new String(java.nio.file.Files.readAllBytes(
-      root.resolve("_WRITER")), "UTF-8").trim
-    assert(winners.contains(content),
-      s"the marker content ($content) must be the winner's value")
   }
 
   test("a resumed incarnation replaces a crash-left marker at its first" +
@@ -1831,5 +1835,47 @@ class EventStreamSpec extends SparkSpec {
         chunks = 4, lo = 0L, span = 1L)
     }
     assert(stageDirs() -- before == Set.empty)
+  }
+
+  test("noDataBatches: a sentinel-flushed append windowedAgg (e11's" +
+      " shape) loses its final window without the trailing no-data batch") {
+    // the sentinel's batch advances the watermark, but the windows it
+    // closes evict only in the NEXT batch — which no data triggers, so
+    // only Spark's no-data batch can flush them
+    val rows = Seq(
+      (1L, "2024-01-01 10:05:00", 1L, "view", 1.0),
+      (2L, "2024-01-01 10:20:00", 2L, "view", 2.0),
+      (3L, "2024-01-01 11:10:00", 1L, "click", 3.0),
+      (4L, "2024-01-01 12:30:00", 2L, "view", 4.0))
+    def frame(rs: Seq[(Long, String, Long, String, Double)]) =
+      rs.toDF("event_id", "tsStr", "user_id", "event_type", "value")
+        .select($"event_id", to_timestamp($"tsStr").as("ts"), $"user_id",
+          $"event_type", $"value")
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    val dir = java.nio.file.Files.createTempDirectory("es_nodata")
+      .resolve("in").toString
+    val w = new EventStream.ChunkWriter(dir)
+    w.write(frame(rows), cols)
+    w.write(frame(Seq((-1L, "2024-01-01 20:00:00", -1L, "__flush", 0.0))),
+      cols)
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      df.where($"event_type" =!= "__flush")
+        .select($"window_start".cast("string"), $"event_type",
+          $"n_events", $"sum_value")
+        .collect().map(_.toSeq).toSet
+    def replay(noDataBatches: Boolean) = windows(EventStream.memorySink(
+      spark, r => EventStream.windowedAgg(r.readStream
+        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, " +
+          "event_type STRING, value DOUBLE")
+        .option("maxFilesPerTrigger", 1).parquet(dir)),
+      "es_nodata_", org.apache.spark.sql.streaming.OutputMode.Append(),
+      noDataBatches))
+    val batch = windows(EventStream.windowedAgg(frame(rows)))
+    assert(batch.size == 3)
+    assert(replay(noDataBatches = true) == batch)
+    val cut = replay(noDataBatches = false)
+    assert(!cut.exists(_.head == "2024-01-01 12:00:00"),
+      s"the final window emitted without a no-data batch: $cut")
+    assert(cut.subsetOf(batch) && cut.nonEmpty, cut)
   }
 }
