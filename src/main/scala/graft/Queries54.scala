@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Round 14 — the one composition of two pinned postures that was not
   * itself pinned joins the DuckDB hash compare: e24 reads ONE planted
   * user's state at a MID-FEED batch through
-  * [[graft.streaming.EventStream.bucketedPointLookupAsOf]] — e23's
+  * [[graft.streaming.VersionedTable.bucketedPointLookupAsOf]] — e23's
   * O(bucket) get-by-id (reference S2, src/session_store.rs:127-136,
   * served from the versioned store, src/memory.rs) at e21's
   * point-in-time semantics. The oracle is e21's prefix argmax SQL

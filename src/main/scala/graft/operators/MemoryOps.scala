@@ -160,23 +160,11 @@ object MemoryOps {
       timeZone: String): Long =
     idBucketer(Literal(id).dataType, idType, nBuckets, timeZone)(id)
 
-  /** The PRUNE STEP shared by the batch and streaming bucketed merges:
-    * tag `incoming` with its id-buckets and collect the DISTINCT
-    * bucket list to the driver. That collect is table METADATA (≤
-    * nBuckets small ints) — it IS the partition pruning, not a
-    * data-path collect. One copy, or the batch and streaming forms
-    * silently diverge on the rule (round-11 review finding). */
-  private[graft] def tagTouchedBuckets(incoming: DataFrame, idCol: String,
-      nBuckets: Int): (DataFrame, Seq[Long]) = {
-    val inc = incoming.withColumn("__bucket", bucketOf(idCol, nBuckets))
-    val touched = inc.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    (inc, touched)
-  }
-
   /** Write a keyed table hash-bucketed by id (`__bucket=k/` partition
-    * dirs). This is the 100 TB layout: every keyed operation — upsert,
-    * delete, point lookup — prunes to the buckets its keys hash into.
+    * dirs). This is the 100 TB read layout: a keyed read prunes to the
+    * buckets its keys hash into. It is written whole; the keyed upsert
+    * that rewrites only the touched buckets is the versioned layout of
+    * [[graft.streaming.VersionedTable.streamingUpsertBucketed]].
     *
     * Clustered on the bucket before the write so each directory holds
     * ONE file, not one per upstream partition: a plain partitionBy from
@@ -193,51 +181,6 @@ object MemoryOps {
     df.withColumn("__bucket", bucketOf(idCol, nBuckets))
       .repartition(col("__bucket"))
       .write.partitionBy("__bucket").mode("overwrite").parquet(path)
-
-  /** Partition-pruned LWW upsert against a bucketed table: only the buckets
-    * the incoming keys hash into are read, merged, and rewritten — the
-    * other buckets' files are untouched (dynamic partition overwrite).
-    * The touched-bucket list is table METADATA (≤ nBuckets small ints) —
-    * collecting it on the driver is a partition-pruning step, not a
-    * data-path collect.
-    *
-    * This is the batch IN-PLACE form (one current state, overwritten);
-    * the streaming writer needs crash-window idempotence across
-    * at-least-once retries, so it layers per-bucket VERSIONING on the
-    * same pruning idea — see
-    * [[graft.streaming.EventStream.streamingUpsertBucketed]].
-    */
-  def upsertBucketed(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      incoming: DataFrame,
-      idCol: String,
-      nBuckets: Int): Unit = {
-    val (inc, touched) = tagTouchedBuckets(incoming, idCol, nBuckets)
-    val current = spark.read.parquet(path)
-      .where(col("__bucket").isin(touched: _*)) // partition-pruned scan
-    val merged = upsertById(current, inc, idCol)
-    // Stage the merged buckets durably BEFORE overwriting: the overwrite
-    // must never race the scan of the files it replaces (a transactional
-    // table format's MERGE subsumes this staging at production scale).
-    val staging = path + "__staging_" + java.util.UUID.randomUUID().toString.take(8)
-    merged.write.partitionBy("__bucket").parquet(staging)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try spark.read.parquet(staging)
-      .write.partitionBy("__bucket").mode("overwrite").parquet(path)
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // best-effort staging cleanup
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(staging))
-    }
-  }
 
   /** Read a bucketed table (drops the layout column). */
   def readBucketed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =

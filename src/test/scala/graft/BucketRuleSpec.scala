@@ -9,17 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * one. */
 class BucketRuleSpec extends AnyFunSuite {
   test("the bucket hash is stated in src/main only inside MemoryOps") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root (no ${root.getPath})")
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) files(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val all = files(root)
-    assert(all.exists(_.getName == "MemoryOps.scala"))
-    val hits = all.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      """XXH64|pmod\(xxhash64""".r.findAllMatchIn(src).map(_ => f.getName)
+    val all = MainSources()
+    assert(all.exists(_._1 == "MemoryOps.scala"))
+    val hits = all.flatMap { case (name, src) =>
+      """XXH64|pmod\(xxhash64""".r.findAllMatchIn(src).map(_ => name)
     }
     assert(hits.forall(_ == "MemoryOps.scala"), hits)
   }

@@ -3,44 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.MemoryOps
 
-/** The 100 TB table layout: hash-bucketed by id, with merges that rewrite
-  * only the buckets the incoming keys touch.
+/** The 100 TB read layout: hash-bucketed by id, with keyed reads that
+  * prune to the buckets their keys hash into.
   */
 class BucketedTableSpec extends SparkSpec {
   import spark.implicits._
-
-  test("upsertBucketed rewrites only touched buckets; untouched files stay byte-identical") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bucketed").toFile.getPath
-    val table = s"$root/memories"
-    val base = (0L until 200L).map(i => (i, s"text-$i")).toDF("id", "text")
-    MemoryOps.writeBucketed(base, table, "id", nBuckets = 8)
-
-    def filesByBucket: Map[String, Set[(String, Long)]] =
-      new java.io.File(table).listFiles().filter(_.getName.startsWith("__bucket="))
-        .map(d => d.getName ->
-          d.listFiles().map(f => (f.getName, f.lastModified())).toSet).toMap
-
-    val before = filesByBucket
-    // patch 3 keys -> at most 3 buckets touched
-    val patch = Seq((5L, "five-updated"), (6L, "six-updated"), (7L, "seven-updated"))
-      .toDF("id", "text")
-    MemoryOps.upsertBucketed(spark, table, patch, "id", nBuckets = 8)
-    val after = filesByBucket
-
-    val touched = patch.withColumn("b", pmod(xxhash64($"id"), lit(8L)))
-      .select("b").distinct().as[Long].collect().map(b => s"__bucket=$b").toSet
-    assert(touched.size <= 3)
-    // untouched bucket dirs: identical file lists and mtimes
-    (before.keySet -- touched).foreach { b => assert(before(b) == after(b), b) }
-    // touched buckets rewritten
-    touched.foreach { b => assert(before(b) != after(b), b) }
-
-    // content correct: 200 rows, 3 updated
-    val m = MemoryOps.readBucketed(spark, table).as[(Long, String)].collect().toMap
-    assert(m.size == 200)
-    assert(m(5L) == "five-updated" && m(6L) == "six-updated" && m(7L) == "seven-updated")
-    assert(m(4L) == "text-4")
-  }
 
   test("bucketed point-lookup plan prunes partitions") {
     val root = java.nio.file.Files.createTempDirectory("graft_bucketed2").toFile.getPath

@@ -2,10 +2,42 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, VersionedTable}
 
-class EventStreamSpec extends SparkSpec {
+class EventStreamSpec extends WriterLeaseSpec {
   import spark.implicits._
+
+  /** `body`'s result and the number of Spark jobs it started. Only
+    * jobs started from this thread under this tag count, so a stray
+    * background job elsewhere in the JVM cannot fail a case. */
+  private def countJobs[A](body: => A): (A, Int) = {
+    val tag = "graft.test.jobcount"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) == "1"))
+          jobs.incrementAndGet(): Unit
+    }
+    // the listener bus is asynchronous: poll until the count has held
+    // still for half a second before reading it
+    def quietCount(): Int = {
+      var last = jobs.get()
+      var still = 0
+      while (still < 5) {
+        Thread.sleep(100)
+        val now = jobs.get()
+        if (now == last) still += 1 else { last = now; still = 0 }
+      }
+      last
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, "1")
+    val result = try body
+      finally spark.sparkContext.setLocalProperty(tag, null)
+    try (result, quietCount())
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("windowedAgg as a real streaming query equals the batch plan on the same data") {
     val batch = EventStream.windowedAgg(Tables.events(spark, sf0001))
@@ -117,7 +149,7 @@ class EventStreamSpec extends SparkSpec {
     writeBatch(Seq((1L, "one"), (2L, "two")))
     val stream = spark.readStream
       .schema("id LONG, payload STRING").parquet(in)
-    val q = EventStream.streamingUpsert(stream, s"$root/table", "id")
+    val q = VersionedTable.streamingUpsert(stream, s"$root/table", "id")
     q.processAllAvailable()
     writeBatch(Seq((2L, "two-updated"), (3L, "three")))
     q.processAllAvailable()
@@ -414,7 +446,7 @@ class EventStreamSpec extends SparkSpec {
     def drain(): Unit = {
       val stream = spark.readStream.schema("id LONG, payload STRING")
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = EventStream.streamingUpsert(stream, tbl, "id",
+      val q = VersionedTable.streamingUpsert(stream, tbl, "id",
         checkpoint = Some(ckpt))
       try q.processAllAvailable() finally q.stop()
       // stop() deregisters asynchronously; the restart below must not
@@ -442,7 +474,7 @@ class EventStreamSpec extends SparkSpec {
       .sorted.toSeq
     assert(versions == Seq("v0", "v1"),
       s"retry minted a phantom version: $versions")
-    val latest = spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+    val latest = spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
       .as[(Long, String)].collect().toMap
     assert(latest ==
       Map(1L -> "one", 2L -> "two-updated", 3L -> "three"))
@@ -466,7 +498,7 @@ class EventStreamSpec extends SparkSpec {
     def drain(): Unit = {
       val stream = spark.readStream.schema("id LONG, payload STRING")
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = EventStream.streamingUpsert(stream, tbl, "id",
+      val q = VersionedTable.streamingUpsert(stream, tbl, "id",
         checkpoint = Some(ckpt))
       EventStream.drainAndAwait(spark, q)
     }
@@ -482,7 +514,7 @@ class EventStreamSpec extends SparkSpec {
       .sorted.toSeq
     assert(versions == Seq("v0", "v1"),
       s"resume did not continue batch numbering: $versions")
-    val latest = spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+    val latest = spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
       .as[(Long, String)].collect().toMap
     assert(latest == Map(1L -> "one", 2L -> "two-updated", 3L -> "three"))
   }
@@ -500,14 +532,14 @@ class EventStreamSpec extends SparkSpec {
     def drain(): Unit = {
       val stream = spark.readStream.schema("id LONG, payload STRING")
         .parquet(in)
-      val q = EventStream.streamingUpsert(stream, tbl, "id")
+      val q = VersionedTable.streamingUpsert(stream, tbl, "id")
       try q.processAllAvailable() finally q.stop()
     }
     Seq((1L, "one")).toDF("id", "payload")
       .coalesce(1).write.mode("append").parquet(in)
     drain() // run 1 commits v0 and stamps _OWNER
     assert(new java.io.File(tbl, "v0/_SUCCESS").exists())
-    val before = spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+    val before = spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
       .as[(Long, String)].collect().toMap
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain() // run 2: new anonymous owner, same root — must refuse
@@ -515,7 +547,7 @@ class EventStreamSpec extends SparkSpec {
     assert(e.getMessage.contains("belongs to another query run"),
       s"unexpected failure: ${e.getMessage}")
     // and the refusal left the table untouched
-    val after = spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+    val after = spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
       .as[(Long, String)].collect().toMap
     assert(after == before && before == Map(1L -> "one"))
   }
@@ -544,7 +576,7 @@ class EventStreamSpec extends SparkSpec {
       Seq("id", "payload"))
     val stream = spark.readStream.schema("id LONG, payload STRING")
       .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = EventStream.streamingUpsertBucketed(stream, tbl, "id", nBuckets)
+    val q = VersionedTable.streamingUpsertBucketed(stream, tbl, "id", nBuckets)
     try q.processAllAvailable() finally q.stop()
     // THE pruning contract: batch 1 wrote v1 into the target bucket only
     for (b <- 0 until nBuckets) {
@@ -554,15 +586,15 @@ class EventStreamSpec extends SparkSpec {
       else assert(versions == Seq("v0"),
         s"untouched bucket b$b was rewritten: $versions")
     }
-    val latest = EventStream.latestBucketedUpsert(spark, tbl)
+    val latest = VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap
     val exp = (1L to 16L).map(id =>
       id -> (if (updateIds.toSet(id)) s"p$id-v2" else s"p$id")).toMap
     assert(latest == exp)
     // vacuum drops the superseded target-bucket version, answer unchanged
-    EventStream.vacuumBucketed(tbl)
+    VersionedTable.vacuumBucketed(tbl)
     assert(!new java.io.File(tbl, s"b$target/v0").exists())
-    assert(EventStream.latestBucketedUpsert(spark, tbl)
+    assert(VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap == exp)
   }
 
@@ -581,7 +613,7 @@ class EventStreamSpec extends SparkSpec {
     def drain(): Unit = {
       val stream = spark.readStream.schema("id LONG, payload STRING")
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = EventStream.streamingUpsertBucketed(stream, tbl, "id", nBuckets,
+      val q = VersionedTable.streamingUpsertBucketed(stream, tbl, "id", nBuckets,
         checkpoint = Some(ckpt))
       EventStream.drainAndAwait(spark, q)
     }
@@ -604,7 +636,7 @@ class EventStreamSpec extends SparkSpec {
     drain() // retry of batch 1
     assert(layout() == before,
       s"retry changed the bucket-version layout: ${layout()} vs $before")
-    val latest = EventStream.latestBucketedUpsert(spark, tbl)
+    val latest = VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap
     val exp = (1L to 9L).map(id =>
       id -> (if (id == 2L) "p2-v2" else s"p$id")).toMap
@@ -629,9 +661,9 @@ class EventStreamSpec extends SparkSpec {
       java.nio.file.Paths.get(tbl, "v0.bak"))
     val stream = spark.readStream.schema("id LONG, payload STRING")
       .parquet(in)
-    val q = EventStream.streamingUpsert(stream, tbl, "id")
+    val q = VersionedTable.streamingUpsert(stream, tbl, "id")
     try q.processAllAvailable() finally q.stop()
-    val latest = spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+    val latest = spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
       .as[(Long, String)].collect().toMap
     assert(latest == Map(1L -> "one"))
   }
@@ -647,7 +679,7 @@ class EventStreamSpec extends SparkSpec {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("payload",
           org.apache.spark.sql.types.StringType))))
-    EventStream.upsertBatchBucketed(tbl, empty, 0L, "id", 4)
+    VersionedTable.upsertBatchBucketed(tbl, empty, 0L, "id", 4)
     assert(Option(new java.io.File(tbl).list()).getOrElse(Array.empty)
       .isEmpty, "empty batch left artifacts in the table root")
   }
@@ -758,19 +790,19 @@ class EventStreamSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(in)
       // the seed count stays 4 across the rebucket: the generation's
       // _NBUCKETS, not the call site, must govern the resumed merges
-      val q = EventStream.streamingUpsertBucketed(stream, tbl, "id", nSeed,
+      val q = VersionedTable.streamingUpsertBucketed(stream, tbl, "id", nSeed,
         checkpoint = Some(ckpt))
       EventStream.drainAndAwait(spark, q)
     }
     w.write((1L to 16L).map(id => (id, s"p$id")).toDF("id", "payload"),
       Seq("id", "payload"))
     drain() // batch 0 at the seed layout
-    EventStream.rebucketUpsert(spark, tbl, "id", 8)
+    VersionedTable.rebucketUpsert(spark, tbl, "id", 8)
     // the rewrite committed as generation 1 and retired the root layout
     assert(new java.io.File(tbl, "gen1/_GEN_COMMIT").exists())
     assert(Option(new java.io.File(tbl).list()).getOrElse(Array.empty)
       .forall(!_.matches("b\\d+")), "root-level buckets survived rebucket")
-    val mid = EventStream.latestBucketedUpsert(spark, tbl)
+    val mid = VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap
     assert(mid == (1L to 16L).map(id => id -> s"p$id").toMap,
       "rebucket changed the data")
@@ -789,7 +821,7 @@ class EventStreamSpec extends SparkSpec {
     assert(touchedDirs.toSet == expTouched,
       s"batch 1 touched ${touchedDirs.toSet}, expected $expTouched " +
         "(8-bucket hashing) — the stale 4-bucket seed leaked through")
-    val fin = EventStream.latestBucketedUpsert(spark, tbl)
+    val fin = VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap
     val exp = ((1L to 17L).map(id => id -> s"p$id").toMap
       + (3L -> "p3-v2"))
@@ -808,7 +840,7 @@ class EventStreamSpec extends SparkSpec {
     w.write(Seq((2L, "p2-v2")).toDF("id", "payload"), Seq("id", "payload"))
     val stream = spark.readStream.schema("id LONG, payload STRING")
       .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = EventStream.streamingUpsertBucketed(stream, tbl, "id", 4,
+    val q = VersionedTable.streamingUpsertBucketed(stream, tbl, "id", 4,
       checkpoint = Some(ckpt))
     try q.processAllAvailable() finally q.stop()
     // crash simulation (same shape as the crash-window spec): batch 1's
@@ -823,21 +855,21 @@ class EventStreamSpec extends SparkSpec {
         new java.io.File(victim.getParent, "." + victim.getName + ".crc"))
       .foreach(f => if (f.exists()) f.delete(): Unit)
     val e = intercept[IllegalArgumentException] {
-      EventStream.rebucketUpsert(spark, tbl, "id", 8)
+      VersionedTable.rebucketUpsert(spark, tbl, "id", 8)
     }
     assert(e.getMessage.contains("in flight"), e.getMessage)
     // vacuum carries the SAME drain guard: a keep-1 vacuum in this
     // window would delete the retry's merge source (round-11 review —
     // silent data loss on the re-executed batch)
     val ev = intercept[IllegalArgumentException] {
-      EventStream.vacuumBucketed(tbl)
+      VersionedTable.vacuumBucketed(tbl)
     }
     assert(ev.getMessage.contains("in flight"), ev.getMessage)
     // a crashed rebucket's leftover — a gen dir with NO commit marker —
     // must not hijack reads (the atomic-commit half of the contract)
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(tbl, "gen9/b0/v99"))
-    val latest = EventStream.latestBucketedUpsert(spark, tbl)
+    val latest = VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap
     val exp = (1L to 8L).map(id =>
       id -> (if (id == 2L) "p2-v2" else s"p$id")).toMap
@@ -846,598 +878,23 @@ class EventStreamSpec extends SparkSpec {
     // (production: resume the query once); vacuum then reclaims the
     // stray uncommitted generation
     java.nio.file.Files.write(victim.toPath, victimBytes)
-    EventStream.vacuumBucketed(tbl)
+    VersionedTable.vacuumBucketed(tbl)
     assert(!new java.io.File(tbl, "gen9").exists())
     // FAIL CLOSED: an _OWNER whose checkpoint path doesn't resolve from
     // this host may still hide an in-flight batch — destructive
     // maintenance must refuse rather than proceed blind
     val blindTbl = root.resolve("blind").toString
-    EventStream.upsertBatchBucketed(blindTbl,
+    VersionedTable.upsertBatchBucketed(blindTbl,
       (1L to 4L).map(id => (id, s"p$id")).toDF("id", "payload"),
       0L, "id", 2)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(blindTbl, "_OWNER"),
       root.resolve("no_such_ckpt").toString)
     val blind = intercept[IllegalArgumentException] {
-      EventStream.rebucketUpsert(spark, blindTbl, "id", 4)
+      VersionedTable.rebucketUpsert(spark, blindTbl, "id", 4)
     }
     assert(blind.getMessage.contains("refusing destructive maintenance"),
       blind.getMessage)
-  }
-
-  test("maintenance REFUSES while a writer query is LIVE — even idle —" +
-      " and a crash-left marker fails closed until deleted") {
-    val root = java.nio.file.Files.createTempDirectory("es_live_writer")
-    val in = root.resolve("in").toString
-    val tbl = root.resolve("table").toString
-    val ckpt = root.resolve("ckpt").toString
-    val w = new EventStream.ChunkWriter(in)
-    w.write((1L to 8L).map(id => (id, s"p$id")).toDF("id", "payload"),
-      Seq("id", "payload"))
-    val stream = spark.readStream.schema("id LONG, payload STRING")
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = EventStream.streamingUpsertBucketed(stream, tbl, "id", 4,
-      checkpoint = Some(ckpt))
-    val grace = EventStream.liveWriterGraceMs
-    EventStream.liveWriterGraceMs = 300L
-    try {
-      // drained AND idle: offsets == commits, so the drained-checkpoint
-      // guard is blind here — exactly the round-11 documented blind
-      // spot the _WRITER marker closes
-      q.processAllAvailable()
-      assert(new java.io.File(tbl, "_WRITER").exists(),
-        "the writer must stamp its live marker")
-      val e = intercept[IllegalArgumentException] {
-        EventStream.rebucketUpsert(spark, tbl, "id", 8)
-      }
-      assert(e.getMessage.contains("LIVE writer"), e.getMessage)
-      val ev = intercept[IllegalArgumentException] {
-        EventStream.vacuumBucketed(tbl)
-      }
-      assert(ev.getMessage.contains("LIVE writer"), ev.getMessage)
-      // the refused rebucket must not have flipped the layout
-      assert(!new java.io.File(tbl).list().exists(_.startsWith("gen")),
-        "a refused rebucket left generation artifacts")
-      // a MIS-OWNED second query (different checkpoint, same root) dies
-      // at requireOwner on its first batch — and must NOT have erased
-      // the live owner's marker on the way down (the stamp is
-      // owner-gated; an ungated stamp + the loser's own reap would
-      // reopen the idle-writer window this guard exists to close)
-      val in2 = root.resolve("in2").toString
-      new EventStream.ChunkWriter(in2)
-        .write(Seq((99L, "x")).toDF("id", "payload"), Seq("id", "payload"))
-      val intruder = EventStream.streamingUpsertBucketed(
-        spark.readStream.schema("id LONG, payload STRING")
-          .option("maxFilesPerTrigger", 1).parquet(in2),
-        tbl, "id", 4, checkpoint = Some(root.resolve("ckpt2").toString))
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        try intruder.processAllAvailable()
-        finally EventStream.drainAndAwait(spark, intruder)
-      }
-      val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-      assert(java.nio.file.Files.exists(marker),
-        "the intruder's teardown erased the live owner's marker")
-      assert(new String(java.nio.file.Files.readAllBytes(marker),
-          "UTF-8").trim == q.runId.toString,
-        "the marker no longer names the live owner's run")
-    } finally {
-      EventStream.liveWriterGraceMs = grace
-      EventStream.drainAndAwait(spark, q)
-    }
-    // clean stop: the termination listener reaps the marker and the
-    // same maintenance proceeds (the guard's grace poll absorbs the
-    // listener's asynchrony — this is the e19c cadence)
-    EventStream.rebucketUpsert(spark, tbl, "id", 8)
-    val latest = EventStream.latestBucketedUpsert(spark, tbl)
-      .as[(Long, String)].collect().toMap
-    assert(latest == (1L to 8L).map(id => id -> s"p$id").toMap)
-    // crash-left marker: a dead JVM never fires the listener; the
-    // guard fails closed until the operator confirms the process is
-    // gone and deletes the marker — the record-the-judgment contract
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(tbl, "_WRITER"), "dead-run-id")
-    EventStream.liveWriterGraceMs = 300L
-    try {
-      val ec = intercept[IllegalArgumentException] {
-        EventStream.vacuumBucketed(tbl)
-      }
-      assert(ec.getMessage.contains("dead-run-id"), ec.getMessage)
-    } finally EventStream.liveWriterGraceMs = grace
-    java.nio.file.Files.delete(java.nio.file.Paths.get(tbl, "_WRITER"))
-    EventStream.vacuumBucketed(tbl) // the judgment recorded, it proceeds
-  }
-
-  test("a second fresh query racing a still-unowned root neither steals" +
-      " nor reaps the first writer's live marker") {
-    // the round-12 review race: _OWNER is only created inside the first
-    // batch, so before any batch runs the owner gate has nothing to
-    // match — an existing marker on an unowned root must mean HANDS OFF
-    // (whoever ends up owning, someone is live), or the loser's own
-    // termination reap would disarm the winner's guard
-    val root = java.nio.file.Files.createTempDirectory("es_stamp_race")
-    val tbl = root.resolve("table").toString
-    def emptyIn(name: String): String = {
-      val d = root.resolve(name)
-      java.nio.file.Files.createDirectories(d)
-      d.toString
-    }
-    def start(in: String, ckpt: String) = EventStream.streamingUpsertBucketed(
-      spark.readStream.schema("id LONG, payload STRING")
-        .option("maxFilesPerTrigger", 1).parquet(in),
-      tbl, "id", 4, checkpoint = Some(root.resolve(ckpt).toString))
-    val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-    val q1 = start(emptyIn("in1"), "ckpt1")
-    try {
-      // the round-12 advisor's pre-start window: the marker must exist
-      // the moment start() returns (it is stamped provisionally BEFORE
-      // start and rewritten to the runId before the writer returns) —
-      // a first micro-batch can never execute unmarked
-      assert(java.nio.file.Files.exists(marker),
-        "the marker must exist from before start() — the pre-start " +
-          "window is closed")
-      q1.processAllAvailable() // empty source: live, idle, ZERO batches
-      assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-        .trim == q1.runId.toString)
-      val q2 = start(emptyIn("in2"), "ckpt2")
-      try {
-        q2.processAllAvailable()
-        assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-            .trim == q1.runId.toString,
-          "the second fresh query stole the live marker")
-      } finally EventStream.drainAndAwait(spark, q2)
-      // q2 never stamped, so its teardown must not have reaped either
-      assert(java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-          .trim == q1.runId.toString,
-        "the loser's teardown reaped the winner's marker")
-    } finally EventStream.drainAndAwait(spark, q1)
-    // the winner's own clean stop still reaps normally
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (java.nio.file.Files.exists(marker) &&
-      System.nanoTime() < deadline) Thread.sleep(50)
-    assert(!java.nio.file.Files.exists(marker),
-      "the winner's clean stop failed to reap its marker")
-  }
-
-  test("the no-marker stamp is ATOMIC: N concurrent stampers, one winner") {
-    // the round-12 advisor's medium finding: the old stamp was
-    // check-then-write, so two fresh queries racing a still-unowned
-    // root could BOTH believe they stamped — and the loser's
-    // termination reap would then disarm the survivor's guard. The fix
-    // is a link(2) create-if-absent; this pins the primitive itself,
-    // for both markers that stamp through it (`_OWNER` and `_WRITER`).
-    val root = java.nio.file.Files.createTempDirectory("es_stamp_atomic")
-    val n = 8
-    for (name <- Seq("_WRITER", "_OWNER")) {
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
-      val winners = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val threads = (0 until n).map { i =>
-        new Thread(() => {
-          gate.await()
-          if (EventStream.stampIfAbsent(root.toFile, name, s"racer-$i")) {
-            wins.incrementAndGet(): Unit
-            winners.add(s"racer-$i"): Unit
-          }
-        })
-      }
-      threads.foreach(_.start())
-      gate.countDown()
-      threads.foreach(_.join())
-      assert(wins.get() == 1,
-        s"expected exactly one $name stamp winner, got ${wins.get()}")
-      val content = new String(java.nio.file.Files.readAllBytes(
-        root.resolve(name)), "UTF-8").trim
-      assert(winners.contains(content),
-        s"the $name content ($content) must be the winner's value")
-    }
-  }
-
-  test("a resumed incarnation replaces a crash-left marker at its first" +
-      " beat — the delete-the-marker guidance is safe against a live resume") {
-    // the round-12 advisor's crash-before-first-batch scenario: the
-    // dead incarnation stamped _WRITER but never created _OWNER, so the
-    // resume cannot replace the marker at start (the root is unowned —
-    // hands off). Its first committed batch establishes ownership, and
-    // the next beat must then take the marker owner-gated: from that
-    // point the guard names the LIVE run, and an operator who verified
-    // the dead run is gone and deleted the marker mid-flight gets it
-    // re-armed at the next beat rather than a disarmed live writer.
-    val root = java.nio.file.Files.createTempDirectory("es_resume_marker")
-    val in = root.resolve("in").toString
-    val tbl = root.resolve("table").toString
-    val ckpt = root.resolve("ckpt").toString
-    val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tbl))
-    java.nio.file.Files.writeString(marker, "dead-run-id")
-    val w = new EventStream.ChunkWriter(in)
-    w.write(Seq((1L, "p1")).toDF("id", "payload"), Seq("id", "payload"))
-    val q = EventStream.streamingUpsertBucketed(
-      spark.readStream.schema("id LONG, payload STRING")
-        .option("maxFilesPerTrigger", 1).parquet(in),
-      tbl, "id", 4, checkpoint = Some(ckpt))
-    def markerIs(v: String): Boolean = {
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline) {
-        if (java.nio.file.Files.exists(marker) &&
-          new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-            .trim == v) return true
-        Thread.sleep(50)
-      }
-      false
-    }
-    try {
-      q.processAllAvailable()
-      assert(markerIs(q.runId.toString),
-        "the live resume's first beat must replace the dead marker")
-      // heartbeat-aware refusal: a marker with a FRESH heartbeat must
-      // refuse with do-not-delete guidance, not the crash guidance
-      val grace = EventStream.liveWriterGraceMs
-      EventStream.liveWriterGraceMs = 300L
-      try {
-        val e = intercept[IllegalArgumentException] {
-          EventStream.vacuumBucketed(tbl)
-        }
-        assert(e.getMessage.contains("LIVE writer"), e.getMessage)
-        assert(e.getMessage.contains("RIGHT NOW"),
-          s"a fresh heartbeat must yield running-right-now guidance: ${e.getMessage}")
-      } finally EventStream.liveWriterGraceMs = grace
-      // operator deletes the marker against the live resume (the exact
-      // action the old error message instructed): the next beat re-arms
-      java.nio.file.Files.delete(marker)
-      w.write(Seq((2L, "p2")).toDF("id", "payload"), Seq("id", "payload"))
-      q.processAllAvailable()
-      assert(markerIs(q.runId.toString),
-        "a deleted marker under a live writer must be re-stamped at " +
-          "the next beat")
-    } finally EventStream.drainAndAwait(spark, q)
-    // clean stop reaps marker AND heartbeat (heartbeat strictly first,
-    // so marker-gone implies heartbeat-gone); maintenance proceeds
-    val hb = java.nio.file.Paths.get(tbl, "_WRITER_HB")
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while ((java.nio.file.Files.exists(marker) ||
-        java.nio.file.Files.exists(hb)) &&
-      System.nanoTime() < deadline) Thread.sleep(50)
-    assert(!java.nio.file.Files.exists(marker))
-    assert(!java.nio.file.Files.exists(hb),
-      "the heartbeat must be reaped with the marker")
-    EventStream.vacuumBucketed(tbl)
-  }
-
-  test("a cross-process writer is distinguished by HEARTBEAT: fresh ->" +
-      " refuse do-not-delete, stale -> the crash judgment contract") {
-    // round-12 verdict residual: a live writer in another JVM used to
-    // be indistinguishable from a crash. Simulate the foreign process
-    // by planting marker + heartbeat no in-session query owns.
-    val root = java.nio.file.Files.createTempDirectory("es_foreign_hb")
-    val tbl = root.resolve("table").toString
-    EventStream.upsertBatchBucketed(tbl,
-      (1L to 4L).map(id => (id, s"p$id")).toDF("id", "payload"),
-      0L, "id", 2)
-    val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-    val hb = java.nio.file.Paths.get(tbl, "_WRITER_HB")
-    java.nio.file.Files.writeString(marker, "foreign-run-id")
-    val grace = EventStream.liveWriterGraceMs
-    EventStream.liveWriterGraceMs = 300L
-    try {
-      // fresh heartbeat: running right now — refuse, do NOT delete
-      java.nio.file.Files.writeString(hb,
-        s"foreign-run-id ${System.currentTimeMillis()}")
-      val fresh = intercept[IllegalArgumentException] {
-        EventStream.vacuumBucketed(tbl)
-      }
-      assert(fresh.getMessage.contains("RIGHT NOW") &&
-        fresh.getMessage.contains("do NOT delete"), fresh.getMessage)
-      // stale heartbeat: the crash guidance, naming the dead run
-      java.nio.file.Files.writeString(hb, "foreign-run-id " +
-        (System.currentTimeMillis() - 10 * EventStream.writerHeartbeatStaleMs))
-      val stale = intercept[IllegalArgumentException] {
-        EventStream.vacuumBucketed(tbl)
-      }
-      assert(stale.getMessage.contains("STALE") &&
-        stale.getMessage.contains("foreign-run-id"), stale.getMessage)
-      // heartbeat naming a DIFFERENT run is another incarnation's
-      // leftover, not this writer's: the no-heartbeat guidance
-      java.nio.file.Files.writeString(hb,
-        s"other-run-id ${System.currentTimeMillis()}")
-      val none = intercept[IllegalArgumentException] {
-        EventStream.vacuumBucketed(tbl)
-      }
-      assert(none.getMessage.contains("no matching heartbeat"),
-        none.getMessage)
-    } finally EventStream.liveWriterGraceMs = grace
-    // the judgment recorded, maintenance proceeds
-    java.nio.file.Files.delete(marker)
-    EventStream.vacuumBucketed(tbl)
-  }
-
-  test("the no-hardlink fallback stamp is ALSO atomic: N concurrent" +
-      " CREATE_NEW racers, one winner") {
-    // the round-13 advisor's low finding: the old fallback was a
-    // no-replace move whose existence check is TOCTOU on POSIX
-    // (rename(2) silently overwrites) — two racers on a hardlink-less
-    // filesystem could both believe they stamped. CREATE_NEW maps to
-    // O_CREAT|O_EXCL: atomic create-if-absent without link(2). The
-    // local fs supports hardlinks, so this pins the extracted fallback
-    // primitive directly rather than forcing the IOException path.
-    val root = java.nio.file.Files.createTempDirectory("es_createnew")
-    val target = root.resolve("_WRITER")
-    val n = 8
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val wins = new java.util.concurrent.atomic.AtomicInteger(0)
-    val winners = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val threads = (0 until n).map { i =>
-      new Thread(() => {
-        gate.await()
-        if (EventStream.createNewWithContent(target, s"racer-$i")) {
-          wins.incrementAndGet(): Unit
-          winners.add(s"racer-$i"): Unit
-        }
-      })
-    }
-    threads.foreach(_.start())
-    gate.countDown()
-    threads.foreach(_.join())
-    assert(wins.get() == 1,
-      s"expected exactly one CREATE_NEW winner, got ${wins.get()}")
-    val content = new String(java.nio.file.Files.readAllBytes(target),
-      "UTF-8").trim
-    assert(winners.contains(content),
-      s"the file content ($content) must be the winner's value")
-  }
-
-  test("a same-owner duplicate start must NOT disarm the live twin's" +
-      " guard: the fresh heartbeat gates the pre-start replace") {
-    // the round-13 advisor's medium finding: the pre-start owner-gated
-    // replace used to fire unconditionally, so an in-process duplicate
-    // start on the same root+checkpoint (same owner token) replaced
-    // the LIVE twin's marker BEFORE Spark refused the start, and the
-    // failed-start cleanup then deleted it — guard disarmed until the
-    // twin's next beat, a window where vacuum/rebucket could destroy
-    // the layout under a live writer. With the incumbent's heartbeat
-    // FRESH, the duplicate must leave marker AND heartbeat untouched.
-    val root = java.nio.file.Files.createTempDirectory("es_dup_start")
-    val in = root.resolve("in").toString
-    val tbl = root.resolve("table").toString
-    val ckpt = root.resolve("ckpt").toString
-    val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-    val hb = java.nio.file.Paths.get(tbl, "_WRITER_HB")
-    val w = new EventStream.ChunkWriter(in)
-    w.write(Seq((1L, "p1")).toDF("id", "payload"), Seq("id", "payload"))
-    def stream() = spark.readStream.schema("id LONG, payload STRING")
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    // default stopActiveRunOnRestart=true would hand the checkpoint
-    // over to the new run instead of refusing; the advisor's scenario
-    // is the refusal path (conf off -> same-id start throws)
-    val restart = spark.conf.get("spark.sql.streaming.stopActiveRunOnRestart")
-    spark.conf.set("spark.sql.streaming.stopActiveRunOnRestart", "false")
-    val q1 = EventStream.streamingUpsertBucketed(stream(), tbl, "id", 4,
-      checkpoint = Some(ckpt))
-    try {
-      q1.processAllAvailable()
-      val run1 = q1.runId.toString
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def markerContent(): String =
-        if (java.nio.file.Files.exists(marker))
-          new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        else "<absent>"
-      while (markerContent() != run1 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(markerContent() == run1, "precondition: q1 holds the marker")
-      intercept[Exception] {
-        EventStream.streamingUpsertBucketed(stream(), tbl, "id", 4,
-          checkpoint = Some(ckpt))
-      }
-      // IMMEDIATELY after the refused duplicate: the live guard intact
-      // (pre-fix, the marker was absent here until q1's next beat)
-      assert(markerContent() == run1,
-        "the refused duplicate start must leave the live marker intact")
-      assert(java.nio.file.Files.exists(hb) &&
-        new String(java.nio.file.Files.readAllBytes(hb), "UTF-8")
-          .startsWith(run1),
-        "the refused duplicate start must leave the live heartbeat intact")
-    } finally {
-      spark.conf.set("spark.sql.streaming.stopActiveRunOnRestart", restart)
-      EventStream.drainAndAwait(spark, q1)
-    }
-  }
-
-  test("a failed start that replaced a stale-LOOKING marker restores it" +
-      " on the way out — the incumbent's guard survives our failure") {
-    // second half of the same advisor finding: when the pre-start
-    // replace DOES fire (incumbent heartbeat stale or absent — the
-    // resume premise) but start() then throws, deleting our
-    // provisional stamp must not leave the root unguarded: the
-    // incumbent was stale-LOOKING, not proven dead (a wedged writer
-    // beats no heartbeat), so its marker content is put back.
-    val root = java.nio.file.Files.createTempDirectory("es_restore_marker")
-    val in = root.resolve("in").toString
-    val tbl = root.resolve("table").toString
-    val tbl2 = root.resolve("table2").toString
-    val ckpt = root.resolve("ckpt").toString
-    val w = new EventStream.ChunkWriter(in)
-    w.write(Seq((1L, "p1")).toDF("id", "payload"), Seq("id", "payload"))
-    def stream() = spark.readStream.schema("id LONG, payload STRING")
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val restart = spark.conf.get("spark.sql.streaming.stopActiveRunOnRestart")
-    spark.conf.set("spark.sql.streaming.stopActiveRunOnRestart", "false")
-    // q1 holds the CHECKPOINT (the start() failure source); the stale
-    // incumbent lives on a SECOND root owned by the same token, with
-    // no heartbeat — the replace-then-fail path in one start call
-    val q1 = EventStream.streamingUpsertBucketed(stream(), tbl, "id", 4,
-      checkpoint = Some(ckpt))
-    try {
-      q1.processAllAvailable()
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tbl2))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tbl2, "_OWNER"), ckpt)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tbl2, "_WRITER"), "wedged-run-id")
-      intercept[Exception] {
-        EventStream.streamingUpsertBucketed(stream(), tbl2, "id", 4,
-          checkpoint = Some(ckpt))
-      }
-      val restored = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(tbl2, "_WRITER")), "UTF-8").trim
-      assert(restored == "wedged-run-id",
-        s"the failed start must restore the incumbent marker, got $restored")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(tbl2, "_WRITER_HB")),
-        "the failed start's provisional heartbeat must be reaped " +
-          "(marker-without-heartbeat is the fail-closed shape)")
-    } finally {
-      spark.conf.set("spark.sql.streaming.stopActiveRunOnRestart", restart)
-      EventStream.drainAndAwait(spark, q1)
-    }
-  }
-
-  test("a same-checkpoint duplicate start under the DEFAULT handover conf" +
-      " marks the successor the moment start() returns (step 2b)") {
-    // the other half of the pre-start gate's world: under Spark's
-    // DEFAULT spark.sql.streaming.stopActiveRunOnRestart=true a
-    // same-checkpoint duplicate start does not throw — Spark STOPS the
-    // incumbent and hands the checkpoint over. The gate (correctly)
-    // refused to replace the FRESH incumbent's marker, but pre-fix the
-    // successor then stayed unmarked until its first beat while the
-    // stopped incumbent's reap deleted the marker: a live-but-unmarked
-    // window of up to a quarter of the stale threshold in which
-    // vacuum/rebucket could destroy the layout under the live
-    // successor (round-14 review finding). Step 2b closes it with an
-    // owner-gated acquire right after start() returns.
-    val root = java.nio.file.Files.createTempDirectory("es_handover_marker")
-    val in = root.resolve("in").toString
-    val tbl = root.resolve("table").toString
-    val ckpt = root.resolve("ckpt").toString
-    val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-    val hb = java.nio.file.Paths.get(tbl, "_WRITER_HB")
-    val w = new EventStream.ChunkWriter(in)
-    w.write(Seq((1L, "p1")).toDF("id", "payload"), Seq("id", "payload"))
-    def stream() = spark.readStream.schema("id LONG, payload STRING")
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    assert(spark.conf.get(
-      "spark.sql.streaming.stopActiveRunOnRestart") == "true",
-      "precondition: the DEFAULT handover conf")
-    val q1 = EventStream.streamingUpsertBucketed(stream(), tbl, "id", 4,
-      checkpoint = Some(ckpt))
-    var q2: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q1.processAllAvailable()
-      val run1 = q1.runId.toString
-      def markerContent(): String =
-        if (java.nio.file.Files.exists(marker))
-          new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim
-        else "<absent>"
-      def poll(cond: () => Boolean, ms: Long): Boolean = {
-        val deadline = System.nanoTime() + ms * 1000 * 1000
-        while (!cond() && System.nanoTime() < deadline) Thread.sleep(25)
-        cond()
-      }
-      assert(poll(() => markerContent() == run1, 15000),
-        "precondition: q1 holds the marker")
-      q2 = EventStream.streamingUpsertBucketed(stream(), tbl, "id", 4,
-        checkpoint = Some(ckpt)) // no throw: Spark stops q1, hands over
-      val run2 = q2.runId.toString
-      assert(run2 != run1, "the handover must produce a new run")
-      // step 2b is synchronous in the tracked start: the only
-      // tolerance needed is for q1's ASYNC termination reap
-      // interleaving (its claim-then-check restores our content —
-      // microseconds). The 3 s bound sits far below both the first
-      // timer beat (15 s at the default threshold) and the 10 s
-      // idle-event interval, so a pass can only come from the
-      // step-2b stamp, never from a first-beat takeover.
-      assert(poll(() => markerContent() == run2, 3000),
-        s"successor must be marked at start()-return, got ${markerContent()}")
-      assert(poll(() => java.nio.file.Files.exists(hb) &&
-        new String(java.nio.file.Files.readAllBytes(hb), "UTF-8")
-          .startsWith(run2), 3000),
-        "the successor's heartbeat must ride with the step-2b stamp")
-      assert(!q1.isActive, "the handover must have stopped the incumbent")
-      // and the acquired marker reaps cleanly on the successor's stop
-      EventStream.drainAndAwait(spark, q2)
-      q2 = null
-      assert(poll(() => !java.nio.file.Files.exists(marker), 15000),
-        "the successor's stop must reap the marker it acquired at 2b")
-    } finally {
-      if (q2 != null && q2.isActive) EventStream.drainAndAwait(spark, q2)
-      if (q1.isActive) EventStream.drainAndAwait(spark, q1)
-    }
-  }
-
-  test("a beat that finds a foreign marker on a root not ours stops" +
-      " heartbeating and forfeits the reap claim") {
-    // the round-13 advisor's low finding: `stamped` kept our runId
-    // after the marker was lost to a foreign value without a takeover,
-    // so every beat refreshed _WRITER_HB naming US while _WRITER named
-    // THEM — and requireNoLiveWriter, finding no heartbeat matching
-    // the marker, emitted the delete-the-marker guidance against a
-    // possibly live writer: the exact misguidance the heartbeat was
-    // added to prevent. The fix: heartbeat only when THIS beat holds
-    // the marker; losing it nulls the reap claim.
-    val stale = EventStream.writerHeartbeatStaleMs
-    EventStream.writerHeartbeatStaleMs = 4000L // timer beat every 1 s
-    val root = java.nio.file.Files.createTempDirectory("es_foreign_marker")
-    val in = root.resolve("in").toString
-    val tbl = root.resolve("table").toString
-    val ckpt = root.resolve("ckpt").toString
-    val marker = java.nio.file.Paths.get(tbl, "_WRITER")
-    val owner = java.nio.file.Paths.get(tbl, "_OWNER")
-    val hb = java.nio.file.Paths.get(tbl, "_WRITER_HB")
-    val w = new EventStream.ChunkWriter(in)
-    w.write(Seq((1L, "p1")).toDF("id", "payload"), Seq("id", "payload"))
-    val q = EventStream.streamingUpsertBucketed(
-      spark.readStream.schema("id LONG, payload STRING")
-        .option("maxFilesPerTrigger", 1).parquet(in),
-      tbl, "id", 4, checkpoint = Some(ckpt))
-    try {
-      q.processAllAvailable()
-      val run = q.runId.toString
-      def poll(cond: () => Boolean): Boolean = {
-        val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-        while (!cond() && System.nanoTime() < deadline) Thread.sleep(50)
-        cond()
-      }
-      assert(poll(() => java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-          .trim == run), "precondition: the query holds the marker")
-      // simulate losing the root: a foreign owner AND a foreign marker
-      // (the never-stamped-query posture — beats must not take over)
-      java.nio.file.Files.writeString(owner, "someone-else")
-      java.nio.file.Files.writeString(marker, "foreign-run-id")
-      // a beat that read the still-ours marker JUST before the
-      // overwrite may legitimately finish its heartbeat write after
-      // it — let any straddler drain for one full timer period before
-      // capturing the cutoff, so the assertion below only sees beats
-      // that observed the foreign marker (round-14 review finding)
-      Thread.sleep(1200)
-      val planted = System.currentTimeMillis()
-      Thread.sleep(3500) // >3 timer beats at the compressed period
-      assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-        .trim == "foreign-run-id",
-        "beats must not take over a root owned by someone else")
-      val hbStampedAfter = java.nio.file.Files.exists(hb) && {
-        new String(java.nio.file.Files.readAllBytes(hb), "UTF-8")
-          .trim.split(' ') match {
-          case Array(r, millis) if millis.forall(_.isDigit) =>
-            r == run && millis.toLong >= planted
-          case _ => false
-        }
-      }
-      assert(!hbStampedAfter,
-        "a beat that does not hold the marker must not refresh the " +
-          "heartbeat naming our run against a foreign marker")
-      // root legitimately ours again: the next beat re-acquires
-      java.nio.file.Files.writeString(owner, ckpt)
-      assert(poll(() => new String(java.nio.file.Files.readAllBytes(
-        marker), "UTF-8").trim == run),
-        "the beat must re-acquire the marker once the root is ours again")
-      assert(poll(() => java.nio.file.Files.exists(hb) &&
-        new String(java.nio.file.Files.readAllBytes(hb), "UTF-8")
-          .startsWith(run)),
-        "the heartbeat must resume with the re-acquired marker")
-    } finally {
-      EventStream.drainAndAwait(spark, q)
-      EventStream.writerHeartbeatStaleMs = stale
-    }
   }
 
   test("bucketedPointLookupAsOf: mid-feed state from ONE bucket version," +
@@ -1449,13 +906,13 @@ class EventStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("es_point_asof")
     val tbl = root.resolve("table").toString
     def put(batch: Long, rows: (Long, String)*): Unit =
-      EventStream.upsertBatchBucketed(tbl,
+      VersionedTable.upsertBatchBucketed(tbl,
         rows.toSeq.toDF("id", "payload"), batch, "id", 4)
     put(0L, 1L -> "a0", 2L -> "b0")
     put(1L, 1L -> "a1")
     put(2L, 1L -> "a2", 2L -> "b2", 7L -> "g2")
     def asOf(id: Long, batch: Long): Seq[String] =
-      EventStream.bucketedPointLookupAsOf(spark, tbl, "id", id, batch)
+      VersionedTable.bucketedPointLookupAsOf(spark, tbl, "id", id, batch)
         .select("payload").collect().map(_.getString(0)).toSeq
     assert(asOf(1L, 1L) == Seq("a1"), "id 1 as of batch 1")
     assert(asOf(1L, 0L) == Seq("a0"), "id 1 as of batch 0")
@@ -1468,12 +925,12 @@ class EventStreamSpec extends SparkSpec {
     assert(asOf(7L, 1L).isEmpty, "id 7 must not exist as of batch 1")
     assert(asOf(7L, 2L) == Seq("g2"), "id 7 as of batch 2")
     // the latest lookup is unaffected by any of this
-    assert(EventStream.bucketedPointLookup(spark, tbl, "id", 1L)
+    assert(VersionedTable.bucketedPointLookup(spark, tbl, "id", 1L)
       .select("payload").collect().map(_.getString(0)).toSeq == Seq("a2"))
     // keep-1 vacuum raises the horizon to 1: batch-1 state is
     // destroyed and the SAME lookup must refuse loudly, while the
     // surviving batch-2 state stays answerable
-    EventStream.vacuumBucketed(tbl, keep = 1)
+    VersionedTable.vacuumBucketed(tbl, keep = 1)
     val e = intercept[IllegalArgumentException] { asOf(1L, 1L) }
     assert(e.getMessage.contains("retention horizon"), e.getMessage)
     assert(asOf(1L, 2L) == Seq("a2"),
@@ -1490,7 +947,7 @@ class EventStreamSpec extends SparkSpec {
     def drain(): Unit = {
       val stream = spark.readStream.schema("id LONG, payload STRING")
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = EventStream.streamingUpsert(stream, tbl, "id",
+      val q = VersionedTable.streamingUpsert(stream, tbl, "id",
         checkpoint = Some(ckpt), retainVersions = 1)
       EventStream.drainAndAwait(spark, q)
     }
@@ -1506,13 +963,13 @@ class EventStreamSpec extends SparkSpec {
     val exp = Map(1L -> "one-b3", 10L -> "new-b0", 11L -> "new-b1",
       12L -> "new-b2", 13L -> "new-b3")
     def latest(): Map[Long, String] =
-      spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+      spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
         .as[(Long, String)].collect().toMap
     assert(latest() == exp)
     // vacuumed history fails loudly, the kept predecessor still reads
     intercept[IllegalArgumentException](
-      EventStream.upsertVersionAsOf(tbl, 1L))
-    assert(spark.read.parquet(EventStream.upsertVersionAsOf(tbl, 2L))
+      VersionedTable.upsertVersionAsOf(tbl, 1L))
+    assert(spark.read.parquet(VersionedTable.upsertVersionAsOf(tbl, 2L))
       .count() == 4)
     // crash window ON a retention-enabled table: batch 3's commit
     // record vanishes; the retry must find v2 (the kept merge source)
@@ -1536,10 +993,10 @@ class EventStreamSpec extends SparkSpec {
     def df(rows: (Long, String)*) = rows.toDF("id", "payload")
     // seed all buckets (ids 1..16 cover all four — pinned by the
     // pruning spec above), then hammer id 1's bucket three more times
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       (1L to 16L).map(id => (id, "v0")).toDF("id", "payload"),
       0L, "id", 4, retainVersions = 1)
-    (1 to 3).foreach(b => EventStream.upsertBatchBucketed(tbl,
+    (1 to 3).foreach(b => VersionedTable.upsertBatchBucketed(tbl,
       df(1L -> s"v$b"), b.toLong, "id", 4, retainVersions = 1))
     val bucketOfId = spark.range(1, 17)
       .select($"id", operators.MemoryOps.bucketOf("id", 4).as("b"))
@@ -1552,15 +1009,15 @@ class EventStreamSpec extends SparkSpec {
         assert(vs == Seq("v2", "v3"), s"hot bucket b$b: $vs")
       else assert(vs == Seq("v0"), s"cold bucket b$b: $vs")
     }
-    val latest = EventStream.latestBucketedUpsert(spark, tbl)
+    val latest = VersionedTable.latestBucketedUpsert(spark, tbl)
       .as[(Long, String)].collect().toMap
     assert(latest == (1L to 16L).map(id =>
       id -> (if (id == 1L) "v3" else "v0")).toMap)
     // horizon rose to (hot bucket's lowest kept − 1): stitched as-of
     // below it would silently drop the hot bucket's rows
     intercept[IllegalArgumentException](
-      EventStream.bucketedUpsertAsOf(spark, tbl, 1L))
-    val asOf2 = EventStream.bucketedUpsertAsOf(spark, tbl, 2L)
+      VersionedTable.bucketedUpsertAsOf(spark, tbl, 1L))
+    val asOf2 = VersionedTable.bucketedUpsertAsOf(spark, tbl, 2L)
       .as[(Long, String)].collect().toMap
     assert(asOf2(1L) == "v2")
   }
@@ -1569,12 +1026,12 @@ class EventStreamSpec extends SparkSpec {
       " the get-by-id read served from the ingested store at O(bucket)") {
     val root = java.nio.file.Files.createTempDirectory("es_pointlookup")
     val tbl = root.resolve("table").toString
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       (1L to 16L).map(id => (id, s"p$id")).toDF("id", "payload"),
       0L, "id", 4)
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       Seq((3L, "p3-v2")).toDF("id", "payload"), 1L, "id", 4)
-    val hit = EventStream.bucketedPointLookup(spark, tbl, "id", 3L)
+    val hit = VersionedTable.bucketedPointLookup(spark, tbl, "id", 3L)
     // THE pruning contract: every file the lookup plans over lives in
     // id 3's bucket — the other buckets' files are never touched
     val bucketOfId = spark.range(1, 17)
@@ -1589,15 +1046,15 @@ class EventStreamSpec extends SparkSpec {
     assert(hit.as[(Long, String)].collect().toSeq == Seq((3L, "p3-v2")))
     // an id hashing to an untouched bucket still resolves (v0), a
     // missing id returns empty with the right schema
-    assert(EventStream.bucketedPointLookup(spark, tbl, "id", 2L)
+    assert(VersionedTable.bucketedPointLookup(spark, tbl, "id", 2L)
       .as[(Long, String)].collect().toSeq == Seq((2L, "p2")))
-    val miss = EventStream.bucketedPointLookup(spark, tbl, "id", 999L)
+    val miss = VersionedTable.bucketedPointLookup(spark, tbl, "id", 999L)
     assert(miss.columns.toSeq == Seq("id", "payload") && miss.isEmpty)
     // a TYPE-mismatched literal must still find the row: xxhash64
     // hashes Int and Long differently, so the lookup casts the literal
     // to the STORED id type before hashing — an Int 3 against a LONG
     // column landing in the wrong bucket was the round-11 review find
-    assert(EventStream.bucketedPointLookup(spark, tbl, "id", 3)
+    assert(VersionedTable.bucketedPointLookup(spark, tbl, "id", 3)
       .as[(Long, String)].collect().toSeq == Seq((3L, "p3-v2")))
   }
 
@@ -1605,50 +1062,41 @@ class EventStreamSpec extends SparkSpec {
       " job: the bucket and schema come from table metadata") {
     val root = java.nio.file.Files.createTempDirectory("es_pointlookup")
     val tbl = root.resolve("table").toString
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       (1L to 16L).map(id => (id, s"p$id")).toDF("id", "payload"),
       0L, "id", 4)
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       Seq((3L, "p3-v2")).toDF("id", "payload"), 1L, "id", 4)
-    // only jobs started from this thread under this tag count, so a
-    // stray background job elsewhere in the JVM cannot fail the case
-    val tag = "graft.test.pointlookup.plan"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) == "1"))
-          jobs.incrementAndGet(): Unit
-    }
-    // the listener bus is asynchronous: poll until the count has held
-    // still for half a second before reading it
-    def quietCount(): Int = {
-      var last = jobs.get()
-      var still = 0
-      while (still < 5) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) still += 1 else { last = now; still = 0 }
-      }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setLocalProperty(tag, "1")
-    val frames = try {
-      Seq(EventStream.bucketedPointLookup(spark, tbl, "id", 3L),
-        EventStream.bucketedPointLookup(spark, tbl, "id", 999L),
-        EventStream.bucketedPointLookup(spark, tbl, "id", 3),
-        EventStream.bucketedPointLookupAsOf(spark, tbl, "id", 3L, 0L),
-        EventStream.bucketedPointLookupAsOf(spark, tbl, "id", 999L, 1L),
-        EventStream.bucketedPointLookupAsOf(spark, tbl, "id", 3, 1L))
-    } finally spark.sparkContext.setLocalProperty(tag, null)
-    try assert(quietCount() == 0,
-      "building the point-lookup frames ran Spark jobs")
-    finally spark.sparkContext.removeSparkListener(listener)
+    val (frames, jobs) = countJobs(
+      Seq(VersionedTable.bucketedPointLookup(spark, tbl, "id", 3L),
+        VersionedTable.bucketedPointLookup(spark, tbl, "id", 999L),
+        VersionedTable.bucketedPointLookup(spark, tbl, "id", 3),
+        VersionedTable.bucketedPointLookupAsOf(spark, tbl, "id", 3L, 0L),
+        VersionedTable.bucketedPointLookupAsOf(spark, tbl, "id", 999L, 1L),
+        VersionedTable.bucketedPointLookupAsOf(spark, tbl, "id", 3, 1L)))
+    assert(jobs == 0, "building the point-lookup frames ran Spark jobs")
     // the frames built without a job still answer correctly
     assert(frames.map(_.as[(Long, String)].collect().toSeq) == Seq(
       Seq((3L, "p3-v2")), Nil, Seq((3L, "p3-v2")),
       Seq((3L, "p3")), Nil, Seq((3L, "p3-v2"))))
+  }
+
+  test("the replay bounds probe is ONE Spark job on an AQE session, and" +
+      " an empty source fails loudly") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
+      "precondition: AQE on, the session the replays probe on")
+    val src = spark.range(0, 40, 1, 4)
+      .select(col("id"), (col("id") * 7 + 100).as("__sec"))
+    val (bounds, jobs) = countJobs(EventStream.persistSecBounds(src))
+    src.unpersist()
+    assert(bounds == ((100L, 373L, 274L)))
+    assert(jobs == 1, s"the bounds probe ran $jobs Spark jobs")
+    val none = spark.range(0).select(col("id").as("__sec"))
+    val empty = intercept[IllegalArgumentException] {
+      EventStream.persistSecBounds(none)
+    }
+    none.unpersist()
+    assert(empty.getMessage.contains("no __sec value"), empty.getMessage)
   }
 
   test("schema drift: the default writer fails fast on a drifted batch;" +
@@ -1662,21 +1110,21 @@ class EventStreamSpec extends SparkSpec {
     // before the sink — the strict contract bites where drift actually
     // arrives, e.g. evolving upstream frames through foreachBatch)
     val strictTbl = root.resolve("strict").toString
-    EventStream.upsertBatchPlain(strictTbl, df2(1L -> "a"), 0L, "id")
+    VersionedTable.upsertBatchPlain(strictTbl, df2(1L -> "a"), 0L, "id")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      EventStream.upsertBatchPlain(strictTbl, df3((1L, "b", 0.5)), 1L, "id")
+      VersionedTable.upsertBatchPlain(strictTbl, df3((1L, "b", 0.5)), 1L, "id")
     }
     assert(e.getMessage.toLowerCase.contains("union"), e.getMessage)
     // tolerant: the batch-level merge widens; an update that doesn't
     // carry the new column replaces the whole row with it null
     val tbl = root.resolve("tolerant").toString
-    EventStream.upsertBatchPlain(tbl, df2(1L -> "a", 2L -> "b"), 0L, "id",
+    VersionedTable.upsertBatchPlain(tbl, df2(1L -> "a", 2L -> "b"), 0L, "id",
       tolerateSchemaDrift = true)
-    EventStream.upsertBatchPlain(tbl, df3((1L, "a2", 0.9)), 1L, "id",
+    VersionedTable.upsertBatchPlain(tbl, df3((1L, "a2", 0.9)), 1L, "id",
       tolerateSchemaDrift = true)
-    EventStream.upsertBatchPlain(tbl, df2(1L -> "a3"), 2L, "id",
+    VersionedTable.upsertBatchPlain(tbl, df2(1L -> "a3"), 2L, "id",
       tolerateSchemaDrift = true)
-    val out = spark.read.parquet(EventStream.latestUpsertVersion(tbl))
+    val out = spark.read.parquet(VersionedTable.latestUpsertVersion(tbl))
     assert(out.columns.sorted.toSeq == Seq("id", "payload", "score"))
     val rows = out.select($"id", $"payload", $"score")
       .as[(Long, String, Option[Double])].collect()
@@ -1688,15 +1136,15 @@ class EventStreamSpec extends SparkSpec {
       " the stitched read and later merges union them") {
     val root = java.nio.file.Files.createTempDirectory("es_drift_b")
     val tbl = root.resolve("table").toString
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       (1L to 16L).map(id => (id, s"p$id")).toDF("id", "payload"),
       0L, "id", 4, tolerateSchemaDrift = true)
     // batch 1 carries a NEW column and touches only id 1's bucket: the
     // other three buckets stay at the two-column era
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       Seq((1L, "p1-v2", 0.7)).toDF("id", "payload", "score"),
       1L, "id", 4, tolerateSchemaDrift = true)
-    val out = EventStream.latestBucketedUpsert(spark, tbl)
+    val out = VersionedTable.latestBucketedUpsert(spark, tbl)
     assert(out.columns.sorted.toSeq == Seq("id", "payload", "score"),
       "stitched read sampled one era instead of unioning the footers")
     val rows = out.select($"id", $"payload", $"score")
@@ -1707,10 +1155,10 @@ class EventStreamSpec extends SparkSpec {
     assert(rows.size == 16)
     // a later merge touching an OLD-era bucket must read across eras
     // (mergeSchema) and write that bucket forward into the new era
-    EventStream.upsertBatchBucketed(tbl,
+    VersionedTable.upsertBatchBucketed(tbl,
       Seq((2L, "p2-v2", 0.3)).toDF("id", "payload", "score"),
       2L, "id", 4, tolerateSchemaDrift = true)
-    val rows2 = EventStream.latestBucketedUpsert(spark, tbl)
+    val rows2 = VersionedTable.latestBucketedUpsert(spark, tbl)
       .select($"id", $"payload", $"score")
       .as[(Long, String, Option[Double])].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -1724,16 +1172,16 @@ class EventStreamSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("es_asof")
     val tbl = root.resolve("plain").toString
     def df(rows: (Long, String)*) = rows.toDF("id", "payload")
-    EventStream.upsertBatchPlain(tbl, df(1L -> "a"), 0L, "id")
-    EventStream.upsertBatchPlain(tbl, df(1L -> "b", 2L -> "x"), 1L, "id")
-    EventStream.upsertBatchPlain(tbl, df(2L -> "y"), 2L, "id")
+    VersionedTable.upsertBatchPlain(tbl, df(1L -> "a"), 0L, "id")
+    VersionedTable.upsertBatchPlain(tbl, df(1L -> "b", 2L -> "x"), 1L, "id")
+    VersionedTable.upsertBatchPlain(tbl, df(2L -> "y"), 2L, "id")
     def readPlain(asOf: Long): Map[Long, String] =
-      spark.read.parquet(EventStream.upsertVersionAsOf(tbl, asOf))
+      spark.read.parquet(VersionedTable.upsertVersionAsOf(tbl, asOf))
         .as[(Long, String)].collect().toMap
     assert(readPlain(0L) == Map(1L -> "a"))
     assert(readPlain(1L) == Map(1L -> "b", 2L -> "x"))
     assert(readPlain(5L) == Map(1L -> "b", 2L -> "y")) // newest <= 5 is v2
-    EventStream.vacuumUpsert(tbl, keep = 2) // drops v0, horizon 0
+    VersionedTable.vacuumUpsert(tbl, keep = 2) // drops v0, horizon 0
     assert(readPlain(1L) == Map(1L -> "b", 2L -> "x"))
     val e1 = intercept[IllegalArgumentException](readPlain(0L))
     assert(e1.getMessage.contains("retention horizon"), e1.getMessage)
@@ -1741,15 +1189,15 @@ class EventStreamSpec extends SparkSpec {
     // BUCKETED: buckets version independently; the as-of read stitches
     // each bucket's newest version <= asOf into one table-wide snapshot
     val btbl = root.resolve("bucketed").toString
-    EventStream.upsertBatchBucketed(btbl,
+    VersionedTable.upsertBatchBucketed(btbl,
       (1L to 8L).map(id => (id, "v0")).toDF("id", "payload"), 0L, "id", 4)
     // batch 1 touches only id 1's bucket; the rest stay at v0
-    EventStream.upsertBatchBucketed(btbl,
+    VersionedTable.upsertBatchBucketed(btbl,
       df(1L -> "v1"), 1L, "id", 4)
-    EventStream.upsertBatchBucketed(btbl,
+    VersionedTable.upsertBatchBucketed(btbl,
       df(1L -> "v2", 2L -> "v2"), 2L, "id", 4)
     def readB(asOf: Long): Map[Long, String] =
-      EventStream.bucketedUpsertAsOf(spark, btbl, asOf)
+      VersionedTable.bucketedUpsertAsOf(spark, btbl, asOf)
         .as[(Long, String)].collect().toMap
     val base = (1L to 8L).map(_ -> "v0").toMap
     assert(readB(0L) == base)
@@ -1758,7 +1206,7 @@ class EventStreamSpec extends SparkSpec {
     // keep=1 leaves id 1's bucket with only v2: every bucket's lowest
     // kept version bounds the horizon, or a stitched read below it
     // would silently drop that bucket's rows
-    EventStream.vacuumBucketed(btbl, keep = 1)
+    VersionedTable.vacuumBucketed(btbl, keep = 1)
     assert(readB(2L) == base + (1L -> "v2") + (2L -> "v2"))
     val e2 = intercept[IllegalArgumentException](readB(1L))
     assert(e2.getMessage.contains("retention horizon"), e2.getMessage)

@@ -11,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ReplayFeedRuleSpec extends AnyFunSuite {
   test("src/main builds one replay stream source and types no stream by" +
       " a DDL string") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root (no ${root.getPath})")
-    def files(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) files(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val srcs = files(root).map(f => f.getName ->
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    val srcs = MainSources()
     def hits(re: String): Seq[String] = srcs.flatMap { case (n, src) =>
       re.r.findAllMatchIn(src).map(_ => n)
     }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.EventStream
+import graft.streaming.VersionedTable
 
 /** The per-version `_SCHEMA` manifest machinery (round 15): the
   * bucketed upsert lanes read their predecessors under a DRIVER-SIDE
@@ -31,9 +31,9 @@ class SchemaManifestSpec extends SparkSpec {
     val nonNullable = StructType(Seq(
       StructField("user_id", LongType, nullable = false),
       StructField("value", DoubleType, nullable = true)))
-    EventStream.writeSchemaManifest(d, nonNullable)
+    VersionedTable.writeSchemaManifest(d, nonNullable)
     assert(new java.io.File(d, "_SCHEMA").isFile)
-    val back = EventStream.versionSchema(spark, d.getPath)
+    val back = VersionedTable.versionSchema(spark, d.getPath)
     // parquet footers report optional fields; the manifest must read
     // back exactly as the mergeSchema inference did
     assert(back.fields.forall(_.nullable))
@@ -42,13 +42,13 @@ class SchemaManifestSpec extends SparkSpec {
 
   test("union is add-only, first-seen field order (the e22 drift shape)") {
     val (d1, d2) = (tmpDir(), tmpDir())
-    EventStream.writeSchemaManifest(d1, era1)
-    EventStream.writeSchemaManifest(d2, era2)
-    val merged = EventStream.mergedVersionSchema(spark,
+    VersionedTable.writeSchemaManifest(d1, era1)
+    VersionedTable.writeSchemaManifest(d2, era2)
+    val merged = VersionedTable.mergedVersionSchema(spark,
       Seq(d1.getPath, d2.getPath))
     assert(merged.fieldNames.toSeq == Seq("user_id", "value", "etype"))
     // order of paths must not change the FIELD SET (order may differ)
-    val merged2 = EventStream.mergedVersionSchema(spark,
+    val merged2 = VersionedTable.mergedVersionSchema(spark,
       Seq(d2.getPath, d1.getPath))
     assert(merged2.fieldNames.toSet == merged.fieldNames.toSet)
   }
@@ -57,7 +57,7 @@ class SchemaManifestSpec extends SparkSpec {
     val root = tmpDir()
     def versionDir(bucket: Int, version: Int, schema: StructType): String = {
       val d = new java.io.File(root, s"b$bucket/v$version")
-      EventStream.writeSchemaManifest(d, schema)
+      VersionedTable.writeSchemaManifest(d, schema)
       d.getPath
     }
     // a non-prefix drift: v3 adds etype, v5 adds score
@@ -69,17 +69,17 @@ class SchemaManifestSpec extends SparkSpec {
       versionDir(1, 1, era1))
     val want = Seq("user_id", "value", "etype", "score")
     for (order <- paths.permutations)
-      assert(EventStream.mergedVersionSchema(spark, order).fieldNames.toSeq == want)
+      assert(VersionedTable.mergedVersionSchema(spark, order).fieldNames.toSeq == want)
   }
 
   test("a type change across versions fails loudly (drift is add-only)") {
     val (d1, d2) = (tmpDir(), tmpDir())
-    EventStream.writeSchemaManifest(d1, era1)
-    EventStream.writeSchemaManifest(d2, StructType(Seq(
+    VersionedTable.writeSchemaManifest(d1, era1)
+    VersionedTable.writeSchemaManifest(d2, StructType(Seq(
       StructField("user_id", LongType),
       StructField("value", StringType)))) // value changed type
     val e = intercept[IllegalArgumentException] {
-      EventStream.mergedVersionSchema(spark, Seq(d1.getPath, d2.getPath))
+      VersionedTable.mergedVersionSchema(spark, Seq(d1.getPath, d2.getPath))
     }
     assert(e.getMessage.contains("value"))
   }
@@ -91,12 +91,12 @@ class SchemaManifestSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(d.getPath)
     // no _SCHEMA written — the fallback reads one footer driver-side
     assert(!new java.io.File(d, "_SCHEMA").isFile)
-    val s = EventStream.versionSchema(spark, d.getPath)
+    val s = VersionedTable.versionSchema(spark, d.getPath)
     assert(s.fieldNames.toSeq == Seq("user_id", "value"))
     // and the union with a manifested era-2 dir still widens
     val d2 = tmpDir()
-    EventStream.writeSchemaManifest(d2, era2)
-    val merged = EventStream.mergedVersionSchema(spark,
+    VersionedTable.writeSchemaManifest(d2, era2)
+    val merged = VersionedTable.mergedVersionSchema(spark,
       Seq(d.getPath, d2.getPath))
     assert(merged.fieldNames.toSeq == Seq("user_id", "value", "etype"))
   }
