@@ -26,9 +26,10 @@ import org.apache.spark.sql.SparkSession
   *      min-of-3) at the end of the run, minutes after the first
   *      measurement — a transient burst has moved on, a real regression
   *      persists; the final time is the min of both passes;
-  *   5. batch and streaming lanes are totaled separately — the e8-e18
-  *      micro-batch replays are fixed-cost by design (~20% of the
-  *      total) and would otherwise drown the batch engine's signal;
+  *   5. batch and streaming lanes are totaled separately — the
+  *      micro-batch replays ([[streamingLane]]) are fixed-cost by design
+  *      (~20% of the total) and would otherwise drown the batch engine's
+  *      signal;
   *   6. (round 13) all three canaries are re-timed at the END of the
   *      run and the gate takes the worst of each canary's start/end
   *      ratio — a co-tenant arriving mid-run (the promoted round-12
@@ -38,21 +39,19 @@ import org.apache.spark.sql.SparkSession
   *      ([[gatedIoRatio]]).
   */
 object Bench {
-  /** The Structured-Streaming replay oracles (write real parquet
+  /** The Structured-Streaming replay lanes (write real parquet
     * micro-batches through stateful queries; cost is replay-bound, not
-    * engine-bound). Totaled as their own lane. */
-  val streamingLane: Set[String] = Set(
-    "e8_stream_replay", "e9_stream_funnel", "e10_stream_join",
-    "e11_stream_window", "e12_hopping_window", "e13_stream_dedup",
-    "e14_stream_hopping", "e15_stream_neardup", "e16_stream_late",
-    "e17_stream_outer_join", "e18_stream_restart", "e19_stream_upsert",
-    // round 12: the e19b/e19c/e20 replays had been mis-totaled into the
-    // batch lane since they registered; the lane split is reporting
-    // only (the gate is per-query), but the batch total should measure
-    // the batch engine (BASELINE.md round-12 notes the re-lane)
-    "e19b_stream_upsert_bucketed", "e19c_stream_rebucket",
-    "e20_tws_sessionize", "e21_upsert_asof", "e22_upsert_drift",
-    "e23_upsert_point", "e24_upsert_point_asof")
+    * engine-bound), totaled as their own lane: the registry entries
+    * tagged `lane`. */
+  val streamingLane: Set[String] =
+    SparkEntry.all.filter(_.lane).map(_.name).toSet
+
+  /** Declared validation baselines are quadratic BY CONSTRUCTION — they
+    * exist only to pin the exactness of their production counterpart
+    * (sp1 validates sp2, which IS benched). They stay in Verify's
+    * correctness surface but out of the throughput bench — UNLESS the dev
+    * opt-in subset names one explicitly, which signals intent to time it. */
+  val validationBaselines: Set[String] = Set("sp1_sparse_cosine")
 
   /** Scan-bound canary: date-range filter + small agg over lineitem whose
     * plan has been stable since round 1. Its run-to-run movement measures
@@ -354,12 +353,6 @@ object Bench {
     // whose name starts with a listed prefix (full runs leave it unset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Declared validation baselines are quadratic BY CONSTRUCTION — they
-    // exist only to pin the exactness of their production counterpart
-    // (sp1 validates sp2, which IS benched). They stay in Verify's
-    // correctness surface but out of the throughput bench — UNLESS the dev
-    // opt-in subset names one explicitly, which signals intent to time it.
-    val validationBaselines = Set("sp1_sparse_cosine")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter { n =>
         only.forall(_.exists(n.startsWith)) &&

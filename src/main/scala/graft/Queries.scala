@@ -1072,123 +1072,63 @@ object Queries {
   // ---------------------------------------------------------------------
   // Registry
   // ---------------------------------------------------------------------
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v1_cosine"         -> (v1Cosine _),
-    "v2_knn_topk"       -> (v2KnnTopk _),
-    "v5_knn_threshold"  -> (v5KnnThreshold _),
-    "v8_append"         -> (v8Append _),
-    "v9_upsert"         -> (v9Upsert _),
-    "v10_delete"        -> (v10Delete _),
-    "s1_session_create" -> (s1SessionCreate _),
-    "s2_session_get"    -> (s2SessionGet _),
-    "s3_session_list"   -> (s3SessionList _),
-    "s4_session_touch"  -> (s4SessionTouch _),
-    "s5_fk_accept"      -> (s5FkAccept _),
-    "s5_fk_reject"      -> (s5FkReject _),
-    "a1_validate_text"  -> (a1ValidateText _),
-    "a2_reserved_keys"  -> (a2ReservedKeys _),
-    "t1_langid"         -> (t1LangId _),
-    "t2_quality"        -> (t2Quality _),
-    "t3_tokencount"     -> (t3TokenCount _),
-    "t4_fingerprint"    -> (t4Fingerprint _),
-    "e1_embed"          -> (e1Embed _),
-    "e2_embed_search"   -> (e2EmbedSearch _),
-    "d1_exact_dedup"    -> (d1ExactDedup _),
-    "d2_minhash_pairs"  -> (d2MinhashPairs _),
-    "d3_simhash"        -> (d3Simhash _),
-    "d3_simhash_pairs"  -> (d3SimhashPairs _),
-    "d4_jaccard_pairs"  -> (d4JaccardPairs _),
-    "d9_prefix_jaccard" -> (d9PrefixJaccard _),
-    "d5_embed_neardup"  -> (d5EmbedNearDup _),
-    "d6_dedup_apply"    -> (d6DedupApply _),
-    "q6_rollup"         -> (q6Rollup _),
-    "a1_ann_bruteforce" -> (a1AnnBruteforce _),
-    "a2_ann_bucketed"   -> (a2AnnBucketed _),
-    "a3_ann_multiprobe" -> (a3AnnMultiprobe _),
-    "a4_ivf_topk"       -> (a4IvfTopk _),
-    "m1_media_meta"     -> (m1MediaMeta _),
-    "m2_media_decode"   -> (m2MediaDecode _),
-    "e3_event_window"   -> (e3EventWindow _),
-    "e4_sessionize"     -> (e4Sessionize _),
-    "e8_stream_replay"  -> (e8StreamReplay _),
-    "p1_ingest_table"   -> (p1IngestTable _),
-    "p2_ingest_rejects" -> (p2IngestRejects _),
-    "v11_euclid_topk"   -> (v11EuclidTopk _),
-    "v11_dot_topk"      -> (v11DotTopk _),
-    "g1_grouped_topk"   -> (g1GroupedTopk _),
-    "g2_topk_agg"       -> (g2TopkAgg _),
-    "e5_props_extract"  -> (e5PropsExtract _),
-    "e6_session_window" -> (e6SessionWindow _),
-    "w1_running_window" -> (w1RunningWindow _),
-    "x1_asof_join"      -> (x1AsofJoin _),
-    "t5_split"          -> (t5Split _),
-    "q7_histogram"      -> (q7Histogram _),
-    "q8_pivot"          -> (q8Pivot _),
-    "w2_rank"           -> (w2Rank _),
-    "m3_frame_sample"   -> (m3FrameSample _),
-    "q1_agg"            -> (q1Agg _),
-    "q2_date_filter"    -> (q2DateFilter _),
-    "q3_join"           -> (q3Join _),
-    "q4_count_distinct" -> (q4CountDistinct _),
-    "q5_setops"         -> (q5SetOps _))
-
-  val oracles: Map[String, String] = Map(
-    "v1_cosine"         -> v1CosineSql,
-    "v2_knn_topk"       -> v2KnnTopkSql,
-    "v5_knn_threshold"  -> v5KnnThresholdSql,
-    "v8_append"         -> v8AppendSql,
-    "v9_upsert"         -> v9UpsertSql,
-    "v10_delete"        -> v10DeleteSql,
-    "s1_session_create" -> s1SessionCreateSql,
-    "s2_session_get"    -> s2SessionGetSql,
-    "s3_session_list"   -> s3SessionListSql,
-    "s4_session_touch"  -> s4SessionTouchSql,
-    "s5_fk_accept"      -> s5FkAcceptSql,
-    "s5_fk_reject"      -> s5FkRejectSql,
-    "a1_validate_text"  -> a1ValidateTextSql,
-    "a2_reserved_keys"  -> a2ReservedKeysSql,
-    "t1_langid"         -> t1LangIdSql,
-    "t2_quality"        -> t2QualitySql,
-    "t3_tokencount"     -> t3TokenCountSql,
-    "t4_fingerprint"    -> t4FingerprintSql,
-    "e1_embed"          -> e1EmbedSql,
-    "e2_embed_search"   -> e2EmbedSearchSql,
-    "d1_exact_dedup"    -> d1ExactDedupSql,
-    "d2_minhash_pairs"  -> d2MinhashPairsSql,
-    "d3_simhash"        -> d3SimhashSql,
-    "d3_simhash_pairs"  -> d3SimhashPairsSql,
-    "d4_jaccard_pairs"  -> d4JaccardPairsSql,
-    "d9_prefix_jaccard" -> d9PrefixJaccardSql,
-    "d5_embed_neardup"  -> d5EmbedNearDupSql,
-    "d6_dedup_apply"    -> d6DedupApplySql,
-    "q6_rollup"         -> q6RollupSql,
-    "a1_ann_bruteforce" -> a1AnnBruteforceSql,
-    "a2_ann_bucketed"   -> a2AnnBucketedSql,
-    "a3_ann_multiprobe" -> a3AnnMultiprobeSql,
-    "a4_ivf_topk"       -> a4IvfTopkSql,
-    "m1_media_meta"     -> m1MediaMetaSql,
-    "m2_media_decode"   -> m2MediaDecodeSql,
-    "e3_event_window"   -> e3EventWindowSql,
-    "e4_sessionize"     -> e4SessionizeSql,
-    "e8_stream_replay"  -> e8StreamReplaySql,
-    "p1_ingest_table"   -> p1IngestTableSql,
-    "p2_ingest_rejects" -> p2IngestRejectsSql,
-    "v11_euclid_topk"   -> v11EuclidTopkSql,
-    "v11_dot_topk"      -> v11DotTopkSql,
-    "g1_grouped_topk"   -> g1GroupedTopkSql,
-    "g2_topk_agg"       -> g2TopkAggSql,
-    "e5_props_extract"  -> e5PropsExtractSql,
-    "e6_session_window" -> e6SessionWindowSql,
-    "w1_running_window" -> w1RunningWindowSql,
-    "x1_asof_join"      -> x1AsofJoinSql,
-    "t5_split"          -> t5SplitSql,
-    "q7_histogram"      -> q7HistogramSql,
-    "q8_pivot"          -> q8PivotSql,
-    "w2_rank"           -> w2RankSql,
-    "m3_frame_sample"   -> m3FrameSampleSql,
-    "q1_agg"            -> q1AggSql,
-    "q2_date_filter"    -> q2DateFilterSql,
-    "q3_join"           -> q3JoinSql,
-    "q4_count_distinct" -> q4CountDistinctSql,
-    "q5_setops"         -> q5SetOpsSql)
+  val all: Seq[Query] = Seq(
+    Query("v1_cosine", v1Cosine, v1CosineSql),
+    Query("v2_knn_topk", v2KnnTopk, v2KnnTopkSql),
+    Query("v5_knn_threshold", v5KnnThreshold, v5KnnThresholdSql),
+    Query("v8_append", v8Append, v8AppendSql),
+    Query("v9_upsert", v9Upsert, v9UpsertSql),
+    Query("v10_delete", v10Delete, v10DeleteSql),
+    Query("s1_session_create", s1SessionCreate, s1SessionCreateSql),
+    Query("s2_session_get", s2SessionGet, s2SessionGetSql),
+    Query("s3_session_list", s3SessionList, s3SessionListSql),
+    Query("s4_session_touch", s4SessionTouch, s4SessionTouchSql),
+    Query("s5_fk_accept", s5FkAccept, s5FkAcceptSql),
+    Query("s5_fk_reject", s5FkReject, s5FkRejectSql),
+    Query("a1_validate_text", a1ValidateText, a1ValidateTextSql),
+    Query("a2_reserved_keys", a2ReservedKeys, a2ReservedKeysSql),
+    Query("t1_langid", t1LangId, t1LangIdSql),
+    Query("t2_quality", t2Quality, t2QualitySql),
+    Query("t3_tokencount", t3TokenCount, t3TokenCountSql),
+    Query("t4_fingerprint", t4Fingerprint, t4FingerprintSql),
+    Query("e1_embed", e1Embed, e1EmbedSql),
+    Query("e2_embed_search", e2EmbedSearch, e2EmbedSearchSql),
+    Query("d1_exact_dedup", d1ExactDedup, d1ExactDedupSql),
+    Query("d2_minhash_pairs", d2MinhashPairs, d2MinhashPairsSql),
+    Query("d3_simhash", d3Simhash, d3SimhashSql),
+    Query("d3_simhash_pairs", d3SimhashPairs, d3SimhashPairsSql),
+    Query("d4_jaccard_pairs", d4JaccardPairs, d4JaccardPairsSql),
+    Query("d9_prefix_jaccard", d9PrefixJaccard, d9PrefixJaccardSql),
+    Query("d5_embed_neardup", d5EmbedNearDup, d5EmbedNearDupSql),
+    Query("d6_dedup_apply", d6DedupApply, d6DedupApplySql),
+    Query("q6_rollup", q6Rollup, q6RollupSql),
+    Query("a1_ann_bruteforce", a1AnnBruteforce, a1AnnBruteforceSql),
+    Query("a2_ann_bucketed", a2AnnBucketed, a2AnnBucketedSql),
+    Query("a3_ann_multiprobe", a3AnnMultiprobe, a3AnnMultiprobeSql),
+    Query("a4_ivf_topk", a4IvfTopk, a4IvfTopkSql),
+    Query("m1_media_meta", m1MediaMeta, m1MediaMetaSql),
+    Query("m2_media_decode", m2MediaDecode, m2MediaDecodeSql),
+    Query("e3_event_window", e3EventWindow, e3EventWindowSql),
+    Query("e4_sessionize", e4Sessionize, e4SessionizeSql),
+    Query("e8_stream_replay", e8StreamReplay, e8StreamReplaySql, lane = true),
+    Query("p1_ingest_table", p1IngestTable, p1IngestTableSql),
+    Query("p2_ingest_rejects", p2IngestRejects, p2IngestRejectsSql),
+    Query("v11_euclid_topk", v11EuclidTopk, v11EuclidTopkSql),
+    Query("v11_dot_topk", v11DotTopk, v11DotTopkSql),
+    Query("g1_grouped_topk", g1GroupedTopk, g1GroupedTopkSql),
+    Query("g2_topk_agg", g2TopkAgg, g2TopkAggSql),
+    Query("e5_props_extract", e5PropsExtract, e5PropsExtractSql),
+    Query("e6_session_window", e6SessionWindow, e6SessionWindowSql),
+    Query("w1_running_window", w1RunningWindow, w1RunningWindowSql),
+    Query("x1_asof_join", x1AsofJoin, x1AsofJoinSql),
+    Query("t5_split", t5Split, t5SplitSql),
+    Query("q7_histogram", q7Histogram, q7HistogramSql),
+    Query("q8_pivot", q8Pivot, q8PivotSql),
+    Query("w2_rank", w2Rank, w2RankSql),
+    Query("m3_frame_sample", m3FrameSample, m3FrameSampleSql),
+    Query("q1_agg", q1Agg, q1AggSql),
+    Query("q2_date_filter", q2DateFilter, q2DateFilterSql),
+    Query("q3_join", q3Join, q3JoinSql),
+    Query("q4_count_distinct", q4CountDistinct, q4CountDistinctSql),
+    Query("q5_setops", q5SetOps, q5SetOpsSql))
 }

@@ -171,13 +171,8 @@ object Queries10 {
        |FROM pa, pooled""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cnt1_containment"   -> (cnt1Containment _),
-    "ab1_experiment_lift" -> (ab1ExperimentLift _),
-    "ab2_cuped"          -> (ab2Cuped _))
-
-  val oracles: Map[String, String] = Map(
-    "cnt1_containment"   -> cnt1ContainmentSql,
-    "ab1_experiment_lift" -> ab1ExperimentLiftSql,
-    "ab2_cuped"          -> ab2CupedSql)
+  val all: Seq[Query] = Seq(
+    Query("cnt1_containment", cnt1Containment, cnt1ContainmentSql),
+    Query("ab1_experiment_lift", ab1ExperimentLift, ab1ExperimentLiftSql),
+    Query("ab2_cuped", ab2Cuped, ab2CupedSql))
 }

@@ -222,21 +222,12 @@ object Queries11 {
       |FROM events e JOIN dim d ON e.event_type = d.event_type
       |GROUP BY e.event_type""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq1_expectations" -> (dq1Expectations _),
-    "slt1_auto_salted" -> (slt1AutoSalted _),
-    "e13_stream_dedup" -> (e13StreamDedup _),
-    "mlt1_unpivot"     -> (mlt1Unpivot _),
-    "tri1_dup_triangles" -> (tri1DupTriangles _),
-    "drf2_embedding_shift" -> (drf2EmbeddingShift _),
-    "skw1_key_skew"    -> (skw1KeySkew _))
-
-  val oracles: Map[String, String] = Map(
-    "dq1_expectations" -> dq1ExpectationsSql,
-    "slt1_auto_salted" -> slt1AutoSaltedSql,
-    "e13_stream_dedup" -> e13StreamDedupSql,
-    "mlt1_unpivot"     -> mlt1UnpivotSql,
-    "tri1_dup_triangles" -> tri1DupTrianglesSql,
-    "drf2_embedding_shift" -> drf2EmbeddingShiftSql,
-    "skw1_key_skew"    -> skw1KeySkewSql)
+  val all: Seq[Query] = Seq(
+    Query("dq1_expectations", dq1Expectations, dq1ExpectationsSql),
+    Query("slt1_auto_salted", slt1AutoSalted, slt1AutoSaltedSql),
+    Query("e13_stream_dedup", e13StreamDedup, e13StreamDedupSql, lane = true),
+    Query("mlt1_unpivot", mlt1Unpivot, mlt1UnpivotSql),
+    Query("tri1_dup_triangles", tri1DupTriangles, tri1DupTrianglesSql),
+    Query("drf2_embedding_shift", drf2EmbeddingShift, drf2EmbeddingShiftSql),
+    Query("skw1_key_skew", skw1KeySkew, skw1KeySkewSql))
 }

@@ -321,25 +321,14 @@ object Queries12 {
        |$arms""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "er1_entity_resolution" -> (er1EntityResolution _),
-    "ewma1_user_smoothing"  -> (ewma1UserSmoothing _),
-    "nv1_vocab_novelty"     -> (nv1VocabNovelty _),
-    "sql1_sql_api"          -> (sql1SqlApi _),
-    "gr1_user_growth"       -> (gr1UserGrowth _),
-    "e14_stream_hopping"    -> (e14StreamHopping _),
-    "cm1_langid_confusion"  -> (cm1LangidConfusion _),
-    "bp1_daily_quartiles"   -> (bp1DailyQuartiles _),
-    "a8_recall_curve"       -> (a8RecallCurve _))
-
-  val oracles: Map[String, String] = Map(
-    "er1_entity_resolution" -> er1EntityResolutionSql,
-    "ewma1_user_smoothing"  -> ewma1UserSmoothingSql,
-    "nv1_vocab_novelty"     -> nv1VocabNoveltySql,
-    "sql1_sql_api"          -> sql1SqlApiSql,
-    "gr1_user_growth"       -> gr1UserGrowthSql,
-    "e14_stream_hopping"    -> e14StreamHoppingSql,
-    "cm1_langid_confusion"  -> cm1LangidConfusionSql,
-    "bp1_daily_quartiles"   -> bp1DailyQuartilesSql,
-    "a8_recall_curve"       -> a8RecallCurveSql)
+  val all: Seq[Query] = Seq(
+    Query("er1_entity_resolution", er1EntityResolution, er1EntityResolutionSql),
+    Query("ewma1_user_smoothing", ewma1UserSmoothing, ewma1UserSmoothingSql),
+    Query("nv1_vocab_novelty", nv1VocabNovelty, nv1VocabNoveltySql),
+    Query("sql1_sql_api", sql1SqlApi, sql1SqlApiSql),
+    Query("gr1_user_growth", gr1UserGrowth, gr1UserGrowthSql),
+    Query("e14_stream_hopping", e14StreamHopping, e14StreamHoppingSql, lane = true),
+    Query("cm1_langid_confusion", cm1LangidConfusion, cm1LangidConfusionSql),
+    Query("bp1_daily_quartiles", bp1DailyQuartiles, bp1DailyQuartilesSql),
+    Query("a8_recall_curve", a8RecallCurve, a8RecallCurveSql))
 }

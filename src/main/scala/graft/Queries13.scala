@@ -141,13 +141,8 @@ object Queries13 {
        |       ELSE 0.0 END AS coeff
        |FROM deg LEFT JOIN tpn ON deg.doc_id = tpn.doc_id""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lk1_split_leakage" -> (lk1SplitLeakage _),
-    "rec1_reconciliation" -> (rec1OrderReconciliation _),
-    "gc1_clustering_coeff" -> (gc1ClusteringCoeff _))
-
-  val oracles: Map[String, String] = Map(
-    "lk1_split_leakage" -> lk1SplitLeakageSql,
-    "rec1_reconciliation" -> rec1OrderReconciliationSql,
-    "gc1_clustering_coeff" -> gc1ClusteringCoeffSql)
+  val all: Seq[Query] = Seq(
+    Query("lk1_split_leakage", lk1SplitLeakage, lk1SplitLeakageSql),
+    Query("rec1_reconciliation", rec1OrderReconciliation, rec1OrderReconciliationSql),
+    Query("gc1_clustering_coeff", gc1ClusteringCoeff, gc1ClusteringCoeffSql))
 }

@@ -118,11 +118,7 @@ object Queries14 {
       |SELECT dur_h, n_risk, n_events, survival FROM curve
       |WHERE n_events > 0""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cv1_kfold_balance" -> (cv1KfoldBalance _),
-    "km1_survival"      -> (km1Survival _))
-
-  val oracles: Map[String, String] = Map(
-    "cv1_kfold_balance" -> cv1KfoldBalanceSql,
-    "km1_survival"      -> km1SurvivalSql)
+  val all: Seq[Query] = Seq(
+    Query("cv1_kfold_balance", cv1KfoldBalance, cv1KfoldBalanceSql),
+    Query("km1_survival", km1Survival, km1SurvivalSql))
 }

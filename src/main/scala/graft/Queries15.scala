@@ -103,11 +103,7 @@ object Queries15 {
       |    / log10(1.0 + 1.0 / digit), 6) AS chi_term
       |FROM g, t""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tmp1_temperature_mix" -> (tmp1TemperatureMix _),
-    "bf1_benford_audit"    -> (bf1BenfordAudit _))
-
-  val oracles: Map[String, String] = Map(
-    "tmp1_temperature_mix" -> tmp1TemperatureMixSql,
-    "bf1_benford_audit"    -> bf1BenfordAuditSql)
+  val all: Seq[Query] = Seq(
+    Query("tmp1_temperature_mix", tmp1TemperatureMix, tmp1TemperatureMixSql),
+    Query("bf1_benford_audit", bf1BenfordAudit, bf1BenfordAuditSql))
 }

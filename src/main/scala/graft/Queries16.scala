@@ -109,11 +109,7 @@ object Queries16 {
        |FROM w WHERE tot >= 20 AND rn <= 3""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rfm1_segmentation"   -> (rfm1Segmentation _),
-    "tok2_next_token_topk" -> (tok2NextTokenTopk _))
-
-  val oracles: Map[String, String] = Map(
-    "rfm1_segmentation"   -> rfm1SegmentationSql,
-    "tok2_next_token_topk" -> tok2NextTokenTopkSql)
+  val all: Seq[Query] = Seq(
+    Query("rfm1_segmentation", rfm1Segmentation, rfm1SegmentationSql),
+    Query("tok2_next_token_topk", tok2NextTokenTopk, tok2NextTokenTopkSql))
 }

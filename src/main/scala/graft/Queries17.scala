@@ -68,11 +68,7 @@ object Queries17 {
       |  CAST(SUM(length(text)) AS BIGINT) AS total_text_len
       |FROM documents GROUP BY lang""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wrt1_partitioned_roundtrip" -> (wrt1PartitionedRoundtrip _),
-    "js1_jsonl_roundtrip"        -> (js1JsonlRoundtrip _))
-
-  val oracles: Map[String, String] = Map(
-    "wrt1_partitioned_roundtrip" -> wrt1PartitionedRoundtripSql,
-    "js1_jsonl_roundtrip"        -> js1JsonlRoundtripSql)
+  val all: Seq[Query] = Seq(
+    Query("wrt1_partitioned_roundtrip", wrt1PartitionedRoundtrip, wrt1PartitionedRoundtripSql),
+    Query("js1_jsonl_roundtrip", js1JsonlRoundtrip, js1JsonlRoundtripSql))
 }

@@ -86,11 +86,7 @@ object Queries18 {
       .mkString("\nUNION ALL\n")
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stk1_streaks"       -> (stk1Streaks _),
-    "chk1_table_checksum" -> (chk1TableChecksum _))
-
-  val oracles: Map[String, String] = Map(
-    "stk1_streaks"       -> stk1StreaksSql,
-    "chk1_table_checksum" -> chk1TableChecksumSql)
+  val all: Seq[Query] = Seq(
+    Query("stk1_streaks", stk1Streaks, stk1StreaksSql),
+    Query("chk1_table_checksum", chk1TableChecksum, chk1TableChecksumSql))
 }

@@ -123,13 +123,8 @@ object Queries19 {
        |ORDER BY pmi DESC, l ASC, r ASC LIMIT 30""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pop1_decayed_popularity" -> (pop1DecayedPopularity _),
-    "ucb1_bandit_scores"      -> (ucb1BanditScores _),
-    "pmi1_collocations"       -> (pmi1Collocations _))
-
-  val oracles: Map[String, String] = Map(
-    "pop1_decayed_popularity" -> pop1DecayedPopularitySql,
-    "ucb1_bandit_scores"      -> ucb1BanditScoresSql,
-    "pmi1_collocations"       -> pmi1CollocationsSql)
+  val all: Seq[Query] = Seq(
+    Query("pop1_decayed_popularity", pop1DecayedPopularity, pop1DecayedPopularitySql),
+    Query("ucb1_bandit_scores", ucb1BanditScores, ucb1BanditScoresSql),
+    Query("pmi1_collocations", pmi1Collocations, pmi1CollocationsSql))
 }

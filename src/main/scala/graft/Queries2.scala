@@ -292,29 +292,16 @@ object Queries2 {
       |  TRUE AS median_in_band
       |FROM events GROUP BY event_type""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q9_cube"          -> (q9Cube _),
-    "q10_percentiles"  -> (q10Percentiles _),
-    "q11_salted_join"  -> (q11SaltedJoin _),
-    "w3_window_dist"   -> (w3WindowDist _),
-    "t6_ngram_freq"    -> (t6NgramFreq _),
-    "t7_tfidf"         -> (t7Tfidf _),
-    "x2_range_join"    -> (x2RangeJoin _),
-    "v12_quantize"     -> (v12Quantize _),
-    "a5_ann_recall"    -> (a5AnnRecall _),
-    "e7_first_touch"   -> (e7FirstTouch _),
-    "q12_sketch"       -> (q12Sketch _))
-
-  val oracles: Map[String, String] = Map(
-    "q9_cube"          -> q9CubeSql,
-    "q10_percentiles"  -> q10PercentilesSql,
-    "q11_salted_join"  -> q11SaltedJoinSql,
-    "w3_window_dist"   -> w3WindowDistSql,
-    "t6_ngram_freq"    -> t6NgramFreqSql,
-    "t7_tfidf"         -> t7TfidfSql,
-    "x2_range_join"    -> x2RangeJoinSql,
-    "v12_quantize"     -> v12QuantizeSql,
-    "a5_ann_recall"    -> a5AnnRecallSql,
-    "e7_first_touch"   -> e7FirstTouchSql,
-    "q12_sketch"       -> q12SketchSql)
+  val all: Seq[Query] = Seq(
+    Query("q9_cube", q9Cube, q9CubeSql),
+    Query("q10_percentiles", q10Percentiles, q10PercentilesSql),
+    Query("q11_salted_join", q11SaltedJoin, q11SaltedJoinSql),
+    Query("w3_window_dist", w3WindowDist, w3WindowDistSql),
+    Query("t6_ngram_freq", t6NgramFreq, t6NgramFreqSql),
+    Query("t7_tfidf", t7Tfidf, t7TfidfSql),
+    Query("x2_range_join", x2RangeJoin, x2RangeJoinSql),
+    Query("v12_quantize", v12Quantize, v12QuantizeSql),
+    Query("a5_ann_recall", a5AnnRecall, a5AnnRecallSql),
+    Query("e7_first_touch", e7FirstTouch, e7FirstTouchSql),
+    Query("q12_sketch", q12Sketch, q12SketchSql))
 }

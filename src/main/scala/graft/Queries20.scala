@@ -158,13 +158,8 @@ object Queries20 {
        |WHERE cosine >= 0.9""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "at1_linear_attribution" -> (at1LinearAttribution _),
-    "sp1_sparse_cosine"      -> (sp1SparseCosinePairs _),
-    "sp2_sparse_prefix"      -> (sp2SparseCosinePrefix _))
-
-  val oracles: Map[String, String] = Map(
-    "at1_linear_attribution" -> at1LinearAttributionSql,
-    "sp1_sparse_cosine"      -> sp1SparseCosinePairsSql,
-    "sp2_sparse_prefix"      -> sp2SparseCosinePrefixSql)
+  val all: Seq[Query] = Seq(
+    Query("at1_linear_attribution", at1LinearAttribution, at1LinearAttributionSql),
+    Query("sp1_sparse_cosine", sp1SparseCosinePairs, sp1SparseCosinePairsSql),
+    Query("sp2_sparse_prefix", sp2SparseCosinePrefix, sp2SparseCosinePrefixSql))
 }

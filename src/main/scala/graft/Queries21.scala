@@ -87,11 +87,7 @@ object Queries21 {
       |FROM events e JOIN med ON e.event_type = med.event_type
       |GROUP BY e.event_type""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sig1_session_shapes"  -> (sig1SessionShapes _),
-    "mad1_robust_dispersion" -> (mad1RobustDispersion _))
-
-  val oracles: Map[String, String] = Map(
-    "sig1_session_shapes"  -> sig1SessionShapesSql,
-    "mad1_robust_dispersion" -> mad1RobustDispersionSql)
+  val all: Seq[Query] = Seq(
+    Query("sig1_session_shapes", sig1SessionShapes, sig1SessionShapesSql),
+    Query("mad1_robust_dispersion", mad1RobustDispersion, mad1RobustDispersionSql))
 }

@@ -230,13 +230,8 @@ object Queries22 {
        |FROM ag, pe""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ml1_naive_bayes"  -> (ml1NaiveBayes _),
-    "bri1_calibration" -> (bri1Calibration _),
-    "kpa1_kappa"       -> (kpa1Kappa _))
-
-  val oracles: Map[String, String] = Map(
-    "ml1_naive_bayes"  -> ml1NaiveBayesSql,
-    "bri1_calibration" -> bri1CalibrationSql,
-    "kpa1_kappa"       -> kpa1KappaSql)
+  val all: Seq[Query] = Seq(
+    Query("ml1_naive_bayes", ml1NaiveBayes, ml1NaiveBayesSql),
+    Query("bri1_calibration", bri1Calibration, bri1CalibrationSql),
+    Query("kpa1_kappa", kpa1Kappa, kpa1KappaSql))
 }

@@ -128,13 +128,8 @@ object Queries23 {
       |  round(quantile_cont(gap, 0.99), 6) AS p99
       |FROM g WHERE gap IS NOT NULL GROUP BY event_type""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "shr1_revenue_share"   -> (shr1RevenueShare _),
-    "neg1_negative_sampling" -> (neg1NegativeSampling _),
-    "lat1_interarrival"    -> (lat1Interarrival _))
-
-  val oracles: Map[String, String] = Map(
-    "shr1_revenue_share"   -> shr1RevenueShareSql,
-    "neg1_negative_sampling" -> neg1NegativeSamplingSql,
-    "lat1_interarrival"    -> lat1InterarrivalSql)
+  val all: Seq[Query] = Seq(
+    Query("shr1_revenue_share", shr1RevenueShare, shr1RevenueShareSql),
+    Query("neg1_negative_sampling", neg1NegativeSampling, neg1NegativeSamplingSql),
+    Query("lat1_interarrival", lat1Interarrival, lat1InterarrivalSql))
 }

@@ -339,21 +339,12 @@ object Queries24 {
 
   val e15StreamNearDupSql: String = d13IncrementalNearDupSql
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q18_star5"              -> (q18Star5 _),
-    "e15_stream_neardup"     -> (e15StreamNearDup _),
-    "tok3_bpe_train"         -> (tok3BpeTrain _),
-    "cur1_quality_deciles"   -> (cur1QualityDeciles _),
-    "d12_dedup_yield"        -> (d12DedupYield _),
-    "ctf1_class_tfidf"       -> (ctf1ClassTfidf _),
-    "d13_incremental_neardup" -> (d13IncrementalNearDup _))
-
-  val oracles: Map[String, String] = Map(
-    "q18_star5"              -> q18Star5Sql,
-    "e15_stream_neardup"     -> e15StreamNearDupSql,
-    "tok3_bpe_train"         -> tok3BpeTrainSql,
-    "cur1_quality_deciles"   -> cur1QualityDecilesSql,
-    "d12_dedup_yield"        -> d12DedupYieldSql,
-    "ctf1_class_tfidf"       -> ctf1ClassTfidfSql,
-    "d13_incremental_neardup" -> d13IncrementalNearDupSql)
+  val all: Seq[Query] = Seq(
+    Query("q18_star5", q18Star5, q18Star5Sql),
+    Query("e15_stream_neardup", e15StreamNearDup, e15StreamNearDupSql, lane = true),
+    Query("tok3_bpe_train", tok3BpeTrain, tok3BpeTrainSql),
+    Query("cur1_quality_deciles", cur1QualityDeciles, cur1QualityDecilesSql),
+    Query("d12_dedup_yield", d12DedupYield, d12DedupYieldSql),
+    Query("ctf1_class_tfidf", ctf1ClassTfidf, ctf1ClassTfidfSql),
+    Query("d13_incremental_neardup", d13IncrementalNearDup, d13IncrementalNearDupSql))
 }

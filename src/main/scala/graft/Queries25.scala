@@ -396,21 +396,12 @@ object Queries25 {
       |    / CAST(n AS DOUBLE), 6) AS ccdf
       |FROM hist, t""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pr1_pagerank"      -> (pr1PageRank _),
-    "tok4_bpe_encode"   -> (tok4BpeEncode _),
-    "sem1_semantic_dedup" -> (sem1SemanticDedup _),
-    "trn1_training_order" -> (trn1TrainingOrder _),
-    "hits1_hubs_authorities" -> (hits1HubsAuthorities _),
-    "ndcg1_retrieval_quality" -> (ndcg1RetrievalQuality _),
-    "deg1_degree_distribution" -> (deg1DegreeDistribution _))
-
-  val oracles: Map[String, String] = Map(
-    "pr1_pagerank"      -> pr1PageRankSql,
-    "tok4_bpe_encode"   -> tok4BpeEncodeSql,
-    "sem1_semantic_dedup" -> sem1SemanticDedupSql,
-    "trn1_training_order" -> trn1TrainingOrderSql,
-    "hits1_hubs_authorities" -> hits1HubsAuthoritiesSql,
-    "ndcg1_retrieval_quality" -> ndcg1RetrievalQualitySql,
-    "deg1_degree_distribution" -> deg1DegreeDistributionSql)
+  val all: Seq[Query] = Seq(
+    Query("pr1_pagerank", pr1PageRank, pr1PageRankSql),
+    Query("tok4_bpe_encode", tok4BpeEncode, tok4BpeEncodeSql),
+    Query("sem1_semantic_dedup", sem1SemanticDedup, sem1SemanticDedupSql),
+    Query("trn1_training_order", trn1TrainingOrder, trn1TrainingOrderSql),
+    Query("hits1_hubs_authorities", hits1HubsAuthorities, hits1HubsAuthoritiesSql),
+    Query("ndcg1_retrieval_quality", ndcg1RetrievalQuality, ndcg1RetrievalQualitySql),
+    Query("deg1_degree_distribution", deg1DegreeDistribution, deg1DegreeDistributionSql))
 }

@@ -299,19 +299,11 @@ object Queries26 {
       |    AS n_top_boxes
       |FROM documents""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ap1_avg_precision" -> (ap1AvgPrecision _),
-    "mcc1_matthews"     -> (mcc1Matthews _),
-    "ld1_l_diversity"   -> (ld1LDiversity _),
-    "dsir1_importance"  -> (dsir1Importance _),
-    "kc1_kcore"         -> (kc1Kcore _),
-    "m7_mp4_meta"       -> (m7Mp4Meta _))
-
-  val oracles: Map[String, String] = Map(
-    "ap1_avg_precision" -> ap1AvgPrecisionSql,
-    "mcc1_matthews"     -> mcc1MatthewsSql,
-    "ld1_l_diversity"   -> ld1LDiversitySql,
-    "dsir1_importance"  -> dsir1ImportanceSql,
-    "kc1_kcore"         -> kc1KcoreSql,
-    "m7_mp4_meta"       -> m7Mp4MetaSql)
+  val all: Seq[Query] = Seq(
+    Query("ap1_avg_precision", ap1AvgPrecision, ap1AvgPrecisionSql),
+    Query("mcc1_matthews", mcc1Matthews, mcc1MatthewsSql),
+    Query("ld1_l_diversity", ld1LDiversity, ld1LDiversitySql),
+    Query("dsir1_importance", dsir1Importance, dsir1ImportanceSql),
+    Query("kc1_kcore", kc1Kcore, kc1KcoreSql),
+    Query("m7_mp4_meta", m7Mp4Meta, m7Mp4MetaSql))
 }

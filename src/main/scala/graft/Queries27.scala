@@ -274,17 +274,10 @@ object Queries27 {
        |FROM sc WHERE vec_id % 5 = 2""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "zipf1_bigram_zipf" -> (zipf1BigramZipf _),
-    "rg1_ngram_f1"      -> (rg1NgramF1 _),
-    "dp2_dp_release"    -> (dp2DpRelease _),
-    "e16_stream_late"   -> (e16StreamLate _),
-    "cp1_conformal"     -> (cp1Conformal _))
-
-  val oracles: Map[String, String] = Map(
-    "zipf1_bigram_zipf" -> zipf1BigramZipfSql,
-    "rg1_ngram_f1"      -> rg1NgramF1Sql,
-    "dp2_dp_release"    -> dp2DpReleaseSql,
-    "e16_stream_late"   -> e16StreamLateSql,
-    "cp1_conformal"     -> cp1ConformalSql)
+  val all: Seq[Query] = Seq(
+    Query("zipf1_bigram_zipf", zipf1BigramZipf, zipf1BigramZipfSql),
+    Query("rg1_ngram_f1", rg1NgramF1, rg1NgramF1Sql),
+    Query("dp2_dp_release", dp2DpRelease, dp2DpReleaseSql),
+    Query("e16_stream_late", e16StreamLate, e16StreamLateSql, lane = true),
+    Query("cp1_conformal", cp1Conformal, cp1ConformalSql))
 }

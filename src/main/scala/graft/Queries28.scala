@@ -178,17 +178,10 @@ object Queries28 {
       |WHERE d.lang = 'de' AND d.n_chars > 400
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src1_bucket_pushdown" -> (src1BucketPushdown _),
-    "src2_scored_topk"     -> (src2ScoredTopk _),
-    "src3_agg_pushdown"    -> (src3AggPushdown _),
-    "src4_stats_broadcast" -> (src4StatsBroadcast _),
-    "src5_runtime_prune"   -> (src5RuntimePrune _))
-
-  val oracles: Map[String, String] = Map(
-    "src1_bucket_pushdown" -> src1BucketPushdownSql,
-    "src2_scored_topk"     -> src2ScoredTopkSql,
-    "src3_agg_pushdown"    -> src3AggPushdownSql,
-    "src4_stats_broadcast" -> src4StatsBroadcastSql,
-    "src5_runtime_prune"   -> src5RuntimePruneSql)
+  val all: Seq[Query] = Seq(
+    Query("src1_bucket_pushdown", src1BucketPushdown, src1BucketPushdownSql),
+    Query("src2_scored_topk", src2ScoredTopk, src2ScoredTopkSql),
+    Query("src3_agg_pushdown", src3AggPushdown, src3AggPushdownSql),
+    Query("src4_stats_broadcast", src4StatsBroadcast, src4StatsBroadcastSql),
+    Query("src5_runtime_prune", src5RuntimePrune, src5RuntimePruneSql))
 }

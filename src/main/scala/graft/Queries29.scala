@@ -258,21 +258,12 @@ object Queries29 {
       | AND e.ts > p.ts AND e.ts <= p.ts + INTERVAL '14400 seconds'
       |WHERE p.event_type = 'purchase'""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e17_stream_outer_join" -> (e17StreamOuterJoin _),
-    "bfs1_hop_distance" -> (bfs1HopDistance _),
-    "lp1_label_prop"    -> (lp1LabelProp _),
-    "pn1_perceptron"    -> (pn1Perceptron _),
-    "sky1_pareto"       -> (sky1ParetoCustomers _),
-    "orc1_orc_roundtrip" -> (orc1OrcRoundtrip _),
-    "csv1_csv_roundtrip" -> (csv1CsvRoundtrip _))
-
-  val oracles: Map[String, String] = Map(
-    "e17_stream_outer_join" -> e17StreamOuterJoinSql,
-    "bfs1_hop_distance" -> bfs1HopDistanceSql,
-    "lp1_label_prop"    -> lp1LabelPropSql,
-    "pn1_perceptron"    -> pn1PerceptronSql,
-    "sky1_pareto"       -> sky1ParetoCustomersSql,
-    "orc1_orc_roundtrip" -> orc1OrcRoundtripSql,
-    "csv1_csv_roundtrip" -> csv1CsvRoundtripSql)
+  val all: Seq[Query] = Seq(
+    Query("e17_stream_outer_join", e17StreamOuterJoin, e17StreamOuterJoinSql, lane = true),
+    Query("bfs1_hop_distance", bfs1HopDistance, bfs1HopDistanceSql),
+    Query("lp1_label_prop", lp1LabelProp, lp1LabelPropSql),
+    Query("pn1_perceptron", pn1Perceptron, pn1PerceptronSql),
+    Query("sky1_pareto", sky1ParetoCustomers, sky1ParetoCustomersSql),
+    Query("orc1_orc_roundtrip", orc1OrcRoundtrip, orc1OrcRoundtripSql),
+    Query("csv1_csv_roundtrip", csv1CsvRoundtrip, csv1CsvRoundtripSql))
 }

@@ -97,13 +97,8 @@ object Queries3 {
        |FROM (SELECT doc_id, $sh AS sh FROM documents)""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d7_dup_clusters"  -> (d7DupClusters _),
-    "c1_contamination" -> (c1Contamination _),
-    "t8_repetition"    -> (t8Repetition _))
-
-  val oracles: Map[String, String] = Map(
-    "d7_dup_clusters"  -> d7DupClustersSql,
-    "c1_contamination" -> c1ContaminationSql,
-    "t8_repetition"    -> t8RepetitionSql)
+  val all: Seq[Query] = Seq(
+    Query("d7_dup_clusters", d7DupClusters, d7DupClustersSql),
+    Query("c1_contamination", c1Contamination, c1ContaminationSql),
+    Query("t8_repetition", t8Repetition, t8RepetitionSql))
 }

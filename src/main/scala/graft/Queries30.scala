@@ -448,27 +448,15 @@ object Queries30 {
       |  COUNT(CASE WHEN source IS NULL THEN 1 END) AS n_missing_source
       |FROM merged GROUP BY lang""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fi1_assoc_rules"  -> (fi1AssocRules _),
-    "mod1_modularity"  -> (mod1NationModularity _),
-    "acf1_autocorr"    -> (acf1DailyRevenue _),
-    "hn1_hard_negatives" -> (hn1HardNegatives _),
-    "ppr1_personalized"  -> (ppr1Personalized _),
-    "fc1_seasonal_backtest" -> (fc1SeasonalBacktest _),
-    "gini1_revenue_gini"    -> (gini1RevenueGini _),
-    "boot1_bootstrap_ci"    -> (boot1BootstrapCi _),
-    "ts1_theil_sen"         -> (ts1TheilSen _),
-    "sch1_schema_merge"     -> (sch1SchemaMerge _))
-
-  val oracles: Map[String, String] = Map(
-    "fi1_assoc_rules"  -> fi1AssocRulesSql,
-    "mod1_modularity"  -> mod1NationModularitySql,
-    "acf1_autocorr"    -> acf1DailyRevenueSql,
-    "hn1_hard_negatives" -> hn1HardNegativesSql,
-    "ppr1_personalized"  -> ppr1PersonalizedSql,
-    "fc1_seasonal_backtest" -> fc1SeasonalBacktestSql,
-    "gini1_revenue_gini"    -> gini1RevenueGiniSql,
-    "boot1_bootstrap_ci"    -> boot1BootstrapCiSql,
-    "ts1_theil_sen"         -> ts1TheilSenSql,
-    "sch1_schema_merge"     -> sch1SchemaMergeSql)
+  val all: Seq[Query] = Seq(
+    Query("fi1_assoc_rules", fi1AssocRules, fi1AssocRulesSql),
+    Query("mod1_modularity", mod1NationModularity, mod1NationModularitySql),
+    Query("acf1_autocorr", acf1DailyRevenue, acf1DailyRevenueSql),
+    Query("hn1_hard_negatives", hn1HardNegatives, hn1HardNegativesSql),
+    Query("ppr1_personalized", ppr1Personalized, ppr1PersonalizedSql),
+    Query("fc1_seasonal_backtest", fc1SeasonalBacktest, fc1SeasonalBacktestSql),
+    Query("gini1_revenue_gini", gini1RevenueGini, gini1RevenueGiniSql),
+    Query("boot1_bootstrap_ci", boot1BootstrapCi, boot1BootstrapCiSql),
+    Query("ts1_theil_sen", ts1TheilSen, ts1TheilSenSql),
+    Query("sch1_schema_merge", sch1SchemaMerge, sch1SchemaMergeSql))
 }

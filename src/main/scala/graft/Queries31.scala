@@ -399,25 +399,14 @@ object Queries31 {
       |    CAST(SUM(CAST(v * v AS DECIMAL(28,14))) AS DOUBLE), 6) AS factor
       |FROM r0 JOIN v1 USING (itm) GROUP BY 1""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "jw1_sorted_neighborhood" -> (jw1SortedNeighborhood _),
-    "chi1_chisq"              -> (chi1Chisq _),
-    "mw1_mann_whitney"        -> (mw1MannWhitney _),
-    "cpd1_cusum"              -> (cpd1Cusum _),
-    "lnk1_adamic_adar"        -> (lnk1AdamicAdar _),
-    "kl1_corpus_divergence"   -> (kl1CorpusDivergence _),
-    "pt1_perm_test"           -> (pt1PermTest _),
-    "tm1_trimmed_mean"        -> (tm1TrimmedMean _),
-    "als1_rank1"              -> (als1Rank1 _))
-
-  val oracles: Map[String, String] = Map(
-    "jw1_sorted_neighborhood" -> jw1SortedNeighborhoodSql,
-    "chi1_chisq"              -> chi1ChisqSql,
-    "mw1_mann_whitney"        -> mw1MannWhitneySql,
-    "cpd1_cusum"              -> cpd1CusumSql,
-    "lnk1_adamic_adar"        -> lnk1AdamicAdarSql,
-    "kl1_corpus_divergence"   -> kl1CorpusDivergenceSql,
-    "pt1_perm_test"           -> pt1PermTestSql,
-    "tm1_trimmed_mean"        -> tm1TrimmedMeanSql,
-    "als1_rank1"              -> als1Rank1Sql)
+  val all: Seq[Query] = Seq(
+    Query("jw1_sorted_neighborhood", jw1SortedNeighborhood, jw1SortedNeighborhoodSql),
+    Query("chi1_chisq", chi1Chisq, chi1ChisqSql),
+    Query("mw1_mann_whitney", mw1MannWhitney, mw1MannWhitneySql),
+    Query("cpd1_cusum", cpd1Cusum, cpd1CusumSql),
+    Query("lnk1_adamic_adar", lnk1AdamicAdar, lnk1AdamicAdarSql),
+    Query("kl1_corpus_divergence", kl1CorpusDivergence, kl1CorpusDivergenceSql),
+    Query("pt1_perm_test", pt1PermTest, pt1PermTestSql),
+    Query("tm1_trimmed_mean", tm1TrimmedMean, tm1TrimmedMeanSql),
+    Query("als1_rank1", als1Rank1, als1Rank1Sql))
 }

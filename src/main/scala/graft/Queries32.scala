@@ -422,21 +422,12 @@ object Queries32 {
        |LEFT JOIN border ON border.id = e0.id""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dbs1_dbscan"          -> (dbs1Dbscan _),
-    "dbs2_blocked_dbscan"  -> (dbs2BlockedDbscan _),
-    "bh1_fdr_nations"      -> (bh1FdrNations _),
-    "rdv1_rendezvous"      -> (rdv1Rendezvous _),
-    "ps1_priority_sample"  -> (ps1PrioritySample _),
-    "ols1_multi_regression" -> (ols1MultiRegression _),
-    "ccf1_cross_correlation" -> (ccf1RevenueUrgency _))
-
-  val oracles: Map[String, String] = Map(
-    "dbs1_dbscan"          -> dbs1DbscanSql,
-    "dbs2_blocked_dbscan"  -> dbs2BlockedDbscanSql,
-    "bh1_fdr_nations"      -> bh1FdrNationsSql,
-    "rdv1_rendezvous"      -> rdv1RendezvousSql,
-    "ps1_priority_sample"  -> ps1PrioritySampleSql,
-    "ols1_multi_regression" -> ols1MultiRegressionSql,
-    "ccf1_cross_correlation" -> ccf1RevenueUrgencySql)
+  val all: Seq[Query] = Seq(
+    Query("dbs1_dbscan", dbs1Dbscan, dbs1DbscanSql),
+    Query("dbs2_blocked_dbscan", dbs2BlockedDbscan, dbs2BlockedDbscanSql),
+    Query("bh1_fdr_nations", bh1FdrNations, bh1FdrNationsSql),
+    Query("rdv1_rendezvous", rdv1Rendezvous, rdv1RendezvousSql),
+    Query("ps1_priority_sample", ps1PrioritySample, ps1PrioritySampleSql),
+    Query("ols1_multi_regression", ols1MultiRegression, ols1MultiRegressionSql),
+    Query("ccf1_cross_correlation", ccf1RevenueUrgency, ccf1RevenueUrgencySql))
 }

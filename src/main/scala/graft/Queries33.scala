@@ -453,21 +453,12 @@ object Queries33 {
        |FROM m""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "spr1_spearman"        -> (spr1Spearman _),
-    "ast1_assortativity"   -> (ast1Assortativity _),
-    "cov1_embedding_cov"   -> (cov1EmbeddingCov _),
-    "knn1_label_vote"      -> (knn1LabelVote _),
-    "dec1_seasonal_decompose" -> (dec1SeasonalDecompose _),
-    "mi1_lang_source_mi"   -> (mi1LangSourceMi _),
-    "wel1_welch_ttest"     -> (wel1WelchTtest _))
-
-  val oracles: Map[String, String] = Map(
-    "spr1_spearman"        -> spr1SpearmanSql,
-    "ast1_assortativity"   -> ast1AssortativitySql,
-    "cov1_embedding_cov"   -> cov1EmbeddingCovSql,
-    "knn1_label_vote"      -> knn1LabelVoteSql,
-    "dec1_seasonal_decompose" -> dec1SeasonalDecomposeSql,
-    "mi1_lang_source_mi"   -> mi1LangSourceMiSql,
-    "wel1_welch_ttest"     -> wel1WelchTtestSql)
+  val all: Seq[Query] = Seq(
+    Query("spr1_spearman", spr1Spearman, spr1SpearmanSql),
+    Query("ast1_assortativity", ast1Assortativity, ast1AssortativitySql),
+    Query("cov1_embedding_cov", cov1EmbeddingCov, cov1EmbeddingCovSql),
+    Query("knn1_label_vote", knn1LabelVote, knn1LabelVoteSql),
+    Query("dec1_seasonal_decompose", dec1SeasonalDecompose, dec1SeasonalDecomposeSql),
+    Query("mi1_lang_source_mi", mi1LangSourceMi, mi1LangSourceMiSql),
+    Query("wel1_welch_ttest", wel1WelchTtest, wel1WelchTtestSql))
 }

@@ -145,13 +145,8 @@ object Queries34 {
        |  CAST(COUNT(*) AS BIGINT) AS n_reached
        |FROM d2""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "hll1_distinct_sketch" -> (hll1DistinctSketch _),
-    "cms1_countmin"        -> (cms1CountMin _),
-    "dia1_double_sweep"    -> (dia1DoubleSweep _))
-
-  val oracles: Map[String, String] = Map(
-    "hll1_distinct_sketch" -> hll1DistinctSketchSql,
-    "cms1_countmin"        -> cms1CountMinSql,
-    "dia1_double_sweep"    -> dia1DoubleSweepSql)
+  val all: Seq[Query] = Seq(
+    Query("hll1_distinct_sketch", hll1DistinctSketch, hll1DistinctSketchSql),
+    Query("cms1_countmin", cms1CountMin, cms1CountMinSql),
+    Query("dia1_double_sweep", dia1DoubleSweep, dia1DoubleSweepSql))
 }

@@ -297,13 +297,8 @@ object Queries35 {
        |  round(ens / ze, 6) AS ens_weight
        |FROM raw, z""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sil1_silhouette"      -> (sil1Silhouette _),
-    "pw1_power_iteration"  -> (pw1PowerIteration _),
-    "imb1_class_weights"   -> (imb1ClassWeights _))
-
-  val oracles: Map[String, String] = Map(
-    "sil1_silhouette"      -> sil1SilhouetteSql,
-    "pw1_power_iteration"  -> pw1PowerIterationSql,
-    "imb1_class_weights"   -> imb1ClassWeightsSql)
+  val all: Seq[Query] = Seq(
+    Query("sil1_silhouette", sil1Silhouette, sil1SilhouetteSql),
+    Query("pw1_power_iteration", pw1PowerIteration, pw1PowerIterationSql),
+    Query("imb1_class_weights", imb1ClassWeights, imb1ClassWeightsSql))
 }

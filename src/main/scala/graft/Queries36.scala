@@ -146,11 +146,7 @@ object Queries36 {
        |FROM b, n GROUP BY n.n, n.hit""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mci1_median_ci"       -> (mci1MedianCi _),
-    "gof1_hash_uniformity" -> (gof1HashUniformity _))
-
-  val oracles: Map[String, String] = Map(
-    "mci1_median_ci"       -> mci1MedianCiSql,
-    "gof1_hash_uniformity" -> gof1HashUniformitySql)
+  val all: Seq[Query] = Seq(
+    Query("mci1_median_ci", mci1MedianCi, mci1MedianCiSql),
+    Query("gof1_hash_uniformity", gof1HashUniformity, gof1HashUniformitySql))
 }

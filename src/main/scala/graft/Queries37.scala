@@ -144,11 +144,7 @@ object Queries37 {
        |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_sessions FROM sess)
        |SELECT n.n_sessions, p.peak_concurrent, a.at_epoch FROM n, p, a""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tri2_ktruss"           -> (tri2Ktruss _),
-    "con1_peak_concurrency" -> (con1PeakConcurrency _))
-
-  val oracles: Map[String, String] = Map(
-    "tri2_ktruss"           -> tri2KtrussSql,
-    "con1_peak_concurrency" -> con1PeakConcurrencySql)
+  val all: Seq[Query] = Seq(
+    Query("tri2_ktruss", tri2Ktruss, tri2KtrussSql),
+    Query("con1_peak_concurrency", con1PeakConcurrency, con1PeakConcurrencySql))
 }

@@ -94,11 +94,7 @@ object Queries38 {
        |FROM r, xk WHERE r.r < $TailK
        |GROUP BY xk.xk""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wrs1_weighted_sample" -> (wrs1WeightedSample _),
-    "tail1_hill_estimator" -> (tail1HillEstimator _))
-
-  val oracles: Map[String, String] = Map(
-    "wrs1_weighted_sample" -> wrs1WeightedSampleSql,
-    "tail1_hill_estimator" -> tail1HillEstimatorSql)
+  val all: Seq[Query] = Seq(
+    Query("wrs1_weighted_sample", wrs1WeightedSample, wrs1WeightedSampleSql),
+    Query("tail1_hill_estimator", tail1HillEstimator, tail1HillEstimatorSql))
 }

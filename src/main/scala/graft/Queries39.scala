@@ -77,9 +77,6 @@ object Queries39 {
        |ORDER BY ml.mlrd / lrd.lrd DESC, ml.p ASC LIMIT $LofTopK""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lof1_local_outliers" -> (lof1LocalOutliers _))
-
-  val oracles: Map[String, String] = Map(
-    "lof1_local_outliers" -> lof1LocalOutliersSql)
+  val all: Seq[Query] = Seq(
+    Query("lof1_local_outliers", lof1LocalOutliers, lof1LocalOutliersSql))
 }

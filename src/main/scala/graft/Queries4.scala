@@ -117,15 +117,9 @@ object Queries4 {
       |    (PARTITION BY user_id ORDER BY ts, event_id), 6) AS delta
       |FROM events""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "smp1_stratified_sample" -> (smp1StratifiedSample _),
-    "mix1_domain_mixture"    -> (mix1DomainMixture _),
-    "pk1_shard_packing"      -> (pk1ShardPacking _),
-    "w4_lag_delta"           -> (w4LagDelta _))
-
-  val oracles: Map[String, String] = Map(
-    "smp1_stratified_sample" -> smp1StratifiedSampleSql,
-    "mix1_domain_mixture"    -> mix1DomainMixtureSql,
-    "pk1_shard_packing"      -> pk1ShardPackingSql,
-    "w4_lag_delta"           -> w4LagDeltaSql)
+  val all: Seq[Query] = Seq(
+    Query("smp1_stratified_sample", smp1StratifiedSample, smp1StratifiedSampleSql),
+    Query("mix1_domain_mixture", mix1DomainMixture, mix1DomainMixtureSql),
+    Query("pk1_shard_packing", pk1ShardPacking, pk1ShardPackingSql),
+    Query("w4_lag_delta", w4LagDelta, w4LagDeltaSql))
 }

@@ -153,9 +153,6 @@ object Queries40 {
        |FROM m$GmmIters""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gmm1_em_mixture" -> (gmm1EmMixture _))
-
-  val oracles: Map[String, String] = Map(
-    "gmm1_em_mixture" -> gmm1EmMixtureSql)
+  val all: Seq[Query] = Seq(
+    Query("gmm1_em_mixture", gmm1EmMixture, gmm1EmMixtureSql))
 }

@@ -108,9 +108,6 @@ object Queries41 {
        |FROM sc GROUP BY 1""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ppl1_heldout_perplexity" -> (ppl1HeldoutPerplexity _))
-
-  val oracles: Map[String, String] = Map(
-    "ppl1_heldout_perplexity" -> ppl1HeldoutPerplexitySql)
+  val all: Seq[Query] = Seq(
+    Query("ppl1_heldout_perplexity", ppl1HeldoutPerplexity, ppl1HeldoutPerplexitySql))
 }

@@ -55,9 +55,6 @@ object Queries42 {
       |  MIN(CASE WHEN cum * 4 >= tot.tot * 3 THEN t END) AS q3_date
       |FROM cum, tot GROUP BY tot.n_days, tot.tot""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wmed1_revenue_halfdate" -> (wmed1RevenueHalfdate _))
-
-  val oracles: Map[String, String] = Map(
-    "wmed1_revenue_halfdate" -> wmed1RevenueHalfdateSql)
+  val all: Seq[Query] = Seq(
+    Query("wmed1_revenue_halfdate", wmed1RevenueHalfdate, wmed1RevenueHalfdateSql))
 }

@@ -64,9 +64,6 @@ object Queries43 {
       |    AS durbin_watson
       |FROM l""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dw1_durbin_watson" -> (dw1DurbinWatson _))
-
-  val oracles: Map[String, String] = Map(
-    "dw1_durbin_watson" -> dw1DurbinWatsonSql)
+  val all: Seq[Query] = Seq(
+    Query("dw1_durbin_watson", dw1DurbinWatson, dw1DurbinWatsonSql))
 }

@@ -57,9 +57,6 @@ object Queries44 {
        |FROM m""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "wil1_urgent_share_wilson" -> (wil1UrgentShareWilson _))
-
-  val oracles: Map[String, String] = Map(
-    "wil1_urgent_share_wilson" -> wil1UrgentShareWilsonSql)
+  val all: Seq[Query] = Seq(
+    Query("wil1_urgent_share_wilson", wil1UrgentShareWilson, wil1UrgentShareWilsonSql))
 }

@@ -88,9 +88,6 @@ object Queries45 {
        |SELECT s AS state, round(x, 6) AS pi FROM p$StaIters""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sta1_stationary_dist" -> (sta1StationaryDist _))
-
-  val oracles: Map[String, String] = Map(
-    "sta1_stationary_dist" -> sta1StationaryDistSql)
+  val all: Seq[Query] = Seq(
+    Query("sta1_stationary_dist", sta1StationaryDist, sta1StationaryDistSql))
 }

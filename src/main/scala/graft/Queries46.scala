@@ -55,9 +55,6 @@ object Queries46 {
        |UNION ALL SELECT 3, round($phi33, 6) FROM m""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pacf1_partial_autocorr" -> (pacf1PartialAutocorr _))
-
-  val oracles: Map[String, String] = Map(
-    "pacf1_partial_autocorr" -> pacf1PartialAutocorrSql)
+  val all: Seq[Query] = Seq(
+    Query("pacf1_partial_autocorr", pacf1PartialAutocorr, pacf1PartialAutocorrSql))
 }

@@ -96,9 +96,6 @@ object Queries47 {
        |FROM c""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sprt1_sequential_test" -> (sprt1SequentialTest _))
-
-  val oracles: Map[String, String] = Map(
-    "sprt1_sequential_test" -> sprt1SequentialTestSql)
+  val all: Seq[Query] = Seq(
+    Query("sprt1_sequential_test", sprt1SequentialTest, sprt1SequentialTestSql))
 }

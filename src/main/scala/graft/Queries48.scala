@@ -86,9 +86,6 @@ object Queries48 {
       |  ), 6) AS cvm_t
       |FROM m""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cvm1_cramer_von_mises" -> (cvm1CramerVonMises _))
-
-  val oracles: Map[String, String] = Map(
-    "cvm1_cramer_von_mises" -> cvm1CramerVonMisesSql)
+  val all: Seq[Query] = Seq(
+    Query("cvm1_cramer_von_mises", cvm1CramerVonMises, cvm1CramerVonMisesSql))
 }

@@ -53,9 +53,6 @@ object Queries49 {
       |    / (CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE)), 6) AS fano
       |FROM m""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fan1_fano_factor" -> (fan1FanoFactor _))
-
-  val oracles: Map[String, String] = Map(
-    "fan1_fano_factor" -> fan1FanoFactorSql)
+  val all: Seq[Query] = Seq(
+    Query("fan1_fano_factor", fan1FanoFactor, fan1FanoFactorSql))
 }

@@ -386,31 +386,17 @@ object Queries5 {
       |                        quantile_cont(n_chars, 0.95) AS hi
       |                 FROM documents)""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q13_grouping_sets"    -> (q13GroupingSets _),
-    "t9_rarity"            -> (t9Rarity _),
-    "d8_cluster_survivors" -> (d8ClusterSurvivors _),
-    "a6_centroids"         -> (a6Centroids _),
-    "a7_ivf_trained"       -> (a7IvfTrained _),
-    "t10_compression"      -> (t10Compression _),
-    "m4_resize_plan"       -> (m4ResizePlan _),
-    "m5_png_decode"        -> (m5PngDecode _),
-    "m6_audio_decode"      -> (m6AudioDecode _),
-    "x3_full_outer"        -> (x3FullOuter _),
-    "smp2_balanced_sample" -> (smp2BalancedSample _),
-    "t11_length_outliers"  -> (t11LengthOutliers _))
-
-  val oracles: Map[String, String] = Map(
-    "q13_grouping_sets"    -> q13GroupingSetsSql,
-    "t9_rarity"            -> t9RaritySql,
-    "d8_cluster_survivors" -> d8ClusterSurvivorsSql,
-    "a6_centroids"         -> a6CentroidsSql,
-    "a7_ivf_trained"       -> a7IvfTrainedSql,
-    "t10_compression"      -> t10CompressionSql,
-    "m4_resize_plan"       -> m4ResizePlanSql,
-    "m5_png_decode"        -> m5PngDecodeSql,
-    "m6_audio_decode"      -> m6AudioDecodeSql,
-    "x3_full_outer"        -> x3FullOuterSql,
-    "smp2_balanced_sample" -> smp2BalancedSampleSql,
-    "t11_length_outliers"  -> t11LengthOutliersSql)
+  val all: Seq[Query] = Seq(
+    Query("q13_grouping_sets", q13GroupingSets, q13GroupingSetsSql),
+    Query("t9_rarity", t9Rarity, t9RaritySql),
+    Query("d8_cluster_survivors", d8ClusterSurvivors, d8ClusterSurvivorsSql),
+    Query("a6_centroids", a6Centroids, a6CentroidsSql),
+    Query("a7_ivf_trained", a7IvfTrained, a7IvfTrainedSql),
+    Query("t10_compression", t10Compression, t10CompressionSql),
+    Query("m4_resize_plan", m4ResizePlan, m4ResizePlanSql),
+    Query("m5_png_decode", m5PngDecode, m5PngDecodeSql),
+    Query("m6_audio_decode", m6AudioDecode, m6AudioDecodeSql),
+    Query("x3_full_outer", x3FullOuter, x3FullOuterSql),
+    Query("smp2_balanced_sample", smp2BalancedSample, smp2BalancedSampleSql),
+    Query("t11_length_outliers", t11LengthOutliers, t11LengthOutliersSql))
 }

@@ -331,21 +331,12 @@ object Queries50 {
        |WHERE $jac >= 0.5""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d14_blocked_minhash" -> (d14BlockedMinhash _),
-    "kw1_kruskal_wallis" -> (kw1KruskalWallis _),
-    "lb1_ljung_box"      -> (lb1LjungBox _),
-    "run1_runs_test"     -> (run1RunsTest _),
-    "kt1_kendall_tau"    -> (kt1KendallTau _),
-    "hq1_hist_quantiles" -> (hq1HistQuantiles _),
-    "hq2_hist_merge"     -> (hq2HistMerge _))
-
-  val oracles: Map[String, String] = Map(
-    "d14_blocked_minhash" -> d14BlockedMinhashSql,
-    "kw1_kruskal_wallis" -> kw1KruskalWallisSql,
-    "lb1_ljung_box"      -> lb1LjungBoxSql,
-    "run1_runs_test"     -> run1RunsTestSql,
-    "kt1_kendall_tau"    -> kt1KendallTauSql,
-    "hq1_hist_quantiles" -> hq1HistQuantilesSql,
-    "hq2_hist_merge"     -> hq2HistMergeSql)
+  val all: Seq[Query] = Seq(
+    Query("d14_blocked_minhash", d14BlockedMinhash, d14BlockedMinhashSql),
+    Query("kw1_kruskal_wallis", kw1KruskalWallis, kw1KruskalWallisSql),
+    Query("lb1_ljung_box", lb1LjungBox, lb1LjungBoxSql),
+    Query("run1_runs_test", run1RunsTest, run1RunsTestSql),
+    Query("kt1_kendall_tau", kt1KendallTau, kt1KendallTauSql),
+    Query("hq1_hist_quantiles", hq1HistQuantiles, hq1HistQuantilesSql),
+    Query("hq2_hist_merge", hq2HistMerge, hq2HistMergeSql))
 }

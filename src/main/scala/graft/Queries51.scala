@@ -82,17 +82,10 @@ object Queries51 {
 
   val e20TwsSessionizeSql: String = Queries.e4SessionizeSql
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e18_stream_restart" -> (e18StreamRestart _),
-    "e19_stream_upsert"  -> (e19StreamUpsert _),
-    "e19b_stream_upsert_bucketed" -> (e19bStreamUpsertBucketed _),
-    "e19c_stream_rebucket" -> (e19cStreamRebucket _),
-    "e20_tws_sessionize" -> (e20TwsSessionize _))
-
-  val oracles: Map[String, String] = Map(
-    "e18_stream_restart" -> e18StreamRestartSql,
-    "e19_stream_upsert"  -> e19StreamUpsertSql,
-    "e19b_stream_upsert_bucketed" -> e19StreamUpsertSql,
-    "e19c_stream_rebucket" -> e19StreamUpsertSql,
-    "e20_tws_sessionize" -> e20TwsSessionizeSql)
+  val all: Seq[Query] = Seq(
+    Query("e18_stream_restart", e18StreamRestart, e18StreamRestartSql, lane = true),
+    Query("e19_stream_upsert", e19StreamUpsert, e19StreamUpsertSql, lane = true),
+    Query("e19b_stream_upsert_bucketed", e19bStreamUpsertBucketed, e19StreamUpsertSql, lane = true),
+    Query("e19c_stream_rebucket", e19cStreamRebucket, e19StreamUpsertSql, lane = true),
+    Query("e20_tws_sessionize", e20TwsSessionize, e20TwsSessionizeSql, lane = true))
 }

@@ -77,11 +77,7 @@ object Queries52 {
       |      FROM src)
       |WHERE rn = 1""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e21_upsert_asof"  -> (e21UpsertAsOf _),
-    "e22_upsert_drift" -> (e22UpsertDrift _))
-
-  val oracles: Map[String, String] = Map(
-    "e21_upsert_asof"  -> e21UpsertAsOfSql,
-    "e22_upsert_drift" -> e22UpsertDriftSql)
+  val all: Seq[Query] = Seq(
+    Query("e21_upsert_asof", e21UpsertAsOf, e21UpsertAsOfSql, lane = true),
+    Query("e22_upsert_drift", e22UpsertDrift, e22UpsertDriftSql, lane = true))
 }

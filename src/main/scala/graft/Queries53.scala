@@ -36,9 +36,6 @@ object Queries53 {
       |      FROM events WHERE user_id = 1)
       |WHERE rn = 1""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e23_upsert_point" -> (e23UpsertPoint _))
-
-  val oracles: Map[String, String] = Map(
-    "e23_upsert_point" -> e23UpsertPointSql)
+  val all: Seq[Query] = Seq(
+    Query("e23_upsert_point", e23UpsertPoint, e23UpsertPointSql, lane = true))
 }

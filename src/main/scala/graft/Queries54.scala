@@ -49,9 +49,6 @@ object Queries54 {
       |              < b.lo + ((b.hi - b.lo + 1) * 3) // 6)
       |WHERE rn = 1""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e24_upsert_point_asof" -> (e24UpsertPointAsOf _))
-
-  val oracles: Map[String, String] = Map(
-    "e24_upsert_point_asof" -> e24UpsertPointAsOfSql)
+  val all: Seq[Query] = Seq(
+    Query("e24_upsert_point_asof", e24UpsertPointAsOf, e24UpsertPointAsOfSql, lane = true))
 }

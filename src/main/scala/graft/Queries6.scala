@@ -280,21 +280,12 @@ object Queries6 {
       |   OR length(trim(text)) = 0 OR reserved
       |   OR session_id NOT IN (SELECT c_custkey FROM customer WHERE c_custkey < 10)""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f1_funnel"     -> (f1Funnel _),
-    "r1_retention"  -> (r1Retention _),
-    "pipe1_funnel"  -> (pipe1CorpusFunnel _),
-    "q14_profile"   -> (q14Profile _),
-    "w5_moving_avg" -> (w5MovingAvg _),
-    "q15_above_avg" -> (q15AboveAvg _),
-    "p3_ingest_bad_ids" -> (p3IngestBadIds _))
-
-  val oracles: Map[String, String] = Map(
-    "f1_funnel"     -> f1FunnelSql,
-    "r1_retention"  -> r1RetentionSql,
-    "pipe1_funnel"  -> pipe1CorpusFunnelSql,
-    "q14_profile"   -> q14ProfileSql,
-    "w5_moving_avg" -> w5MovingAvgSql,
-    "q15_above_avg" -> q15AboveAvgSql,
-    "p3_ingest_bad_ids" -> p3IngestBadIdsSql)
+  val all: Seq[Query] = Seq(
+    Query("f1_funnel", f1Funnel, f1FunnelSql),
+    Query("r1_retention", r1Retention, r1RetentionSql),
+    Query("pipe1_funnel", pipe1CorpusFunnel, pipe1CorpusFunnelSql),
+    Query("q14_profile", q14Profile, q14ProfileSql),
+    Query("w5_moving_avg", w5MovingAvg, w5MovingAvgSql),
+    Query("q15_above_avg", q15AboveAvg, q15AboveAvgSql),
+    Query("p3_ingest_bad_ids", p3IngestBadIds, p3IngestBadIdsSql))
 }

@@ -732,51 +732,27 @@ object Queries7 {
        |FROM c GROUP BY doc_id""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t16_entropy"      -> (t16Entropy _),
-    "t15_lm_score"     -> (t15LmScore _),
-    "e10_stream_join"  -> (e10StreamJoin _),
-    "q17_corr"         -> (q17Corr _),
-    "t14_heavy_hitters" -> (t14HeavyHitters _),
-    "smp3_weighted_sample" -> (smp3WeightedSample _),
-    "q16_regression"   -> (q16Regression _),
-    "v13_mmr_rerank"   -> (v13MmrRerank _),
-    "v14_mmr_distributed" -> (v14MmrDistributed _),
-    "scd2_asof"        -> (scd2Asof _),
-    "i1_incremental_agg" -> (i1IncrementalAgg _),
-    "e9_stream_funnel" -> (e9StreamFunnel _),
-    "e11_stream_window" -> (e11StreamWindow _),
-    "t13_normalize"    -> (t13Normalize _),
-    "z1_zorder_key"    -> (z1ZorderKey _),
-    "pii1_redact"      -> (pii1Redact _),
-    "l1_boilerplate"   -> (l1Boilerplate _),
-    "t12_bm25"         -> (t12Bm25 _),
-    "h1_hybrid_rrf"    -> (h1HybridRrf _),
-    "c2_bloom_clean"   -> (c2BloomClean _),
-    "scd1_history"     -> (scd1History _),
-    "o1_embed_outliers" -> (o1EmbedOutliers _))
-
-  val oracles: Map[String, String] = Map(
-    "t16_entropy"      -> t16EntropySql,
-    "t15_lm_score"     -> t15LmScoreSql,
-    "e10_stream_join"  -> e10StreamJoinSql,
-    "q17_corr"         -> q17CorrSql,
-    "t14_heavy_hitters" -> t14HeavyHittersSql,
-    "smp3_weighted_sample" -> smp3WeightedSampleSql,
-    "q16_regression"   -> q16RegressionSql,
-    "v13_mmr_rerank"   -> v13MmrRerankSql,
-    "v14_mmr_distributed" -> v14MmrDistributedSql,
-    "scd2_asof"        -> scd2AsofSql,
-    "i1_incremental_agg" -> i1IncrementalAggSql,
-    "e9_stream_funnel" -> e9StreamFunnelSql,
-    "e11_stream_window" -> e11StreamWindowSql,
-    "t13_normalize"    -> t13NormalizeSql,
-    "z1_zorder_key"    -> z1ZorderKeySql,
-    "pii1_redact"      -> pii1RedactSql,
-    "l1_boilerplate"   -> l1BoilerplateSql,
-    "t12_bm25"         -> t12Bm25Sql,
-    "h1_hybrid_rrf"    -> h1HybridRrfSql,
-    "c2_bloom_clean"   -> c2BloomCleanSql,
-    "scd1_history"     -> scd1HistorySql,
-    "o1_embed_outliers" -> o1EmbedOutliersSql)
+  val all: Seq[Query] = Seq(
+    Query("t16_entropy", t16Entropy, t16EntropySql),
+    Query("t15_lm_score", t15LmScore, t15LmScoreSql),
+    Query("e10_stream_join", e10StreamJoin, e10StreamJoinSql, lane = true),
+    Query("q17_corr", q17Corr, q17CorrSql),
+    Query("t14_heavy_hitters", t14HeavyHitters, t14HeavyHittersSql),
+    Query("smp3_weighted_sample", smp3WeightedSample, smp3WeightedSampleSql),
+    Query("q16_regression", q16Regression, q16RegressionSql),
+    Query("v13_mmr_rerank", v13MmrRerank, v13MmrRerankSql),
+    Query("v14_mmr_distributed", v14MmrDistributed, v14MmrDistributedSql),
+    Query("scd2_asof", scd2Asof, scd2AsofSql),
+    Query("i1_incremental_agg", i1IncrementalAgg, i1IncrementalAggSql),
+    Query("e9_stream_funnel", e9StreamFunnel, e9StreamFunnelSql, lane = true),
+    Query("e11_stream_window", e11StreamWindow, e11StreamWindowSql, lane = true),
+    Query("t13_normalize", t13Normalize, t13NormalizeSql),
+    Query("z1_zorder_key", z1ZorderKey, z1ZorderKeySql),
+    Query("pii1_redact", pii1Redact, pii1RedactSql),
+    Query("l1_boilerplate", l1Boilerplate, l1BoilerplateSql),
+    Query("t12_bm25", t12Bm25, t12Bm25Sql),
+    Query("h1_hybrid_rrf", h1HybridRrf, h1HybridRrfSql),
+    Query("c2_bloom_clean", c2BloomClean, c2BloomCleanSql),
+    Query("scd1_history", scd1History, scd1HistorySql),
+    Query("o1_embed_outliers", o1EmbedOutliers, o1EmbedOutliersSql))
 }

@@ -456,33 +456,18 @@ object Queries8 {
       |FROM ev JOIN m ON ev.event_type = m.event_type
       |WHERE ev.v IS NULL""".stripMargin
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dp1_k_anonymity"   -> (dp1KAnonymity _),
-    "imp1_imputation"   -> (imp1Imputation _),
-    "pq1_pq_adc"        -> (pq1PqAdc _),
-    "d10_srp_neardup"   -> (d10SrpNearDup _),
-    "e12_hopping_window" -> (e12HoppingWindow _),
-    "path1_event_paths" -> (path1EventPaths _),
-    "w6_range_window"   -> (w6RangeWindow _),
-    "an1_rate_anomaly"  -> (an1RateAnomaly _),
-    "tt1_temporal_split" -> (tt1TemporalSplit _),
-    "tok1_bpe_pairs"    -> (tok1BpePairs _),
-    "ctx1_context_pack" -> (ctx1ContextPack _),
-    "chunk1_chunks"     -> (chunk1Chunks _),
-    "mk1_transitions"   -> (mk1Transitions _))
-
-  val oracles: Map[String, String] = Map(
-    "dp1_k_anonymity"   -> dp1KAnonymitySql,
-    "imp1_imputation"   -> imp1ImputationSql,
-    "pq1_pq_adc"        -> pq1PqAdcSql,
-    "d10_srp_neardup"   -> d10SrpNearDupSql,
-    "e12_hopping_window" -> e12HoppingWindowSql,
-    "path1_event_paths" -> path1EventPathsSql,
-    "w6_range_window"   -> w6RangeWindowSql,
-    "an1_rate_anomaly"  -> an1RateAnomalySql,
-    "tt1_temporal_split" -> tt1TemporalSplitSql,
-    "tok1_bpe_pairs"    -> tok1BpePairsSql,
-    "ctx1_context_pack" -> ctx1ContextPackSql,
-    "chunk1_chunks"     -> chunk1ChunksSql,
-    "mk1_transitions"   -> mk1TransitionsSql)
+  val all: Seq[Query] = Seq(
+    Query("dp1_k_anonymity", dp1KAnonymity, dp1KAnonymitySql),
+    Query("imp1_imputation", imp1Imputation, imp1ImputationSql),
+    Query("pq1_pq_adc", pq1PqAdc, pq1PqAdcSql),
+    Query("d10_srp_neardup", d10SrpNearDup, d10SrpNearDupSql),
+    Query("e12_hopping_window", e12HoppingWindow, e12HoppingWindowSql),
+    Query("path1_event_paths", path1EventPaths, path1EventPathsSql),
+    Query("w6_range_window", w6RangeWindow, w6RangeWindowSql),
+    Query("an1_rate_anomaly", an1RateAnomaly, an1RateAnomalySql),
+    Query("tt1_temporal_split", tt1TemporalSplit, tt1TemporalSplitSql),
+    Query("tok1_bpe_pairs", tok1BpePairs, tok1BpePairsSql),
+    Query("ctx1_context_pack", ctx1ContextPack, ctx1ContextPackSql),
+    Query("chunk1_chunks", chunk1Chunks, chunk1ChunksSql),
+    Query("mk1_transitions", mk1Transitions, mk1TransitionsSql))
 }

@@ -307,23 +307,13 @@ object Queries9 {
        |FROM pd JOIN dp USING (sh) GROUP BY pd.doc_id""".stripMargin
   }
 
-  val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ks1_ks_drift"      -> (ks1KsDrift _),
-    "psi1_psi_drift"    -> (psi1PsiDrift _),
-    "auc1_sim_auc"      -> (auc1SimAuc _),
-    "ed1_editdist_join" -> (ed1EditDistJoin _),
-    "cdc1_apply"        -> (cdc1Apply _),
-    "pca1_dim_variance" -> (pca1DimVariance _),
-    "phr1_phrase_match" -> (phr1PhraseMatch _),
-    "d11_span_dup"      -> (d11SpanDupFraction _))
-
-  val oracles: Map[String, String] = Map(
-    "ks1_ks_drift"      -> ks1KsDriftSql,
-    "psi1_psi_drift"    -> psi1PsiDriftSql,
-    "auc1_sim_auc"      -> auc1SimAucSql,
-    "ed1_editdist_join" -> ed1EditDistJoinSql,
-    "cdc1_apply"        -> cdc1ApplySql,
-    "pca1_dim_variance" -> pca1DimVarianceSql,
-    "phr1_phrase_match" -> phr1PhraseMatchSql,
-    "d11_span_dup"      -> d11SpanDupFractionSql)
+  val all: Seq[Query] = Seq(
+    Query("ks1_ks_drift", ks1KsDrift, ks1KsDriftSql),
+    Query("psi1_psi_drift", psi1PsiDrift, psi1PsiDriftSql),
+    Query("auc1_sim_auc", auc1SimAuc, auc1SimAucSql),
+    Query("ed1_editdist_join", ed1EditDistJoin, ed1EditDistJoinSql),
+    Query("cdc1_apply", cdc1Apply, cdc1ApplySql),
+    Query("pca1_dim_variance", pca1DimVariance, pca1DimVarianceSql),
+    Query("phr1_phrase_match", phr1PhraseMatch, phr1PhraseMatchSql),
+    Query("d11_span_dup", d11SpanDupFraction, d11SpanDupFractionSql))
 }

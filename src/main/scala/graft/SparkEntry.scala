@@ -18,57 +18,29 @@ object SparkEntry {
       .select(col("id"), col("text"), col("label"), round(col("score"), 6).as("score"))
   }
 
-  /** The per-file query registries in merge order — exposed (alongside
-    * [[oracleParts]]) so RegistrySpec can assert that `Map ++` merging
-    * never silently SHADOWS a query: a duplicate name across two files
-    * would drop one implementation from the verify/bench surface with
-    * no error anywhere else. */
-  private[graft] val registryParts
-      : Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
-    Queries.registry, Queries2.registry, Queries3.registry,
-    Queries4.registry, Queries5.registry, Queries6.registry,
-    Queries7.registry, Queries8.registry, Queries9.registry,
-    Queries10.registry, Queries11.registry, Queries12.registry,
-    Queries13.registry, Queries14.registry, Queries15.registry,
-    Queries16.registry, Queries17.registry, Queries18.registry,
-    Queries19.registry, Queries20.registry, Queries21.registry,
-    Queries22.registry, Queries23.registry, Queries24.registry,
-    Queries25.registry, Queries26.registry, Queries27.registry,
-    Queries28.registry, Queries29.registry, Queries30.registry,
-    Queries31.registry, Queries32.registry, Queries33.registry,
-    Queries34.registry, Queries35.registry, Queries36.registry,
-    Queries37.registry, Queries38.registry, Queries39.registry,
-    Queries40.registry, Queries41.registry, Queries42.registry,
-    Queries43.registry, Queries44.registry, Queries45.registry,
-    Queries46.registry, Queries47.registry, Queries48.registry,
-    Queries49.registry, Queries50.registry, Queries51.registry,
-    Queries52.registry, Queries53.registry, Queries54.registry)
-
-  private[graft] val oracleParts: Seq[Map[String, String]] = Seq(
-    Queries.oracles, Queries2.oracles, Queries3.oracles,
-    Queries4.oracles, Queries5.oracles, Queries6.oracles,
-    Queries7.oracles, Queries8.oracles, Queries9.oracles,
-    Queries10.oracles, Queries11.oracles, Queries12.oracles,
-    Queries13.oracles, Queries14.oracles, Queries15.oracles,
-    Queries16.oracles, Queries17.oracles, Queries18.oracles,
-    Queries19.oracles, Queries20.oracles, Queries21.oracles,
-    Queries22.oracles, Queries23.oracles, Queries24.oracles,
-    Queries25.oracles, Queries26.oracles, Queries27.oracles,
-    Queries28.oracles, Queries29.oracles, Queries30.oracles,
-    Queries31.oracles, Queries32.oracles, Queries33.oracles,
-    Queries34.oracles, Queries35.oracles, Queries36.oracles,
-    Queries37.oracles, Queries38.oracles, Queries39.oracles,
-    Queries40.oracles, Queries41.oracles, Queries42.oracles,
-    Queries43.oracles, Queries44.oracles, Queries45.oracles,
-    Queries46.oracles, Queries47.oracles, Queries48.oracles,
-    Queries49.oracles, Queries50.oracles, Queries51.oracles,
-    Queries52.oracles, Queries53.oracles, Queries54.oracles)
+  /** Every registered query, one entry each, in module order: the one
+    * table [[queries]], [[oracleSql]] and Bench's streaming-lane set are
+    * derived from. RegistrySpec fails on a name stated twice. */
+  private[graft] val all: Seq[Query] = Seq(
+    Queries.all, Queries2.all, Queries3.all, Queries4.all, Queries5.all,
+    Queries6.all, Queries7.all, Queries8.all, Queries9.all, Queries10.all,
+    Queries11.all, Queries12.all, Queries13.all, Queries14.all,
+    Queries15.all, Queries16.all, Queries17.all, Queries18.all,
+    Queries19.all, Queries20.all, Queries21.all, Queries22.all,
+    Queries23.all, Queries24.all, Queries25.all, Queries26.all,
+    Queries27.all, Queries28.all, Queries29.all, Queries30.all,
+    Queries31.all, Queries32.all, Queries33.all, Queries34.all,
+    Queries35.all, Queries36.all, Queries37.all, Queries38.all,
+    Queries39.all, Queries40.all, Queries41.all, Queries42.all,
+    Queries43.all, Queries44.all, Queries45.all, Queries46.all,
+    Queries47.all, Queries48.all, Queries49.all, Queries50.all,
+    Queries51.all, Queries52.all, Queries53.all, Queries54.all).flatten
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registryParts.reduce(_ ++ _)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = oracleParts.reduce(_ ++ _)
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = all.map(q => q.name -> q.oracle).toMap
 }

@@ -54,7 +54,7 @@ class DppSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("src5_runtime_prune carries the runtime filter in its plan") {
-    val p = Queries28.registry("src5_runtime_prune")(spark, sf001)
+    val p = SparkEntry.queries("src5_runtime_prune")(spark, sf001)
       .queryExecution.executedPlan.toString
     assert(p.contains("RuntimeFilters: [dynamicpruning"),
       s"src5 lost its runtime filter:\n$p")

@@ -7,7 +7,7 @@ package graft
 class PlanSpec extends SparkSpec {
 
   private def plan(q: String): String =
-    Queries.registry(q)(spark, sf001).queryExecution.executedPlan.toString
+    SparkEntry.queries(q)(spark, sf001).queryExecution.executedPlan.toString
 
   test("v2_knn_topk: session predicate pushed to the parquet scan, heap top-k") {
     val p = plan("v2_knn_topk")
@@ -46,16 +46,13 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("LeftSemi") && p.contains("Broadcast"))
   }
 
-  private def plan2(q: String): String =
-    Queries2.registry(q)(spark, sf001).queryExecution.executedPlan.toString
-
   test("x2_range_join: interval join runs as an equi-join, not a nested loop") {
-    val p = plan2("x2_range_join")
+    val p = plan("x2_range_join")
     assert(!p.contains("NestedLoop") && !p.contains("CartesianProduct"))
   }
 
   test("q11_salted_join: joins on (key, salt) — no broadcast of the fact side") {
-    val p = plan2("q11_salted_join")
+    val p = plan("q11_salted_join")
     // the salted dimension explode must sit under the join, and the join
     // keys must include the salt column
     assert(p.contains("__salt"))
@@ -63,63 +60,59 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q9_cube: expand + partial aggregation before the exchange") {
-    val p = plan2("q9_cube")
+    val p = plan("q9_cube")
     assert(p.contains("Expand"))
     assert(p.contains("partial_sum"))
   }
 
   test("t6_ngram_freq: top-50 compiles to TakeOrderedAndProject over partial counts") {
-    val p = plan2("t6_ngram_freq")
+    val p = plan("t6_ngram_freq")
     assert(p.contains("TakeOrderedAndProject"))
     assert(p.contains("partial_count") || p.contains("count(1)"))
   }
 
   test("e7_first_touch: single partial-aggregating shuffle, no window sort") {
-    val p = plan2("e7_first_touch")
+    val p = plan("e7_first_touch")
     assert(p.contains("partial_min") || p.contains("partial_"))
     assert(!p.contains("Window"))
   }
 
   test("v12_quantize: pure map-side projection — no shuffle at all") {
-    val p = plan2("v12_quantize")
+    val p = plan("v12_quantize")
     assert(!p.contains("Exchange"))
   }
 
-  private def planN(reg: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame],
-      q: String): String =
-    reg(q)(spark, sf001).queryExecution.executedPlan.toString
-
   test("q13_grouping_sets: one Expand + partial aggregation, single exchange") {
-    val p = planN(Queries5.registry, "q13_grouping_sets")
+    val p = plan("q13_grouping_sets")
     assert(p.contains("Expand"))
     assert(p.contains("partial_sum"))
   }
 
   test("t9_rarity: the vocabulary side is broadcast, not shuffled") {
-    assert(planN(Queries5.registry, "t9_rarity").contains("BroadcastHashJoin"))
+    assert(plan("t9_rarity").contains("BroadcastHashJoin"))
   }
 
   test("a6_centroids: partial aggregation below the (label, dim) exchange") {
-    val p = planN(Queries5.registry, "a6_centroids")
+    val p = plan("a6_centroids")
     assert(p.contains("partial_sum"))
     assert(p.contains("Generate explode") || p.contains("posexplode"))
   }
 
   test("smp1_stratified_sample: map-side filter, no shuffle at all") {
-    assert(!planN(Queries4.registry, "smp1_stratified_sample").contains("Exchange"))
+    assert(!plan("smp1_stratified_sample").contains("Exchange"))
   }
 
   test("mix1_domain_mixture: thresholds broadcast back to the corpus scan") {
-    assert(planN(Queries4.registry, "mix1_domain_mixture").contains("BroadcastHashJoin"))
+    assert(plan("mix1_domain_mixture").contains("BroadcastHashJoin"))
   }
 
   test("c1_contamination: benchmark shingle set is a broadcast semi-join") {
-    val p = planN(Queries3.registry, "c1_contamination")
+    val p = plan("c1_contamination")
     assert(p.contains("LeftSemi") && p.contains("Broadcast"))
   }
 
   test("q18_star5: dims broadcast, orderdate range pushed to the scan") {
-    val p = planN(Queries24.registry, "q18_star5")
+    val p = plan("q18_star5")
     assert(p.contains("BroadcastHashJoin"))
     assert(p.contains("GreaterThanOrEqual(o_orderdate"), s"date not pushed:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"))
@@ -159,7 +152,7 @@ class PlanSpec extends SparkSpec {
 
   test("src2_scored_topk: TopN + score + threshold absorb into the DSv2" +
       " scan — no Spark-side sort over the store") {
-    val p = planN(Queries28.registry, "src2_scored_topk")
+    val p = plan("src2_scored_topk")
     assert(p.contains("PushedTopN: ORDER BY [score DESC, id ASC] LIMIT 15"),
       s"scored TopN not delegated to the store:\n$p")
     assert(p.contains("PushedScore: cosine(embedding"),
@@ -176,7 +169,7 @@ class PlanSpec extends SparkSpec {
   test("src4_stats_broadcast: the store's reported statistics reach the" +
       " logical plan and the join broadcasts") {
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-    val df = Queries28.registry("src4_stats_broadcast")(spark, sf001)
+    val df = SparkEntry.queries("src4_stats_broadcast")(spark, sf001)
     val rel = df.queryExecution.optimizedPlan.collectFirst {
       case r: DataSourceV2ScanRelation => r
     }.getOrElse(fail("no DSv2 scan in src4's optimized plan"))
@@ -194,7 +187,7 @@ class PlanSpec extends SparkSpec {
 
   test("kw1_kruskal_wallis: data-sized stages are partial-aggregated" +
       " equi-joins — no cartesian, no data-sized nested loop") {
-    val p = planN(Queries50.registry, "kw1_kruskal_wallis")
+    val p = plan("kw1_kruskal_wallis")
     assert(p.contains("partial_sum") || p.contains("partial_count"),
       s"no map-side partial aggregation:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in the plan:\n$p")

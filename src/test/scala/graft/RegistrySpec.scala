@@ -5,18 +5,21 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The driver-contract registry's structural invariants — the coverage
   * claims rest on these, and nothing else checks them:
   *
-  *  1. No duplicate query names across the per-file registries: the
-  *     `Map ++` merge silently SHADOWS on collision, dropping one
-  *     implementation from the verify/bench surface with no error.
-  *  2. Every registered query has a DuckDB oracle and vice versa: a
-  *     query without an oracle silently downgrades to the driver's
-  *     weaker rows-only check (and an oracle without a query is dead
-  *     SQL). The contract allows omitting oracles for genuinely
+  *  1. No query name is stated twice across the entries of
+  *     `SparkEntry.all`: `toMap` keeps the last binding on collision,
+  *     dropping one implementation from the verify/bench surface with no
+  *     error.
+  *  2. Every registered query has a non-blank DuckDB oracle: a query
+  *     without one silently downgrades to the driver's weaker rows-only
+  *     check. The contract allows omitting oracles for genuinely
   *     non-SQL-expressible ops — such a query must be added to the
   *     explicit exemption set here, so the downgrade is a reviewed
-  *     decision, never drift. (None exist today: 284/284.)
+  *     decision, never drift. (None exist today.)
+  *  3. Every query name the bench harness refers to is registered: a
+  *     renamed query would otherwise drop out of its gate role without
+  *     an error.
   *
-  * Pure map algebra — no SparkSession. */
+  * Pure collection algebra — no SparkSession. */
 class RegistrySpec extends AnyFunSuite {
 
   /** Queries whose semantics cannot be expressed in DuckDB SQL and are
@@ -24,30 +27,39 @@ class RegistrySpec extends AnyFunSuite {
   private val oracleExempt: Set[String] = Set.empty
 
   test("no query name is silently shadowed by the registry merge") {
-    // Scope: this catches CROSS-FILE duplicates. A duplicate key inside
-    // one file's Map(...) literal is deduplicated (last binding wins) at
-    // construction, before any keySet exists — no runtime check can see
-    // it. Cross-file is the realistic hazard (50 files, names minted per
-    // round); within-file copy-paste lands adjacent in review diffs.
-    val perFile = SparkEntry.registryParts.map(_.keySet)
-    val dups = perFile.flatten.groupBy(identity)
+    // Every entry is a `Query(...)` in a Seq, so this sees a duplicate
+    // inside one file as well as one across files; only the derived maps
+    // collapse it.
+    val names = SparkEntry.all.map(_.name)
+    val dups = names.groupBy(identity)
       .collect { case (k, vs) if vs.size > 1 => k }
-    assert(dups.isEmpty, s"duplicate query names across files: $dups")
-    assert(SparkEntry.queries.size == perFile.map(_.size).sum)
-    val oDups = SparkEntry.oracleParts.map(_.keySet).flatten
-      .groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
-    assert(oDups.isEmpty, s"duplicate oracle names across files: $oDups")
+    assert(dups.isEmpty, s"query names registered twice: ${dups.toSeq.sorted}")
+    assert(SparkEntry.queries.size == names.size)
+    assert(SparkEntry.oracleSql.size == names.size)
   }
 
   test("every query has an oracle and every oracle has a query") {
+    val blank = SparkEntry.all
+      .filter(q => q.oracle == null || q.oracle.trim.isEmpty)
+      .map(_.name).toSet
+    assert((blank -- oracleExempt).isEmpty,
+      s"queries with no DuckDB oracle (add one, or exempt with a " +
+        s"reason): ${(blank -- oracleExempt).toSeq.sorted}")
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
-    assert((q -- o -- oracleExempt).isEmpty,
-      s"queries with no DuckDB oracle (add one, or exempt with a " +
-        s"reason): ${(q -- o -- oracleExempt).toSeq.sorted}")
-    assert((o -- q).isEmpty,
-      s"oracles with no query (dead SQL): ${(o -- q).toSeq.sorted}")
+    assert(q == o, s"query/oracle key mismatch: ${((q -- o) ++ (o -- q)).toSeq.sorted}")
     assert((oracleExempt -- q).isEmpty,
       s"stale exemptions: ${(oracleExempt -- q).toSeq.sorted}")
+  }
+
+  test("every query name the bench harness refers to is registered") {
+    val q = SparkEntry.queries.keySet
+    val named = Map(
+      "canaryName" -> Set(Bench.canaryName),
+      "queryFamilies" -> Bench.queryFamilies.keySet,
+      "validationBaselines" -> Bench.validationBaselines)
+    for ((field, names) <- named)
+      assert((names -- q).isEmpty,
+        s"Bench.$field names unregistered queries: ${(names -- q).toSeq.sorted}")
   }
 }
