@@ -36,7 +36,7 @@ object GraftFunctions {
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("cosine_sim",
       info("cosine_sim", "cosine_sim(a, b) - cosine similarity; NULL on dim mismatch/zero magnitude"),
-      (es: Seq[Expression]) => CosineSim(es(0), es(1))),
+      (es: Seq[Expression]) => VectorScore(Metric.Cosine, es(0), es(1))),
     ("jaccard_sim",
       info("jaccard_sim", "jaccard_sim(a, b) - set jaccard over BIGINT arrays"),
       (es: Seq[Expression]) => JaccardSim(es(0), es(1))),

@@ -302,7 +302,7 @@ object Queries32 {
     val pairs = block.select(col("id").as("id1"), col("embedding").as("__e1"))
       .join(block.select(col("id").as("id2"), col("embedding").as("__e2")),
         col("id1") < col("id2"))
-      .where(graft.functions.Native.cosineSim(col("__e1"), col("__e2"))
+      .where(graft.functions.Similarity.cosine(col("__e1"), col("__e2"))
         >= DbsCos)
       .select(col("id1"), col("id2"))
     operators.Dbscan.cluster(block.select(col("id")), pairs, DbsMinPts)

@@ -220,7 +220,7 @@ object Queries33 {
     val train = block.where(!isTest).select(col("vec_id").as("__nid"),
       col("embedding").as("__ne"), col("label").as("__pl"))
     val scored = train.crossJoin(broadcast(test))
-      .withColumn("__s", graft.functions.Native.cosineSim(col("__te"), col("__ne")))
+      .withColumn("__s", graft.functions.Similarity.cosine(col("__te"), col("__ne")))
     val wTop = Window.partitionBy(col("__tid"))
       .orderBy(col("__s").desc, col("__nid").asc)
     val votes = scored.withColumn("__rn", row_number().over(wTop))

@@ -37,7 +37,7 @@ object Queries39 {
       .join(block.select(col("id").as("o"), col("embedding").as("__e2")),
         col("p") =!= col("o"))
       .select(col("p"), col("o"),
-        (lit(1.0) - graft.functions.Native.cosineSim(col("__e1"), col("__e2")))
+        (lit(1.0) - graft.functions.Similarity.cosine(col("__e1"), col("__e2")))
           .as("d"))
     // strict: the brute-force block is symmetric by construction, so the
     // contract check is a free null-guard — and a live consumer of it

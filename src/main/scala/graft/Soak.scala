@@ -171,6 +171,30 @@ object Soak {
   def partFence(s: SparkSession, dir: String): Long =
     strideOf(Tables.lineitem(s, dir), "l_partkey", dir, 1)
 
+  // sp2 verifies one merge-dot per candidate pair and this corpus is
+  // the degenerate 31-token-vocabulary case where candidates ≈ all
+  // intra-replica pairs — linear in the factor but ~35 s/decade of
+  // fixture, so its soak stops at 10x (still a full decade past the
+  // bench scale; the 100x decade is covered by the three cheap paths).
+  // pr1 stops at 10x (six edge-linear join iterations, structurally
+  // identical to hits1 which DOES carry the 100x decade for the graph
+  // family); sem1 and hits1 run the full two decades.
+  val maxFactor = Map("sp2_sparse_prefix" -> 10,
+    "pr1_pagerank" -> 10,
+    "e18_stream_restart" -> 10,
+    "e19_stream_upsert" -> 10,
+    "e19b_stream_upsert_bucketed" -> 10,
+    "e19c_stream_rebucket" -> 10,
+    "e20_tws_sessionize" -> 10,
+    "e21_upsert_asof" -> 10,
+    "e22_upsert_drift" -> 10,
+    "e23_upsert_point" -> 10,
+    "e24_upsert_point_asof" -> 10).withDefaultValue(Int.MaxValue)
+
+  /** A soak entry that runs the registered query as the bench does. */
+  private def registered(name: String): (String, (SparkSession, String) => DataFrame) =
+    name -> SparkEntry.queries(name)
+
   def soakQueries(factor: Int): Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "d2_minhash_pairs" -> ((s: SparkSession, dir: String) =>
       operators.Dedup.minhashNearDups(Tables.documents(s, dir), "doc_id", "text",
@@ -206,8 +230,8 @@ object Soak {
       operators.Dedup.srpNearDups(Tables.embeddings(s, dir), "vec_id", "embedding",
           threshold = 0.6, nPlanes = planesFor(factor), bands = 4)
         .select(col("id1"), col("id2"), round(col("cosine"), 6).as("cosine"))),
-    "a7_ivf_trained" -> SparkEntry.queries("a7_ivf_trained"),
-    "sp2_sparse_prefix" -> SparkEntry.queries("sp2_sparse_prefix"),
+    registered("a7_ivf_trained"),
+    registered("sp2_sparse_prefix"),
     // k scales with the corpus (bounded cluster size — the SemDeDup scale
     // knob, like d10's LSH bits: k grows with N so cluster size, hence
     // within-cluster pair work per cluster, stays constant) and the
@@ -219,10 +243,10 @@ object Soak {
       Queries25.semanticDedupWith(embs,
         operators.Ann.kmeans(embs.where(col("vec_id") < 6000), k, iters = 2))
     }),
-    "pr1_pagerank" -> SparkEntry.queries("pr1_pagerank"),
+    registered("pr1_pagerank"),
     // rides the same shifted-key orders/lineitem replicas as pr1: the
     // purchase bipartite graph grows by the factor as disjoint components
-    "hits1_hubs_authorities" -> SparkEntry.queries("hits1_hubs_authorities"),
+    registered("hits1_hubs_authorities"),
     // same replicated purchase graph; disjoint copies leave the peel
     // DEPTH unchanged while edges grow by the factor, so rounds (printed)
     // flat + time ~linear is the expected signature
@@ -236,16 +260,16 @@ object Soak {
     // token-suffixed replicas: near-dup pairs stay intra-replica (rg1's
     // join subject grows linearly), and the bigram vocabulary grows by
     // the factor while zipf1's rank input stays vocabulary-bounded
-    "rg1_ngram_f1" -> SparkEntry.queries("rg1_ngram_f1"),
-    "zipf1_bigram_zipf" -> SparkEntry.queries("zipf1_bigram_zipf"),
+    registered("rg1_ngram_f1"),
+    registered("zipf1_bigram_zipf"),
     // same shifted-key replicas: the thresholded trade graph grows as
     // disjoint components. bfs1's seeds live in replica 0, so the
     // settled set stays CONSTANT while each round's edge semi-join scans
     // a factor-larger edge list — the "expand a fixed seed set over a
     // huge graph" posture; lp1 resolves communities in every replica
     // independently (work and output both ~linear)
-    "bfs1_hop_distance" -> SparkEntry.queries("bfs1_hop_distance"),
-    "lp1_label_prop" -> SparkEntry.queries("lp1_label_prop"),
+    registered("bfs1_hop_distance"),
+    registered("lp1_label_prop"),
     // pair mining needs INDEPENDENT replicas like the dedup miners: the
     // soak fixture shifts order keys but shares part keys, so the item
     // space is re-disjointed here by deriving the replica index from the
@@ -301,17 +325,17 @@ object Soak {
     // discount value tables SATURATE (bounded domains) while the price
     // value table grows by the factor — the soak exercises the
     // distinct-value prefix-sum + join-back rank machinery at 60M rows
-    "spr1_spearman" -> SparkEntry.queries("spr1_spearman"),
+    registered("spr1_spearman"),
     // rides the shifted-key orders replicas: 5 EM rounds, each one full
     // scan folding six DECIMAL moments per component + a scalar param
     // broadcast back — per-unit cost should FALL (per-round job overhead
     // amortizes over a factor-larger scan, the pr1 signature)
-    "gmm1_em_mixture" -> SparkEntry.queries("gmm1_em_mixture"),
+    registered("gmm1_em_mixture"),
     // same replicas: replicas SHARE the calendar, so the daily series —
     // and the pairwise-slope table, quadratic in DAYS by design — stay
     // exactly 1x-sized while the scan feeding the daily aggregate grows
     // by the factor. "Quadratic in days, flat in rows" made measurable.
-    "ts1_theil_sen" -> SparkEntry.queries("ts1_theil_sen"),
+    registered("ts1_theil_sen"),
     // the scale path the fixture query's doc comment names: eps-pairs
     // from the SRP banded candidate join (d10's machinery, bits sized to
     // N) over the FULL embedding corpus, feeding the identical clustering
@@ -340,23 +364,23 @@ object Soak {
     // while replay cadence (6 chunks + dual sentinels) stays fixed — the
     // heaviest streaming shape, soaked. Output grows by the factor (the
     // memory-sink drain is the measured product, as in the 1x bench).
-    "e17_stream_outer_join" -> SparkEntry.queries("e17_stream_outer_join"),
+    registered("e17_stream_outer_join"),
     // the INNER interval-join replay (the bench's second-heaviest query):
     // same shifted-user replicas — per-user purchase->click fan-out stays
     // exactly 1x while the range-join state holds factor x more keys, so
     // matches (the measured drain) grow linearly with zero cross-replica
     // pairs by construction
-    "e10_stream_join" -> SparkEntry.queries("e10_stream_join"),
+    registered("e10_stream_join"),
     // late-data accounting: the % 7 = 0 late slice grows with the users;
     // the contract (closed windows never reopen) must hold at every
     // scale, so the soak both times the replay and re-proves the on-time-
     // only output shape at factor x state
-    "e16_stream_late" -> SparkEntry.queries("e16_stream_late"),
+    registered("e16_stream_late"),
     // d13's replay over the token-suffixed document replicas: the static-
     // corpus index and the new-crawl slice both grow by the factor while
     // near-dup pairs stay intra-replica (the d2 soak argument applied to
     // the incremental path)
-    "e15_stream_neardup" -> SparkEntry.queries("e15_stream_neardup"),
+    registered("e15_stream_neardup"),
     // restart recovery at factor x state: shifted-user replicas grow
     // what the SECOND query incarnation must recover from the checkpoint
     // (exact-dedup ids + open windows) by the factor, while the replay
@@ -366,14 +390,14 @@ object Soak {
     // production form is e13's dropDuplicatesWithinWatermark), so the
     // 100x decade would measure that named design choice, not the
     // restart path.
-    "e18_stream_restart" -> SparkEntry.queries("e18_stream_restart"),
+    registered("e18_stream_restart"),
     // continuous versioned ingest at factor x keys: the per-batch LWW
     // merge rewrites O(table), so with a fixed batch count the decade
     // should cost ~the factor — the measured form of the operator's own
     // caveat ("at scale each version rewrite is partition-pruned to the
     // id-buckets the batch touched"; the unpruned rewrite is what this
     // lane prices). Output = one row per user, grows by the factor.
-    "e19_stream_upsert" -> SparkEntry.queries("e19_stream_upsert"),
+    registered("e19_stream_upsert"),
     // the BUCKETED ingest at factor x keys: in this replay shape each
     // micro-batch is ~table/6 — far above the 32-bucket count — so
     // every batch touches every bucket and pruning CANNOT help; what
@@ -381,57 +405,56 @@ object Soak {
     // promote overhead at a growing table (the regime where pruning
     // wins, batch << table, is BASELINE.md "Round-11 upsert-layout
     // decades").
-    "e19b_stream_upsert_bucketed" ->
-      SparkEntry.queries("e19b_stream_upsert_bucketed"),
+    registered("e19b_stream_upsert_bucketed"),
     // the MID-INGEST REBUCKET cadence at factor x keys: the one-time
     // generation rewrite is O(table) by design (what rebucket trades a
     // decade of fat-bucket merges for), so the lane should track e19b
     // plus ~one extra table pass; the checkpoint resume, the _NBUCKETS
     // handoff, and the in-flight guard all ride at factor x state.
-    "e19c_stream_rebucket" -> SparkEntry.queries("e19c_stream_rebucket"),
+    registered("e19c_stream_rebucket"),
     // the transformWithState sessionizer at factor x users: RocksDB
     // value-state cells grow by the factor (one per user) while the
     // replay cadence (8 chunks) stays fixed — the declared big-state
     // migration API soaked on the provider it requires.
-    "e20_tws_sessionize" -> SparkEntry.queries("e20_tws_sessionize"),
+    registered("e20_tws_sessionize"),
     // the AS-OF cadence at factor x keys: the mid-feed stitch reads one
     // version per bucket (fixed bucket count, fatter buckets — O(prefix
     // table)), then the keep-1 vacuum and the loud-horizon assertion
     // ride at factor x version sizes; should track e19b minus the
     // second half's merges plus ~one prefix-table read.
-    "e21_upsert_asof" -> SparkEntry.queries("e21_upsert_asof"),
+    registered("e21_upsert_asof"),
     // the DRIFT cadence at factor x keys: two incarnations over one
     // checkpoint, cross-era mergeSchema merges in the second — should
     // track e19c (same two-drain shape) without the rebucket's one-time
     // table rewrite.
-    "e22_upsert_drift" -> SparkEntry.queries("e22_upsert_drift"),
+    registered("e22_upsert_drift"),
     // the POINT-LOOKUP cadence at factor x keys: the ingest tracks
     // e19b; the lookup itself must NOT grow with the factor (one
     // bucket's newest version at a fixed bucket count grows linearly,
     // but the lane's in-row plan assertion keeps it ONE directory —
     // the O(bucket)-not-O(table) claim rides into the soak unchanged).
-    "e23_upsert_point" -> SparkEntry.queries("e23_upsert_point"),
+    registered("e23_upsert_point"),
     // the AS-OF POINT-LOOKUP cadence: e23's ingest + single-dir read
     // at a mid-feed version plus e21's keep-1 vacuum and loud-horizon
     // lane — should track e23 plus the vacuum's version sweep; the
     // in-row plan assertion again pins the read to ONE directory at
     // every factor.
-    "e24_upsert_point_asof" -> SparkEntry.queries("e24_upsert_point_asof"),
+    registered("e24_upsert_point_asof"),
     // shifted custkeys: the true distinct count grows by the factor
     // while the sketch output stays m=256 longs — the "registers, not
     // rows, cross the wire" posture measured
-    "hll1_distinct_sketch" -> SparkEntry.queries("hll1_distinct_sketch"),
+    registered("hll1_distinct_sketch"),
     // same replicas: d x w cells stay fixed while the keyed input grows
-    "cms1_countmin" -> SparkEntry.queries("cms1_countmin"),
+    registered("cms1_countmin"),
     // shifted-key trade graph grows as disjoint components (bfs1's
     // substrate): sweep 1 stays inside replica 0's component while each
     // round's edge semi-join scans a factor-larger list — the expand-a-
     // seed-over-a-huge-graph posture, doubled
-    "dia1_double_sweep" -> SparkEntry.queries("dia1_double_sweep"),
+    registered("dia1_double_sweep"),
     // shifted-key orders replicas: the rank machinery's value table and
     // the order-statistic selections both grow by the factor
-    "mci1_median_ci" -> SparkEntry.queries("mci1_median_ci"),
-    "tail1_hill_estimator" -> SparkEntry.queries("tail1_hill_estimator"),
+    registered("mci1_median_ci"),
+    registered("tail1_hill_estimator"),
     // ---- the DSv2 store's runtime bucket pruning, measured at scale ----
     // The store is re-bucketed per decade (16 x factor directories — the
     // production move as a store grows) and probed by a CONSTANT id
@@ -489,8 +512,8 @@ object Soak {
     // path at scale: two date slices each factor-larger, two register
     // arrays summed "+", compared bin-for-bin — flat merge cost over a
     // growing corpus is the family's wire-shape claim, measured.
-    "hq1_hist_quantiles" -> SparkEntry.queries("hq1_hist_quantiles"),
-    "hq2_hist_merge" -> SparkEntry.queries("hq2_hist_merge"))
+    registered("hq1_hist_quantiles"),
+    registered("hq2_hist_merge"))
 
   /** Fingerprint of the SOURCE tables a derived tmp artifact is built
     * from: every parquet part's (name, length, mtime) under the two
@@ -665,25 +688,6 @@ object Soak {
     spark.read.parquet(s"$baseDir/region.parquet")
       .write.format("noop").mode("overwrite").save()
     val names = soakQueries(1).map(_._1)
-    // sp2 verifies one merge-dot per candidate pair and this corpus is
-    // the degenerate 31-token-vocabulary case where candidates ≈ all
-    // intra-replica pairs — linear in the factor but ~35 s/decade of
-    // fixture, so its soak stops at 10x (still a full decade past the
-    // bench scale; the 100x decade is covered by the three cheap paths).
-    // pr1 stops at 10x (six edge-linear join iterations, structurally
-    // identical to hits1 which DOES carry the 100x decade for the graph
-    // family); sem1 and hits1 run the full two decades.
-    val maxFactor = Map("sp2_sparse_prefix" -> 10,
-      "pr1_pagerank" -> 10,
-      "e18_stream_restart" -> 10,
-      "e19_stream_upsert" -> 10,
-      "e19b_stream_upsert_bucketed" -> 10,
-      "e19c_stream_rebucket" -> 10,
-      "e20_tws_sessionize" -> 10,
-      "e21_upsert_asof" -> 10,
-      "e22_upsert_drift" -> 10,
-      "e23_upsert_point" -> 10,
-      "e24_upsert_point_asof" -> 10).withDefaultValue(Int.MaxValue)
     val only = sys.env.get("SPARK_GRAFT_SOAK_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = names.filter(n => only.forall(_.exists(n.startsWith)))

@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar kernels shared by the native expressions. Each reproduces its
-  * higher-order-function counterpart in [[TextHash]]/[[Embed]]/[[graft.operators.Dedup]]
-  * bit-for-bit (same integer arithmetic, same left-to-right double folds), so
-  * swapping native for HOF never changes results — the specs assert equality.
+  * higher-order-function counterpart in [[TextHash]]/[[Embed]]/[[Similarity]]/
+  * [[graft.operators.Dedup]] bit-for-bit (same integer arithmetic, same
+  * left-to-right double folds), so swapping native for HOF never changes
+  * results — the specs assert equality.
   */
 object Kernels {
   val Mod: Long = TextHash.Mod
@@ -317,23 +318,83 @@ object Kernels {
     org.apache.spark.sql.catalyst.InternalRow(maxAbs, sumAbsQ, errSum / n.toDouble)
   }
 
+  // --- vector folds ---------------------------------------------------
+  // One left-to-right double loop per fold over the first `n` values, in
+  // the order of the HOF forms in [[Similarity]]; every vector scorer
+  // calls these.
+
+  /** Σ xᵢ·yᵢ */
+  def dot(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x(i) * y(i); i += 1 }
+    s
+  }
+
+  /** Σ (xᵢ − yᵢ)² */
+  def sqDist(x: Array[Double], y: Array[Double], n: Int): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < n) { val d = x(i) - y(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** dot(x,y) / (‖x‖·‖y‖), or null when either magnitude is zero. */
+  def cosine(x: Array[Double], y: Array[Double], n: Int): java.lang.Double = {
+    var d = 0.0; var sa = 0.0; var sb = 0.0
+    var i = 0
+    while (i < n) {
+      val a = x(i); val b = y(i)
+      d += a * b; sa += a * a; sb += b * b
+      i += 1
+    }
+    val ma = math.sqrt(sa); val mb = math.sqrt(sb)
+    if (ma == 0.0 || mb == 0.0) null else java.lang.Double.valueOf(d / (ma * mb))
+  }
+
+  // per-thread widening buffers, grown on demand: no allocation per row
+  private val widenBufs = new ThreadLocal[Array[Array[Double]]] {
+    override def initialValue() = new Array[Array[Double]](2)
+  }
+
+  /** `a` widened to doubles in this thread's buffer `slot`, or null when
+    * `nulls` is set and an element is NULL. */
+  private def widen(a: ArrayData, isFloat: Boolean, nulls: Boolean,
+                    slot: Int): Array[Double] = {
+    val n = a.numElements()
+    val bufs = widenBufs.get()
+    if (bufs(slot) == null || bufs(slot).length < n) bufs(slot) = new Array[Double](n)
+    val out = bufs(slot)
+    var i = 0
+    while (i < n) {
+      if (nulls && a.isNullAt(i)) return null
+      out(i) = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      i += 1
+    }
+    out
+  }
+
+  /** [[VectorScore]]'s eval and codegen: null on a dimension mismatch or
+    * on a NULL element (checked only where `xNulls`/`yNulls` allows one),
+    * else `metric` over the widened inputs. */
+  def score(metric: Metric, x: ArrayData, xFloat: Boolean, xNulls: Boolean,
+            y: ArrayData, yFloat: Boolean, yNulls: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    val xs = widen(x, xFloat, xNulls, 0)
+    if (xs == null) return null
+    val ys = widen(y, yFloat, yNulls, 1)
+    if (ys == null) null else metric.score(xs, ys, n)
+  }
+
   /** Squared L2 distances to every row of a codebook — see [[CodebookDists]]. */
   def codebookDistsArr(x: ArrayData, cb: Array[Array[Double]],
                        isFloat: Boolean): GenericArrayData = {
+    val xs = widen(x, isFloat, nulls = false, 0)
     val out = new Array[Double](cb.length)
     var c = 0
     while (c < cb.length) {
-      val cen = cb(c)
-      var s = 0.0
-      var i = 0
-      val n = math.min(x.numElements(), cen.length)
-      while (i < n) {
-        val xi = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-        val d = xi - cen(i)
-        s += d * d
-        i += 1
-      }
-      out(c) = s
+      out(c) = sqDist(xs, cb(c), math.min(x.numElements(), cb(c).length))
       c += 1
     }
     new GenericArrayData(out)
@@ -342,20 +403,12 @@ object Kernels {
   /** Nearest-centroid index (argmin, first on ties) — see [[CodebookAssign]]. */
   def codebookAssignIdx(x: ArrayData, cb: Array[Array[Double]],
                         isFloat: Boolean): Int = {
+    val xs = widen(x, isFloat, nulls = false, 0)
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < cb.length) {
-      val cen = cb(c)
-      var s = 0.0
-      var i = 0
-      val n = math.min(x.numElements(), cen.length)
-      while (i < n) {
-        val xi = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-        val d = xi - cen(i)
-        s += d * d
-        i += 1
-      }
+      val s = sqDist(xs, cb(c), math.min(x.numElements(), cb(c).length))
       if (s < bestD) { bestD = s; best = c }
       c += 1
     }
@@ -365,19 +418,11 @@ object Kernels {
   /** Dot products against a literal row matrix — see [[CodebookDots]]. */
   def codebookDotsArr(x: ArrayData, mx: Array[Array[Double]],
                       isFloat: Boolean): GenericArrayData = {
+    val xs = widen(x, isFloat, nulls = false, 0)
     val out = new Array[Double](mx.length)
     var r = 0
     while (r < mx.length) {
-      val h = mx(r)
-      var s = 0.0
-      var i = 0
-      val n = math.min(x.numElements(), h.length)
-      while (i < n) {
-        val xi = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-        s += xi * h(i)
-        i += 1
-      }
-      out(r) = s
+      out(r) = dot(xs, mx(r), math.min(x.numElements(), mx(r).length))
       r += 1
     }
     new GenericArrayData(out)
@@ -423,20 +468,41 @@ object Kernels {
   }
 }
 
-/** Fused single-pass cosine similarity with the reference null semantics
-  * (dim mismatch -> null, zero magnitude -> null; reference
-  * src/memory.rs:150-161) plus the HOF form's NULL-element rule: a NULL
-  * element on either side -> null, checked only on an input whose
-  * `ArrayType.containsNull` allows one. One traversal instead of the
-  * three the HOF composition makes, and no per-element lambda
-  * interpretation.
-  * Arithmetic is ordered exactly like [[Similarity.cosine]]:
-  * dot/(sqrt(sa)*sqrt(sb)) over left-to-right double folds.
-  *
-  * Implements doGenCode, so the kernel compiles INTO the whole-stage
-  * codegen loop (a CodegenFallback would run interpreted inside it).
+/** A vector similarity metric — the collection-level distance config of
+  * the reference's Qdrant store (src/config.rs:65-69,
+  * src/vector_store.rs:44-56). Euclid is inverted to higher-is-better the
+  * way that client exposes it (src/vector_store.rs:50). */
+sealed abstract class Metric(val name: String) extends Serializable {
+  /** The score over the first `n` values; null where the metric has none. */
+  def score(x: Array[Double], y: Array[Double], n: Int): java.lang.Double = this match {
+    case Metric.Cosine => Kernels.cosine(x, y, n)
+    case Metric.Dot => Kernels.dot(x, y, n)
+    case Metric.Euclid => 1.0 / (1.0 + math.sqrt(Kernels.sqDist(x, y, n)))
+  }
+}
+object Metric {
+  case object Cosine extends Metric("cosine")
+  case object Dot extends Metric("dot")
+  case object Euclid extends Metric("euclid")
+
+  /** The one reader of a metric name. */
+  def parse(name: String): Metric = name.toLowerCase match {
+    case "cosine" => Cosine
+    case "dot" => Dot
+    case "euclid" | "euclidean" => Euclid
+    case m => throw new IllegalArgumentException(s"unknown distance metric: $m")
+  }
+}
+
+/** Vector similarity under `metric` with the reference null semantics
+  * (dimension mismatch -> null, cosine at zero magnitude -> null;
+  * reference src/memory.rs:150-161) plus the HOF forms' NULL-element rule:
+  * a NULL element on either side -> null, checked only on an input whose
+  * `ArrayType.containsNull` allows one. Bit-identical to the HOF forms in
+  * [[Similarity]]. Eval and codegen both call [[Kernels.score]]; codegen
+  * as a static call inside the whole-stage loop.
   */
-case class CosineSim(left: Expression, right: Expression)
+case class VectorScore(metric: Metric, left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -448,86 +514,30 @@ case class CosineSim(left: Expression, right: Expression)
     }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects ARRAY<FLOAT|DOUBLE>, got ${left.dataType} / ${right.dataType}")
+      s"${metric.name} score expects ARRAY<FLOAT|DOUBLE>, got ${left.dataType} / ${right.dataType}")
   }
 
-  private def elemType(e: Expression) =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  private def isFloat(e: Expression) =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
   private def nullElems(e: Expression) =
     e.dataType.asInstanceOf[ArrayType].containsNull
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    val xf = elemType(left) == FloatType
-    val yf = elemType(right) == FloatType
-    val xn = nullElems(left)
-    val yn = nullElems(right)
-    var dot = 0.0; var sa = 0.0; var sb = 0.0
-    var i = 0
-    while (i < n) {
-      if ((xn && x.isNullAt(i)) || (yn && y.isNullAt(i))) return null
-      val xi = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xi * yi; sa += xi * xi; sb += yi * yi
-      i += 1
-    }
-    val ma = math.sqrt(sa); val mb = math.sqrt(sb)
-    if (ma == 0.0 || mb == 0.0) null
-    else java.lang.Double.valueOf(dot / (ma * mb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.score(metric, a.asInstanceOf[ArrayData], isFloat(left), nullElems(left),
+      b.asInstanceOf[ArrayData], isFloat(right), nullElems(right))
 
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val lg = left.genCode(ctx)
-    val rg = right.genCode(ctx)
-    def getter(e: Expression, arr: String, i: String): String =
-      if (elemType(e) == FloatType) s"(double) $arr.getFloat($i)"
-      else s"$arr.getDouble($i)"
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val dot = ctx.freshName("dot")
-    val sa = ctx.freshName("sa")
-    val sb = ctx.freshName("sb")
-    val xi = ctx.freshName("xi")
-    val yi = ctx.freshName("yi")
-    val ma = ctx.freshName("ma")
-    val mb = ctx.freshName("mb")
-    val nul = ctx.freshName("nullElem")
-    val nullChecks = Seq(left -> lg.value.toString, right -> rg.value.toString)
-      .collect { case (e, arr) if nullElems(e) => s"$arr.isNullAt($i)" }
-    val nullGuard =
-      if (nullChecks.isEmpty) ""
-      else s"if (${nullChecks.mkString(" || ")}) { $nul = true; break; }"
-    ev.copy(code = code"""
-      ${lg.code}
-      ${rg.code}
-      boolean ${ev.isNull} = true;
-      double ${ev.value} = 0.0;
-      if (!${lg.isNull} && !${rg.isNull}) {
-        int $n = ${lg.value}.numElements();
-        if ($n == ${rg.value}.numElements()) {
-          double $dot = 0.0; double $sa = 0.0; double $sb = 0.0;
-          boolean $nul = false;
-          for (int $i = 0; $i < $n; $i++) {
-            $nullGuard
-            double $xi = ${getter(left, lg.value.toString, i)};
-            double $yi = ${getter(right, rg.value.toString, i)};
-            $dot += $xi * $yi; $sa += $xi * $xi; $sb += $yi * $yi;
-          }
-          double $ma = java.lang.Math.sqrt($sa);
-          double $mb = java.lang.Math.sqrt($sb);
-          if (!$nul && $ma != 0.0 && $mb != 0.0) {
-            ${ev.isNull} = false;
-            ${ev.value} = $dot / ($ma * $mb);
-          }
-        }
-      }""")
+    val m = ctx.addReferenceObj("metric", metric, "graft.functions.Metric")
+    val tmp = ctx.freshName("score")
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      java.lang.Double $tmp = graft.functions.Kernels.score(
+        $m, $a, ${isFloat(left)}, ${nullElems(left)},
+        $b, ${isFloat(right)}, ${nullElems(right)});
+      if ($tmp == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = $tmp.doubleValue(); }""")
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
@@ -814,93 +824,64 @@ case class QuantizeStats(child: Expression)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Squared L2 distances from a float/double vector to every centroid of a
-  * literal codebook (k x dim doubles — IVF index metadata). Left-to-right
-  * per-dimension folds, matching the zip_with+aggregate HOF form the
-  * DuckDB oracle mirrors. One native eval replaces k HOF folds, and the
-  * plan stops carrying k 64-element literal arrays. */
-case class CodebookDists(child: Expression, codebook: Seq[Seq[Double]])
-    extends UnaryExpression {
-  @transient private lazy val cb: Array[Array[Double]] =
-    codebook.map(_.toArray).toArray
+/** Shared shape of the literal-matrix kernels: a float/double vector
+  * against every row of a literal k x dim matrix of index metadata (IVF
+  * and PQ codebooks, SRP hyperplanes), widened once per row. Eval and
+  * codegen call the same `Kernels.<kernel>`; the matrix rides along as a
+  * referenced object (one instance per task), not as inlined source. */
+abstract class MatrixKernel(kernel: String) extends UnaryExpression with Serializable {
+  def matrix: Seq[Seq[Double]]
+  @transient protected lazy val rows: Array[Array[Double]] =
+    matrix.map(_.toArray).toArray
+  @transient protected lazy val isFloat =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
-      s"codebook_dists expects ARRAY<FLOAT|DOUBLE>, got $dt")
+      s"$prettyName expects ARRAY<FLOAT|DOUBLE>, got $dt")
   }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  @transient private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  override def nullSafeEval(v: Any): Any =
-    Kernels.codebookDistsArr(v.asInstanceOf[ArrayData], cb, isFloat)
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    // the codebook rides along as a referenced object (k x dim metadata,
-    // one instance per task), not as inlined source
-    val cbRef = ctx.addReferenceObj("cb", cb, "double[][]")
+    val ref = ctx.addReferenceObj("rows", rows, "double[][]")
     nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = graft.functions.Kernels.codebookDistsArr($in, $cbRef, $isFloat);")
+      s"${ev.value} = graft.functions.Kernels.$kernel($in, $ref, $isFloat);")
   }
+}
+
+/** Squared L2 distances to every centroid of a codebook: left-to-right
+  * per-dimension folds, matching the zip_with+aggregate HOF form the
+  * DuckDB oracle mirrors. One native eval replaces k HOF folds, and the
+  * plan stops carrying k 64-element literal arrays. */
+case class CodebookDists(child: Expression, matrix: Seq[Seq[Double]])
+    extends MatrixKernel("codebookDistsArr") {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullSafeEval(v: Any): Any =
+    Kernels.codebookDistsArr(v.asInstanceOf[ArrayData], rows, isFloat)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** Nearest-centroid index (argmin of [[CodebookDists]], first occurrence
   * on ties — the array_position(array_min) contract). */
-case class CodebookAssign(child: Expression, codebook: Seq[Seq[Double]])
-    extends UnaryExpression {
-  @transient private lazy val cb: Array[Array[Double]] =
-    codebook.map(_.toArray).toArray
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"codebook_assign expects ARRAY<FLOAT|DOUBLE>, got $dt")
-  }
+case class CodebookAssign(child: Expression, matrix: Seq[Seq[Double]])
+    extends MatrixKernel("codebookAssignIdx") {
   override def dataType: DataType = IntegerType
-  @transient private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def nullSafeEval(v: Any): Any =
     java.lang.Integer.valueOf(
-      Kernels.codebookAssignIdx(v.asInstanceOf[ArrayData], cb, isFloat))
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val cbRef = ctx.addReferenceObj("cb", cb, "double[][]")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = graft.functions.Kernels.codebookAssignIdx($in, $cbRef, $isFloat);")
-  }
+      Kernels.codebookAssignIdx(v.asInstanceOf[ArrayData], rows, isFloat))
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Dot products against a literal row matrix (projection metadata — SRP
-  * hyperplanes, random-projection bases). Same shape and fold order as
-  * [[CodebookDists]]: per row of the matrix, a left-to-right per-dimension
-  * sum of x_i * h_i with floats widened to double, matching the
+/** Dot products against a literal row matrix (SRP hyperplanes,
+  * random-projection bases): per row, a left-to-right sum of x_i * h_i
+  * with floats widened to double, matching the
   * list_sum(list_transform(...)) form the DuckDB oracle mirrors. */
 case class CodebookDots(child: Expression, matrix: Seq[Seq[Double]])
-    extends UnaryExpression {
-  @transient private lazy val mx: Array[Array[Double]] =
-    matrix.map(_.toArray).toArray
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"codebook_dots expects ARRAY<FLOAT|DOUBLE>, got $dt")
-  }
+    extends MatrixKernel("codebookDotsArr") {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  @transient private lazy val isFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def nullSafeEval(v: Any): Any =
-    Kernels.codebookDotsArr(v.asInstanceOf[ArrayData], mx, isFloat)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val mxRef = ctx.addReferenceObj("mx", mx, "double[][]")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = graft.functions.Kernels.codebookDotsArr($in, $mxRef, $isFloat);")
-  }
+    Kernels.codebookDotsArr(v.asInstanceOf[ArrayData], rows, isFloat)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
@@ -947,7 +928,6 @@ private[graft] object StringInput {
 object Native {
   private def col(e: Expression): Column = GraftBridge.column(e)
   private def ex(c: Column): Expression = GraftBridge.expression(c)
-  def cosineSim(a: Column, b: Column): Column = col(CosineSim(ex(a), ex(b)))
   def sparseDotDec(a: Column, b: Column): Column = col(SparseDotDec(ex(a), ex(b)))
   def sparseDotDbl(a: Column, b: Column): Column = col(SparseDotDbl(ex(a), ex(b)))
   def denseDotDbl(a: Column, b: Column): Column = col(DenseDotDbl(ex(a), ex(b)))

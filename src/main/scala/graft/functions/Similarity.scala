@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Vector similarity scoring as composable, codegen-friendly `Column`
@@ -21,6 +21,11 @@ import org.apache.spark.sql.functions._
   * All arithmetic is in double precision with a deterministic
   * left-to-right fold over the array, so results match an ANSI-SQL oracle
   * performing the same cast-then-fold.
+  *
+  * The query path scores with the native [[VectorScore]] ([[cosine]],
+  * [[score]]); the higher-order forms ([[cosineHof]], [[dotScore]],
+  * [[euclidScore]]) are the SQL-mirrorable references the specs and the
+  * DuckDB oracle check it against.
   */
 object Similarity {
   private val D = "double"
@@ -39,8 +44,7 @@ object Similarity {
     when(a.isNull || b.isNull || size(a) =!= size(b), nullD).otherwise(body)
 
   /** Cosine similarity with the reference's NULL rules — higher-order
-    * composition (3 array traversals). Kept as the SQL-mirrorable
-    * reference form; the query path uses the fused native expression. */
+    * composition (3 array traversals). */
   def cosineHof(a: Column, b: Column): Column = dimGuard(a, b) {
     val ma = magnitude(a)
     val mb = magnitude(b)
@@ -48,9 +52,9 @@ object Similarity {
       .otherwise(dotProduct(a, b) / (ma * mb))
   }
 
-  /** Cosine similarity — fused single-pass native expression
-    * ([[CosineSim]]); bit-identical to [[cosineHof]]. */
-  def cosine(a: Column, b: Column): Column = Native.cosineSim(a, b)
+  /** Cosine similarity — the native [[VectorScore]]; bit-identical to
+    * [[cosineHof]]. */
+  def cosine(a: Column, b: Column): Column = vectorScore(Metric.Cosine, a, b)
 
   /** Plain dot-product score (Qdrant `Distance::Dot`). */
   def dotScore(a: Column, b: Column): Column = dimGuard(a, b)(dotProduct(a, b))
@@ -68,10 +72,8 @@ object Similarity {
 
   /** Metric dispatch mirroring the collection-level distance config. */
   def score(metric: String, a: Column, b: Column): Column =
-    metric.toLowerCase match {
-      case "cosine"             => cosine(a, b)
-      case "dot"                => dotScore(a, b)
-      case "euclid" | "euclidean" => euclidScore(a, b)
-      case m => throw new IllegalArgumentException(s"unknown distance metric: $m")
-    }
+    vectorScore(Metric.parse(metric), a, b)
+
+  private def vectorScore(m: Metric, a: Column, b: Column): Column =
+    GraftBridge.column(VectorScore(m, GraftBridge.expression(a), GraftBridge.expression(b)))
 }

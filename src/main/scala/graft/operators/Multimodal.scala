@@ -413,6 +413,4 @@ object Multimodal {
 object MultimodalSql {
   val kindExpr: String =
     "(['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1]"
-
-  def nBytes(payload: String): String = s"CAST(octet_length($payload) AS BIGINT)"
 }

@@ -182,8 +182,8 @@ object SparseSim {
     * onto the pair list; at fixture scale it broadcasts, at 100 TB it
     * hash-joins on the pair ids.
     */
-  private def verifyPairs(cand: DataFrame, ix: CorpusIndex,
-                          threshold: Double): DataFrame = {
+  private[graft] def verifyPairs(cand: DataFrame, ix: CorpusIndex,
+                                 threshold: Double): DataFrame = {
     val side =
       if (ix.nDocs <= BroadcastMaxDocs) broadcast(ix.vecs) else ix.vecs
     cand
@@ -241,8 +241,8 @@ object SparseSim {
     * this index prefix the MINIMAL one — the right choice when the
     * corpus-wide term order carries no signal (flat document
     * frequencies, tiny vocabularies). */
-  private def candidatesProbeIndex(ix: CorpusIndex,
-                                   threshold: Double): DataFrame = {
+  private[graft] def candidatesProbeIndex(ix: CorpusIndex,
+                                          threshold: Double): DataFrame = {
     val byWeight = Window.partitionBy(col("doc_id"))
       .orderBy(col("__wn").desc, col("tok"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -423,12 +423,6 @@ object SparseSim {
     else
       verifyPairs(candidatesProbeIndex(ix, threshold), ix, threshold)
   }
-
-  // dev-only taps for stage-level profiling (ProbeSp2)
-  private[graft] def probeCandidatesForDebug(ix: CorpusIndex, t: Double) =
-    candidatesProbeIndex(ix, t)
-  private[graft] def verifyForDebug(cand: DataFrame, ix: CorpusIndex, t: Double) =
-    verifyPairs(cand, ix, t)
 
   /** [[cosinePairsPrefixIndexed]] over an ephemeral index built from a
     * postings table — the non-cached form. */

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.Similarity
+import graft.functions.{Kernels, Similarity}
 
 /** Brute-force scored top-k KNN over a vector table — the reference's
   * flagship read path (reference: src/memory.rs:99-136, src/routes.rs:429-453
@@ -130,8 +130,7 @@ object VectorSearch {
         if (selected.isEmpty) col("__rel")
         else {
           val sims = selected.toSeq.map(s =>
-            round(graft.functions.Native.cosineSim(
-              col("__emb"), typedlit(s._4)), 6))
+            round(Similarity.cosine(col("__emb"), typedlit(s._4)), 6))
           val maxSim = if (sims.size == 1) sims.head else greatest(sims: _*)
           round(lit(lambda) * col("__rel") - lit(1.0 - lambda) * maxSim, 6)
         }
@@ -179,15 +178,10 @@ object VectorSearch {
       .orderBy(col("rel").desc, col(idCol))
       .collect()
       .map(row => (row.getLong(0), row.getDouble(1),
-        row.getSeq[Float](2).toArray))
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var sa = 0.0; var sb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; sa += x * x; sb += y * y; i += 1
-      }
-      dot / (math.sqrt(sa) * math.sqrt(sb))
-    }
+        row.getSeq[Float](2).map(_.toDouble).toArray))
+    // pool rows passed topK's non-null score: no magnitude is zero
+    def cos(a: Array[Double], b: Array[Double]): Double =
+      Kernels.cosine(a, b, a.length).doubleValue
     val embOf = pool.map(p => p._1 -> p._3).toMap
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
     val remaining = scala.collection.mutable.LinkedHashMap(

@@ -29,6 +29,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.Metric
+
 /** DataSource V2 read path for the bucketed memory layout
   * ([[graft.operators.MemoryOps.writeBucketed]]: parquet files under
   * `__bucket=k/` dirs, bucket = [[graft.operators.MemoryOps.bucketOf]]) that
@@ -94,51 +96,19 @@ object MemoryBucketSource {
     * cosine + threshold + limit (src/vector_store.rs:265-310). The vector
     * arrives as a comma-separated float option; floats round-trip
     * `toString`/`toFloat` exactly, so the store scores the same f32
-    * values the table path does. */
+    * values the table path does, with the same [[Metric]] kernel. An
+    * unknown metric fails here, when the source is loaded. */
   private[sources] case class ScoreSpec(
-      vec: Array[Double], metric: String, column: String, output: String)
+      vec: Array[Double], metric: Metric, column: String, output: String)
 
   private[sources] def scoreSpecFrom(get: String => String): Option[ScoreSpec] =
     Option(get("scoreVector")).map { s =>
       ScoreSpec(
         s.split(",").map(_.trim.toFloat.toDouble),
-        Option(get("scoreMetric")).getOrElse("cosine").toLowerCase,
+        Metric.parse(Option(get("scoreMetric")).getOrElse("cosine")),
         Option(get("scoreColumn")).getOrElse("embedding"),
         Option(get("scoreOutput")).getOrElse("score"))
     }
-
-  /** The store-side scorer over the first `n` values of `emb`. MIRRORS
-    * [[graft.functions.Similarity.score]] bit-for-bit: the same
-    * deterministic left-to-right double folds over f32-promoted
-    * elements, the same NULL rules (dimension mismatch → null; zero
-    * magnitude on either cosine side → null; the reader nulls a vector
-    * with a NULL element before it gets here) — so a scored row coming
-    * off the store is indistinguishable from one scored by the Catalyst
-    * kernel. */
-  private[sources] def computeScore(emb: Array[Double], n: Int, q: Array[Double],
-                                    metric: String): java.lang.Double = {
-    if (n != q.length) return null
-    metric match {
-      case "cosine" =>
-        var dot = 0.0; var sa = 0.0; var sb = 0.0; var i = 0
-        while (i < q.length) {
-          val x = emb(i); val y = q(i)
-          dot += x * y; sa += x * x; sb += y * y; i += 1
-        }
-        val ma = math.sqrt(sa); val mb = math.sqrt(sb)
-        if (ma == 0.0 || mb == 0.0) null
-        else java.lang.Double.valueOf(dot / (ma * mb))
-      case "dot" =>
-        var d = 0.0; var i = 0
-        while (i < q.length) { d += emb(i) * q(i); i += 1 }
-        java.lang.Double.valueOf(d)
-      case "euclid" | "euclidean" =>
-        var s = 0.0; var i = 0
-        while (i < q.length) { val t = emb(i) - q(i); s += t * t; i += 1 }
-        java.lang.Double.valueOf(1.0 / (1.0 + math.sqrt(s)))
-      case m => throw new IllegalArgumentException(s"unknown distance metric: $m")
-    }
-  }
 
   /** A filter over the computed score, evaluated inside the reader with
     * SQL three-valued semantics: a null score fails every accepted
@@ -725,7 +695,7 @@ private[sources] class MemoryScan(
         .mkString("ORDER BY [", ", ", s"] LIMIT $n")
     }
     val sc = score.fold("none")(sp =>
-      s"${sp.metric}(${sp.column}, [${sp.vec.length}d]) AS ${sp.output}")
+      s"${sp.metric.name}(${sp.column}, [${sp.vec.length}d]) AS ${sp.output}")
     val ag = agg.fold("none")(_.map(a =>
       s"${a.fn}(${a.column.getOrElse("*")})").mkString("[", ", ", "]"))
     s"GraftMemoryBucketScan path=$path, " +
@@ -1023,7 +993,8 @@ private[sources] class StoreRowReader(
     else if (s.doubles == null)
       throw new UnsupportedOperationException(
         s"score column ${s.name} must be ARRAY<FLOAT|DOUBLE>")
-    else MemoryBucketSource.computeScore(s.doubles, s.size, sp.vec, sp.metric)
+    else if (s.size != sp.vec.length) null
+    else sp.metric.score(s.doubles, sp.vec, s.size)
 
   /** Advance to the next row that passes every accepted score predicate,
     * computing the score once per surviving row. */

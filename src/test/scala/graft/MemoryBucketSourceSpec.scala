@@ -258,6 +258,11 @@ class MemoryBucketSourceSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       assert(got == want && got.size == 8, s"metric $metric diverged")
     }
+    // an unknown metric fails when the source is loaded, before any row
+    val e = intercept[IllegalArgumentException](
+      graft.sources.MemoryBucketSource.search(
+        spark, storeDir, nBuckets, q, k = 8, metric = "manhattan"))
+    assert(e.getMessage.contains("unknown distance metric"), e.getMessage)
   }
 
   test("scored search drops dimension-mismatch rows store-side (null score)") {

@@ -41,6 +41,34 @@ class NativeKernelsSpec extends SparkSpec {
     }
   }
 
+  test("native dot and euclid == HOF dotScore/euclidScore (incl. null cases)") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = Tables.queryVector(spark, sf0001, 0L)
+    val hof = Map("dot" -> (Similarity.dotScore _), "euclid" -> (Similarity.euclidScore _))
+    for ((metric, ref) <- hof) {
+      def same(in: org.apache.spark.sql.DataFrame, a: String, b: String) = {
+        val both = in.select(
+          Similarity.score(metric, col(a), col(b)).as("nat"),
+          ref(col(a), col(b)).as("hof"))
+        assert(both.where(col("nat") =!= col("hof") ||
+          col("nat").isNull =!= col("hof").isNull).count() == 0, metric)
+      }
+      same(e.withColumn("q", typedlit(q)), "embedding", "q")
+      // double elements, a dimension mismatch, and a NULL element;
+      // interpreted (local relation) and code-generated (RDD scan) alike
+      val edge = Seq(
+        (Seq(Some(1.5), Some(-2.0)), Seq(Some(0.25), Some(4.0))),
+        (Seq(Some(1.0), Some(0.0)), Seq(Some(1.0), Some(0.0), Some(0.0))),
+        (Seq(Some(1.0), None, Some(2.0)), Seq(Some(1.0), Some(1.0), Some(1.0))))
+      for (in <- Seq(edge.toDF("a", "b"),
+          spark.createDataset(spark.sparkContext.parallelize(edge)).toDF("a", "b"))) {
+        same(in, "a", "b")
+        assert(in.select(Similarity.score(metric, col("a"), col("b")).as("s"))
+          .where(col("s").isNotNull).count() == 1, metric)
+      }
+    }
+  }
+
   test("native shingle hashes == array_distinct(HOF shingle hashes)") {
     val both = docs.select(
       Native.shingleHashes(col("text"), 2).as("nat"),

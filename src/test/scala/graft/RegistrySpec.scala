@@ -15,9 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     non-SQL-expressible ops — such a query must be added to the
   *     explicit exemption set here, so the downgrade is a reviewed
   *     decision, never drift. (None exist today.)
-  *  3. Every query name the bench harness refers to is registered: a
-  *     renamed query would otherwise drop out of its gate role without
-  *     an error.
+  *  3. Every query name the bench and soak harnesses refer to is
+  *     registered: a renamed query would otherwise drop out of its gate
+  *     role without an error, or fail only when Soak runs.
   *
   * Pure collection algebra — no SparkSession. */
 class RegistrySpec extends AnyFunSuite {
@@ -61,5 +61,13 @@ class RegistrySpec extends AnyFunSuite {
     for ((field, names) <- named)
       assert((names -- q).isEmpty,
         s"Bench.$field names unregistered queries: ${(names -- q).toSeq.sorted}")
+    // building the soak table looks each `registered` entry up (no query
+    // runs); a misspelt name throws here
+    val soak = Soak.soakQueries(1).map(_._1).toSet
+    val capped = Soak.maxFactor.keySet
+    assert((capped -- soak).isEmpty,
+      s"Soak.maxFactor names no soak entry: ${(capped -- soak).toSeq.sorted}")
+    assert((capped -- q).isEmpty,
+      s"Soak.maxFactor names unregistered queries: ${(capped -- q).toSeq.sorted}")
   }
 }

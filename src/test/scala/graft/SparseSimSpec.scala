@@ -110,7 +110,7 @@ class SparseSimSpec extends SparkSpec {
   test("unfused one-sided path (beyond-broadcast fallback) still == brute") {
     // the dense fused path handles every small flat corpus, so the
     // shuffled candidate path would otherwise lose coverage: drive it
-    // directly through the debug taps on the same corpora the exactness
+    // directly through its two stages on the same corpora the exactness
     // property uses
     val rnd = new scala.util.Random(41)
     val vocab = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
@@ -122,8 +122,8 @@ class SparseSimSpec extends SparkSpec {
     val ix = SparseSim.buildIndex(docs, "doc_id", "text")
     for (t <- Seq(0.5, 0.9)) {
       val brute = canon(SparseSim.cosinePairsBruteIndexed(ix, t))
-      val unfused = canon(SparseSim.verifyForDebug(
-        SparseSim.probeCandidatesForDebug(ix, t), ix, t))
+      val unfused = canon(SparseSim.verifyPairs(
+        SparseSim.candidatesProbeIndex(ix, t), ix, t))
       assert(unfused == brute, s"threshold $t")
       assert(brute.nonEmpty, s"threshold $t: degenerate fixture")
     }
