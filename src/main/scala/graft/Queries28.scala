@@ -42,11 +42,7 @@ object Queries28 {
     })
 
   private def source(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.format("graft.sources.MemoryBucketSource")
-      .option("path", ensureStore(spark, sfDir))
-      .option("nBuckets", NBuckets.toString)
-      .option("idCol", "id")
-      .load()
+    MemoryBucketSource.load(spark, ensureStore(spark, sfDir), NBuckets)
 
   // ---------------------------------------------------------------------
   // SRC1: point lookup + top-N through the source. The IN-set prunes to

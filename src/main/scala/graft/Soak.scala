@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.MemoryBucketSource
+
 /** Dev main: 100× soak of the heaviest PRODUCTION-PATH queries (d2
   * minhash-LSH pairs, d10 SRP pairs, a7 trained IVF, sp2 prefix-filtered
   * sparse cosine) — one more decade past the 10× scaling probe
@@ -591,52 +593,44 @@ object Soak {
       out
     })
 
+  /** The decade's store frame (written on first touch) and its buckets. */
+  private def soakStore(s: SparkSession, dir: String, factor: Int): (DataFrame, Int) = {
+    val nb = soakBucketsFor(factor)
+    (MemoryBucketSource.load(s, ensureSoakStore(s, dir, nb), nb), nb)
+  }
+
+  private def perLabel(df: DataFrame): DataFrame =
+    df.groupBy(col("label"))
+      .agg(count(lit(1)).as("n_docs"), max(col("id")).as("max_id"))
+
   private[graft] def soakSkewFetch(s: SparkSession, dir: String,
       factor: Int): DataFrame = {
-    val nb = soakBucketsFor(factor)
-    val store = ensureSoakStore(s, dir, nb)
+    val (store, nb) = soakStore(s, dir, factor)
     // the trailing filter is a no-op on the data but load-bearing for
     // the plan: Spark's partition-pruning rule only injects a runtime
     // filter when the build side carries a LIKELY-SELECTIVE predicate
     // (src5's dim has lang/n_chars filters; a bare dim scan gets none)
     val dim = s.read.parquet(ensureSkewDim(s, dir, nb))
       .where(col("id") >= 0L)
-    s.read.format("graft.sources.MemoryBucketSource")
-      .option("path", store).option("nBuckets", nb.toString)
-      .option("idCol", "id").load()
-      .join(dim, "id")
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n_docs"), max(col("id")).as("max_id"))
+    perLabel(store.join(dim, "id"))
   }
 
   private def soakFallbackFetch(s: SparkSession, dir: String,
       factor: Int): DataFrame = {
-    val nb = soakBucketsFor(factor)
-    val store = ensureSoakStore(s, dir, nb)
+    val (store, _) = soakStore(s, dir, factor)
     val dim = Tables.documents(s, "/root/testdata/sf0.1")
       .where(col("lang") === "de" && col("n_chars") > 400)
       .select(col("doc_id").cast("double").as("idd"))
-    val st = s.read.format("graft.sources.MemoryBucketSource")
-      .option("path", store).option("nBuckets", nb.toString)
-      .option("idCol", "id").load()
-    st.join(dim, st("id").cast("double") === col("idd"))
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n_docs"), max(col("id")).as("max_id"))
+    perLabel(store.join(dim, store("id").cast("double") === col("idd")))
   }
 
   private def soakStoreFetch(s: SparkSession, dir: String,
       factor: Int): DataFrame = {
-    val nb = soakBucketsFor(factor)
-    val store = ensureSoakStore(s, dir, nb)
+    val (store, _) = soakStore(s, dir, factor)
     val dim = Tables.documents(s, "/root/testdata/sf0.1")
       .where(col("lang") === "de" && col("n_chars") > 400)
       .select(col("doc_id").as("id"))
-    s.read.format("graft.sources.MemoryBucketSource")
-      .option("path", store).option("nBuckets", nb.toString)
-      .option("idCol", "id").load()
-      .join(dim, "id")
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n_docs"), max(col("id")).as("max_id"))
+    perLabel(store.join(dim, "id"))
   }
 
   def time(spark: SparkSession, fn: (SparkSession, String) => DataFrame,

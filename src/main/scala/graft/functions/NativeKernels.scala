@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.connector.catalog.functions.ScalarFunction
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -374,7 +376,7 @@ object Kernels {
     out
   }
 
-  /** [[VectorScore]]'s eval and codegen: null on a dimension mismatch or
+  /** [[VectorFn]]'s body: null on a dimension mismatch or
     * on a NULL element (checked only where `xNulls`/`yNulls` allows one),
     * else `metric` over the widened inputs. */
   def score(metric: Metric, x: ArrayData, xFloat: Boolean, xNulls: Boolean,
@@ -499,11 +501,13 @@ object Metric {
   * reference src/memory.rs:150-161) plus the HOF forms' NULL-element rule:
   * a NULL element on either side -> null, checked only on an input whose
   * `ArrayType.containsNull` allows one. Bit-identical to the HOF forms in
-  * [[Similarity]]. Eval and codegen both call [[Kernels.score]]; codegen
-  * as a static call inside the whole-stage loop.
+  * [[Similarity]]. The optimizer replaces it with a call of [[VectorFn]],
+  * which the whole-stage loop runs as a method call and which a V2 source
+  * receives as `graft.<metric>(a, b)`: that is how the query vector
+  * reaches [[graft.sources.MemoryBucketSource]].
   */
 case class VectorScore(metric: Metric, left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with RuntimeReplaceable {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
@@ -517,31 +521,35 @@ case class VectorScore(metric: Metric, left: Expression, right: Expression)
       s"${metric.name} score expects ARRAY<FLOAT|DOUBLE>, got ${left.dataType} / ${right.dataType}")
   }
 
-  private def isFloat(e: Expression) =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-  private def nullElems(e: Expression) =
-    e.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.score(metric, a.asInstanceOf[ArrayData], isFloat(left), nullElems(left),
-      b.asInstanceOf[ArrayData], isFloat(right), nullElems(right))
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val m = ctx.addReferenceObj("metric", metric, "graft.functions.Metric")
-    val tmp = ctx.freshName("score")
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      java.lang.Double $tmp = graft.functions.Kernels.score(
-        $m, $a, ${isFloat(left)}, ${nullElems(left)},
-        $b, ${isFloat(right)}, ${nullElems(right)});
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.doubleValue(); }""")
+  override lazy val replacement: Expression = {
+    val ArrayType(lt, ln) = left.dataType: @unchecked
+    val ArrayType(rt, rn) = right.dataType: @unchecked
+    val fn = VectorFn(metric, lt == FloatType, ln, rt == FloatType, rn)
+    // no null propagation: a null-intolerant call would make the optimizer
+    // infer and push `embedding IS NOT NULL` into every scan below it
+    Invoke(Literal.create(fn, ObjectType(classOf[VectorFn])), "invoke", DoubleType,
+      Seq(left, right), propagateNull = false, returnNullable = true)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
+}
+
+/** [[VectorScore]]'s V2 function, bound to its input types; a case class,
+  * so requests with the same metric and types build equal plans. */
+case class VectorFn(metric: Metric, xFloat: Boolean, xNulls: Boolean,
+                    yFloat: Boolean, yNulls: Boolean)
+    extends ScalarFunction[java.lang.Double] {
+  override def name(): String = metric.name
+  override def canonicalName(): String = "graft." + metric.name
+  override def inputTypes(): Array[DataType] = Array(
+    ArrayType(if (xFloat) FloatType else DoubleType, xNulls),
+    ArrayType(if (yFloat) FloatType else DoubleType, yNulls))
+  override def resultType(): DataType = DoubleType
+
+  def invoke(x: ArrayData, y: ArrayData): java.lang.Double =
+    if (x == null || y == null) null
+    else Kernels.score(metric, x, xFloat, xNulls, y, yFloat, yNulls)
 }
 
 /** Set Jaccard |A∩B| / |A∪B| over long arrays in one pass (single hash set;

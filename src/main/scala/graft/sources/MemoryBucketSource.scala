@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util.OptionalLong
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.conf.{HadoopParquetConfiguration, ParquetConfiguration}
@@ -15,12 +13,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType, Type => PType}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions, Literal => V2Literal, NamedReference, NullOrdering, SortDirection, SortOrder, Transform, UserDefinedScalarFunc}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
@@ -38,20 +38,24 @@ import graft.functions.Metric
   * (score threshold + limit + session filter evaluated store-side,
   * src/vector_store.rs:277-293):
   *
-  *  - `SupportsPushDownFilters`: predicates become parquet
+  *  - `SupportsPushDownV2Filters`: predicates become parquet
   *    `FilterPredicate`s evaluated by the parquet reader (row-group
   *    stats pruning + record-level assembly skips) — accepted filters
   *    are handled EXACTLY store-side, so Spark drops its own copy.
+  *  - the query vector travels IN THE PLAN: a pushed
+  *    `cosine(embedding, <literal>)` ([[graft.functions.VectorScore]],
+  *    also `dot`/`euclid`) is the scan's scorer; filters on it run in the
+  *    reader.
   *  - id-equality filters additionally prune whole BUCKET DIRECTORIES
   *    (the writer's own bucket rule, evaluated driver-side) — the
   *    point-lookup never opens 15 of 16 buckets.
   *  - `SupportsPushDownLimit`: the per-partition reader stops after
   *    `limit` rows (partial pushdown; Spark keeps the global limit).
-  *  - `SupportsPushDownTopN`: `ORDER BY <stored cols> LIMIT k` runs
-  *    store-side as a bounded per-partition heap — the analog of the
-  *    reference's scored-top-k delegation (limit + score order evaluated
-  *    by the store, src/vector_store.rs:277-293); partial pushdown,
-  *    Spark keeps the global cut.
+  *  - `SupportsPushDownTopN`: `ORDER BY <stored cols | score call>
+  *    LIMIT k` runs store-side as a bounded per-partition heap — the
+  *    analog of the reference's scored-top-k delegation (limit + score
+  *    order evaluated by the store, src/vector_store.rs:277-293);
+  *    partial pushdown, Spark keeps the global cut.
   *  - `SupportsPushDownRequiredColumns`: the parquet read schema carries
   *    only requested columns.
   *  - `SupportsReportStatistics`: exact footer row counts + pruned-size
@@ -62,117 +66,104 @@ import graft.functions.Metric
   *    bucket directories at EXECUTION time (dynamic partition pruning
   *    for the store layout).
   *
-  * Usage: `spark.read.format("graft.sources.MemoryBucketSource")
-  * .option("path", dir).option("nBuckets", 16).load()`.
+  * Usage: `MemoryBucketSource.load(spark, dir, 16)`, and
+  * [[graft.operators.VectorSearch.topK]] over it for a scored search.
   * Local-filesystem listing (java.io) — the fixture store; a cluster
   * deployment swaps in the Hadoop FileSystem listing, nothing else.
   */
 class MemoryBucketSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val base =
-      MemoryBucketSource.inferSchema(MemoryBucketSource.firstFile(options.get("path")))
-    // a configured scorer appends its COMPUTED column to the table schema:
-    // downstream it is an ordinary (orderable, filterable) column, which is
-    // exactly what lets the stock pushdown machinery absorb score
-    // thresholds and the scored top-k
-    MemoryBucketSource.scoreSpecFrom(options.get).fold(base)(sp =>
-      base.add(StructField(sp.output, DoubleType, nullable = true)))
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    MemoryBucketSource.inferSchema(MemoryBucketSource.firstFile(options.get("path")))
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
     new MemoryBucketTable(
       properties.get("path"),
       schema,
       Option(properties.get("nBuckets")).map(_.toInt),
-      Option(properties.get("idCol")).getOrElse("id"),
-      MemoryBucketSource.scoreSpecFrom(k => properties.get(k)))
+      Option(properties.get("idCol")).getOrElse("id"))
 }
 
 object MemoryBucketSource {
 
-  /** Store-side scoring configuration — the engine analog of the query
-    * vector the reference SENDS TO Qdrant so the store itself evaluates
-    * cosine + threshold + limit (src/vector_store.rs:265-310). The vector
-    * arrives as a comma-separated float option; floats round-trip
-    * `toString`/`toFloat` exactly, so the store scores the same f32
-    * values the table path does, with the same [[Metric]] kernel. An
-    * unknown metric fails here, when the source is loaded. */
-  private[sources] case class ScoreSpec(
-      vec: Array[Double], metric: Metric, column: String, output: String)
+  /** The store frame at `path`: the one read entry point of the store. */
+  def load(spark: SparkSession, path: String, nBuckets: Int, idCol: String = "id"): DataFrame =
+    spark.read.format("graft.sources.MemoryBucketSource").option("path", path)
+      .option("nBuckets", nBuckets.toString).option("idCol", idCol).load()
 
-  private[sources] def scoreSpecFrom(get: String => String): Option[ScoreSpec] =
-    Option(get("scoreVector")).map { s =>
-      ScoreSpec(
-        s.split(",").map(_.trim.toFloat.toDouble),
-        Metric.parse(Option(get("scoreMetric")).getOrElse("cosine")),
-        Option(get("scoreColumn")).getOrElse("embedding"),
-        Option(get("scoreOutput")).getOrElse("score"))
-    }
-
-  /** A filter over the computed score, evaluated inside the reader with
-    * SQL three-valued semantics: a null score fails every accepted
-    * predicate, exactly as the table path's post-scan Filter would. */
-  private[sources] sealed trait ScorePred extends Serializable {
-    def accepts(s: java.lang.Double): Boolean
-  }
-  private[sources] case class ScoreCmp(op: String, v: Double) extends ScorePred {
-    override def accepts(s: java.lang.Double): Boolean =
-      s != null && (op match {
-        case "ge" => s.doubleValue() >= v
-        case "gt" => s.doubleValue() > v
-        case "le" => s.doubleValue() <= v
-        case "lt" => s.doubleValue() < v
-        case "eq" => s.doubleValue() == v
-      })
-  }
-  private[sources] case object ScoreNotNull extends ScorePred {
-    override def accepts(s: java.lang.Double): Boolean = s != null
+  /** A scan's scorer: the query vector the reference SENDS TO Qdrant so the
+    * store itself scores, thresholds and cuts (src/vector_store.rs:265-310). */
+  private[sources] case class ScoreSpec(vec: Array[Double], metric: Metric, column: String) {
+    def same(o: ScoreSpec): Boolean =
+      metric == o.metric && column == o.column && java.util.Arrays.equals(vec, o.vec)
   }
 
-  private[sources] def scorePredOf(f: Filter, out: String): Option[ScorePred] =
-    f match {
-      case sources.GreaterThanOrEqual(c, v: Number) if c == out =>
-        Some(ScoreCmp("ge", v.doubleValue()))
-      case sources.GreaterThan(c, v: Number) if c == out =>
-        Some(ScoreCmp("gt", v.doubleValue()))
-      case sources.LessThanOrEqual(c, v: Number) if c == out =>
-        Some(ScoreCmp("le", v.doubleValue()))
-      case sources.LessThan(c, v: Number) if c == out =>
-        Some(ScoreCmp("lt", v.doubleValue()))
-      case sources.EqualTo(c, v: Number) if c == out =>
-        Some(ScoreCmp("eq", v.doubleValue()))
-      case sources.IsNotNull(c) if c == out => Some(ScoreNotNull)
+  /** The scorer of a `graft.<metric>(<stored vector column>, <vector literal
+    * without NULLs>)` call ([[graft.functions.VectorFn]]). */
+  private[sources] def scoreSpecOf(e: V2Expression, schema: StructType): Option[ScoreSpec] =
+    e match {
+      case fn: UserDefinedScalarFunc => fn.children() match {
+        case Array(c: NamedReference, q: V2Literal[_]) if c.fieldNames().length == 1 &&
+            isVector(q.dataType()) && schema.fields.exists(f =>
+              f.name == c.fieldNames()(0) && isVector(f.dataType)) =>
+          for {
+            m <- scala.util.Try(Metric.parse(fn.canonicalName().stripPrefix("graft."))).toOption
+            if fn.canonicalName() == "graft." + m.name
+            a <- Option(q.value().asInstanceOf[ArrayData])
+            if !(0 until a.numElements()).exists(a.isNullAt)
+          } yield ScoreSpec(a.toSeq[Any](q.dataType().asInstanceOf[ArrayType].elementType)
+            .map { case x: Float => x.toDouble; case x: Double => x }.toArray, m, c.fieldNames()(0))
+        case _ => None
+      }
       case _ => None
     }
 
+  private def isVector(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+
+  /** A pushed filter on the score, in its V1 form on the name `score`, and
+    * its test of the score. A null score fails it, exactly as the table
+    * path's post-scan Filter. */
+  private[sources] case class ScorePred(filter: Filter, test: Double => Boolean) {
+    def accepts(s: java.lang.Double): Boolean = s != null && test(s)
+  }
+
+  /** `<score call> IS NOT NULL` or `<score call> <op> <number>`: the
+    * call's scorer and the predicate. */
+  private[sources] def scorePredOf(p: Predicate, schema: StructType)
+      : Option[(ScoreSpec, ScorePred)] =
+    for {
+      sp <- p.children().headOption.flatMap(scoreSpecOf(_, schema))
+      f <- GraftBridge.toV1(
+        new Predicate(p.name(), Expressions.column("score") +: p.children().drop(1)))
+      test <- f match {
+        case sources.IsNotNull(_) => Some((_: Double) => true)
+        case sources.GreaterThanOrEqual(_, v: Number) => Some((_: Double) >= v.doubleValue())
+        case sources.GreaterThan(_, v: Number) => Some((_: Double) > v.doubleValue())
+        case sources.LessThanOrEqual(_, v: Number) => Some((_: Double) <= v.doubleValue())
+        case sources.LessThan(_, v: Number) => Some((_: Double) < v.doubleValue())
+        case sources.EqualTo(_, v: Number) => Some((_: Double) == v.doubleValue())
+        case _ => None
+      }
+    } yield (sp, ScorePred(f, test))
+
   /** The reference's full Qdrant search, delegated: score + threshold +
-    * top-k all evaluated store-side (src/vector_store.rs:265-310). The
-    * plan this builds is scan-absorbable end to end — the score filters
-    * and the `ORDER BY score DESC, id ASC LIMIT k` both push into the
-    * scan, so each bucket returns its local top-k SCORED rows and
-    * Spark's TakeOrderedAndProject only merges nBuckets·k candidates. */
+    * top-k all evaluated store-side (src/vector_store.rs:265-310): the
+    * table path's plan over [[load]], whose filters and top-k push into
+    * the scan, so Spark only merges nBuckets·k candidates. */
   def search(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       nBuckets: Int,
       queryVec: Seq[Float],
       k: Int,
       threshold: Option[Double] = None,
       metric: String = "cosine",
-      idCol: String = "id"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.format("graft.sources.MemoryBucketSource")
-      .option("path", path)
-      .option("nBuckets", nBuckets.toString)
-      .option("idCol", idCol)
-      .option("scoreVector", queryVec.map(_.toString).mkString(","))
-      .option("scoreMetric", metric)
-      .load()
-    val live = df.where(col("score").isNotNull)
-    val cut = threshold.fold(live)(t => live.where(col("score") >= t))
-    cut.orderBy(col("score").desc, col(idCol).asc).limit(k)
-  }
+      idCol: String = "id"): DataFrame =
+    graft.operators.VectorSearch.topK(load(spark, path, nBuckets, idCol),
+      queryVec, k, idCol, metric, threshold = threshold)
 
   /** All data files of the layout, optionally restricted to a bucket set. */
   def listFiles(root: String, buckets: Option[Set[Long]]): Seq[String] = {
@@ -211,13 +202,9 @@ object MemoryBucketSource {
     ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), sharedConf))
 
   def inferSchema(file: String): StructType = {
-    val reader = openFooter(file)
-    try toSpark(reader.getFooter.getFileMetaData.getSchema)
-    finally reader.close()
-  }
-
-  private[sources] def toSpark(m: MessageType): StructType = {
     import scala.jdk.CollectionConverters._
+    val reader = openFooter(file)
+    val m = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
     StructType(m.getFields.asScala.toSeq.map(f =>
       StructField(f.getName, toSparkType(f), f.getRepetition != PType.Repetition.REQUIRED)))
   }
@@ -379,9 +366,11 @@ object MemoryBucketSource {
       fn: String, column: Option[String], dataType: DataType)
 
   /** One pushed sort key: column, type, and OUTPUT-order semantics
-    * (descending + where nulls land, as Spark's SortOrder states them). */
+    * (descending + where nulls land, as Spark's SortOrder states them).
+    * A `computed` key is the scan's score, described as `score`. */
   private[sources] case class SortSpec(
-      name: String, dataType: DataType, desc: Boolean, nullsFirst: Boolean)
+      name: String, dataType: DataType, desc: Boolean, nullsFirst: Boolean,
+      computed: Boolean = false)
 
   private[sources] def orderable(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType | BooleanType |
@@ -417,26 +406,26 @@ object MemoryBucketSource {
 
 private[sources] class MemoryBucketTable(
     path: String, tableSchema: StructType,
-    nBuckets: Option[Int], idCol: String,
-    score: Option[MemoryBucketSource.ScoreSpec]) extends Table with SupportsRead {
+    nBuckets: Option[Int], idCol: String) extends Table with SupportsRead {
   override def name(): String = s"graft_memory($path)"
   override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new MemoryScanBuilder(path, tableSchema, nBuckets, idCol, score)
+    new MemoryScanBuilder(path, tableSchema, nBuckets, idCol)
 }
 
 private[sources] class MemoryScanBuilder(
     path: String, tableSchema: StructType,
-    nBuckets: Option[Int], idCol: String,
-    score: Option[MemoryBucketSource.ScoreSpec])
-    extends ScanBuilder with SupportsPushDownFilters
+    nBuckets: Option[Int], idCol: String)
+    extends ScanBuilder with SupportsPushDownV2Filters
     with SupportsPushDownLimit with SupportsPushDownRequiredColumns
     with SupportsPushDownTopN with SupportsPushDownAggregates {
 
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[Predicate] = Array.empty
+  private var plain: Array[Filter] = Array.empty
   private var predicate: Option[FilterPredicate] = None
+  private var score: Option[MemoryBucketSource.ScoreSpec] = None
   private var scorePreds: Seq[MemoryBucketSource.ScorePred] = Seq.empty
   private var buckets: Option[Set[Long]] = None
   private var limit: Option[Int] = None
@@ -444,33 +433,35 @@ private[sources] class MemoryScanBuilder(
   private var agg: Option[Seq[MemoryBucketSource.AggSpec]] = None
   private var required: StructType = tableSchema
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // score-column predicates first: the computed column exists in the
-    // TABLE schema (so toPredicate would happily build a parquet
-    // predicate for it) but not in the FILES — they must be evaluated
-    // against the reader's computed score, never shipped to parquet.
-    // Any other filter shape touching the score column stays post-scan.
-    val scoreOut = score.map(_.output)
-    val withScore = filters.map(f =>
-      f -> scoreOut.flatMap(MemoryBucketSource.scorePredOf(f, _)))
-    scorePreds = withScore.flatMap(_._2).toSeq
-    val plain = withScore.collect { case (f, None) => f }
-    val (ok, rest) = plain.partition(f =>
-      !scoreOut.exists(f.references.contains) &&
-        MemoryBucketSource.toPredicate(f, tableSchema).isDefined)
-    pushed = ok ++ withScore.collect { case (f, Some(_)) => f }
-    predicate = ok.flatMap(MemoryBucketSource.toPredicate(_, tableSchema))
+  /** Score predicates meet the reader's score (a scan holds one scorer,
+    * the first it accepts); the rest go in V1 form to parquet, or to the
+    * reader for `IS NOT NULL` on a list column, or stay post-scan. */
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val (scored, others) = predicates.partitionMap(p =>
+      MemoryBucketSource.scorePredOf(p, tableSchema).filter(x => score.forall(_.same(x._1))) match {
+        case Some((sp, sc)) => score = Some(sp); Left(p -> sc)
+        case None => Right(p)
+      })
+    val (ok, rest) = others.map(p => p -> GraftBridge.toV1(p)).partition(_._2.exists {
+      case sources.IsNotNull(c) if tableSchema.fields.exists(f =>
+        f.name == c && f.dataType.isInstanceOf[ArrayType]) => true
+      case f => MemoryBucketSource.toPredicate(f, tableSchema).isDefined
+    })
+    plain = ok.flatMap(_._2)
+    pushed = scored.map(_._1) ++ ok.map(_._1)
+    scorePreds = scored.map(_._2).toSeq
+    predicate = plain.flatMap(MemoryBucketSource.toPredicate(_, tableSchema))
       .reduceOption(FilterApi.and)
     val idType = tableSchema.fields.find(_.name == idCol).map(_.dataType)
     buckets = for {
       n <- nBuckets
       t <- idType
-      sets = ok.flatMap(MemoryBucketSource.bucketsFor(_, idCol, t, n))
+      sets = plain.flatMap(MemoryBucketSource.bucketsFor(_, idCol, t, n))
       merged <- sets.reduceOption(_ intersect _)
     } yield merged
-    rest // post-scan filters; accepted ones are evaluated exactly store-side
+    rest.map(_._1) // post-scan; accepted ones are evaluated exactly store-side
   }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
 
   override def pushLimit(l: Int): Boolean = {
     limit = Some(l)
@@ -479,30 +470,36 @@ private[sources] class MemoryScanBuilder(
 
   /** The reference's Qdrant scan evaluates the scored top-k ITSELF
     * (score threshold + limit, src/vector_store.rs:277-293); the engine
-    * analog accepts `ORDER BY <stored columns> LIMIT k` and answers it
-    * with a per-partition bounded heap inside the reader. PARTIAL
-    * pushdown: each partition returns its local top-N, Spark's
+    * analog accepts `ORDER BY <keys> LIMIT k` and answers it with a
+    * per-partition bounded heap inside the reader. PARTIAL pushdown:
+    * each partition returns its local top-N, Spark's
     * TakeOrderedAndProject keeps the global cut — so every sort key must
-    * be a plain stored column of an orderable type, or the whole top-N
-    * is declined and the plain scan stands. */
+    * be a stored column of an orderable type or the scan's score call,
+    * or the whole top-N is declined and the plain scan stands. */
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
+    var sp = score
     val specs = orders.toSeq.map { o =>
+      val desc = o.direction() == SortDirection.DESCENDING
+      val nullsFirst = o.nullOrdering() == NullOrdering.NULLS_FIRST
       o.expression() match {
         case nr: NamedReference if nr.fieldNames().length == 1 =>
-          val name = nr.fieldNames()(0)
-          tableSchema.fields.find(_.name == name).collect {
+          tableSchema.fields.find(_.name == nr.fieldNames()(0)).collect {
             case f if MemoryBucketSource.orderable(f.dataType) =>
-              MemoryBucketSource.SortSpec(name, f.dataType,
-                desc = o.direction() == SortDirection.DESCENDING,
-                nullsFirst = o.nullOrdering() == NullOrdering.NULLS_FIRST)
+              MemoryBucketSource.SortSpec(f.name, f.dataType, desc, nullsFirst)
           }
-        case _ => None
+        case e =>
+          MemoryBucketSource.scoreSpecOf(e, tableSchema)
+            .filter(s => sp.forall(_.same(s))).map { s =>
+              sp = Some(s)
+              MemoryBucketSource.SortSpec("score", DoubleType, desc, nullsFirst, computed = true)
+            }
       }
     }
     if (n <= 0 || n > MemoryBucketSource.TopNMax ||
         specs.isEmpty || specs.exists(_.isEmpty)) false
     else {
       topN = Some((specs.flatten, n))
+      score = sp
       true
     }
   }
@@ -515,13 +512,12 @@ private[sources] class MemoryScanBuilder(
     * inside the reader — the pushed filters still run in parquet first —
     * and Spark's final aggregate merges the per-partition partials
     * (supportCompletePushDown stays false). Anything else — grouping,
-    * other functions, min/max of the computed score or an unorderable
+    * other functions, min/max of a computed value or an unorderable
     * column, or an agg stacked on a pushed limit/top-N — is declined
     * and the plain scan stands. */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     if (aggregation.groupByExpressions().nonEmpty ||
         topN.isDefined || limit.isDefined) return false
-    val scoreOut = score.map(_.output)
     def colName(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames().length == 1 =>
@@ -529,9 +525,7 @@ private[sources] class MemoryScanBuilder(
       case _ => None
     }
     def fieldFor(n: String): Option[StructField] =
-      tableSchema.fields.find(_.name == n)
-        .filter(f => MemoryBucketSource.orderable(f.dataType) &&
-          !scoreOut.contains(n))
+      tableSchema.fields.find(f => f.name == n && MemoryBucketSource.orderable(f.dataType))
     val specs = aggregation.aggregateExpressions().toSeq.map {
       case _: CountStar =>
         Some(MemoryBucketSource.AggSpec("count", None, LongType))
@@ -557,9 +551,10 @@ private[sources] class MemoryScanBuilder(
     if (agg.isEmpty) required = requiredSchema
 
   override def build(): Scan =
-    new MemoryScan(path, required, predicate, buckets, limit, topN, pushed,
+    new MemoryScan(path, required, predicate, buckets, limit, topN, plain,
       score, scorePreds, agg, idCol,
-      tableSchema.fields.find(_.name == idCol).map(_.dataType), nBuckets)
+      tableSchema.fields.find(_.name == idCol).map(_.dataType), nBuckets,
+      tableSchema.length)
 }
 
 private[sources] case class FileInputPartition(file: String) extends InputPartition
@@ -569,11 +564,12 @@ private[sources] class MemoryScan(
     predicate: Option[FilterPredicate], buckets: Option[Set[Long]],
     limit: Option[Int],
     topN: Option[(Seq[MemoryBucketSource.SortSpec], Int)],
-    pushed: Array[Filter],
+    plain: Array[Filter],
     score: Option[MemoryBucketSource.ScoreSpec],
     scorePreds: Seq[MemoryBucketSource.ScorePred],
     agg: Option[Seq[MemoryBucketSource.AggSpec]],
-    idCol: String, idType: Option[DataType], nBuckets: Option[Int])
+    idCol: String, idType: Option[DataType], nBuckets: Option[Int],
+    fileCols: Int)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
@@ -671,14 +667,12 @@ private[sources] class MemoryScan(
           if (files.length <= k) sRows
           else if (sBytes == 0L) 0L
           else math.round(bytes.toDouble * sRows / sBytes)
-        val fileCols = math.max(1,
-          MemoryBucketSource.inferSchema(files.head).fields.length)
         // n is bounded (TopNMax / a user limit) and files is a directory
         // listing — the product stays far from Long overflow
         val cap = topN.map(_._2.toLong).orElse(limit.map(_.toLong))
         val capped = cap.fold(rows)(n => math.min(rows, n * files.size))
         val colFrac = math.min(1.0,
-          required.fields.length.toDouble / fileCols)
+          required.fields.length.toDouble / math.max(1, fileCols))
         val rowFrac = if (rows == 0L) 0.0 else capped.toDouble / rows
         (capped, math.max(1L, (bytes * colFrac * rowFrac).toLong))
     }
@@ -695,11 +689,11 @@ private[sources] class MemoryScan(
         .mkString("ORDER BY [", ", ", s"] LIMIT $n")
     }
     val sc = score.fold("none")(sp =>
-      s"${sp.metric.name}(${sp.column}, [${sp.vec.length}d]) AS ${sp.output}")
+      s"${sp.metric.name}(${sp.column}, [${sp.vec.length}d]) AS score")
     val ag = agg.fold("none")(_.map(a =>
       s"${a.fn}(${a.column.getOrElse("*")})").mkString("[", ", ", "]"))
     s"GraftMemoryBucketScan path=$path, " +
-      s"PushedFilters: [${pushed.mkString(", ")}], " +
+      s"PushedFilters: [${(plain ++ scorePreds.map(_.filter)).mkString(", ")}], " +
       s"PushedLimit: ${limit.getOrElse(-1)}, PushedTopN: $t, " +
       s"PushedScore: $sc, PushedAggregates: $ag, Buckets: $b"
   }
@@ -710,14 +704,14 @@ private[sources] class MemoryScan(
       .map(FileInputPartition(_)).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new MemoryReaderFactory(required, predicate, limit, topN,
-      pushed.flatMap(_.references).distinct.toSeq, score, scorePreds, agg)
+      plain.toSeq, score, scorePreds, agg)
 }
 
 private[sources] class MemoryReaderFactory(
     required: StructType, predicate: Option[FilterPredicate],
     limit: Option[Int],
     topN: Option[(Seq[MemoryBucketSource.SortSpec], Int)],
-    filterCols: Seq[String],
+    filters: Seq[Filter],
     score: Option[MemoryBucketSource.ScoreSpec],
     scorePreds: Seq[MemoryBucketSource.ScorePred],
     agg: Option[Seq[MemoryBucketSource.AggSpec]]) extends PartitionReaderFactory {
@@ -733,10 +727,10 @@ private[sources] class MemoryReaderFactory(
         val dedup = inputs.groupBy(_.name).map(_._2.head).toArray
         new AggPartialReader(specs,
           new StoreRowReader(file, StructType(dedup), predicate, None, None,
-            filterCols, score, scorePreds))
+            filters, score, scorePreds))
       case None =>
         new StoreRowReader(file, required, predicate, limit, topN,
-          filterCols, score, scorePreds)
+          filters, score, scorePreds)
     }
   }
 }
@@ -938,14 +932,16 @@ private[sources] final class SlotReaderBuilder(file: InputFile,
   * Records decode into reused slots ([[SlotMaterializer]]); the scorer
   * reads the embedding's value buffer in place, and an output row is
   * built only for a row that is emitted or that the top-N heap admits.
-  * NULL rule of the scorer: a NULL embedding, a dimension mismatch or a
-  * NULL element scores NULL (as [[graft.functions.Similarity.score]]
-  * does), and cosine is also NULL at zero magnitude. */
+  * The score is not an output column; the `Project` above the scan
+  * recomputes it for the rows emitted. NULL rule of the scorer: a NULL
+  * embedding, a dimension mismatch or a NULL element scores NULL (as
+  * [[graft.functions.Similarity.score]] does), and cosine is also NULL at
+  * zero magnitude. */
 private[sources] class StoreRowReader(
     file: String, required: StructType,
     predicate: Option[FilterPredicate], limit: Option[Int],
     topN: Option[(Seq[MemoryBucketSource.SortSpec], Int)],
-    filterCols: Seq[String],
+    filters: Seq[Filter],
     score: Option[MemoryBucketSource.ScoreSpec],
     scorePreds: Seq[MemoryBucketSource.ScorePred])
     extends PartitionReader[InternalRow] {
@@ -953,15 +949,12 @@ private[sources] class StoreRowReader(
   /** Output schema, for the aggregate wrapper's field lookups. */
   private[sources] def requiredSchema: StructType = required
 
-  private def isScoreCol(name: String): Boolean = score.exists(_.output == name)
-
   private val reader: ParquetReader[Array[ColumnSlot]] = {
-    // the computed score column never reaches parquet; the embedding
-    // column it is computed FROM must, even when pruned from the output
+    // filter, sort-key and score inputs are read even if not output
     val support = new SlotReadSupport(
-      required.fields.toSeq.map(_.name).filterNot(isScoreCol),
-      filterCols.filterNot(isScoreCol) ++
-        topN.toSeq.flatMap(_._1.map(_.name)).filterNot(isScoreCol) ++
+      required.fields.toSeq.map(_.name),
+      filters.flatMap(_.references) ++
+        topN.toSeq.flatMap(_._1.filterNot(_.computed).map(_.name)) ++
         score.map(_.column).toSeq)
     // parquet writes its read options back into the conf it is handed,
     // so each reader gets its own copy of the shared one
@@ -971,43 +964,48 @@ private[sources] class StoreRowReader(
       new HadoopParquetConfiguration(conf), support)
     predicate.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
   }
-  // slot index per output field / sort key (-1 = the computed score),
-  // resolved against the first record's projection
+  // slot index per output field / sort key (-1 = the score) / list column
+  // that must be present, resolved against the first record's projection
   private var outSlots: Array[Int] = _
   private var keySlots: Array[Int] = _
   private var scoreSlot = -1
+  private var presentSlots: Array[Int] = _
   private var current: Array[ColumnSlot] = _ // the decoded record
   private var currentScore: java.lang.Double = _
   private var served = 0
   private var topRows: Iterator[InternalRow] = _
 
   private def resolve(r: Array[ColumnSlot]): Unit = {
-    def slotOf(name: String): Int = if (isScoreCol(name)) -1 else r.indexWhere(_.name == name)
+    def slotOf(name: String): Int = r.indexWhere(_.name == name)
     outSlots = required.fields.map(f => slotOf(f.name))
-    keySlots = topN.fold(Array.empty[Int])(_._1.map(s => slotOf(s.name)).toArray)
-    scoreSlot = score.fold(-1)(sp => r.indexWhere(_.name == sp.column))
+    keySlots = topN.fold(Array.empty[Int])(_._1.map(s =>
+      if (s.computed) -1 else slotOf(s.name)).toArray)
+    scoreSlot = score.fold(-1)(sp => slotOf(sp.column))
+    presentSlots = filters.collect { case sources.IsNotNull(c) => slotOf(c) }
+      .filter(i => r(i).isList).toArray
   }
 
   private def scoreOf(s: ColumnSlot, sp: MemoryBucketSource.ScoreSpec): java.lang.Double =
-    if (!s.present || s.nullElems > 0) null
-    else if (s.doubles == null)
-      throw new UnsupportedOperationException(
-        s"score column ${s.name} must be ARRAY<FLOAT|DOUBLE>")
-    else if (s.size != sp.vec.length) null
+    if (!s.present || s.nullElems > 0 || s.size != sp.vec.length) null
     else sp.metric.score(s.doubles, sp.vec, s.size)
 
-  /** Advance to the next row that passes every accepted score predicate,
-    * computing the score once per surviving row. */
+  /** Advance to the next row that passes the reader's checks, computing
+    * the score once per surviving row. */
   private def readFiltered(): Boolean = {
     var r = reader.read()
     while (r != null) {
       if (outSlots == null) resolve(r)
-      val sc: java.lang.Double = score match {
-        case Some(sp) => scoreOf(r(scoreSlot), sp)
-        case None => null
-      }
-      if (scorePreds.forall(_.accepts(sc))) {
-        current = r; currentScore = sc; return true
+      var present = true
+      var i = 0
+      while (i < presentSlots.length) { present &&= r(presentSlots(i)).present; i += 1 }
+      if (present) {
+        val sc: java.lang.Double = score match {
+          case Some(sp) => scoreOf(r(scoreSlot), sp)
+          case None => null
+        }
+        if (scorePreds.forall(_.accepts(sc))) {
+          current = r; currentScore = sc; return true
+        }
       }
       r = reader.read()
     }
@@ -1076,8 +1074,7 @@ private[sources] class StoreRowReader(
     while (i < required.length) {
       val si = outSlots(i)
       row.update(i,
-        if (si < 0) currentScore
-        else if (current(si).present) valueOf(current(si), required.fields(i).dataType)
+        if (current(si).present) valueOf(current(si), required.fields(i).dataType)
         else null)
       i += 1
     }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * specs and the DuckDB oracle check the kernel against, so no query path
   * may score through them. These scans fail on a second copy: a
   * hand-inlined loop in generated Java, a query path calling a reference
-  * form, or a second reader of metric names. */
+  * form, or a second reader of metric names. The store takes its query
+  * vector from the plan, never from a scan option. */
 class KernelRuleSpec extends AnyFunSuite {
   private lazy val all = MainSources()
 
@@ -30,5 +31,12 @@ class KernelRuleSpec extends AnyFunSuite {
       "unknown distance metric".r.findAllMatchIn(src).map(_ => name)
     }
     assert(hits.size == 1, hits)
+  }
+
+  test("the store reads its scorer only from the pushed score call") {
+    val options = all.collect { case (name, src) if src.contains("scoreVector") => name }
+    assert(options.isEmpty, options)
+    val readers = all.collect { case (name, src) if src.contains("UserDefinedScalarFunc") => name }
+    assert(readers == Seq("MemoryBucketSource.scala"), readers)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.Similarity
 import graft.operators.{MemoryOps, VectorSearch}
 
 class MemoryBucketSourceSpec extends SparkSpec {
@@ -242,6 +243,37 @@ class MemoryBucketSourceSpec extends SparkSpec {
         threshold = Some(0.0))
       .select($"id", $"score").as[(Long, Double)].collect().toMap
     assert(gotRaw == wantRaw)
+  }
+
+  test("one loaded store frame serves the scored top-k for two query vectors") {
+    // the query vector travels in the plan, so one resolved relation
+    // serves every request; each plan still delegates the scored top-k
+    val store = graft.sources.MemoryBucketSource.load(spark, storeDir, nBuckets)
+    val table = MemoryOps.readBucketed(spark, storeDir)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      df.select($"id", $"score").as[(Long, Double)].collect().toSeq
+    // the second request also asks for a present embedding: the reader
+    // checks a list column's IS NOT NULL itself, so the top-k still pushes
+    for ((v, pred) <- Seq(0L -> None, 5L -> Some($"embedding".isNotNull))) {
+      val q = Tables.queryVector(spark, sf0001, v)
+      val df = VectorSearch.topK(store, q, k = 10, idCol = "id", predicate = pred)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("PushedScore: cosine(embedding, [") &&
+        plan.contains("PushedTopN: ORDER BY [score DESC, id ASC]"),
+        s"scored top-k not delegated for vector $v:\n$plan")
+      val got = rows(df)
+      assert(got == rows(VectorSearch.topK(table, q, k = 10, idCol = "id",
+        predicate = pred)) && got.size == 10)
+    }
+    // the literal first is not the store's call shape: nothing is
+    // delegated, and the plan still returns the table path's rows
+    val q = Tables.queryVector(spark, sf0001, 0L)
+    val rev = store
+      .withColumn("score", Similarity.cosine(typedlit(q), $"embedding"))
+      .where($"score".isNotNull).orderBy($"score".desc, $"id".asc).limit(10)
+    val plan = rev.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedScore: none"), s"reversed call delegated:\n$plan")
+    assert(rows(rev) == rows(VectorSearch.topK(table, q, k = 10, idCol = "id")))
   }
 
   test("scored search: dot and euclid metrics delegate with identical results") {

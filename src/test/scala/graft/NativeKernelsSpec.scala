@@ -167,6 +167,19 @@ class NativeKernelsSpec extends SparkSpec {
           Native.shingleHashes(col("b.text"), 2)).as("j"))
         .as[Double].head()
       assert(j > 0.7 && j < 1.0)
+      // the vector scores: each metric's replacement call compiles inside
+      // the whole-stage loop and equals its HOF reference
+      val emb = Tables.embeddings(spark, sf0001)
+        .withColumn("q", typedlit(Tables.queryVector(spark, sf0001, 0L)))
+      val hof = Seq("cosine" -> (Similarity.cosineHof _),
+        "dot" -> (Similarity.dotScore _), "euclid" -> (Similarity.euclidScore _))
+      for ((metric, ref) <- hof) {
+        val both = emb.select(
+          Similarity.score(metric, col("embedding"), col("q")).as("nat"),
+          ref(col("embedding"), col("q")).as("hof"))
+        assert(both.where(col("nat") =!= col("hof") ||
+          col("nat").isNull =!= col("hof").isNull).count() == 0, metric)
+      }
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
   }
 }
